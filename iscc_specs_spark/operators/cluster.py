@@ -1,18 +1,35 @@
-"""Connected components on an edge DataFrame via alternating large-star /
-small-star rounds (Kiveris et al., "Connected Components in MapReduce and
-Beyond", SoCC 2014) — O(log n) rounds, no collect_list (hot hubs like a
-template-farm star stay as min-aggregations + joins, never materialized as
-one row).
+"""Connected components on an edge DataFrame.
 
-Each round is two shuffles; lineage is cut with localCheckpoint every round
-(swap for ``checkpoint(dir)`` on a real cluster).  Convergence = stable
-(count, xor-of-hashes) edge-set fingerprint — one cheap aggregate per round.
+Small edge lists (at most ``LOCAL_EDGE_LIMIT`` oriented edges) finish on
+the driver: one bounded ``limit`` collect, an in-memory union-find, and an
+Arrow-backed DataFrame of the result — the contract-then-finish-locally
+design of Łącki et al., "Connected Components at Scale via Local
+Contractions" (arXiv:1807.10727). At batch sizes this replaces the
+checkpoint, star-round and convergence jobs with two.
+
+Larger edge lists run alternating large-star / small-star rounds (Kiveris
+et al., "Connected Components in MapReduce and Beyond", SoCC 2014) —
+O(log n) rounds, no collect_list (hot hubs like a template-farm star stay as
+min-aggregations + joins, never materialized as one row). Each round is two
+shuffles; lineage is cut with localCheckpoint every round (swap for
+``checkpoint(dir)`` on a real cluster), and convergence is one aggregate
+per round (:func:`_converged`).
+
+Both paths return the same rows: (node, component min) for every non-min
+node of every component.
 """
 
 from __future__ import annotations
 
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructField, StructType
+
+# oriented edges up to which connected_components finishes on the driver;
+# 200k id pairs stay well under a few hundred MB of driver memory
+LOCAL_EDGE_LIMIT = 200_000
 
 
 def _large_star(edges: DataFrame) -> DataFrame:
@@ -72,12 +89,43 @@ def _converged(edges: DataFrame) -> bool:
     return bad.isEmpty()
 
 
+def _local_components(edges: pa.Table) -> tuple[np.ndarray, np.ndarray]:
+    """(node, component min) for every non-min node of an oriented (u, v)
+    edge table, by union-find on the driver."""
+    ids, idx = np.unique(
+        np.concatenate([
+            edges.column("u").to_numpy(zero_copy_only=False),
+            edges.column("v").to_numpy(zero_copy_only=False),
+        ]),
+        return_inverse=True,
+    )
+    # ids are sorted, so a smaller index is a smaller id: hooking the larger
+    # root under the smaller keeps every root its component's min
+    parent = list(range(len(ids)))
+
+    def find(x: int) -> int:
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    half = edges.num_rows
+    for a, b in zip(idx[:half].tolist(), idx[half:].tolist()):
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    root = np.array([find(x) for x in range(len(ids))], dtype=np.int64)
+    child = np.flatnonzero(root != np.arange(len(ids)))
+    return ids[child], ids[root[child]]
+
+
 def connected_components(
     pairs: DataFrame, max_iter: int = 30, src: str = "url_a", dst: str = "url_b"
 ) -> DataFrame:
     """pairs(url_a, url_b) → (url, cluster_id) for every node that appears in
     an edge; cluster_id = min url of the component.  Singleton handling is
-    the caller's (left join + coalesce to own url)."""
+    the caller's (left join + coalesce to own url). The id columns keep
+    their type (semantic.py passes long vector ids)."""
     # orient child → parent up front (connectivity is orientation-blind and
     # the fixpoint star forest is canonical, so the result is unchanged);
     # this keeps the u > v invariant true from round 0 on, which is what
@@ -86,6 +134,20 @@ def connected_components(
         F.greatest(F.col(src), F.col(dst)).alias("u"),
         F.least(F.col(src), F.col(dst)).alias("v"),
     ).where(F.col("u") != F.col("v")).distinct()
+    head = edges.limit(LOCAL_EDGE_LIMIT + 1).toArrow()
+    if head.num_rows <= LOCAL_EDGE_LIMIT:
+        node, root = _local_components(head)
+        schema = StructType([
+            StructField("url", edges.schema["u"].dataType),
+            StructField("cluster_id", edges.schema["v"].dataType),
+        ])
+        # a pyarrow table goes to the JVM as Arrow batches: no Python
+        # worker, no pandas fallback path, and an empty table is fine
+        table = pa.table({
+            "url": pa.array(node, type=head.schema.field("u").type),
+            "cluster_id": pa.array(root, type=head.schema.field("v").type),
+        })
+        return pairs.sparkSession.createDataFrame(table, schema)
     # materialize the input edge list BEFORE iterating: each star round
     # references `edges` several times (unions + joins), and a lazy upstream
     # DAG would be re-executed once per reference inside round 0 (measured

@@ -47,26 +47,14 @@ CID_T_MAX_HAMMING = 10
 SIMHASH_MAX_HAMMING = 3
 
 
-def exact_rep_table(codes: DataFrame) -> DataFrame:
-    """(tophash, rep_url, group_size): one representative per byte-identical
-    group. Map-side partial aggregation; single shuffle on tophash."""
-    return codes.groupBy("tophash").agg(
-        F.min("url").alias("rep_url"), F.count("*").alias("group_size")
-    )
-
-
 def exact_pairs(codes: DataFrame, reps: DataFrame) -> DataFrame:
     """Hub-and-spoke edges inside each exact-duplicate group.
 
-    ``reps`` may be the (tophash, rep_url) table from exact_rep_table OR the
-    slim code table (whose url IS the group representative) — only the
-    tophash→representative mapping is consumed."""
-    rep_col = "rep_url" if "rep_url" in reps.columns else "url"
+    ``reps`` is the slim code table from :func:`rep_codes`, whose url IS
+    the group representative — only its tophash→url mapping is consumed."""
     return (
         codes.select("tophash", "url")
-        .join(
-            reps.select("tophash", F.col(rep_col).alias("_rep")), "tophash"
-        )
+        .join(reps.select("tophash", F.col("url").alias("_rep")), "tophash")
         .where(F.col("url") != F.col("_rep"))
         .select(
             F.col("_rep").alias("url_a"),
@@ -76,15 +64,13 @@ def exact_pairs(codes: DataFrame, reps: DataFrame) -> DataFrame:
     )
 
 
-def rep_codes(codes: DataFrame, reps: DataFrame | None = None) -> DataFrame:
+def rep_codes(codes: DataFrame) -> DataFrame:
     """Slim per-representative code table that feeds LSH (exact-dup groups
     collapse to their representative — degenerate-signature skew never
     reaches the band join).
 
-    One ``min_by`` aggregation on tophash — shares its exchange with
-    :func:`exact_rep_table` (same grouping key → ReusedExchange) instead of
-    the former semi-join (which cost two extra shuffles). ``reps`` is
-    accepted for API compatibility and unused."""
+    One ``min_by`` aggregation on tophash: the representative is the
+    group's min url, carried with the fields LSH and verification read."""
     picked = codes.groupBy("tophash").agg(
         F.min_by(
             F.struct("url", "cid_body", "simhash", "minhash"), F.col("url")
@@ -452,6 +438,8 @@ def dup_pairs(
     overhead for every caller that only consumes the pair set (clustering,
     the driver rows, the pipeline bench). Pass True where the jaccard
     column is actually persisted/read (plans/dedup.py's stage table).
+    With the default, ``jaccard_est`` is NULL on every LSH pair (exact
+    pairs carry 1.0).
 
     ``materialize=True`` checkpoints the slim representative table: it has
     ~6 downstream consumers (banding, sizes, verify sides, jaccard sides,

@@ -73,7 +73,6 @@ class CurateConfig:
     domain_min_quality: float | None = None
     min_quality: float = 0.35
     dedup: DedupConfig = field(default_factory=DedupConfig)
-    lineage: bool = True
     # ⑥ optional SemDeDup stage over the canonical corpus: hashing-trick
     # text embeddings → ivf_build quantizer → within-list cosine groups →
     # keep-the-novel representative (operators/semantic.py). hash_fn 'md5'
@@ -144,7 +143,6 @@ def run_curation(
                 "dsir": dsir_active,
             }
         ),
-        lineage=cfg.lineage,
     )
 
     # ⓪a optional canonical-URL crawl dedup — the cheapest duplicate class

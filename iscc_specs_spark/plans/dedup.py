@@ -2,7 +2,9 @@
 
 pages → ① codes (Arrow-vectorized codegen) → ② verified dup pairs
 (exact ∪ MinHash-LSH ∪ SimHash, native verification) → ③ clusters
-(large-star/small-star CC) → ④ canonical pick (keep oldest warc_ts).
+(connected components: union-find on the driver for small edge lists,
+large-star/small-star rounds otherwise) → ④ canonical pick (keep oldest
+warc_ts).
 
 Each stage is materialized through the StageStore seam (parquet snapshot +
 manifest); a rerun with the same config resumes from the last completed
@@ -30,7 +32,6 @@ class DedupConfig:
     bucket_cap: int = 64
     cid_max: int = lsh.CID_T_MAX_HAMMING
     sim_max: int = lsh.SIMHASH_MAX_HAMMING
-    lineage: bool = True
     # >0: write the url-keyed stage tables (codes, clusters, canonical)
     # hash-BUCKETED by url into this many buckets (sources/storage.py
     # write_bucketed). Every url-equi-join among resumed stages — the
@@ -112,7 +113,7 @@ def run_dedup(
 ) -> dict:
     """Returns {"clusters": DataFrame, "store": StageStore, ...stage dfs}."""
     cfg = cfg or DedupConfig()
-    store = StageStore(out_dir, config_hash(asdict(cfg)), lineage=cfg.lineage)
+    store = StageStore(out_dir, config_hash(asdict(cfg)))
 
     def _write_url_stage(df, name):
         # url-keyed stages optionally go down bucketed so their mutual
@@ -144,22 +145,24 @@ def run_dedup(
             codes = codes.withColumn("tophash", F.col("url"))
         # one slim representative table feeds BOTH the band stage and the
         # exact-dup pairing (previously two independent full-corpus
-        # aggregations)
+        # aggregations). No written stage covers it: the bands stage drops
+        # the minhash column the jaccard attach reads
         slim = lsh.rep_codes(codes).localCheckpoint(eager=True)
         # the banded representative table is a WRITTEN stage, at rest
-        # partitioned by band_pfx (pmod of the band key): one banding pass
-        # feeds both the metrics aggregation and the pair generator, the
-        # manifest records the bucketed layout, and a key-set probe of the
-        # stage (e.g. an incremental re-check against this snapshot) reads
-        # only matching partition directories — same contract as the
-        # streaming band index (streaming/ingest.py)
+        # partitioned by band_pfx (pmod of the band key): the manifest
+        # records the bucketed layout, and a key-set probe of the stage
+        # (e.g. an incremental re-check against this snapshot) reads only
+        # matching partition directories — same contract as the streaming
+        # band index (streaming/ingest.py). The metrics pass and the pair
+        # generator consume the band rows in-plan over the checkpointed
+        # slim table: re-reading the 64 band_pfx directories would cost a
+        # file-listing job; the stage is read back only on resume
         if store.has("bands"):
             band_rows = store.read(spark, "bands")
         else:
-            band_rows = store.write(
-                lsh.band_rows_table(slim, cfg.bands, cfg.rows).withColumn(
-                    "band_pfx", lsh.band_pfx()
-                ),
+            band_rows = lsh.band_rows_table(slim, cfg.bands, cfg.rows)
+            store.save(
+                band_rows.withColumn("band_pfx", lsh.band_pfx()),
                 "bands",
                 partition_by=["band_pfx"],
             )

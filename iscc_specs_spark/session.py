@@ -7,11 +7,14 @@ Python workers so pandas UDFs can import the kernel.
 
 from __future__ import annotations
 
+import logging
 import os
 
+from pyspark import SparkContext
 from pyspark.sql import SparkSession
 
 REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+log = logging.getLogger(__name__)
 
 
 def get_spark(
@@ -22,6 +25,7 @@ def get_spark(
 ) -> SparkSession:
     cores = cores or int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     shuffle_partitions = shuffle_partitions or max(2 * cores, 32)
+    jvm_opts = os.environ.get("SPARK_GRAFT_JVM_OPTS", "-XX:-DontCompileHugeMethods")
     os.environ["PYTHONPATH"] = (
         REPO_ROOT + os.pathsep + os.environ.get("PYTHONPATH", "")
     )
@@ -50,18 +54,29 @@ def get_spark(
         # slower than JIT'd on the cosine paths. Scale-independent JVM
         # tuning (standard recommendation for wide generated code); set on
         # both roles so a real cluster's executors JIT the same methods.
-        .config(
-            "spark.driver.extraJavaOptions",
-            os.environ.get("SPARK_GRAFT_JVM_OPTS", "-XX:-DontCompileHugeMethods"),
-        )
-        .config(
-            "spark.executor.extraJavaOptions",
-            os.environ.get("SPARK_GRAFT_JVM_OPTS", "-XX:-DontCompileHugeMethods"),
-        )
+        .config("spark.driver.extraJavaOptions", jvm_opts)
+        .config("spark.executor.extraJavaOptions", jvm_opts)
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
         .config("spark.executorEnv.PYTHONPATH", REPO_ROOT)
         .config("spark.ui.enabled", "false")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
-    return builder.getOrCreate()
+    # JVM options only apply when the JVM starts: a JVM this process already
+    # runs keeps its own, and the session's confs cannot change that
+    jvm_up = SparkContext._gateway is not None
+    spark = builder.getOrCreate()
+    if jvm_up:
+        running = set(
+            spark.sparkContext._jvm.java.lang.management.ManagementFactory
+            .getRuntimeMXBean().getInputArguments()
+        )
+        dropped = [o for o in jvm_opts.split() if o not in running]
+        if dropped:
+            log.warning(
+                "get_spark attached to a JVM that was already running; its "
+                "launch options stay in force and %s is dropped (start "
+                "the process's first session with get_spark)",
+                " ".join(dropped),
+            )
+    return spark

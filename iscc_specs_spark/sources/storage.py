@@ -2,9 +2,15 @@
 
 North-rule target is Iceberg; this sandbox has no Iceberg jars, so each
 stage writes a plain parquet directory plus a ``manifest.json`` snapshot
-record (stage name, config fingerprint, row count, wall time, per-partition
-lineage).  Swapping ``format("parquet")`` for ``format("iceberg")`` +
-snapshot-id bookkeeping is localized to this module (SURVEY.md §7.1).
+record (stage name, config fingerprint, wall time, schema, and the stage's
+lineage: rows, files and bytes).  Swapping ``format("parquet")`` for
+``format("iceberg")`` + snapshot-id bookkeeping is localized to this module
+(SURVEY.md §7.1).
+
+Lineage comes from the parquet footers the write just produced
+(``pyarrow.parquet.read_metadata``), not from a Spark rescan: recording a
+stage costs no Spark job. Re-reads pass the written schema
+(``spark.read.schema``), so they skip Spark's schema-inference job too.
 
 Resume contract: a stage is reusable iff its directory has Spark's
 ``_SUCCESS`` marker AND the manifest's config hash matches the current run
@@ -19,8 +25,8 @@ import os
 import time
 from typing import Any
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 
 def config_hash(cfg: dict[str, Any]) -> str:
@@ -29,11 +35,27 @@ def config_hash(cfg: dict[str, Any]) -> str:
     ).hexdigest()[:16]
 
 
+def _footer_lineage(path: str) -> dict:
+    """{rows, files, bytes} of the parquet files under ``path`` (partition
+    subdirectories included), read from the footers alone — no Spark job.
+    Spark's own ``_``/``.`` side files (markers, checksums) are skipped."""
+    rows = files = size = 0
+    for root, dirs, names in os.walk(path):
+        dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
+        for n in names:
+            if n.startswith(("_", ".")) or not n.endswith(".parquet"):
+                continue
+            fp = os.path.join(root, n)
+            rows += pq.read_metadata(fp).num_rows
+            files += 1
+            size += os.path.getsize(fp)
+    return {"rows": rows, "files": files, "bytes": size}
+
+
 class StageStore:
-    def __init__(self, root: str, cfg_hash: str, lineage: bool = True):
+    def __init__(self, root: str, cfg_hash: str):
         self.root = root
         self.cfg_hash = cfg_hash
-        self.lineage = lineage
         os.makedirs(root, exist_ok=True)
 
     def _dir(self, stage: str) -> str:
@@ -52,7 +74,13 @@ class StageStore:
         return manifest.get("config_hash") == self.cfg_hash
 
     def read(self, spark: SparkSession, stage: str) -> DataFrame:
-        return spark.read.parquet(self._dir(stage))
+        """Read a written stage back with the schema its manifest recorded
+        (no schema-inference job)."""
+        reader = spark.read
+        ddl = self.manifest(stage).get("schema_ddl")
+        if ddl:
+            reader = reader.schema(ddl)
+        return reader.parquet(self._dir(stage))
 
     def record_metrics(self, name: str, metrics: dict) -> None:
         """Side-channel metrics file (e.g. a curation funnel) next to the
@@ -63,6 +91,24 @@ class StageStore:
     def manifest(self, stage: str) -> dict:
         with open(self._manifest_path(stage)) as f:
             return json.load(f)
+
+    def _write_manifest(
+        self, df: DataFrame, stage: str, wall_ms: int, extra: dict,
+        metrics: dict | None,
+    ) -> None:
+        manifest = {
+            "stage": stage,
+            "snapshot_id": f"{stage}-{self.cfg_hash}",
+            "config_hash": self.cfg_hash,
+            **_footer_lineage(self._dir(stage)),
+            "wall_ms": wall_ms,
+            "written_at": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
+            **extra,
+            "schema_ddl": df._jdf.schema().toDDL(),
+            "metrics": metrics or {},
+        }
+        with open(self._manifest_path(stage), "w") as f:
+            json.dump(manifest, f, separators=(",", ":"))
 
     # --- bucketed stage tables (exchange-free co-located joins) ---------
     #
@@ -108,22 +154,11 @@ class StageStore:
             .saveAsTable(tbl)
         )
         wall_ms = int((time.monotonic() - t0) * 1000)
-        out = spark.table(tbl)
-        rows = out.count()
-        manifest = {
-            "stage": stage,
-            "snapshot_id": f"{stage}-{self.cfg_hash}",
-            "config_hash": self.cfg_hash,
-            "rows": rows,
-            "wall_ms": wall_ms,
-            "written_at": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
-            "bucket_by": {"key": key, "buckets": buckets},
-            "schema_ddl": df._jdf.schema().toDDL(),
-            "metrics": extra_metrics or {},
-        }
-        with open(self._manifest_path(stage), "w") as f:
-            json.dump(manifest, f, indent=1)
-        return out
+        self._write_manifest(
+            df, stage, wall_ms,
+            {"bucket_by": {"key": key, "buckets": buckets}}, extra_metrics,
+        )
+        return spark.table(tbl)
 
     def read_bucketed(self, spark: SparkSession, stage: str) -> DataFrame:
         """Read a bucketed stage back WITH its bucket spec. If the table
@@ -142,6 +177,26 @@ class StageStore:
             )
         return spark.table(tbl)
 
+    def save(
+        self,
+        df: DataFrame,
+        stage: str,
+        extra_metrics: dict | None = None,
+        partition_by: list[str] | None = None,
+    ) -> None:
+        """Materialize a stage and its manifest without reading it back.
+        Recording the stage adds no Spark job to the write's own."""
+        t0 = time.monotonic()
+        writer = df.write.mode("overwrite")
+        if partition_by:
+            writer = writer.partitionBy(*partition_by)
+        writer.parquet(self._dir(stage))
+        wall_ms = int((time.monotonic() - t0) * 1000)
+        self._write_manifest(
+            df, stage, wall_ms, {"partition_by": partition_by or []},
+            extra_metrics,
+        )
+
     def write(
         self,
         df: DataFrame,
@@ -150,37 +205,9 @@ class StageStore:
         partition_by: list[str] | None = None,
     ) -> DataFrame:
         """Materialize a stage; returns the re-read DataFrame (cuts lineage,
-        making every downstream stage restartable from disk)."""
-        t0 = time.monotonic()
-        writer = df.write.mode("overwrite")
-        if partition_by:
-            writer = writer.partitionBy(*partition_by)
-        path = self._dir(stage)
-        writer.parquet(path)
-        wall_ms = int((time.monotonic() - t0) * 1000)
-
-        spark = df.sparkSession
-        out = spark.read.parquet(path)
-        lineage_rows: list[dict] = []
-        if self.lineage:
-            lineage_rows = [
-                {"partition_id": int(r["pid"]), "rows": int(r["rows"])}
-                for r in out.groupBy(F.spark_partition_id().alias("pid"))
-                .agg(F.count("*").alias("rows"))
-                .collect()
-            ]
-        rows = sum(r["rows"] for r in lineage_rows) if lineage_rows else out.count()
-        manifest = {
-            "stage": stage,
-            "snapshot_id": f"{stage}-{self.cfg_hash}",
-            "config_hash": self.cfg_hash,
-            "rows": rows,
-            "wall_ms": wall_ms,
-            "written_at": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
-            "partition_by": partition_by or [],
-            "partitions": lineage_rows,
-            "metrics": extra_metrics or {},
-        }
-        with open(self._manifest_path(stage), "w") as f:
-            json.dump(manifest, f, indent=1)
-        return out
+        making every downstream stage restartable from disk). The re-read
+        lists the stage's files; with many partition directories Spark
+        lists them in a job of its own — use :meth:`save` where the caller
+        does not consume the re-read."""
+        self.save(df, stage, extra_metrics, partition_by)
+        return self.read(df.sparkSession, stage)

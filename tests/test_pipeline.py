@@ -131,14 +131,54 @@ def test_resume_reproduces_clusters_and_skips_stages(spark, tmp_path):
 
 
 def test_lineage_and_metrics_recorded(spark, tmp_path):
+    """Manifest lineage comes from the parquet footers: rows, files and
+    bytes match what a Spark read of the stage sees, for a plain stage,
+    the band_pfx-partitioned bands stage and a bucketed stage."""
     out = str(tmp_path / "metrics")
     pages = generate_pages(spark, 300, partitions=4)
     r = run_dedup(spark, pages, out, DedupConfig())
-    man = r["store"].manifest("dup_pairs")
+    store = r["store"]
+    man = store.manifest("dup_pairs")
     assert man["rows"] > 0 and man["wall_ms"] >= 0
     assert man["metrics"]["n_buckets"] > 0
     assert "max_bucket" in man["metrics"] and "capped_buckets" in man["metrics"]
-    assert len(r["store"].manifest("codes")["partitions"]) >= 1
+    store.write_bucketed(
+        r["codes"].select("url", "cid_body"), "codes_by_url", key="url", buckets=4
+    )
+    for stage, read in (
+        ("codes", store.read),
+        ("bands", store.read),
+        ("codes_by_url", store.read_bucketed),
+    ):
+        m = store.manifest(stage)
+        df = read(spark, stage)
+        assert m["rows"] == df.count() > 0, stage
+        assert m["files"] == len(df.inputFiles()), stage
+        assert m["bytes"] == sum(
+            os.path.getsize(f.removeprefix("file://")) for f in df.inputFiles()
+        ), stage
+
+
+def test_run_dedup_job_budget(spark, tmp_path):
+    """A cold run_dedup over 300 pages stays within a fixed Spark-job
+    budget — on a cold JVM each avoidable job and query plan costs about a
+    CPU-second of planning, codegen and JIT — and a resume of the finished
+    run launches no job at all."""
+    pages = generate_pages(spark, 300, partitions=4).localCheckpoint(eager=True)
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    out = str(tmp_path / "budget")
+    try:
+        sc.setJobGroup("run_dedup_budget", "cold run_dedup")
+        run_dedup(spark, pages, out, DedupConfig())
+        sc.setJobGroup("run_dedup_resume", "resumed run_dedup")
+        run_dedup(spark, pages, out, DedupConfig())
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    cold = tracker.getJobIdsForGroup("run_dedup_budget")
+    assert 0 < len(cold) <= 25, len(cold)
+    assert tracker.getJobIdsForGroup("run_dedup_resume") == []
 
 
 def test_canonical_pick_minby_no_window(spark):

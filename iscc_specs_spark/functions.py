@@ -26,11 +26,7 @@ from iscc_specs_spark.operators.dedup_variants import (  # noqa: F401
     normalized_fp,
 )
 from iscc_specs_spark.operators.ann import rhp_signature  # noqa: F401
-
-
-def hamming64(a: Column, b: Column) -> Column:
-    """Hamming distance between two 64-bit LONG columns — ``bit_count(xor)``."""
-    return F.bit_count(a.bitwiseXOR(b))
+from iscc_specs_spark.operators.lsh import hamming64
 
 
 def iscc_distance(body_a: Column, body_b: Column) -> Column:

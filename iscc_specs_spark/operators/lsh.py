@@ -35,7 +35,7 @@ machinery here is unchanged by that swap.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 DEFAULT_BANDS = 16
@@ -81,14 +81,35 @@ def rep_codes(codes: DataFrame) -> DataFrame:
     )
 
 
-def minhash_bands(
-    codes: DataFrame, bands: int = DEFAULT_BANDS, rows: int = DEFAULT_ROWS,
-    keep: tuple[str, ...] = (),
-) -> DataFrame:
-    """(url, *keep, band_id, band_hash) — native explode of xxhash64 band
-    keys; ``keep`` columns pass through unchanged (e.g. the streaming band
-    index preserves ``ingest_batch`` for partition attribution)."""
-    structs = [
+def hamming64(a: Column, b: Column) -> Column:
+    """Hamming distance between two 64-bit LONG columns — ``bit_count(xor)``."""
+    return F.bit_count(a.bitwiseXOR(b))
+
+
+def is_dup(
+    a: tuple[Column, Column, Column],
+    b: tuple[Column, Column, Column],
+    cid_max: int = CID_T_MAX_HAMMING,
+    sim_max: int = SIMHASH_MAX_HAMMING,
+) -> Column:
+    """The engine's dup predicate over two sides' ``(cid_body, simhash,
+    tophash)`` columns — shared by the inline bucket verifier, the hub-edge
+    verifier and the streaming vs-history probe:
+
+        hamming(cid_body) ≤ cid_max OR hamming(simhash) ≤ sim_max
+        OR tophash equal."""
+    (cid_a, sim_a, top_a), (cid_b, sim_b, top_b) = a, b
+    return (
+        (hamming64(cid_a, cid_b) <= cid_max)
+        | (hamming64(sim_a, sim_b) <= sim_max)
+        | (top_a == top_b)
+    )
+
+
+def _minhash_band_structs(bands: int, rows: int) -> list[Column]:
+    """struct(band_id, band_hash) per MinHash band: xxhash64 over the band's
+    ``rows`` consecutive signature values, seeded with the band index."""
+    return [
         F.struct(
             F.lit(i).alias("band_id"),
             F.xxhash64(
@@ -97,54 +118,15 @@ def minhash_bands(
         )
         for i in range(bands)
     ]
-    return codes.select(
-        "url", *keep, F.explode(F.array(*structs)).alias("b")
-    ).select(
-        "url", *keep,
-        F.col("b.band_id").alias("band_id"),
-        F.col("b.band_hash").alias("band_hash"),
-    )
 
 
-def simhash_bands(
-    codes: DataFrame, subkeys: int = 4, keep: tuple[str, ...] = ()
-) -> DataFrame:
-    """(url, *keep, band_id, band_hash) from 16-bit SimHash sub-keys;
+def _simhash_band_structs(subkeys: int = 4) -> list[Column]:
+    """struct(band_id, band_hash) per 64/subkeys-bit SimHash sub-key;
     band_id offset by 1000 to keep the key space disjoint from minhash
     bands."""
     width = 64 // subkeys
     mask = (1 << width) - 1
-    structs = [
-        F.struct(
-            F.lit(1000 + i).alias("band_id"),
-            (F.shiftrightunsigned(F.col("simhash"), i * width).bitwiseAND(F.lit(mask))).alias(
-                "band_hash"
-            ),
-        )
-        for i in range(subkeys)
-    ]
-    return codes.select("url", *keep, F.explode(F.array(*structs)).alias("b")).select(
-        "url", *keep,
-        F.col("b.band_id").alias("band_id"),
-        F.col("b.band_hash").alias("band_hash"),
-    )
-
-
-def _band_structs(bands: int, rows: int, subkeys: int = 4) -> list:
-    """Band-key struct expressions for one combined explode (minhash LSH
-    bands + simhash sub-key bands in a single projection pass)."""
-    out = [
-        F.struct(
-            F.lit(i).alias("band_id"),
-            F.xxhash64(
-                F.lit(i), *[F.col("minhash")[j] for j in range(i * rows, (i + 1) * rows)]
-            ).alias("band_hash"),
-        )
-        for i in range(bands)
-    ]
-    width = 64 // subkeys
-    mask = (1 << width) - 1
-    out += [
+    return [
         F.struct(
             F.lit(1000 + i).alias("band_id"),
             (F.shiftrightunsigned(F.col("simhash"), i * width).bitwiseAND(F.lit(mask)))
@@ -152,7 +134,26 @@ def _band_structs(bands: int, rows: int, subkeys: int = 4) -> list:
         )
         for i in range(subkeys)
     ]
-    return out
+
+
+def _explode_bands(df: DataFrame, lead: str, structs: list[Column]) -> DataFrame:
+    """(lead, band_id, band_hash) — one native explode over the band-key
+    structs."""
+    return df.select(lead, F.explode(F.array(*structs)).alias("b")).select(
+        lead, "b.band_id", "b.band_hash"
+    )
+
+
+def minhash_bands(
+    codes: DataFrame, bands: int = DEFAULT_BANDS, rows: int = DEFAULT_ROWS
+) -> DataFrame:
+    """(url, band_id, band_hash) — xxhash64 MinHash band keys."""
+    return _explode_bands(codes, "url", _minhash_band_structs(bands, rows))
+
+
+def simhash_bands(codes: DataFrame, subkeys: int = 4) -> DataFrame:
+    """(url, band_id, band_hash) from 16-bit SimHash sub-keys."""
+    return _explode_bands(codes, "url", _simhash_band_structs(subkeys))
 
 
 BAND_PFX_BUCKETS = 64
@@ -174,19 +175,16 @@ def band_rows_table(
 ) -> DataFrame:
     """(m struct(url,cid_body,simhash,tophash), band_id, band_hash) — the
     banded representative table with the verification payload riding along
-    (see verified_bucket_pairs). Exposed so plans/dedup.py can write it as
-    a band_pfx-partitioned stage table and feed the SAME at-rest rows to
-    the metrics pass and the pair generator."""
+    (see verified_bucket_pairs): minhash LSH bands + simhash sub-key bands
+    in a single projection pass. Exposed so plans/dedup.py can write it as
+    a band_pfx-partitioned stage table and feed the SAME rows to the
+    metrics pass and the pair generator."""
     payload = F.struct(
         F.col("url"), F.col("cid_body"), F.col("simhash"), F.col("tophash")
     )
-    return slim.select(
-        payload.alias("m"),
-        F.explode(F.array(*_band_structs(bands, rows))).alias("b"),
-    ).select(
-        "m",
-        F.col("b.band_id").alias("band_id"),
-        F.col("b.band_hash").alias("band_hash"),
+    return _explode_bands(
+        slim.withColumn("m", payload), "m",
+        _minhash_band_structs(bands, rows) + _simhash_band_structs(),
     )
 
 
@@ -203,13 +201,11 @@ def verified_bucket_pairs(
     chain — no post-hoc join back to the code table.
 
     The verification fields (cid_body, simhash, tophash ≈ 80 B) ride along
-    with each band row, so in-bucket pairs are verified inline by native
-    bit_count/XOR on the exploded combination structs. Compared to the
-    join-based verifier this removes two wide shuffles of the code table
-    and three query stages; the banding shuffle grows by ~4× in bytes but
-    stays a fraction of the code table (the 512 B minhash column — needed
-    only for the reported jaccard estimate, not the dup predicate — never
-    shuffles; it is re-attached to the few surviving pairs afterwards).
+    with each band row, so in-bucket pairs are verified inline by
+    :func:`is_dup` on the exploded combination structs. Only the band rows
+    shuffle; the 512 B minhash column — needed only for the reported
+    jaccard estimate, not the dup predicate — never does (attach_jaccard
+    re-attaches it to the few surviving pairs when asked).
 
     Oversized buckets (> bucket_cap, e.g. template farms): hub-and-spoke
     edges to the bucket-min url, O(k) not O(k²), never collected into one
@@ -249,24 +245,28 @@ def verified_bucket_pairs(
     members = cold_rows.groupBy("band_id", "band_hash").agg(
         F.collect_list("m").alias("ms")
     ).where(F.size("ms") >= 2)
-    combos = F.expr(
-        f"""
-        flatten(transform(ms, (x, i) ->
-          filter(transform(ms, (y, j) ->
-            IF(j > i AND (
-                 bit_count(x.cid_body ^ y.cid_body) <= {cid_max}
-                 OR bit_count(x.simhash ^ y.simhash) <= {sim_max}
-                 OR x.tophash = y.tophash),
-               struct(least(x.url, y.url) AS url_a,
-                      greatest(x.url, y.url) AS url_b,
-                      bit_count(x.cid_body ^ y.cid_body) AS cid_hamming,
-                      bit_count(x.simhash ^ y.simhash) AS simhash_hamming,
-                      x.tophash = y.tophash AS exact_dup),
-               NULL)), p -> p IS NOT NULL)))
-        """
-    )
+
+    def side(m):
+        return m["cid_body"], m["simhash"], m["tophash"]
+
+    def pairs_with(x, i):
+        # every later member y of the bucket that passes the predicate
+        def pair(y, j):
+            return F.when(
+                (j > i) & is_dup(side(x), side(y), cid_max, sim_max),
+                F.struct(
+                    F.least(x["url"], y["url"]).alias("url_a"),
+                    F.greatest(x["url"], y["url"]).alias("url_b"),
+                    hamming64(x["cid_body"], y["cid_body"]).alias("cid_hamming"),
+                    hamming64(x["simhash"], y["simhash"]).alias("simhash_hamming"),
+                    (x["tophash"] == y["tophash"]).alias("exact_dup"),
+                ),
+            )
+
+        return F.filter(F.transform("ms", pair), lambda p: p.isNotNull())
+
     pairs_small = (
-        members.select(F.explode(combos).alias("p"))
+        members.select(F.explode(F.flatten(F.transform("ms", pairs_with))).alias("p"))
         .select("p.url_a", "p.url_b", "p.cid_hamming", "p.simhash_hamming", "p.exact_dup")
         .dropDuplicates(["url_a", "url_b"])
         .withColumn("verified", F.lit(True))
@@ -293,115 +293,45 @@ def verified_bucket_pairs(
     return pairs_small.unionByName(pairs_big)
 
 
-def candidate_pairs(band_table: DataFrame, bucket_cap: int = 64) -> DataFrame:
-    """Bucket-join bands into candidate pairs with explicit skew handling.
-
-    Buckets ≤ bucket_cap: full self-join (url_a < url_b).
-    Buckets > bucket_cap: hub-and-spoke to min url (O(k) not O(k²)).
-    Returns distinct (url_a, url_b, src).
-    """
-    sizes = band_table.groupBy("band_id", "band_hash").agg(F.count("*").alias("bucket_n"))
-    # same partitioning key as the groupBy → exchange reuse, no extra shuffle
-    tagged = band_table.join(sizes, ["band_id", "band_hash"])
-    tagged = tagged.where(F.col("bucket_n") >= 2)
-
-    # capped buckets: gather members per bucket (≤ bucket_cap, so the array
-    # row is bounded) and emit the C(k,2) pairs with an in-array combination
-    # explode — one shuffle on the bucket key instead of a bucket self-join
-    # (the groupBy reuses the sizes exchange partitioning).
-    small = tagged.where(F.col("bucket_n") <= bucket_cap).select(
-        "band_id", "band_hash", "url"
-    )
-    members = small.groupBy("band_id", "band_hash").agg(
-        F.collect_list("url").alias("ms")
-    )
-    combos = F.expr(
-        "flatten(transform(ms, (x, i) -> "
-        "  filter(transform(ms, (y, j) -> "
-        "    IF(j > i, struct(least(x, y) AS url_a, greatest(x, y) AS url_b), "
-        "       NULL)), p -> p IS NOT NULL)))"
-    )
-    pairs_small = members.select(F.explode(combos).alias("p")).select(
-        "p.url_a", "p.url_b"
-    )
-
-    # oversized buckets (skew): never collect — hub-and-spoke join keeps the
-    # plan streaming at any bucket cardinality, O(k) edges preserve
-    # connectivity for clustering.
-    big = tagged.where(F.col("bucket_n") > bucket_cap).select(
-        "band_id", "band_hash", "url"
-    )
-    hubs = big.groupBy("band_id", "band_hash").agg(F.min("url").alias("hub"))
-    pairs_big = (
-        big.join(hubs, ["band_id", "band_hash"])
-        .where(F.col("url") != F.col("hub"))
-        .select(F.col("hub").alias("url_a"), F.col("url").alias("url_b"))
-    )
-
-    return (
-        pairs_small.union(pairs_big)
-        .distinct()
-        .withColumn("src", F.lit("lsh"))
-    )
-
-
-def hamming64(a, b):
-    """Native 64-bit Hamming distance column expression."""
-    return F.bit_count(a.bitwiseXOR(b))
-
-
 def verify_pairs(
     cand: DataFrame,
     codes_slim: DataFrame,
     cid_max: int = CID_T_MAX_HAMMING,
     sim_max: int = SIMHASH_MAX_HAMMING,
 ) -> DataFrame:
-    """Exact verification of candidate pairs — all native expressions.
+    """Exact verification of (url_a, url_b, src) candidate pairs against
+    ``codes_slim``: keeps the pairs that pass :func:`is_dup`, as (url_a,
+    url_b, src, cid_hamming, simhash_hamming, exact_dup)."""
 
-    dup iff  hamming(cid_body) ≤ cid_max
-          OR hamming(simhash)  ≤ sim_max
-          OR tophash equal.
-    Also emits jaccard_est = (#equal minhash positions)/64.
-    """
-    a = codes_slim.select(
-        F.col("url").alias("url_a"),
-        F.col("cid_body").alias("cid_a"),
-        F.col("simhash").alias("sim_a"),
-        F.col("minhash").alias("mh_a"),
-        F.col("tophash").alias("top_a"),
-    )
-    b = codes_slim.select(
-        F.col("url").alias("url_b"),
-        F.col("cid_body").alias("cid_b"),
-        F.col("simhash").alias("sim_b"),
-        F.col("minhash").alias("mh_b"),
-        F.col("tophash").alias("top_b"),
-    )
-    joined = cand.join(a, "url_a").join(b, "url_b")
-    eq_minhash = F.expr(
-        "aggregate(zip_with(mh_a, mh_b, (x, y) -> CASE WHEN x = y THEN 1 ELSE 0 END), "
-        "0, (acc, v) -> acc + v)"
-    )
-    out = joined.select(
-        "url_a",
-        "url_b",
-        "src",
-        hamming64(F.col("cid_a"), F.col("cid_b")).alias("cid_hamming"),
-        hamming64(F.col("sim_a"), F.col("sim_b")).alias("simhash_hamming"),
-        (eq_minhash / F.lit(64.0)).alias("jaccard_est"),
-        (F.col("top_a") == F.col("top_b")).alias("exact_dup"),
-    )
-    return out.where(
-        (F.col("cid_hamming") <= cid_max)
-        | (F.col("simhash_hamming") <= sim_max)
-        | F.col("exact_dup")
+    def side(s):
+        return codes_slim.select(
+            F.col("url").alias(f"url_{s}"),
+            F.col("cid_body").alias(f"cid_{s}"),
+            F.col("simhash").alias(f"sim_{s}"),
+            F.col("tophash").alias(f"top_{s}"),
+        )
+
+    a = F.col("cid_a"), F.col("sim_a"), F.col("top_a")
+    b = F.col("cid_b"), F.col("sim_b"), F.col("top_b")
+    return (
+        cand.join(side("a"), "url_a")
+        .join(side("b"), "url_b")
+        .where(is_dup(a, b, cid_max, sim_max))
+        .select(
+            "url_a",
+            "url_b",
+            "src",
+            hamming64(a[0], b[0]).alias("cid_hamming"),
+            hamming64(a[1], b[1]).alias("simhash_hamming"),
+            (a[2] == b[2]).alias("exact_dup"),
+        )
     )
 
 
 def attach_jaccard(pairs: DataFrame, slim: DataFrame) -> DataFrame:
     """Join the (few) surviving pairs back to the minhash signatures for the
-    reported jaccard estimate — survivors ≪ corpus, so these joins shuffle
-    a bounded fraction of what the old join-everything verifier moved."""
+    reported jaccard_est = (#equal minhash positions)/64 — survivors ≪
+    corpus, so these joins shuffle a bounded fraction of the code table."""
     a = slim.select(F.col("url").alias("url_a"), F.col("minhash").alias("mh_a"))
     b = slim.select(F.col("url").alias("url_b"), F.col("minhash").alias("mh_b"))
     eq_minhash = F.expr(
@@ -424,72 +354,58 @@ def dup_pairs(
     cid_max: int = CID_T_MAX_HAMMING,
     sim_max: int = SIMHASH_MAX_HAMMING,
     compute_jaccard: bool = False,
-    materialize: bool = True,
     slim: DataFrame | None = None,
     band_rows: DataFrame | None = None,
 ) -> DataFrame:
-    """codes → verified duplicate pairs (exact ∪ minhash-LSH ∪ simhash).
+    """codes → verified duplicate pairs (exact ∪ minhash-LSH ∪ simhash), as
+    (url_a, url_b, src, cid_hamming, simhash_hamming, jaccard_est,
+    exact_dup).
 
     Capped buckets verify inline during candidate generation
     (verified_bucket_pairs); only oversized-bucket hub edges take the
-    residual join-verify path; jaccard estimates attach to survivors only.
-    ``compute_jaccard`` defaults OFF (r07): the dup predicate never uses
-    jaccard — it is reporting metadata — and the two attach joins are pure
-    overhead for every caller that only consumes the pair set (clustering,
-    the driver rows, the pipeline bench). Pass True where the jaccard
-    column is actually persisted/read (plans/dedup.py's stage table).
-    With the default, ``jaccard_est`` is NULL on every LSH pair (exact
-    pairs carry 1.0).
-
-    ``materialize=True`` checkpoints the slim representative table: it has
-    ~6 downstream consumers (banding, sizes, verify sides, jaccard sides,
-    exact pairs) and without materialization Spark re-expands — and
-    re-shuffles — the full-corpus tophash aggregation once per consumer
-    (visible in explain as duplicated min_by subtrees). At warehouse scale
-    this would instead be a written stage table (plans/dedup.py).
+    residual join-verify path (verify_pairs). ``jaccard_est`` is attached
+    once, to the deduplicated verified set: ``compute_jaccard`` defaults
+    OFF because the dup predicate never uses jaccard — it is reporting
+    metadata — and the two attach joins are pure overhead for
+    every caller that only consumes the pair set (clustering, the
+    ``__spark_entry__`` query rows, the pipeline bench). Pass True where the jaccard column is
+    actually persisted/read (plans/dedup.py's stage table). With the
+    default, ``jaccard_est`` is NULL on every LSH pair (exact pairs carry
+    1.0).
 
     ``slim``: pass a precomputed (ideally already-materialized)
     representative table to share it with other consumers (e.g. the
-    lsh_metrics pass in plans/dedup.py) instead of re-aggregating.
+    lsh_metrics pass in plans/dedup.py) instead of re-aggregating. When
+    None, the representative table is built and checkpointed here: it has
+    ~6 downstream consumers (banding, sizes, verify sides, jaccard sides,
+    exact pairs) and without materialization Spark re-expands — and
+    re-shuffles — the full-corpus tophash aggregation once per consumer.
     """
     if slim is None:
-        slim = rep_codes(codes)
-        if materialize:
-            slim = slim.localCheckpoint(eager=True)
+        slim = rep_codes(codes).localCheckpoint(eager=True)
     vb = verified_bucket_pairs(
         slim, bands, rows, bucket_cap, cid_max, sim_max, band_rows=band_rows
     )
-    small_ok = (
-        vb.where(F.col("verified"))
-        .drop("verified")
-        .withColumn("src", F.lit("lsh"))
+    inline_ok = (
+        vb.where(F.col("verified")).drop("verified").withColumn("src", F.lit("lsh"))
     )
-    residual = vb.where(~F.col("verified")).select(
-        "url_a", "url_b", F.lit("lsh").alias("src")
+    hub_ok = verify_pairs(
+        vb.where(~F.col("verified")).select(
+            "url_a", "url_b", F.lit("lsh").alias("src")
+        ),
+        slim, cid_max, sim_max,
     )
-    residual_ok = verify_pairs(residual, slim, cid_max, sim_max)
+    verified = inline_ok.unionByName(hub_ok).dropDuplicates(["url_a", "url_b"])
     if compute_jaccard:
-        small_full = attach_jaccard(small_ok, slim)
+        verified = attach_jaccard(verified, slim)
     else:
-        small_full = small_ok.withColumn(
-            "jaccard_est", F.lit(None).cast("double")
-        )
-        # keep both branches NULL: a pair surviving in both would otherwise
-        # reach dropDuplicates with two rows differing only in jaccard_est —
-        # which one wins is nondeterministic
-        residual_ok = residual_ok.withColumn(
-            "jaccard_est", F.lit(None).cast("double")
-        )
-    cols = [
-        "url_a", "url_b", "src", "cid_hamming", "simhash_hamming",
-        "jaccard_est", "exact_dup",
-    ]
-    verified = small_full.select(*cols).unionByName(
-        residual_ok.select(*cols)
-    ).dropDuplicates(["url_a", "url_b"])
+        verified = verified.withColumn("jaccard_est", F.lit(None).cast("double"))
     exact = exact_pairs(codes, slim).select(
         "url_a", "url_b", "src",
         F.lit(0).alias("cid_hamming"), F.lit(0).alias("simhash_hamming"),
         F.lit(1.0).alias("jaccard_est"), F.lit(True).alias("exact_dup"),
     )
-    return verified.unionByName(exact)
+    return verified.select(
+        "url_a", "url_b", "src", "cid_hamming", "simhash_hamming",
+        "jaccard_est", "exact_dup",
+    ).unionByName(exact)

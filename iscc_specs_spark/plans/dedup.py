@@ -109,7 +109,6 @@ def run_dedup(
     pages: DataFrame,
     out_dir: str,
     cfg: DedupConfig | None = None,
-    collect_lsh_metrics: bool = True,
 ) -> dict:
     """Returns {"clusters": DataFrame, "store": StageStore, ...stage dfs}."""
     cfg = cfg or DedupConfig()
@@ -166,9 +165,6 @@ def run_dedup(
                 "bands",
                 partition_by=["band_pfx"],
             )
-        metrics = (
-            lsh_metrics(band_rows, cfg.bucket_cap) if collect_lsh_metrics else {}
-        )
         pairs = store.write(
             lsh.dup_pairs(
                 codes, cfg.bands, cfg.rows, cfg.bucket_cap, cfg.cid_max,
@@ -178,7 +174,7 @@ def run_dedup(
                 compute_jaccard=True,
             ),
             "dup_pairs",
-            metrics,
+            lsh_metrics(band_rows, cfg.bucket_cap),
         )
 
     # ③ clusters (+ singleton attach)

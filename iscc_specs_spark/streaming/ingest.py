@@ -45,10 +45,11 @@ FLAGS_SCHEMA = "url string, dup_of string, src string, ingest_batch int"
 # down to the new batch's own key prefixes — per-batch probe I/O is bounded
 # by |distinct new prefixes| / INDEX_BUCKETS of the index instead of a full
 # scan. The bucket count must stay constant for a state dir's lifetime
-# (it is baked into the stored directory layout); indexes written before
-# this column existed are detected by the missing column and read unpruned.
-# The prefix expression and bucket count are shared with the batch
-# pipeline's at-rest band stage table (operators/lsh.py).
+# (it is baked into the stored directory layout). process_dedup_batch is
+# the index's only writer and always writes this layout; a state dir whose
+# codes history has no index, or whose index lacks band_pfx, raises
+# BandIndexError. The prefix expression and bucket count are shared with
+# the batch pipeline's at-rest band stage table (operators/lsh.py).
 from iscc_specs_spark.operators.lsh import (  # noqa: E402
     BAND_PFX_BUCKETS as INDEX_BUCKETS,
     band_pfx,
@@ -296,104 +297,9 @@ def _record_index_buckets(state_dir: str, n: int, sub: str = "bands") -> None:
         os.replace(tmp, meta)
 
 
-def _migrate_legacy_band_index(
-    spark: SparkSession, state_dir: str, index_buckets: int
-) -> None:
-    """One-time in-place upgrade of a pre-``band_pfx`` band index.
-
-    A legacy index is partitioned by ``ingest_batch`` only; merely *reading*
-    it unpruned would be correct, but the batch's own band rows are written
-    ``(ingest_batch, band_pfx)``-partitioned into the same directory, and
-    Spark's parquet reader refuses mixed partition depths ('Conflicting
-    directory structures') — so the stream would survive exactly one batch.
-    On first contact the legacy table is therefore rewritten once with
-    ``band_pfx`` computed under each row's OWN ``ingest_batch`` partition
-    (replay semantics keep holding), staged through a sibling directory and
-    swapped in with renames. Crash windows are replay-safe: an interrupted
-    swap leaves either the untouched legacy table (migration simply reruns)
-    or a complete staged table (the swap is finished below); if ``bands/``
-    is missing entirely, ``process_dedup_batch``'s codes-backfill path
-    rebuilds the index from scratch. Local-FS renames are the sandbox seam
-    — on Iceberg this whole function is partition-spec evolution, no
-    rewrite."""
-    import json
-    import os
-    import shutil
-
-    bands = os.path.join(state_dir, "bands")
-    staging = os.path.join(state_dir, "bands__migrating")
-    legacy_dir = os.path.join(state_dir, "bands__legacy")
-    # staging is COMPLETE iff its meta file exists AND parses: the meta is
-    # written (atomically, today) only after the parquet write finishes —
-    # but a pre-upgrade version wrote it non-atomically, so a crash could
-    # leave a truncated JSON which, once renamed into bands/, would make
-    # _effective_index_buckets raise on every later batch with no
-    # self-healing path. An unparsable/key-less meta therefore counts as
-    # an INCOMPLETE staging (rmtree + rebuild), never as done.
-    def _staging_meta_ok() -> bool:
-        try:
-            with open(os.path.join(staging, "_INDEX_META.json")) as f:
-                return isinstance(json.load(f).get("index_buckets"), int)
-        except (OSError, ValueError):
-            return False
-
-    staging_done = _staging_meta_ok()
-    if not os.path.isdir(bands):
-        if os.path.isdir(staging):
-            if staging_done:
-                os.rename(staging, bands)  # finish an interrupted swap
-            else:
-                shutil.rmtree(staging)  # partial build: backfill rebuilds
-        if os.path.isdir(legacy_dir):
-            shutil.rmtree(legacy_dir)  # crash landed mid-swap: old copy
-        return
-    hb = _read_history(spark, bands)
-    if hb is None:
-        # bands/ exists but holds no readable data (e.g. a meta-only dir
-        # left by a crashed first batch). If a COMPLETE staged copy exists,
-        # finish the swap instead of letting the codes-backfill path
-        # rebuild the whole index from scratch.
-        if os.path.isdir(staging):
-            if staging_done:
-                shutil.rmtree(bands)
-                os.rename(staging, bands)
-            else:
-                shutil.rmtree(staging)
-        if os.path.isdir(legacy_dir):
-            shutil.rmtree(legacy_dir)
-        return
-    if "band_pfx" in hb.columns:
-        if os.path.isdir(staging):
-            shutil.rmtree(staging)  # stale leftover from a completed swap
-        if os.path.isdir(legacy_dir):
-            # crash landed between the staging→bands rename and the legacy
-            # cleanup: the migrated table is live, drop the old copy
-            shutil.rmtree(legacy_dir)
-        return
-    if os.path.isdir(staging):
-        shutil.rmtree(staging)  # incomplete prior attempt: rebuild
-    # a legacy-layout dir can still carry a meta (a crash between the old
-    # record-meta-first ordering's two steps): the recorded modulus wins
-    # over the parameter, same invariant as the probe path
-    index_buckets = _effective_index_buckets(state_dir, index_buckets)
-    migrated = hb.withColumn("band_pfx", band_pfx(index_buckets))
-    (
-        migrated.write.mode("overwrite")
-        .partitionBy("ingest_batch", "band_pfx")
-        .parquet(staging)
-    )
-    # the modulus the migrated layout was built with must travel with it —
-    # written atomically AFTER the parquet write, doubling as the
-    # staging-complete marker checked above
-    tmp = os.path.join(staging, "_INDEX_META.json.tmp")
-    with open(tmp, "w") as f:
-        json.dump({"index_buckets": index_buckets}, f)
-    os.replace(tmp, os.path.join(staging, "_INDEX_META.json"))
-    if os.path.isdir(legacy_dir):
-        shutil.rmtree(legacy_dir)
-    os.rename(bands, legacy_dir)
-    os.rename(staging, bands)
-    shutil.rmtree(legacy_dir)
+class BandIndexError(RuntimeError):
+    """A streaming state dir whose band index is missing or not in the
+    (ingest_batch, band_pfx) layout that process_dedup_batch writes."""
 
 
 def read_band_index(
@@ -404,17 +310,23 @@ def read_band_index(
 ) -> DataFrame | None:
     """Pruned view of the maintained band index for batch ``batch_id``'s
     vs-history probe: replay-safe ``ingest_batch < batch_id`` plus — when
-    the layout carries ``band_pfx`` and the probe supplies its prefix set —
-    a literal ``band_pfx IN (...)`` partition filter, so the scan lists only
-    matching partition directories (static pruning: both predicates are on
-    partition columns and appear as PartitionFilters in the plan). Returns
-    None iff the index does not exist yet (legacy state dir — caller
-    backfills)."""
+    the probe supplies its prefix set — a literal ``band_pfx IN (...)``
+    partition filter, so the scan lists only matching partition
+    directories (static pruning: both predicates are on partition columns
+    and appear as PartitionFilters in the plan). Returns None iff the index
+    does not exist yet; raises :class:`BandIndexError` if it lacks the
+    ``band_pfx`` partition column."""
     hb = _read_history(spark, f"{state_dir}/bands")
     if hb is None:
         return None
+    if "band_pfx" not in hb.columns:
+        raise BandIndexError(
+            f"band index {state_dir}/bands has no band_pfx partition column: "
+            "it was not written by process_dedup_batch's (ingest_batch, "
+            "band_pfx) layout; rebuild the state dir"
+        )
     hb = hb.where(F.col("ingest_batch") < F.lit(batch_id))
-    if new_pfx is not None and "band_pfx" in hb.columns:
+    if new_pfx is not None:
         hb = hb.where(F.col("band_pfx").isin(sorted(new_pfx)))
     return hb.select("url", "band_id", "band_hash")
 
@@ -457,23 +369,18 @@ def process_dedup_batch(
     rather than the index's full size. The bucket modulus is recorded in
     the index's ``_INDEX_META.json`` on first write and ALWAYS wins over
     the ``index_buckets`` parameter afterwards (a mismatched modulus would
-    silently prune away true matches); a legacy index without the
-    ``band_pfx`` column is migrated in place on first contact (see
-    :func:`_migrate_legacy_band_index` — mixed partition depths would fail
-    the next batch's read, so read-unpruned is not a stable posture).
+    silently prune away true matches).
+
+    A state dir this function did not write fails loudly: when codes
+    history exists but ``state_dir/bands`` does not, or the index lacks
+    the ``band_pfx`` column, :class:`BandIndexError` is raised before any
+    state is written — the stream never degrades to an unpruned or
+    partial probe.
     """
     from iscc_specs_spark.operators import lsh
 
     spark = batch_df.sparkSession
-    # migrate BEFORE recording the modulus: the old record-first ordering
-    # could re-create bands/ as a meta-only dir during a replayed crash
-    # window, making the migration's finish-swap branch unreachable (the
-    # fallback then rebuilt the whole index). The migration derives its
-    # own effective modulus; _effective afterwards picks up whichever
-    # meta (migrated or pre-existing) is now live.
-    _migrate_legacy_band_index(spark, state_dir, index_buckets)
     index_buckets = _effective_index_buckets(state_dir, index_buckets)
-    _record_index_buckets(state_dir, index_buckets)
     batch = batch_df.localCheckpoint(eager=True)
 
     # within-batch pairs (standard path; url_a < url_b → flag url_b)
@@ -520,22 +427,10 @@ def process_dedup_batch(
         )
         hb = read_band_index(spark, state_dir, batch_id, new_pfx)
         if hb is None:
-            # legacy state dir written before the index existed: backfill
-            # it once from history codes, under each history row's OWN
-            # ingest_batch partition (so replay semantics — `< batch_id`
-            # prunes only the replayed batch — keep holding afterwards)
-            backfill = (
-                lsh.minhash_bands(hist, keep=("ingest_batch",)).union(
-                    lsh.simhash_bands(hist, keep=("ingest_batch",))
-                )
-            ).withColumn("band_pfx", band_pfx(index_buckets))
-            (
-                backfill.write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("ingest_batch", "band_pfx")
-                .parquet(f"{state_dir}/bands")
+            raise BandIndexError(
+                f"state dir {state_dir} holds codes history but no band "
+                f"index at {state_dir}/bands; rebuild the state dir"
             )
-            hb = read_band_index(spark, state_dir, batch_id, new_pfx)
         # vs-history candidates with the engine-standard hot-bucket cap:
         # restrict the index to the new batch's band keys first (semi-join
         # — each history row matches once per key, NOT once per new url),
@@ -604,10 +499,9 @@ def process_dedup_batch(
         )
         cross = both.where(
             (F.col("url_a") != F.col("url_b"))  # re-crawled url ≠ dup of self
-            & (
-                (lsh.hamming64(F.col("cid_a"), F.col("cid_b")) <= lsh.CID_T_MAX_HAMMING)
-                | (lsh.hamming64(F.col("sim_a"), F.col("sim_b")) <= lsh.SIMHASH_MAX_HAMMING)
-                | (F.col("top_a") == F.col("top_b"))
+            & lsh.is_dup(
+                (F.col("cid_a"), F.col("sim_a"), F.col("top_a")),
+                (F.col("cid_b"), F.col("sim_b"), F.col("top_b")),
             )
         ).select(
             F.col("url_a").alias("url"), F.col("url_b").alias("dup_of"),
@@ -620,6 +514,7 @@ def process_dedup_batch(
     # flags + codes + this batch's band-index rows, each into its own
     # ingest_batch partition (replay overwrites itself in all three); the
     # band index is additionally partitioned by band_pfx for probe pruning
+    _record_index_buckets(state_dir, index_buckets)
     for df, sub, parts in (
         (flags, "dup_flags", ("ingest_batch",)),
         (batch, "codes", ("ingest_batch",)),

@@ -181,6 +181,34 @@ def test_run_dedup_job_budget(spark, tmp_path):
     assert tracker.getJobIdsForGroup("run_dedup_resume") == []
 
 
+def test_dup_pairs_jaccard_est(spark, tmp_path):
+    """run_dedup's dup_pairs stage reports jaccard_est = (#equal minhash
+    positions)/64 on every LSH pair and 1.0 on every exact pair;
+    lsh.dup_pairs with its default leaves it NULL on every LSH pair."""
+    from pyspark.sql import functions as F
+
+    from iscc_specs_spark.operators import lsh
+
+    pages = generate_pages(spark, 300, partitions=4)
+    r = run_dedup(spark, pages, str(tmp_path / "jaccard"), DedupConfig())
+    mh = {
+        row["url"]: np.array(row["minhash"])
+        for row in r["codes"].select("url", "minhash").collect()
+    }
+    pairs = r["dup_pairs"].collect()
+    assert {p["src"] for p in pairs} == {"lsh", "exact"}
+    for p in pairs:
+        if p["src"] == "exact":
+            assert p["jaccard_est"] == 1.0, p
+        else:
+            same = np.count_nonzero(mh[p["url_a"]] == mh[p["url_b"]])
+            assert p["jaccard_est"] == same / 64, p
+
+    default = lsh.dup_pairs(r["codes"]).where(F.col("src") == "lsh")
+    assert default.count() > 0
+    assert default.where(F.col("jaccard_est").isNotNull()).count() == 0
+
+
 def test_canonical_pick_minby_no_window(spark):
     """Canonical pick must be the skew-free min_by aggregation: no Window
     operator (whose partitionBy(cluster_id) sort would put a mega-cluster

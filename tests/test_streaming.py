@@ -538,62 +538,59 @@ def test_index_bucket_modulus_survives_restart(spark, tmp_path):
         assert json.load(f) == {"index_buckets": 64}  # unchanged
 
 
-def test_legacy_band_index_migrates_on_first_contact(spark, tmp_path):
-    """A pre-band_pfx band index (partitioned by ingest_batch only) must be
-    rewritten to the (ingest_batch, band_pfx) layout the first time a batch
-    touches it — otherwise the batch's own (ingest_batch, band_pfx) write
-    creates mixed partition depths and the NEXT batch's index read fails
-    with 'Conflicting directory structures' (the stream survives exactly
-    one batch). Pins the round-5 advice finding."""
+def test_missing_or_unpartitioned_band_index_fails_loudly(spark, tmp_path):
+    """process_dedup_batch is the band index's only writer and always
+    writes the (ingest_batch, band_pfx) layout. A state dir whose codes
+    history has no index, or whose index lacks band_pfx, must raise
+    BandIndexError naming the state dir — before any state is written, so
+    dup_flags and codes stay exactly as they were."""
+    import re
     import shutil
 
-    from iscc_specs_spark.streaming.ingest import process_dedup_batch
+    import pytest
 
-    state = str(tmp_path / "state_legacy")
+    from iscc_specs_spark.streaming.ingest import (
+        BandIndexError,
+        process_dedup_batch,
+    )
+
+    state = str(tmp_path / "state_bad_index")
     pages = generate_pages(spark, 60, partitions=2)
     codes = compute_codes(pages, ("text", "data")).localCheckpoint(eager=True)
     b0 = codes.where("url like '%/p/0'")
     b1 = codes.where("url like '%/p/1'")
     b2 = codes.where("url not like '%/p/0' and url not like '%/p/1'")
-
     process_dedup_batch(b0, 0, state)
+    process_dedup_batch(b1, 1, state)
 
-    # downgrade bands/ to the legacy layout: drop band_pfx, repartition by
-    # ingest_batch only, no _INDEX_META.json (predates both features)
-    legacy_rows = (
-        spark.read.parquet(state + "/bands").drop("band_pfx")
-        .localCheckpoint(eager=True)
-    )
-    shutil.rmtree(state + "/bands")
+    def snap(*subs):
+        out = {}
+        for sub in subs:
+            for root, _, files in os.walk(os.path.join(state, sub)):
+                for f in files:
+                    with open(os.path.join(root, f), "rb") as fh:
+                        out[os.path.relpath(os.path.join(root, f), state)] = fh.read()
+        return out
+
+    # (a) codes history without a band index
+    saved = state + "__bands"
+    shutil.move(state + "/bands", saved)
+    before = snap("dup_flags", "codes")
+    with pytest.raises(BandIndexError, match=re.escape(state)):
+        process_dedup_batch(b2, 2, state)
+    assert snap("dup_flags", "codes") == before
+    assert not os.path.exists(state + "/bands")
+
+    # (b) an index partitioned by ingest_batch only (no band_pfx)
     (
-        legacy_rows.write.mode("overwrite")
-        .partitionBy("ingest_batch")
+        spark.read.parquet(saved).drop("band_pfx")
+        .write.partitionBy("ingest_batch")
         .parquet(state + "/bands")
     )
-    assert not any(
-        d.startswith("band_pfx=")
-        for d in os.listdir(state + "/bands/ingest_batch=0")
-    )
-
-    # first contact migrates; the batch after that is the one that used to
-    # die on the mixed directory structure
-    process_dedup_batch(b1, 1, state)
-    process_dedup_batch(b2, 2, state)
-
-    bands = spark.read.parquet(state + "/bands")
-    assert "band_pfx" in bands.columns
-    for b in (0, 1, 2):
-        assert any(
-            d.startswith("band_pfx=")
-            for d in os.listdir(f"{state}/bands/ingest_batch={b}")
-        ), f"ingest_batch={b} not in the (ingest_batch, band_pfx) layout"
-    assert not os.path.exists(state + "/bands__migrating")
-    assert not os.path.exists(state + "/bands__legacy")
-
-    # the migrated index still finds cross-batch near-dups (generate_pages
-    # plants near-dup variants across the url space)
-    flags = spark.read.parquet(state + "/dup_flags")
-    assert flags.where("src = 'vs_history'").count() > 0
+    before = snap("dup_flags", "codes", "bands")
+    with pytest.raises(BandIndexError, match=re.escape(state)):
+        process_dedup_batch(b2, 2, state)
+    assert snap("dup_flags", "codes", "bands") == before
 
 
 def test_curate_state_one_row_per_recrawled_url(spark, tmp_path):
@@ -622,42 +619,3 @@ def test_curate_state_empty_state_is_schema_stable(spark, tmp_path):
     out = curate_state(spark, str(tmp_path / "never_written"))
     assert out.columns == ["url", "cluster_id", "is_canonical"]
     assert out.count() == 0
-
-
-def test_interrupted_migration_swap_finishes_without_rebuild(spark, tmp_path):
-    """Crash window: the staged (complete, meta-marked) copy exists while
-    bands/ was re-created as a meta-only dir by a replay. The migration
-    must FINISH the swap (cheap rename), not delete both copies and leave
-    the backfill path to rebuild the index from scratch; an incomplete
-    staging (no meta marker) must be discarded, never renamed in."""
-    import shutil
-
-    from iscc_specs_spark.streaming.ingest import (
-        _migrate_legacy_band_index,
-        process_dedup_batch,
-    )
-
-    state = str(tmp_path / "state_swap")
-    pages = generate_pages(spark, 30, partitions=2)
-    codes = compute_codes(pages, ("text", "data")).localCheckpoint(eager=True)
-    process_dedup_batch(codes, 0, state)
-    n_rows = spark.read.parquet(state + "/bands").count()
-
-    # simulate: swap built and meta-marked, bands re-created meta-only
-    os.rename(state + "/bands", state + "/bands__migrating")
-    os.makedirs(state + "/bands")
-    shutil.copy(
-        state + "/bands__migrating/_INDEX_META.json",
-        state + "/bands/_INDEX_META.json",
-    )
-    _migrate_legacy_band_index(spark, state, 16)
-    assert not os.path.exists(state + "/bands__migrating")
-    assert spark.read.parquet(state + "/bands").count() == n_rows
-
-    # incomplete staging (no meta marker): discarded, bands untouched
-    os.makedirs(state + "/bands__migrating")
-    with open(state + "/bands__migrating/part-incomplete.parquet", "wb"):
-        pass
-    _migrate_legacy_band_index(spark, state, 16)
-    assert not os.path.exists(state + "/bands__migrating")
-    assert spark.read.parquet(state + "/bands").count() == n_rows

@@ -159,8 +159,14 @@ def rhp_buckets_arrow(
     without a join-back — no shuffle of the embedding column, same
     single-crossing posture as the codegen stage); batch temporaries are
     n × nbits × dim float64 — a few MB at the session's Arrow batch size.
+    The id and passthrough columns keep their types from ``df.schema``.
+
+    Every ``vec_col`` vector must be non-NULL with exactly ``dim``
+    elements: a NULL or ragged vector raises ``ValueError`` (surfacing as
+    the task's Python error) instead of signing a wrong-shaped batch.
     """
     import pandas as pd
+    from pyspark.sql.types import ArrayType, LongType, StructField, StructType
 
     planes = np.stack(
         [
@@ -173,7 +179,21 @@ def rhp_buckets_arrow(
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            V = np.array(list(pdf[vec_col]), dtype=np.float64)
+            vecs = pdf[vec_col]
+            null = vecs.isna()
+            if null.any():
+                raise ValueError(
+                    f"rhp_buckets_arrow: NULL {vec_col} vector at {id_col}="
+                    f"{pdf[id_col][null].iloc[0]}"
+                )
+            ragged = vecs.map(len) != dim
+            if ragged.any():
+                raise ValueError(
+                    f"rhp_buckets_arrow: {vec_col} vector of length "
+                    f"{len(vecs[ragged].iloc[0])} at {id_col}="
+                    f"{pdf[id_col][ragged].iloc[0]}, expected dim={dim}"
+                )
+            V = np.array(list(vecs), dtype=np.float64)
             sigs = np.empty((len(pdf), ntables), dtype=np.int64)
             for t in range(ntables):
                 sigs[:, t] = _rhp_sig_batch(V, planes[t])
@@ -183,10 +203,9 @@ def rhp_buckets_arrow(
             out["sigs"] = list(sigs)
             yield pd.DataFrame(out)
 
-    pass_schema = ", ".join(
-        [f"{id_col} long"]
-        + [f"{c} array<double>" for c in passthrough]
-        + ["sigs array<long>"]
+    pass_schema = StructType(
+        [df.schema[c] for c in (id_col, *passthrough)]
+        + [StructField("sigs", ArrayType(LongType()))]
     )
     in_cols = [id_col, vec_col] + [c for c in passthrough if c != vec_col]
     return df.select(*in_cols).mapInPandas(run, schema=pass_schema)

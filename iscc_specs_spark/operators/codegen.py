@@ -39,8 +39,10 @@ TEXT_COLS = (
     "content_id string, cid_body long, simhash long, "
     "minhash array<long>, n_features int"
 )
+# The kernel's ``data_minhash`` feeds data_id/did_body and is not emitted:
+# no reader of the codes table uses it
 DATA_COLS = (
-    "data_id string, did_body long, data_minhash array<long>, n_chunks int, "
+    "data_id string, did_body long, n_chunks int, "
     "instance_id string, iid_body long, tophash string"
 )
 
@@ -121,7 +123,6 @@ def compute_codes(
                 out.update(
                     data_id=db["did"],
                     did_body=db["did_body"],
-                    data_minhash=[r.astype("int64").tolist() for r in db["data_minhash"]],
                     n_chunks=db["n_chunks"],
                     instance_id=db["iid"],
                     iid_body=db["iid_body"],

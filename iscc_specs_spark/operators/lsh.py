@@ -136,6 +136,12 @@ def _simhash_band_structs(subkeys: int = 4) -> list[Column]:
     ]
 
 
+def _all_band_structs(bands: int, rows: int) -> list[Column]:
+    """MinHash band structs then SimHash sub-key structs — every band key
+    of a row."""
+    return _minhash_band_structs(bands, rows) + _simhash_band_structs()
+
+
 def _explode_bands(df: DataFrame, lead: str, structs: list[Column]) -> DataFrame:
     """(lead, band_id, band_hash) — one native explode over the band-key
     structs."""
@@ -154,6 +160,17 @@ def minhash_bands(
 def simhash_bands(codes: DataFrame, subkeys: int = 4) -> DataFrame:
     """(url, band_id, band_hash) from 16-bit SimHash sub-keys."""
     return _explode_bands(codes, "url", _simhash_band_structs(subkeys))
+
+
+def band_keys(
+    codes: DataFrame, bands: int = DEFAULT_BANDS, rows: int = DEFAULT_ROWS
+) -> DataFrame:
+    """(url, band_id, band_hash) — the keys-only band index rows, MinHash
+    bands and SimHash sub-keys in one explode: the row set of
+    ``minhash_bands ∪ simhash_bands``. The one shape of every band table
+    at rest: the batch ``bands`` stage (plans/dedup.py) and the streaming
+    maintained index (streaming/ingest.py)."""
+    return _explode_bands(codes, "url", _all_band_structs(bands, rows))
 
 
 BAND_PFX_BUCKETS = 64
@@ -176,15 +193,14 @@ def band_rows_table(
     """(m struct(url,cid_body,simhash,tophash), band_id, band_hash) — the
     banded representative table with the verification payload riding along
     (see verified_bucket_pairs): minhash LSH bands + simhash sub-key bands
-    in a single projection pass. Exposed so plans/dedup.py can write it as
-    a band_pfx-partitioned stage table and feed the SAME rows to the
-    metrics pass and the pair generator."""
+    in a single projection pass. Exposed so plans/dedup.py can feed the
+    SAME rows to the metrics pass and the pair generator; the stage it
+    writes at rest holds only the keys (:func:`band_keys`)."""
     payload = F.struct(
         F.col("url"), F.col("cid_body"), F.col("simhash"), F.col("tophash")
     )
     return _explode_bands(
-        slim.withColumn("m", payload), "m",
-        _minhash_band_structs(bands, rows) + _simhash_band_structs(),
+        slim.withColumn("m", payload), "m", _all_band_structs(bands, rows)
     )
 
 
@@ -214,8 +230,8 @@ def verified_bucket_pairs(
     exact_dup) for capped buckets plus unverified hub edges flagged
     verified=false.
 
-    ``band_rows``: pass a precomputed band table (e.g. the band_pfx-
-    partitioned stage table plans/dedup.py writes) to skip the in-plan
+    ``band_rows``: pass a precomputed band table (e.g. the one
+    plans/dedup.py also feeds to its metrics pass) to skip the in-plan
     banding; must have band_rows_table's (m, band_id, band_hash) shape.
     """
     if band_rows is None:

@@ -140,6 +140,13 @@ def suffix_ranks(
 
     The DuckDB twin is one window expression over exploded positions:
     ``dense_rank() OVER (ORDER BY substring(text, pos, max_prefix))``.
+
+    Consume once on the direct-rank path: when ``max_prefix`` ≤
+    ``DIRECT_RANK_MAX`` the one global rank covers the whole prefix and
+    the result is returned un-checkpointed, so every action on it re-runs
+    the full range sort. A caller that reads the ranks more than once
+    materializes them itself (``localCheckpoint(eager=True)``); the
+    doubling path (longer prefixes) already returns checkpointed ranks.
     """
     txt = F.coalesce(F.col(text_col), F.lit(""))
     n = F.length(txt)

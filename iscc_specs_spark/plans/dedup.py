@@ -64,13 +64,17 @@ def lsh_metrics(band_table: DataFrame, bucket_cap: int) -> dict:
 def probe_band_stage(
     spark: SparkSession, store: StageStore, pfx: list[int] | None = None
 ) -> DataFrame:
-    """Read a run's at-rest banded stage table, statically pruned to the
-    given ``band_pfx`` buckets — the batch mirror of the streaming index
-    probe (streaming/ingest.read_band_index). An incremental re-check of a
+    """Read a run's at-rest band index — keys-only (url, band_id,
+    band_hash, band_pfx) rows, the same shape as the streaming index
+    (streaming/ingest.read_band_index) — statically pruned to the given
+    ``band_pfx`` buckets. An incremental re-check of a
     key set against a finished snapshot computes the keys' prefixes with
     :func:`lsh.band_pfx` and passes them here; Spark pushes the IN-list
     into PartitionFilters, so probe I/O is bounded by prefix coverage, not
-    snapshot size (plan-gated in tests/test_pipeline.py)."""
+    snapshot size (plan-gated in tests/test_pipeline.py). An out dir written
+    while the stage still carried the verification payload keeps that older
+    layout (band_id, band_hash and an ``m`` struct): resume reuses the
+    stage as it is."""
     df = store.read(spark, "bands")
     if pfx is not None:
         df = df.where(F.col("band_pfx").isin([int(p) for p in pfx]))
@@ -144,27 +148,28 @@ def run_dedup(
             codes = codes.withColumn("tophash", F.col("url"))
         # one slim representative table feeds BOTH the band stage and the
         # exact-dup pairing (previously two independent full-corpus
-        # aggregations). No written stage covers it: the bands stage drops
-        # the minhash column the jaccard attach reads
+        # aggregations). No written stage covers it: the bands stage keeps
+        # only band keys, not the payload verification and jaccard read
         slim = lsh.rep_codes(codes).localCheckpoint(eager=True)
-        # the banded representative table is a WRITTEN stage, at rest
-        # partitioned by band_pfx (pmod of the band key): the manifest
-        # records the bucketed layout, and a key-set probe of the stage
-        # (e.g. an incremental re-check against this snapshot) reads only
-        # matching partition directories — same contract as the streaming
-        # band index (streaming/ingest.py). The metrics pass and the pair
-        # generator consume the band rows in-plan over the checkpointed
-        # slim table: re-reading the 64 band_pfx directories would cost a
-        # file-listing job; the stage is read back only on resume
-        if store.has("bands"):
-            band_rows = store.read(spark, "bands")
-        else:
-            band_rows = lsh.band_rows_table(slim, cfg.bands, cfg.rows)
+        # the band index is a WRITTEN stage of keys-only rows (url,
+        # band_id, band_hash), at rest partitioned by band_pfx (pmod of the
+        # band key): the manifest records the bucketed layout, and a
+        # key-set probe of the stage (e.g. an incremental re-check against
+        # this snapshot) reads only matching partition directories — the
+        # same shape and contract as the streaming band index
+        # (streaming/ingest.py). The metrics pass and the pair generator
+        # consume the payload-carrying band rows in-plan over the
+        # checkpointed slim table, which a resume rebuilds anyway: the
+        # stage is never read back
+        if not store.has("bands"):
             store.save(
-                band_rows.withColumn("band_pfx", lsh.band_pfx()),
+                lsh.band_keys(slim, cfg.bands, cfg.rows).withColumn(
+                    "band_pfx", lsh.band_pfx()
+                ),
                 "bands",
                 partition_by=["band_pfx"],
             )
+        band_rows = lsh.band_rows_table(slim, cfg.bands, cfg.rows)
         pairs = store.write(
             lsh.dup_pairs(
                 codes, cfg.bands, cfg.rows, cfg.bucket_cap, cfg.cid_max,

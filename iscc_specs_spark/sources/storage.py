@@ -35,21 +35,30 @@ def config_hash(cfg: dict[str, Any]) -> str:
     ).hexdigest()[:16]
 
 
-def _footer_lineage(path: str) -> dict:
-    """{rows, files, bytes} of the parquet files under ``path`` (partition
-    subdirectories included), read from the footers alone — no Spark job.
-    Spark's own ``_``/``.`` side files (markers, checksums) are skipped."""
-    rows = files = size = 0
+def parquet_files(path: str) -> list[str]:
+    """The parquet data files under ``path`` (partition subdirectories
+    included), sorted. Spark's own ``_``/``.`` side files (markers,
+    checksums) are skipped."""
+    out = []
     for root, dirs, names in os.walk(path):
         dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
-        for n in names:
-            if n.startswith(("_", ".")) or not n.endswith(".parquet"):
-                continue
-            fp = os.path.join(root, n)
-            rows += pq.read_metadata(fp).num_rows
-            files += 1
-            size += os.path.getsize(fp)
-    return {"rows": rows, "files": files, "bytes": size}
+        out += [
+            os.path.join(root, n)
+            for n in names
+            if n.endswith(".parquet") and not n.startswith(("_", "."))
+        ]
+    return sorted(out)
+
+
+def _footer_lineage(path: str) -> dict:
+    """{rows, files, bytes} of the parquet files under ``path``, read from
+    the footers alone — no Spark job."""
+    files = parquet_files(path)
+    return {
+        "rows": sum(pq.read_metadata(fp).num_rows for fp in files),
+        "files": len(files),
+        "bytes": sum(os.path.getsize(fp) for fp in files),
+    }
 
 
 class StageStore:

@@ -393,9 +393,9 @@ def process_dedup_batch(
     # this batch's contribution to the band index (ALL rows, matching the
     # probe semantics: every historical row must be findable, not just its
     # exact-dup representative)
-    own_bands = (
-        lsh.minhash_bands(batch).union(lsh.simhash_bands(batch))
-    ).withColumn("band_pfx", band_pfx(index_buckets))
+    own_bands = lsh.band_keys(batch).withColumn(
+        "band_pfx", band_pfx(index_buckets)
+    )
 
     hist = _read_history(spark, f"{state_dir}/codes")
     if hist is not None:
@@ -411,11 +411,7 @@ def process_dedup_batch(
         hist_slim = hist.select(
             "url", "cid_body", "simhash", "minhash", "tophash"
         )
-        nb = (
-            lsh.minhash_bands(new_slim)
-            .union(lsh.simhash_bands(new_slim))
-            .localCheckpoint(eager=True)
-        )
+        nb = lsh.band_keys(new_slim).localCheckpoint(eager=True)
         # the new batch's key prefixes: ≤ index_buckets ints, collected on
         # the driver and pushed down as a literal partition filter (static
         # pruning — the probe never lists non-matching band_pfx dirs)
@@ -513,12 +509,17 @@ def process_dedup_batch(
 
     # flags + codes + this batch's band-index rows, each into its own
     # ingest_batch partition (replay overwrites itself in all three); the
-    # band index is additionally partitioned by band_pfx for probe pruning
+    # band index is additionally partitioned by band_pfx for probe pruning,
+    # and repartitioned by it first so each band_pfx directory of a batch
+    # gets one file (≤ index_buckets files per batch, not tasks × buckets)
     _record_index_buckets(state_dir, index_buckets)
     for df, sub, parts in (
         (flags, "dup_flags", ("ingest_batch",)),
         (batch, "codes", ("ingest_batch",)),
-        (own_bands, "bands", ("ingest_batch", "band_pfx")),
+        (
+            own_bands.repartition("band_pfx"), "bands",
+            ("ingest_batch", "band_pfx"),
+        ),
     ):
         (
             df.withColumn("ingest_batch", F.lit(batch_id))

@@ -83,6 +83,45 @@ def test_rhp_lsh_requires_dim(emb):
         ann.rhp_lsh_topk(df, df.where(df.vec_id < 2), k=3)
 
 
+def test_rhp_buckets_arrow_keeps_input_types(spark):
+    """Id and passthrough columns come out with their input types (a
+    string id, a float array) and the signatures equal the long-id run's."""
+    from pyspark.sql import functions as F
+
+    rows = [(i, [float(i + j) - 3.5 for j in range(4)]) for i in range(6)]
+    df = spark.createDataFrame(rows, "vec_id long, v array<double>")
+    want = ann.rhp_buckets_arrow(df, 4, 2, 7, 4, passthrough=("v",))
+    assert dict(want.dtypes) == {
+        "vec_id": "bigint", "v": "array<double>", "sigs": "array<bigint>",
+    }
+    named = df.select(
+        F.concat(F.lit("doc-"), F.col("vec_id").cast("string")).alias("name"),
+        "v", F.col("v").cast("array<float>").alias("vf"),
+    )
+    got = ann.rhp_buckets_arrow(
+        named, 4, 2, 7, 4, id_col="name", passthrough=("vf",)
+    )
+    assert dict(got.dtypes) == {
+        "name": "string", "vf": "array<float>", "sigs": "array<bigint>",
+    }
+    assert sorted((f"doc-{r['vec_id']}", r["sigs"]) for r in want.collect()) == (
+        sorted((r["name"], r["sigs"]) for r in got.collect())
+    )
+
+
+@pytest.mark.parametrize(
+    "bad, match",
+    [(None, "NULL v vector at vec_id=2"),
+     ([1.0, 2.0], "v vector of length 2 at vec_id=2, expected dim=4")],
+)
+def test_rhp_buckets_arrow_rejects_null_or_ragged_vectors(spark, bad, match):
+    rows = [(i, [1.0, -1.0, 0.5, 2.0]) for i in range(4)]
+    rows[2] = (2, bad)
+    df = spark.createDataFrame(rows, "vec_id long, v array<double>")
+    with pytest.raises(Exception, match=match):
+        ann.rhp_buckets_arrow(df, 4, 2, 7, 4).collect()
+
+
 def test_ivf_build_partition_invariant(spark):
     """The quantizer is a pure function of the corpus — repartitioning must
     change neither centroids nor assignments (fixed-point integer centroid

@@ -159,18 +159,26 @@ def test_lineage_and_metrics_recorded(spark, tmp_path):
         ), stage
 
 
+# bytes at rest per document of a cold run_dedup over the 300-page fixture,
+# the five stage manifests' ``bytes`` summed: 1300 measured, 23% headroom —
+# a bands stage carrying the verification payload, or a data_minhash codes
+# column, puts it at ~3300
+STATE_BYTES_PER_DOC_MAX = 1600
+
+
 def test_run_dedup_job_budget(spark, tmp_path):
     """A cold run_dedup over 300 pages stays within a fixed Spark-job
     budget — on a cold JVM each avoidable job and query plan costs about a
-    CPU-second of planning, codegen and JIT — and a resume of the finished
-    run launches no job at all."""
+    CPU-second of planning, codegen and JIT — and a fixed budget of bytes
+    at rest per document, and a resume of the finished run launches no job
+    at all."""
     pages = generate_pages(spark, 300, partitions=4).localCheckpoint(eager=True)
     sc = spark.sparkContext
     tracker = sc.statusTracker()
     out = str(tmp_path / "budget")
     try:
         sc.setJobGroup("run_dedup_budget", "cold run_dedup")
-        run_dedup(spark, pages, out, DedupConfig())
+        store = run_dedup(spark, pages, out, DedupConfig())["store"]
         sc.setJobGroup("run_dedup_resume", "resumed run_dedup")
         run_dedup(spark, pages, out, DedupConfig())
     finally:
@@ -179,6 +187,12 @@ def test_run_dedup_job_budget(spark, tmp_path):
     cold = tracker.getJobIdsForGroup("run_dedup_budget")
     assert 0 < len(cold) <= 25, len(cold)
     assert tracker.getJobIdsForGroup("run_dedup_resume") == []
+    total = sum(
+        store.manifest(s)["bytes"]
+        for s in ("codes", "bands", "dup_pairs", "clusters", "canonical")
+    )
+    per_doc = total / store.manifest("codes")["rows"]
+    assert per_doc <= STATE_BYTES_PER_DOC_MAX, per_doc
 
 
 def test_dup_pairs_jaccard_est(spark, tmp_path):
@@ -275,29 +289,44 @@ def test_generate_pages_slices_union_to_full_range(spark):
 
 
 def test_band_stage_is_bucketed_at_rest(spark, tmp_path):
-    """The rep/band table is a WRITTEN stage partitioned by band_pfx: the
-    manifest records the layout, the directory has the pfx dirs, a
+    """The band index is a WRITTEN stage of keys-only rows (url, band_id,
+    band_hash) partitioned by band_pfx — the streaming index's shape: its
+    rows are minhash_bands ∪ simhash_bands over the representative table,
+    the manifest records the layout, the directory has the pfx dirs, and a
     key-filtered probe of the stage carries the partition filter (static
-    pruning), and resume reuses the stage byte-identically."""
-    import json
-
-    from pyspark.sql import functions as F
+    pruning). The codes stage carries no data_minhash column. Killed after
+    the bands stage, a resume rebuilds the band rows in plan (the stage is
+    never read back), reproduces dup_pairs — Hamming columns and
+    jaccard_est included — and clusters, and does not rewrite the stage."""
+    from iscc_specs_spark.operators import lsh
 
     out = str(tmp_path / "bandstage")
     pages = generate_pages(spark, 300, partitions=4)
     r1 = run_dedup(spark, pages, out, DedupConfig())
-    man = r1["store"].manifest("bands")
+    store = r1["store"]
+    man = store.manifest("bands")
     assert man["partition_by"] == ["band_pfx"]
     pfx_dirs = [d for d in os.listdir(out + "/bands") if d.startswith("band_pfx=")]
     assert len(pfx_dirs) > 1
-    # resume (kill after stage ②): bands not rewritten, clusters identical
-    c1 = sorted(map(tuple, r1["clusters"].collect()))
-    bands_manifest_1 = r1["store"].manifest("bands")
-    for stage in ("clusters", "canonical"):
+    bands = store.read(spark, "bands")
+    assert bands.columns == ["url", "band_id", "band_hash", "band_pfx"]
+    slim = lsh.rep_codes(r1["codes"])
+    want = lsh.minhash_bands(slim).union(lsh.simhash_bands(slim))
+    got = sorted(map(tuple, bands.select("url", "band_id", "band_hash").collect()))
+    assert got == sorted(map(tuple, want.collect()))
+    assert "data_minhash" not in store.read(spark, "codes").columns
+    # resume (kill after the bands stage)
+    pairs_1 = sorted(map(tuple, r1["dup_pairs"].collect()))
+    clusters_1 = sorted(map(tuple, r1["clusters"].collect()))
+    with open(os.path.join(out, "bands.manifest.json"), "rb") as f:
+        bands_manifest_1 = f.read()
+    for stage in ("dup_pairs", "clusters", "canonical"):
         os.remove(os.path.join(out, f"{stage}.manifest.json"))
     r2 = run_dedup(spark, pages, out, DedupConfig())
-    assert sorted(map(tuple, r2["clusters"].collect())) == c1
-    assert r2["store"].manifest("bands") == bands_manifest_1
+    assert sorted(map(tuple, r2["dup_pairs"].collect())) == pairs_1
+    assert sorted(map(tuple, r2["clusters"].collect())) == clusters_1
+    with open(os.path.join(out, "bands.manifest.json"), "rb") as f:
+        assert f.read() == bands_manifest_1
     # a key-set probe of the RESUMED snapshot must be a pure pruned parquet
     # scan: both mirror assertions from the streaming gate
     # (test_streaming.test_band_index_probe_plan_is_pruned_scan) — the

@@ -176,6 +176,27 @@ def test_history_bands_probed_from_maintained_index(spark, tmp_path):
     assert os.path.isdir(state + "/bands/ingest_batch=1")
 
 
+def test_band_index_writes_one_file_per_partition(spark, tmp_path):
+    """Each micro-batch writes one parquet file per ingest_batch=k/
+    band_pfx=p directory of the band index — at most index_buckets files
+    per batch however many tasks produced its band rows."""
+    import glob
+
+    from iscc_specs_spark.streaming.ingest import INDEX_BUCKETS, process_dedup_batch
+
+    state = str(tmp_path / "state_files")
+    pages = generate_pages(spark, 40, partitions=2)
+    codes = compute_codes(pages, ("text", "data")).repartition(4)
+    codes = codes.localCheckpoint(eager=True)
+    process_dedup_batch(codes.where("url like '%/p/0'"), 0, state)
+    process_dedup_batch(codes.where("url not like '%/p/0'"), 1, state)
+    for k in (0, 1):
+        dirs = glob.glob(f"{state}/bands/ingest_batch={k}/band_pfx=*")
+        assert 1 < len(dirs) <= INDEX_BUCKETS
+        for d in dirs:
+            assert len(glob.glob(d + "/*.parquet")) == 1, d
+
+
 def test_read_dup_flags_empty_state(spark, tmp_path):
     """A stream whose batches emitted zero flags leaves an empty partitioned
     dup_flags dir; read_dup_flags must return an empty, correctly-typed

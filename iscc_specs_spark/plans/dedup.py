@@ -13,7 +13,7 @@ stage (kill-after-stage produces byte-identical final clusters — T4).
 
 from __future__ import annotations
 
-from dataclasses import asdict, dataclass, field
+from dataclasses import asdict, dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -32,15 +32,6 @@ class DedupConfig:
     bucket_cap: int = 64
     cid_max: int = lsh.CID_T_MAX_HAMMING
     sim_max: int = lsh.SIMHASH_MAX_HAMMING
-    # >0: write the url-keyed stage tables (codes, clusters, canonical)
-    # hash-BUCKETED by url into this many buckets (sources/storage.py
-    # write_bucketed). Every url-equi-join among resumed stages — the
-    # canonical pick's codes ⋈ clusters, any downstream key probe — then
-    # runs exchange-free off the bucketed scans (plan-proved in
-    # tests/test_storage_bucketed.py / test_pipeline.py). Default off:
-    # at benchmark sizes the fixed per-bucket file overhead outweighs the
-    # saved shuffle; at 100 TB bucket counts are sized to the cluster.
-    bucket_by_url: int = 0
 
 
 def lsh_metrics(band_table: DataFrame, bucket_cap: int) -> dict:
@@ -118,25 +109,11 @@ def run_dedup(
     cfg = cfg or DedupConfig()
     store = StageStore(out_dir, config_hash(asdict(cfg)))
 
-    def _write_url_stage(df, name):
-        # url-keyed stages optionally go down bucketed so their mutual
-        # equi-joins never shuffle on resume (DedupConfig.bucket_by_url)
-        if cfg.bucket_by_url:
-            return store.write_bucketed(
-                df, name, key="url", buckets=cfg.bucket_by_url
-            )
-        return store.write(df, name)
-
-    def _read_url_stage(name):
-        if cfg.bucket_by_url:
-            return store.read_bucketed(spark, name)
-        return store.read(spark, name)
-
     # ① codes
     if store.has("codes"):
-        codes = _read_url_stage("codes")
+        codes = store.read(spark, "codes")
     else:
-        codes = _write_url_stage(compute_codes(pages, cfg.tracks), "codes")
+        codes = store.write(compute_codes(pages, cfg.tracks), "codes")
 
     # ② dup pairs
     if store.has("dup_pairs"):
@@ -184,20 +161,18 @@ def run_dedup(
 
     # ③ clusters (+ singleton attach)
     if store.has("clusters"):
-        clusters = _read_url_stage("clusters")
+        clusters = store.read(spark, "clusters")
     else:
-        clusters = _write_url_stage(
+        clusters = store.write(
             assign_clusters(codes.select("url"), pairs), "clusters"
         )
 
     # ④ canonical representative per cluster: keep oldest (warc_ts, url)
-    # (skew-free min_by aggregation — see canonical_pick; with
-    # bucket_by_url the members join reads two co-bucketed scans and
-    # starts shuffle-free)
+    # (skew-free min_by aggregation — see canonical_pick)
     if store.has("canonical"):
-        canonical = _read_url_stage("canonical")
+        canonical = store.read(spark, "canonical")
     else:
-        canonical = _write_url_stage(canonical_pick(codes, clusters), "canonical")
+        canonical = store.write(canonical_pick(codes, clusters), "canonical")
 
     return {
         "codes": codes,

@@ -119,73 +119,6 @@ class StageStore:
         with open(self._manifest_path(stage), "w") as f:
             json.dump(manifest, f, separators=(",", ":"))
 
-    # --- bucketed stage tables (exchange-free co-located joins) ---------
-    #
-    # Hash-bucketed at-rest layout is the 100 TB lever partitionBy cannot
-    # provide: two stage tables bucketed by the same key into the same
-    # bucket count join WITHOUT any Exchange — Spark's bucketed scan
-    # already satisfies the join's distribution requirement, so a resumed
-    # run's codes ⋈ clusters (url) or any downstream key-probe moves zero
-    # bytes over the network. Bucketing metadata lives in the session
-    # catalog, not the parquet footers, so re-attaching an existing
-    # bucketed directory in a NEW session just re-issues the CREATE TABLE
-    # DDL (schema + CLUSTERED BY recorded in the manifest) over the same
-    # LOCATION — the resume contract stays file-based.
-
-    def _table_name(self, stage: str) -> str:
-        slug = hashlib.sha256(
-            os.path.abspath(self.root).encode()
-        ).hexdigest()[:12]
-        return f"stage_{slug}_{stage}"
-
-    def write_bucketed(
-        self,
-        df: DataFrame,
-        stage: str,
-        key: str,
-        buckets: int = 64,
-        extra_metrics: dict | None = None,
-    ) -> DataFrame:
-        """Materialize a stage hash-bucketed (and per-file sorted) by
-        ``key`` as an external table at the stage directory; returns the
-        catalog-backed DataFrame whose scans carry the bucket spec."""
-        spark = df.sparkSession
-        tbl = self._table_name(stage)
-        path = self._dir(stage)
-        t0 = time.monotonic()
-        spark.sql(f"DROP TABLE IF EXISTS {tbl}")
-        (
-            df.write.mode("overwrite")
-            .option("path", path)
-            .bucketBy(buckets, key)
-            .sortBy(key)
-            .format("parquet")
-            .saveAsTable(tbl)
-        )
-        wall_ms = int((time.monotonic() - t0) * 1000)
-        self._write_manifest(
-            df, stage, wall_ms,
-            {"bucket_by": {"key": key, "buckets": buckets}}, extra_metrics,
-        )
-        return spark.table(tbl)
-
-    def read_bucketed(self, spark: SparkSession, stage: str) -> DataFrame:
-        """Read a bucketed stage back WITH its bucket spec. If the table
-        is not in this session's catalog (fresh session resuming an
-        on-disk run), re-register the external table from the manifest's
-        recorded schema + bucket spec over the existing directory."""
-        tbl = self._table_name(stage)
-        if not spark.catalog.tableExists(tbl):
-            m = self.manifest(stage)
-            b = m["bucket_by"]
-            spark.sql(
-                f"CREATE TABLE {tbl} ({m['schema_ddl']}) USING PARQUET "
-                f"CLUSTERED BY ({b['key']}) SORTED BY ({b['key']}) "
-                f"INTO {b['buckets']} BUCKETS "
-                f"LOCATION '{self._dir(stage)}'"
-            )
-        return spark.table(tbl)
-
     def save(
         self,
         df: DataFrame,

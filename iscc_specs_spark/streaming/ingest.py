@@ -44,30 +44,55 @@ FLAGS_SCHEMA = "url string, dup_of string, src string, ingest_batch int"
 # pruning, band_pfx gives the vs-history probe *static partition pruning*
 # down to the new batch's own key prefixes — per-batch probe I/O is bounded
 # by |distinct new prefixes| / INDEX_BUCKETS of the index instead of a full
-# scan. The bucket count must stay constant for a state dir's lifetime
-# (it is baked into the stored directory layout). process_dedup_batch is
-# the index's only writer and always writes this layout; a state dir whose
-# codes history has no index, or whose index lacks band_pfx, raises
-# BandIndexError. The prefix expression and bucket count are shared with
-# the batch pipeline's at-rest band stage table (operators/lsh.py).
+# scan. INDEX_BUCKETS is the modulus of both streaming indexes (band_pfx
+# here, url_pfx for the url index); it is baked into the stored directory
+# layout, so each index records it in ``_INDEX_META.json`` at first write
+# and the recorded value wins for the state dir's lifetime.
+# process_dedup_batch is the index's only writer and always writes this
+# layout; a state dir whose codes history has no index, or whose index
+# lacks band_pfx, raises BandIndexError. The prefix expression and bucket
+# count are shared with the batch pipeline's at-rest band stage table
+# (operators/lsh.py).
 from iscc_specs_spark.operators.lsh import (  # noqa: E402
     BAND_PFX_BUCKETS as INDEX_BUCKETS,
     band_pfx,
 )
 
 
+def _read_state(spark: SparkSession, path: str, schema: str) -> DataFrame:
+    """An accumulated state table read with its explicit schema: an empty
+    dir or an absent dir gives an empty DataFrame, never a
+    schema-inference failure."""
+    from pyspark.errors import AnalysisException
+
+    try:
+        return spark.read.schema(schema).parquet(path)
+    except AnalysisException as e:
+        if "PATH_NOT_FOUND" in str(e) or "Path does not exist" in str(e):
+            return spark.createDataFrame([], schema)
+        raise
+
+
+def _write_batch(
+    df: DataFrame, batch_id: int, path: str, *parts: str
+) -> None:
+    """Write one micro-batch's rows into its own ``ingest_batch=<id>``
+    partition (then ``parts``) with dynamic partition overwrite, so a
+    replayed batch overwrites its own earlier write."""
+    (
+        df.withColumn("ingest_batch", F.lit(batch_id))
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("ingest_batch", *parts)
+        .parquet(path)
+    )
+
+
 def read_dup_flags(spark: SparkSession, state_dir: str) -> DataFrame:
     """Accumulated dup-flags state, schema-stable even when no batch has
     emitted a flag yet (empty dir → empty DataFrame, absent dir → empty
     DataFrame, never a schema-inference failure)."""
-    from pyspark.errors import AnalysisException
-
-    try:
-        return spark.read.schema(FLAGS_SCHEMA).parquet(f"{state_dir}/dup_flags")
-    except AnalysisException as e:
-        if "PATH_NOT_FOUND" in str(e) or "Path does not exist" in str(e):
-            return spark.createDataFrame([], FLAGS_SCHEMA)
-        raise
+    return _read_state(spark, f"{state_dir}/dup_flags", FLAGS_SCHEMA)
 
 
 def read_pages_stream(
@@ -105,13 +130,7 @@ def _partition_overwrite_sink(out_dir: str):
     batch overwrites its own partition)."""
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
-        (
-            batch_df.withColumn("ingest_batch", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("ingest_batch")
-            .parquet(out_dir)
-        )
+        _write_batch(batch_df, batch_id, out_dir)
 
     return sink
 
@@ -197,7 +216,6 @@ def start_incremental_dedup_stream(
     tracks: tuple[str, ...] = ("text", "data"),
     trigger_once: bool = True,
     bucket_cap: int = 64,
-    index_buckets: int = INDEX_BUCKETS,
 ) -> StreamingQuery:
     """Streaming near-dup flagging: each micro-batch's pages are coded and
     LSH-matched against every previously ingested document, then appended to
@@ -230,9 +248,7 @@ def start_incremental_dedup_stream(
     codes_stream = compute_codes(pages_stream, tracks)
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
-        process_dedup_batch(
-            batch_df, batch_id, state_dir, bucket_cap, index_buckets
-        )
+        process_dedup_batch(batch_df, batch_id, state_dir, bucket_cap)
 
     return _start_stream(codes_stream, sink, checkpoint_dir, trigger_once)
 
@@ -258,17 +274,16 @@ def _read_history(spark: SparkSession, path: str) -> DataFrame | None:
         raise
 
 
-def _effective_index_buckets(
-    state_dir: str, requested: int, sub: str = "bands"
-) -> int:
-    """The band index's ON-DISK bucket count always wins over the caller's
-    parameter: ``band_pfx`` partition pruning is only correct when probe
-    prefixes are computed with the same modulus the index was written
-    with — a mismatched parameter would silently prune away true
-    vs-history matches (missed dup flags, no error). First writer records
-    the modulus in ``bands/_INDEX_META.json`` (underscore-prefixed files
-    are invisible to Spark's parquet listing); later batches — and
-    restarts with a different default — derive it from there. Local-FS
+def _effective_index_buckets(state_dir: str, sub: str = "bands") -> int:
+    """The index's ON-DISK bucket count, or :data:`INDEX_BUCKETS` for an
+    index not written yet. The stored value wins over the constant:
+    ``band_pfx`` partition pruning is only correct when probe prefixes are
+    computed with the same modulus the index was written with — a changed
+    constant would silently prune away true vs-history matches (missed dup
+    flags, no error). First writer records the modulus in
+    ``<sub>/_INDEX_META.json`` (underscore-prefixed files are invisible to
+    Spark's parquet listing); later batches — and restarts of a build with
+    a different constant — derive it from there. Local-FS
     JSON is the sandbox seam; at warehouse scale this is one more field in
     the table's manifest (sources/storage.py)."""
     import json
@@ -278,7 +293,7 @@ def _effective_index_buckets(
     if os.path.exists(meta):
         with open(meta) as f:
             return int(json.load(f)["index_buckets"])
-    return requested
+    return INDEX_BUCKETS
 
 
 def _record_index_buckets(state_dir: str, n: int, sub: str = "bands") -> None:
@@ -298,8 +313,10 @@ def _record_index_buckets(state_dir: str, n: int, sub: str = "bands") -> None:
 
 
 class BandIndexError(RuntimeError):
-    """A streaming state dir whose band index is missing or not in the
-    (ingest_batch, band_pfx) layout that process_dedup_batch writes."""
+    """A streaming state dir whose maintained streaming index is missing or
+    not in the layout its only writer writes: (ingest_batch, band_pfx) for
+    process_dedup_batch's band index, (ingest_batch, url_pfx) for
+    process_url_batch's url index."""
 
 
 def read_band_index(
@@ -336,7 +353,6 @@ def process_dedup_batch(
     batch_id: int,
     state_dir: str,
     bucket_cap: int = 64,
-    index_buckets: int = INDEX_BUCKETS,
 ) -> None:
     """One micro-batch of the incremental dedup stream (the ``foreachBatch``
     body, exposed at module level so replay semantics are testable and the
@@ -359,8 +375,8 @@ def process_dedup_batch(
     O(|batch|) banding + one pruned probe of the index.
 
     Index layout: partitioned by (ingest_batch, band_pfx) where band_pfx =
-    pmod(xxhash64(band_id, band_hash), index_buckets). Before the probe,
-    the new batch's ≤ index_buckets distinct prefixes are collected (a
+    pmod(xxhash64(band_id, band_hash), INDEX_BUCKETS). Before the probe,
+    the new batch's ≤ INDEX_BUCKETS distinct prefixes are collected (a
     bounded driver list, same class as the lineage/metric collects) and
     pushed down as a literal IN partition filter — the probe's scan lists
     only matching partition directories (static pruning, visible in the
@@ -368,8 +384,8 @@ def process_dedup_batch(
     batch is bounded by the new batch's key-prefix coverage of the index
     rather than the index's full size. The bucket modulus is recorded in
     the index's ``_INDEX_META.json`` on first write and ALWAYS wins over
-    the ``index_buckets`` parameter afterwards (a mismatched modulus would
-    silently prune away true matches).
+    :data:`INDEX_BUCKETS` afterwards (a mismatched modulus would silently
+    prune away true matches).
 
     A state dir this function did not write fails loudly: when codes
     history exists but ``state_dir/bands`` does not, or the index lacks
@@ -380,7 +396,7 @@ def process_dedup_batch(
     from iscc_specs_spark.operators import lsh
 
     spark = batch_df.sparkSession
-    index_buckets = _effective_index_buckets(state_dir, index_buckets)
+    index_buckets = _effective_index_buckets(state_dir)
     batch = batch_df.localCheckpoint(eager=True)
 
     # within-batch pairs (standard path; url_a < url_b → flag url_b)
@@ -513,21 +529,12 @@ def process_dedup_batch(
     # and repartitioned by it first so each band_pfx directory of a batch
     # gets one file (≤ index_buckets files per batch, not tasks × buckets)
     _record_index_buckets(state_dir, index_buckets)
-    for df, sub, parts in (
-        (flags, "dup_flags", ("ingest_batch",)),
-        (batch, "codes", ("ingest_batch",)),
-        (
-            own_bands.repartition("band_pfx"), "bands",
-            ("ingest_batch", "band_pfx"),
-        ),
-    ):
-        (
-            df.withColumn("ingest_batch", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy(*parts)
-            .parquet(f"{state_dir}/{sub}")
-        )
+    _write_batch(flags, batch_id, f"{state_dir}/dup_flags")
+    _write_batch(batch, batch_id, f"{state_dir}/codes")
+    _write_batch(
+        own_bands.repartition("band_pfx"), batch_id, f"{state_dir}/bands",
+        "band_pfx",
+    )
 
 
 def curate_state(spark: SparkSession, state_dir: str) -> DataFrame:
@@ -593,16 +600,7 @@ def _url_pfx(buckets: int):
 def read_url_flags(spark: SparkSession, state_dir: str) -> DataFrame:
     """Accumulated url-recrawl flags, schema-stable when empty (same
     contract as :func:`read_dup_flags`)."""
-    from pyspark.errors import AnalysisException
-
-    try:
-        return spark.read.schema(URL_FLAGS_SCHEMA).parquet(
-            f"{state_dir}/url_flags"
-        )
-    except AnalysisException as e:
-        if "PATH_NOT_FOUND" in str(e) or "Path does not exist" in str(e):
-            return spark.createDataFrame([], URL_FLAGS_SCHEMA)
-        raise
+    return _read_state(spark, f"{state_dir}/url_flags", URL_FLAGS_SCHEMA)
 
 
 def read_url_index(
@@ -616,12 +614,19 @@ def read_url_index(
     ``url_pfx IN (...)`` partition filter when the probe supplies its
     prefix set (both predicates on partition columns — static pruning,
     same contract as :func:`read_band_index`). Returns None iff the index
-    does not exist yet (first batch)."""
+    does not exist yet (first batch); raises :class:`BandIndexError` if it
+    lacks the ``url_pfx`` partition column."""
     hist = _read_history(spark, f"{state_dir}/urls")
     if hist is None:
         return None
+    if "url_pfx" not in hist.columns:
+        raise BandIndexError(
+            f"url index {state_dir}/urls has no url_pfx partition column: "
+            "it was not written by process_url_batch's (ingest_batch, "
+            "url_pfx) layout; rebuild the state dir"
+        )
     hist = hist.where(F.col("ingest_batch") < F.lit(batch_id))
-    if new_pfx is not None and "url_pfx" in hist.columns:
+    if new_pfx is not None:
         hist = hist.where(F.col("url_pfx").isin(sorted(new_pfx)))
     return hist.select("canon_url", "url", "last_ts", "ingest_batch")
 
@@ -630,7 +635,6 @@ def process_url_batch(
     batch_df: DataFrame,
     batch_id: int,
     state_dir: str,
-    url_buckets: int = INDEX_BUCKETS,
 ) -> None:
     """One micro-batch of streaming canonical-URL crawl dedup (the
     ``foreachBatch`` body, module-level so replay semantics are testable).
@@ -658,14 +662,15 @@ def process_url_batch(
          matches its own prior uncommitted write.
 
     The bucket modulus is recorded in ``urls/_INDEX_META.json`` on first
-    write and always wins afterwards (same invariant as the band index:
-    a mismatched modulus would silently prune true re-crawl matches).
+    write and always wins over :data:`INDEX_BUCKETS` afterwards (same
+    invariant as the band index: a mismatched modulus would silently prune
+    true re-crawl matches). An index without the ``url_pfx`` column raises
+    :class:`BandIndexError` before any state is written.
     """
     from iscc_specs_spark.operators.urls import canonical_url, url_dedup
 
     spark = batch_df.sparkSession
-    url_buckets = _effective_index_buckets(state_dir, url_buckets, sub="urls")
-    _record_index_buckets(state_dir, url_buckets, sub="urls")
+    url_buckets = _effective_index_buckets(state_dir, sub="urls")
     batch = (
         batch_df.select("url", "warc_ts")
         .withColumn("canon_url", canonical_url("url"))
@@ -716,21 +721,12 @@ def process_url_batch(
         )
         flags = intra.unionByName(recrawl)
 
-    for df, sub, parts in (
-        (flags, "url_flags", ("ingest_batch",)),
-        (
-            keeper.select("canon_url", "url", "last_ts", "url_pfx"),
-            "urls",
-            ("ingest_batch", "url_pfx"),
-        ),
-    ):
-        (
-            df.withColumn("ingest_batch", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy(*parts)
-            .parquet(f"{state_dir}/{sub}")
-        )
+    _record_index_buckets(state_dir, url_buckets, sub="urls")
+    _write_batch(flags, batch_id, f"{state_dir}/url_flags")
+    _write_batch(
+        keeper.select("canon_url", "url", "last_ts", "url_pfx"), batch_id,
+        f"{state_dir}/urls", "url_pfx",
+    )
 
 
 def start_url_dedup_stream(
@@ -738,7 +734,6 @@ def start_url_dedup_stream(
     state_dir: str,
     checkpoint_dir: str,
     trigger_once: bool = True,
-    url_buckets: int = INDEX_BUCKETS,
 ) -> StreamingQuery:
     """Streaming re-crawl dedup: flag every page whose canonical url was
     already ingested (or arrives under several spellings in one batch)
@@ -749,6 +744,6 @@ def start_url_dedup_stream(
     edge list."""
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
-        process_url_batch(batch_df, batch_id, state_dir, url_buckets)
+        process_url_batch(batch_df, batch_id, state_dir)
 
     return _start_stream(pages_stream, sink, checkpoint_dir, trigger_once)

@@ -132,8 +132,8 @@ def test_resume_reproduces_clusters_and_skips_stages(spark, tmp_path):
 
 def test_lineage_and_metrics_recorded(spark, tmp_path):
     """Manifest lineage comes from the parquet footers: rows, files and
-    bytes match what a Spark read of the stage sees, for a plain stage,
-    the band_pfx-partitioned bands stage and a bucketed stage."""
+    bytes match what a Spark read of the stage sees, for every stage
+    run_dedup writes (the band_pfx-partitioned bands stage included)."""
     out = str(tmp_path / "metrics")
     pages = generate_pages(spark, 300, partitions=4)
     r = run_dedup(spark, pages, out, DedupConfig())
@@ -142,16 +142,9 @@ def test_lineage_and_metrics_recorded(spark, tmp_path):
     assert man["rows"] > 0 and man["wall_ms"] >= 0
     assert man["metrics"]["n_buckets"] > 0
     assert "max_bucket" in man["metrics"] and "capped_buckets" in man["metrics"]
-    store.write_bucketed(
-        r["codes"].select("url", "cid_body"), "codes_by_url", key="url", buckets=4
-    )
-    for stage, read in (
-        ("codes", store.read),
-        ("bands", store.read),
-        ("codes_by_url", store.read_bucketed),
-    ):
+    for stage in ("codes", "bands", "dup_pairs", "clusters", "canonical"):
         m = store.manifest(stage)
-        df = read(spark, stage)
+        df = store.read(spark, stage)
         assert m["rows"] == df.count() > 0, stage
         assert m["files"] == len(df.inputFiles()), stage
         assert m["bytes"] == sum(
@@ -342,43 +335,3 @@ def test_band_stage_is_bucketed_at_rest(spark, tmp_path):
         assert banned not in plan, plan
     got_pfx = {r["band_pfx"] for r in probe.collect()}
     assert got_pfx and got_pfx <= {1, 2, 3}
-
-
-def test_bucketed_url_stages_same_results_and_no_shuffle_on_resume(
-    spark, tmp_path
-):
-    """DedupConfig.bucket_by_url: identical cluster assignments to the
-    unbucketed run, and the resumed codes ⋈ clusters url-join is
-    exchange-free off the co-bucketed scans."""
-    import re
-
-    from pyspark.sql import functions as F
-
-    pages = generate_pages(spark, 400, partitions=4).localCheckpoint(eager=True)
-    plain = run_dedup(spark, pages, str(tmp_path / "plain"))
-    bucketed = run_dedup(
-        spark, pages, str(tmp_path / "bucketed"),
-        DedupConfig(bucket_by_url=8),
-    )
-    want = sorted(map(tuple, plain["clusters"].collect()))
-    got = sorted(map(tuple, bucketed["clusters"].collect()))
-    assert want == got
-
-    # resume: stages come back through read_bucketed with the bucket spec
-    res = run_dedup(
-        spark, pages, str(tmp_path / "bucketed"),
-        DedupConfig(bucket_by_url=8),
-    )
-    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        joined = res["codes"].select("url", "cid_body").join(
-            res["clusters"], "url"
-        )
-        txt = joined._sc._jvm.PythonSQLUtils.explainString(
-            joined._jdf.queryExecution(), "formatted"
-        )
-        assert not re.findall(r"\(\d+\) Exchange\s", txt), txt
-        assert joined.count() == 400
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)

@@ -178,7 +178,7 @@ def test_history_bands_probed_from_maintained_index(spark, tmp_path):
 
 def test_band_index_writes_one_file_per_partition(spark, tmp_path):
     """Each micro-batch writes one parquet file per ingest_batch=k/
-    band_pfx=p directory of the band index — at most index_buckets files
+    band_pfx=p directory of the band index — at most INDEX_BUCKETS files
     per batch however many tasks produced its band rows."""
     import glob
 
@@ -528,16 +528,19 @@ def test_band_index_probe_plan_is_pruned_scan(spark, tmp_path):
         assert banned not in plan, plan
 
 
-def test_index_bucket_modulus_survives_restart(spark, tmp_path):
-    """The band index's on-disk bucket modulus must win over a mismatched
-    index_buckets parameter after a restart: probe prefixes computed with
+def test_index_bucket_modulus_survives_restart(spark, tmp_path, monkeypatch):
+    """The band index's on-disk bucket modulus must win over a changed
+    INDEX_BUCKETS constant after a restart: probe prefixes computed with
     a different modulus would prune away true vs-history matches
     SILENTLY. _INDEX_META.json records the modulus at first write; a later
-    batch asking for a different value derives the stored one and still
+    batch run under a different constant derives the stored one and still
     flags the cross-batch near-dups."""
     import json
 
-    from iscc_specs_spark.streaming.ingest import process_dedup_batch
+    from pyspark.sql import functions as F
+
+    from iscc_specs_spark.operators.lsh import band_pfx
+    from iscc_specs_spark.streaming import ingest
 
     state = str(tmp_path / "state_modulus")
     pages = generate_pages(spark, 40, partitions=2)
@@ -545,16 +548,23 @@ def test_index_bucket_modulus_survives_restart(spark, tmp_path):
     b0 = codes.where("url like '%/p/0'")
     b1 = codes.where("url not like '%/p/0'")
 
-    process_dedup_batch(b0, 0, state, index_buckets=64)
+    assert ingest.INDEX_BUCKETS == 64
+    ingest.process_dedup_batch(b0, 0, state)
     with open(state + "/bands/_INDEX_META.json") as f:
         assert json.load(f) == {"index_buckets": 64}
 
-    # restart with a DIFFERENT requested modulus: stored layout must win
-    process_dedup_batch(b1, 1, state, index_buckets=8)
+    # restart under a DIFFERENT constant: the stored layout must win
+    monkeypatch.setattr(ingest, "INDEX_BUCKETS", 8)
+    ingest.process_dedup_batch(b1, 1, state)
     flags = spark.read.parquet(state + "/dup_flags").collect()
     assert any(r["src"] == "vs_history" for r in flags), (
         "cross-batch near-dups lost under a mismatched bucket modulus"
     )
+    # batch 1's index rows went down under the stored modulus too (near-dups
+    # share many band keys, so the flags alone barely notice a wrong one)
+    rows = spark.read.parquet(state + "/bands").where("ingest_batch = 1")
+    assert rows.where(F.col("band_pfx") != band_pfx(64)).count() == 0
+    assert rows.where("band_pfx >= 8").count() > 0
     with open(state + "/bands/_INDEX_META.json") as f:
         assert json.load(f) == {"index_buckets": 64}  # unchanged
 

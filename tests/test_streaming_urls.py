@@ -129,6 +129,81 @@ def test_url_index_probe_prunes_partitions(spark, tmp_path):
     assert all("0poison" not in d for _, d in hits), hits
 
 
+def test_url_index_modulus_survives_restart(spark, tmp_path, monkeypatch):
+    """The url index's on-disk bucket modulus must win over a changed
+    INDEX_BUCKETS constant after a restart: probe prefixes computed with
+    a different modulus would prune away true re-crawl matches SILENTLY.
+    Sixteen canonical urls spread over the prefixes, so a probe under the
+    wrong modulus misses some of their re-crawls."""
+    import json
+
+    state = str(tmp_path / "state_modulus")
+    first = [(f"https://s{i}.example/p", _ts(i)) for i in range(16)]
+    assert I.INDEX_BUCKETS == 64
+    I.process_url_batch(_pages(spark, first), 0, state)
+    with open(f"{state}/urls/_INDEX_META.json") as f:
+        assert json.load(f) == {"index_buckets": 64}
+
+    # restart under a DIFFERENT constant: the stored layout must win
+    monkeypatch.setattr(I, "INDEX_BUCKETS", 8)
+    again = [(f"https://www.s{i}.example/p", _ts(100 + i)) for i in range(16)]
+    I.process_url_batch(_pages(spark, again), 1, state)
+    hits = {
+        (f["url"], f["dup_of"])
+        for f in I.read_url_flags(spark, state)
+        .where("src = 'vs_history'").collect()
+    }
+    assert hits == {(a[0], b[0]) for a, b in zip(again, first)}, hits
+    with open(f"{state}/urls/_INDEX_META.json") as f:
+        assert json.load(f) == {"index_buckets": 64}  # unchanged
+
+
+def test_unpartitioned_url_index_fails_loudly(spark, tmp_path):
+    """process_url_batch is the url index's only writer and always writes
+    the (ingest_batch, url_pfx) layout. An index partitioned by
+    ingest_batch only must raise BandIndexError naming the state dir —
+    before any state is written, so url_flags and urls stay exactly as
+    they were."""
+    import os
+    import re
+    import shutil
+
+    import pytest
+
+    state = str(tmp_path / "state_bad_index")
+    I.process_url_batch(
+        _pages(spark, [("https://a.example/p", _ts(1)),
+                       ("https://www.a.example/p", _ts(2))]), 0, state
+    )
+    I.process_url_batch(
+        _pages(spark, [("https://b.example/q", _ts(3))]), 1, state
+    )
+
+    def snap(*subs):
+        out = {}
+        for sub in subs:
+            for root, _, files in os.walk(os.path.join(state, sub)):
+                for f in files:
+                    with open(os.path.join(root, f), "rb") as fh:
+                        out[os.path.relpath(os.path.join(root, f), state)] = fh.read()
+        return out
+
+    saved = state + "__urls"
+    shutil.move(f"{state}/urls", saved)
+    (
+        spark.read.parquet(saved).drop("url_pfx")
+        .write.partitionBy("ingest_batch")
+        .parquet(f"{state}/urls")
+    )
+    before = snap("url_flags", "urls")
+    with pytest.raises(I.BandIndexError, match=re.escape(state)):
+        I.process_url_batch(
+            _pages(spark, [("https://a.example/p?utm_source=z", _ts(4))]),
+            2, state,
+        )
+    assert snap("url_flags", "urls") == before
+
+
 def test_url_stream_end_to_end(spark, tmp_path):
     src = str(tmp_path / "src")
     state = str(tmp_path / "state")

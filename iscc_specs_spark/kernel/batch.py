@@ -2,8 +2,12 @@
 
 The pandas-UDF hot path: instead of per-document NumPy calls, all shingles of
 all ASCII documents in an Arrow batch are hashed in a handful of vectorized
-sweeps, and per-document MinHash/SimHash reductions happen via
-``np.minimum.reduceat`` / ``np.add.reduceat`` over segment boundaries.
+sweeps, and each document's MinHash/SimHash is reduced from its segment of
+rows. A shingle group is capped at ``_SHINGLE_BUDGET`` rows, so a ~8 KB page
+(~8k shingles) is a group of its own: the per-segment reductions are plain
+``min(axis=0)`` over one slice and one ``bincount`` of digest bytes. Data-ID
+cuts each blob sequentially, then hashes all CDC chunks of a group of blobs
+in one vectorised ``xxh32_var``.
 Non-ASCII or sub-window documents fall back to the per-document kernel path
 (identical results — the fast path is pinned to the scalar path by
 tests/test_batch.py property checks and transitively by the golden vectors).
@@ -16,9 +20,9 @@ from typing import Sequence
 import numpy as np
 
 from iscc_specs_spark.kernel.codec import encode
+from iscc_specs_spark.kernel.cdc import data_chunks
 from iscc_specs_spark.kernel.codes import (
     content_id_text_full,
-    data_id_full,
     instance_id,
     meta_id,
     sliding_window,
@@ -32,20 +36,58 @@ from iscc_specs_spark.kernel.constants import (
     WINDOW_SIZE_CID_T,
     WINDOW_SIZE_MID,
 )
-from iscc_specs_spark.kernel.sketches import perm_hash
+from iscc_specs_spark.kernel.sketches import (
+    lsb_digest,
+    minhash_np,
+    perm_hash,
+    segment_bit_counts,
+)
 from iscc_specs_spark.kernel.textnorm import text_normalize, text_trim
-from iscc_specs_spark.kernel.xxhashes import xxh32_fixed, xxh64, xxh64_fixed
+from iscc_specs_spark.kernel.xxhashes import xxh32_fixed, xxh32_var, xxh64, xxh64_fixed
 
 # cap transient (n_shingles × 64) uint64 matrices: 3k shingles → ~1.5 MB,
 # L2-resident per worker — the kernel runs 32× concurrently per host and
 # DRAM bandwidth, not ALU, is the budget (measured: 3k ≈ 1.9× faster than 24k)
 _SHINGLE_BUDGET = 3_000
+# cap the temporaries of hashing one group of blobs' CDC chunks: the joined
+# blobs plus ~100 B per chunk; web pages average ~85 B per chunk, so a group
+# takes at most a quarter of the budget in blob bytes (one blob at least)
+_CHUNK_BYTES_BUDGET = 1 << 20
+
+
+def _budget_groups(rows: list[int], sizes: list[int], budget: int):
+    """Consecutive runs of ``rows`` whose ``sizes`` sum to at most
+    ``budget``; a row larger than the budget is a run of its own."""
+    group: list[int] = []
+    total = 0
+    for i, k in zip(rows, sizes):
+        if group and total + k > budget:
+            yield group
+            group, total = [], 0
+        group.append(i)
+        total += k
+    if group:
+        yield group
 
 
 def _pack_u64_rows(bits: np.ndarray) -> np.ndarray:
     """(R, 64) 0/1 uint8, col 0 = MSB → (R,) uint64."""
     packed = np.packbits(bits, axis=1)  # (R, 8) big-endian bytes
     return packed.view(">u8").astype(np.uint64).reshape(-1)
+
+
+def _shingle_matrix(docs: list[str], width: int, step: int):
+    """Stack the character ``width``-grams of ASCII docs (each at least one
+    window long), ``step - 1`` spaces between characters → (K, L) uint8
+    matrix, segment starts, segment lens. Content-ID hashes the grams
+    space-joined (step 2, 13 chars → 25 bytes), Meta-ID as they are."""
+    lens = np.array([len(d) - width + 1 for d in docs], dtype=np.int64)
+    starts = np.cumsum(lens) - lens
+    mat = np.full((int(lens.sum()), step * (width - 1) + 1), 32, dtype=np.uint8)
+    for d, a, k in zip(docs, starts, lens):
+        chars = np.frombuffer(d.encode("ascii"), dtype=np.uint8)
+        mat[a : a + k, ::step] = np.lib.stride_tricks.sliding_window_view(chars, width)
+    return mat, starts, lens
 
 
 def _segments_minhash_simhash(mat: np.ndarray, starts: np.ndarray, lens: np.ndarray):
@@ -57,11 +99,11 @@ def _segments_minhash_simhash(mat: np.ndarray, starts: np.ndarray, lens: np.ndar
     try:
         feats = xxh32_fixed(mat).astype(np.uint64)
         h = perm_hash(feats[:, None])
-        mh = np.minimum.reduceat(h, starts, axis=0)
+        mh = np.empty((lens.size, h.shape[1]), dtype=np.uint64)
+        for g, (a, k) in enumerate(zip(starts, lens)):
+            h[a : a + k].min(axis=0, out=mh[g])
 
-        digs = xxh64_fixed(mat)
-        bits = np.unpackbits(digs.astype(">u8").view(np.uint8).reshape(-1, 8), axis=1)
-        counts = np.add.reduceat(bits, starts, axis=0, dtype=np.int64)
+        counts = segment_bit_counts(xxh64_fixed(mat), lens)
         sim_bits = (2 * counts >= lens[:, None]).astype(np.uint8)
         return mh, _pack_u64_rows(sim_bits)
     finally:
@@ -91,39 +133,14 @@ def content_text_batch(texts: Sequence[str | None]):
         else:
             code, mh, sim, nf = content_id_text_full(s if s else "")
             cid[i] = code
-            cid_body[i] = np.uint64(
-                int.from_bytes(
-                    np.packbits((mh & np.uint64(1)).astype(np.uint8)).tobytes(), "big"
-                )
-            ).astype(np.int64)
+            cid_body[i] = np.frombuffer(lsb_digest(mh), dtype=">i8")[0]
             simhash[i] = np.uint64(sim).astype(np.int64)
             minhash[i] = mh
             n_features[i] = nf
 
-    width = WINDOW_SIZE_CID_T
-    joined_w = 2 * width - 1
-    pos = 0
-    while pos < len(fast):
-        # take rows until the shingle budget is hit
-        group: list[int] = []
-        total = 0
-        while pos < len(fast):
-            i = fast[pos]
-            k = len(norms[i]) - width + 1
-            if group and total + k > _SHINGLE_BUDGET:
-                break
-            group.append(i)
-            total += k
-            pos += 1
-        lens = np.array([len(norms[i]) - width + 1 for i in group], dtype=np.int64)
-        starts = np.zeros(len(group), dtype=np.int64)
-        starts[1:] = np.cumsum(lens)[:-1]
-        mat = np.full((total, joined_w), 32, dtype=np.uint8)
-        for g, i in enumerate(group):
-            a = np.frombuffer(norms[i].encode("ascii"), dtype=np.uint8)
-            mat[starts[g] : starts[g] + lens[g], ::2] = (
-                np.lib.stride_tricks.sliding_window_view(a, width)
-            )
+    sizes = [len(norms[i]) - WINDOW_SIZE_CID_T + 1 for i in fast]
+    for group in _budget_groups(fast, sizes, _SHINGLE_BUDGET):
+        mat, starts, lens = _shingle_matrix([norms[i] for i in group], WINDOW_SIZE_CID_T, 2)
         mh, sim = _segments_minhash_simhash(mat, starts, lens)
         bodies = _pack_u64_rows((mh & np.uint64(1)).astype(np.uint8))
         for g, i in enumerate(group):
@@ -163,23 +180,13 @@ def meta_batch(titles: Sequence[str | None], extras: Sequence[str] | None = None
     slow = [i for i in range(n_rows) if i not in fast_set]
 
     if fast:
-        lens = np.array([len(concats[i]) - width + 1 for i in fast], dtype=np.int64)
-        starts = np.zeros(len(fast), dtype=np.int64)
-        starts[1:] = np.cumsum(lens)[:-1]
-        total = int(lens.sum())
-        mat = np.empty((total, width), dtype=np.uint8)
-        for g, i in enumerate(fast):
-            a = np.frombuffer(concats[i].encode("ascii"), dtype=np.uint8)
-            mat[starts[g] : starts[g] + lens[g]] = np.lib.stride_tricks.sliding_window_view(
-                a, width
-            )
+        mat, _, lens = _shingle_matrix([concats[i] for i in fast], width, 1)
         old = np.seterr(over="ignore")
         try:
             digs = xxh64_fixed(mat)
         finally:
             np.seterr(**old)
-        bits = np.unpackbits(digs.astype(">u8").view(np.uint8).reshape(-1, 8), axis=1)
-        counts = np.add.reduceat(bits, starts, axis=0, dtype=np.int64)
+        counts = segment_bit_counts(digs, lens)
         sims = _pack_u64_rows((2 * counts >= lens[:, None]).astype(np.uint8))
         for g, i in enumerate(fast):
             mid_body[i] = sims[g].astype(np.int64)
@@ -196,34 +203,41 @@ def meta_batch(titles: Sequence[str | None], extras: Sequence[str] | None = None
 
 
 def data_instance_batch(blobs: Sequence[bytes | None]):
-    """Data-ID + Instance-ID for a batch of binary blobs (CDC is a sequential
-    per-document recurrence; parallelism is across rows/partitions).
+    """Data-ID + Instance-ID for a batch of binary blobs.
 
-    Returns dict: did list[str], did_body int64, data_minhash uint64 (R,64),
-    n_chunks int32, iid list[str], iid_body int64, tophash list[str].
+    CDC is a sequential per-document recurrence, so each blob is cut on its
+    own; the chunks of a group of blobs (bounded by ``_CHUNK_BYTES_BUDGET``)
+    are then hashed in one ``xxh32_var`` call over the joined blobs.
+
+    Returns dict: did list[str], did_body int64, n_chunks int32,
+    iid list[str], iid_body int64, tophash list[str].
     """
     n_rows = len(blobs)
-    did: list[str | None] = [None] * n_rows
+    data = [b if b is not None else b"" for b in blobs]
+    did = [encode(HEAD_DID + b"\x00" * 8)] * n_rows  # defined fallback for empty
     did_body = np.zeros(n_rows, dtype=np.int64)
-    dmh = np.zeros((n_rows, 64), dtype=np.uint64)
     n_chunks = np.zeros(n_rows, dtype=np.int32)
     iid: list[str | None] = [None] * n_rows
     iid_body = np.zeros(n_rows, dtype=np.int64)
     tophash: list[str | None] = [None] * n_rows
 
-    for i, blob in enumerate(blobs):
-        b = blob if blob is not None else b""
-        if b:
-            code, mh, nc = data_id_full(b)
-            did[i] = code
-            body = int.from_bytes(
-                np.packbits((mh & np.uint64(1)).astype(np.uint8)).tobytes(), "big"
-            )
-            did_body[i] = np.uint64(body).astype(np.int64)
-            dmh[i] = mh
-            n_chunks[i] = nc
-        else:
-            did[i] = encode(HEAD_DID + b"\x00" * 8)  # defined fallback for empty
+    full = [i for i in range(n_rows) if data[i]]
+    sizes = [len(data[i]) for i in full]
+    for group in _budget_groups(full, sizes, _CHUNK_BYTES_BUDGET // 4):
+        lens = [np.fromiter(map(len, data_chunks(data[i])), dtype=np.int64) for i in group]
+        chunk_lens = np.concatenate(lens)
+        offsets = np.cumsum(chunk_lens) - chunk_lens
+        feats = xxh32_var(b"".join(data[i] for i in group), offsets, chunk_lens)
+        feats = feats.astype(np.uint64)
+        a = 0
+        for i, k in zip(group, map(len, lens)):
+            body = lsb_digest(minhash_np(feats[a : a + k]))
+            did[i] = encode(HEAD_DID + body)
+            did_body[i] = np.frombuffer(body, dtype=">i8")[0]
+            n_chunks[i] = k
+            a += k
+
+    for i, b in enumerate(data):
         code, hexhash = instance_id(b)
         iid[i] = code
         iid_body[i] = np.uint64(int(hexhash[:16], 16)).astype(np.int64)
@@ -232,7 +246,6 @@ def data_instance_batch(blobs: Sequence[bytes | None]):
     return {
         "did": did,
         "did_body": did_body,
-        "data_minhash": dmh,
         "n_chunks": n_chunks,
         "iid": iid,
         "iid_body": iid_body,

@@ -29,7 +29,12 @@ from iscc_specs_spark.kernel.constants import (
     WINDOW_SIZE_CID_T,
     WINDOW_SIZE_MID,
 )
-from iscc_specs_spark.kernel.sketches import lsb_digest, minhash_np, similarity_hash
+from iscc_specs_spark.kernel.sketches import (
+    lsb_digest,
+    minhash_np,
+    segment_bit_counts,
+    similarity_hash,
+)
 from iscc_specs_spark.kernel.textnorm import text_normalize, text_trim
 from iscc_specs_spark.kernel.xxhashes import xxh32, xxh32_fixed, xxh64, xxh64_fixed
 
@@ -94,9 +99,8 @@ def _joined_ngram_features(norm: str, width: int = WINDOW_SIZE_CID_T):
 def _simhash_u64(digests: np.ndarray) -> int:
     """64-bit SimHash of a (N,) uint64 digest array (big-endian bit order,
     ties → 1), as an unsigned int."""
-    mat = digests.astype(">u8").view(np.uint8).reshape(-1, 8)
-    bits = np.unpackbits(mat, axis=1)
-    out = (2 * bits.sum(axis=0, dtype=np.int64) >= digests.size).astype(np.uint8)
+    counts = segment_bit_counts(digests, np.array([digests.size]))
+    out = (2 * counts >= digests.size).astype(np.uint8)
     return int.from_bytes(np.packbits(out).tobytes(), "big")
 
 

@@ -37,11 +37,35 @@ def similarity_hash(digests: Sequence[bytes]) -> bytes:
     return np.packbits(out_bits).tobytes()
 
 
-def mersenne61_mod(x: np.ndarray) -> np.ndarray:
-    """x mod (2^61 − 1) for uint64 arrays. NumPy's scalar-divisor mod is a
-    single memory pass — on big matrices the op is bandwidth-bound, so one
-    pass beats any multi-pass shift/add folding."""
-    return x % _MERSENNE_61
+# digit value → its bits, MSB first: (256, 8) for bytes, (16, 4) for nibbles
+_DIGIT_BITS = {
+    w: np.unpackbits(np.arange(1 << w, dtype=np.uint8)[:, None], axis=1)[:, 8 - w :]
+    .astype(np.int64)
+    for w in (8, 4)
+}
+
+
+def segment_bit_counts(digests: np.ndarray, lens: np.ndarray) -> np.ndarray:
+    """Set-bit count at each of the 64 bit positions, per segment, of a (K,)
+    uint64 digest array cut into consecutive segments of ``lens`` rows
+    → (R, 64) int64, column 0 = most-significant bit (the SimHash votes).
+
+    One ``bincount`` of (segment, digit position, digit value) times a
+    constant digit → bits table: exact, and on a page's ~8k digests ~2.5×
+    faster than ``unpackbits`` + ``add.reduceat``. Digits are bytes (2048
+    bins per segment) when the histogram is no larger than the keys, else
+    nibbles (256 bins), so many short segments (titles) stay cheap."""
+    r = lens.size
+    by = digests.astype(">u8").view(np.uint8).reshape(-1, 8)
+    if digests.size >= 256 * r:
+        w, keys = 8, by.astype(np.int64)
+    else:
+        w, keys = 4, np.stack((by >> 4, by & 15), axis=2).reshape(-1, 16).astype(np.int64)
+    nb = (64 // w) << w  # bins per segment
+    keys += np.arange(0, nb, 1 << w)
+    keys += np.repeat(np.arange(0, nb * r, nb), lens)[:, None]
+    hist = np.bincount(keys.reshape(-1), minlength=nb * r).reshape(-1, 1 << w)
+    return (hist @ _DIGIT_BITS[w]).reshape(r, 64)
 
 
 def perm_hash(features_col: np.ndarray, n: int = 64) -> np.ndarray:
@@ -50,7 +74,9 @@ def perm_hash(features_col: np.ndarray, n: int = 64) -> np.ndarray:
 
     Exactly one (K,n) allocation; every subsequent op is in-place — the
     kernel runs 32× concurrently per host, so DRAM traffic (not ALU) is
-    the budget."""
+    the budget. NumPy's scalar-divisor ``np.mod`` is a single memory pass;
+    a shift/add Mersenne fold in NumPy takes several and measured 2.8×
+    slower (4-vCPU x86 VM, NumPy 1.26)."""
     h = features_col * _PERM_A[None, :n]
     h += _PERM_B[None, :n]
     np.mod(h, _MERSENNE_61, out=h)

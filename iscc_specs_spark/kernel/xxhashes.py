@@ -154,21 +154,13 @@ def _vrotl64(x: np.ndarray, r: int) -> np.ndarray:
 
 
 def _lane32(arr: np.ndarray, off: int) -> np.ndarray:
-    a = arr.astype(np.uint32)
-    return (
-        a[:, off]
-        | (a[:, off + 1] << _u32(8))
-        | (a[:, off + 2] << _u32(16))
-        | (a[:, off + 3] << _u32(24))
-    )
+    """Little-endian u32 at byte ``off`` of each row: a view of those 4
+    bytes only (``astype`` of the whole matrix per lane was the cost)."""
+    return arr[:, off : off + 4].view("<u4")[:, 0]
 
 
 def _lane64(arr: np.ndarray, off: int) -> np.ndarray:
-    a = arr.astype(np.uint64)
-    out = a[:, off]
-    for k in range(1, 8):
-        out = out | (a[:, off + k] << _u64(8 * k))
-    return out
+    return arr[:, off : off + 8].view("<u8")[:, 0]
 
 
 def xxh32_fixed(arr: np.ndarray) -> np.ndarray:
@@ -210,6 +202,65 @@ def xxh32_fixed(arr: np.ndarray) -> np.ndarray:
         return acc
     finally:
         np.seterr(**old)
+
+
+# lane offsets within a 16-byte xxh32 stripe, and the accumulators' seeds
+_STRIPE_LANES = np.arange(0, 16, 4)
+_V32_INIT = np.array([(P32_1 + P32_2) & _M32, P32_2, 0, (-P32_1) & _M32], dtype=_u32)
+
+
+def xxh32_var(buf, offsets: np.ndarray, lengths: np.ndarray) -> np.ndarray:
+    """xxh32 (seed 0) of M variable-length messages
+    ``buf[offsets[m] : offsets[m] + lengths[m]]`` → (M,) uint32.
+
+    Messages run longest first, so each 16-byte stripe step works on the
+    prefix of rows that still have a stripe left: the number of steps is
+    the longest message's stripe count, not one per message. The caller
+    bounds the temporaries (~100 B per message) by the size of ``buf``."""
+    data = np.frombuffer(buf, dtype=np.uint8)
+    # the little-endian u32 at every byte offset, as a zero-copy view
+    words = np.ndarray((max(data.size - 3, 0),), dtype="<u4", buffer=data, strides=(1,))
+    lengths = np.asarray(lengths, dtype=np.int64)
+    order = np.argsort(-lengths, kind="stable")
+    ln = lengths[order]
+    pos = np.asarray(offsets, dtype=np.int64)[order]
+    stripes = ln >> 4
+    acc = np.full(ln.size, P32_5, dtype=_u32)
+    n_big = int(np.count_nonzero(stripes))
+    if n_big:
+        v = np.tile(_V32_INIT, (n_big, 1))
+        p1, p2 = _u32(P32_1), _u32(P32_2)
+        # rows with more than s stripes: a prefix, as stripes descend
+        active = np.searchsorted(-stripes[:n_big], -np.arange(stripes[0]))
+        for k in active:
+            lanes = words[pos[:k, None] + _STRIPE_LANES]
+            v[:k] = _vrotl32(v[:k] + lanes * p2, 13) * p1
+            pos[:k] += 16
+        acc[:n_big] = (
+            _vrotl32(v[:, 0], 1) + _vrotl32(v[:, 1], 7)
+            + _vrotl32(v[:, 2], 12) + _vrotl32(v[:, 3], 18)
+        )
+    acc += ln.astype(_u32)
+    # tails: up to three 4-byte lanes, then up to three single bytes
+    rem = ln & 15
+    p3, p4, p5, p1 = _u32(P32_3), _u32(P32_4), _u32(P32_5), _u32(P32_1)
+    for t in range(3):
+        rows = np.flatnonzero(rem >= 4 * (t + 1))
+        acc[rows] = _vrotl32(acc[rows] + words[pos[rows]] * p3, 17) * p4
+        pos[rows] += 4
+    for t in range(3):
+        rows = np.flatnonzero((rem & 3) > t)
+        acc[rows] = _vrotl32(acc[rows] + data[pos[rows]].astype(_u32) * p5, 11) * p1
+        pos[rows] += 1
+
+    acc ^= acc >> _u32(15)
+    acc *= _u32(P32_2)
+    acc ^= acc >> _u32(13)
+    acc *= _u32(P32_3)
+    acc ^= acc >> _u32(16)
+    out = np.empty_like(acc)
+    out[order] = acc
+    return out
 
 
 def _vround64(acc: np.ndarray, lane: np.ndarray) -> np.ndarray:

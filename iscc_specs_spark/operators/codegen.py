@@ -21,6 +21,7 @@ from __future__ import annotations
 import re
 from typing import Iterator
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 
@@ -39,8 +40,6 @@ TEXT_COLS = (
     "content_id string, cid_body long, simhash long, "
     "minhash array<long>, n_features int"
 )
-# The kernel's ``data_minhash`` feeds data_id/did_body and is not emitted:
-# no reader of the codes table uses it
 DATA_COLS = (
     "data_id string, did_body long, n_chunks int, "
     "instance_id string, iid_body long, tophash string"
@@ -113,7 +112,9 @@ def compute_codes(
                     content_id=tb["cid"],
                     cid_body=tb["cid_body"],
                     simhash=tb["simhash"],
-                    minhash=[r.astype("int64").tolist() for r in tb["minhash"]],
+                    # one int64 row view per doc: Arrow takes each as a list
+                    # without a Python int per value
+                    minhash=list(tb["minhash"].astype(np.int64)),
                     n_features=tb["n_features"],
                 )
                 n_bytes = [len((t or "").encode("utf-8")) for t in texts]

@@ -1,0 +1,141 @@
+"""Time per page of each step of the kernel's batch path, on perfbench's
+generated ~8 KB pages, in one thread and with no Spark.
+
+The steps replay ``kernel.batch.content_text_batch`` (normalise, build
+the shingle matrix, xxh32/xxh64 of the shingles, ``perm_hash``, segment
+min, SimHash bit counts) and ``data_instance_batch`` (CDC cut, chunk hash,
+chunk MinHash, Instance-ID) on the same inputs and budgets; the two batch
+functions are also timed whole, so the sum of the steps can be checked
+against them. Each figure is the best of ``--reps`` passes over all pages.
+
+Usage: python scripts/kernel_profile.py [--seed 1] [--docs 300] [--reps 3]
+"""
+
+from __future__ import annotations
+
+import argparse
+import os
+import sys
+import time
+from collections import defaultdict
+
+import numpy as np
+
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
+sys.path.insert(0, os.path.join(ROOT, "perfbench"))
+
+import gen  # noqa: E402
+from workloads import WORDS_8K, KernelPages  # noqa: E402
+
+from iscc_specs_spark.kernel import batch  # noqa: E402
+from iscc_specs_spark.kernel.cdc import data_chunks  # noqa: E402
+from iscc_specs_spark.kernel.codes import instance_id  # noqa: E402
+from iscc_specs_spark.kernel.constants import WINDOW_SIZE_CID_T  # noqa: E402
+from iscc_specs_spark.kernel.sketches import perm_hash, segment_bit_counts  # noqa: E402
+from iscc_specs_spark.kernel.textnorm import text_normalize  # noqa: E402
+from iscc_specs_spark.kernel.xxhashes import (  # noqa: E402
+    xxh32_fixed,
+    xxh32_var,
+    xxh64_fixed,
+)
+
+
+class Clock:
+    """Accumulates wall time per step name."""
+
+    def __init__(self):
+        self.s: dict[str, float] = defaultdict(float)
+        self.t = time.perf_counter()
+
+    def lap(self, step: str) -> None:
+        now = time.perf_counter()
+        self.s[step] += now - self.t
+        self.t = now
+
+
+def content_steps(texts: list[str], clk: Clock) -> None:
+    width = WINDOW_SIZE_CID_T
+    clk.lap("")
+    norms = [text_normalize(t or "", keep_ws=False) for t in texts]
+    clk.lap("text: normalise")
+    fast = [i for i, s in enumerate(norms) if s.isascii() and len(s) >= width]
+    sizes = [len(norms[i]) - width + 1 for i in fast]
+    for group in batch._budget_groups(fast, sizes, batch._SHINGLE_BUDGET):
+        mat, starts, lens = batch._shingle_matrix([norms[i] for i in group], width, 2)
+        clk.lap("text: shingle matrix")
+        feats = xxh32_fixed(mat).astype(np.uint64)
+        clk.lap("text: shingle xxh32")
+        digs = xxh64_fixed(mat)
+        clk.lap("text: shingle xxh64")
+        h = perm_hash(feats[:, None])
+        clk.lap("text: perm_hash")
+        for a, k in zip(starts, lens):
+            h[a : a + k].min(axis=0)
+        clk.lap("text: segment min")
+        segment_bit_counts(digs, lens)
+        clk.lap("text: bit counts")
+
+
+def data_steps(blobs: list[bytes], clk: Clock) -> None:
+    clk.lap("")
+    full = [i for i, b in enumerate(blobs) if b]
+    sizes = [len(blobs[i]) for i in full]
+    for group in batch._budget_groups(full, sizes, batch._CHUNK_BYTES_BUDGET // 4):
+        lens = [np.fromiter(map(len, data_chunks(blobs[i])), dtype=np.int64) for i in group]
+        clk.lap("data: CDC cut")
+        chunk_lens = np.concatenate(lens)
+        feats = xxh32_var(
+            b"".join(blobs[i] for i in group), np.cumsum(chunk_lens) - chunk_lens, chunk_lens
+        ).astype(np.uint64)
+        clk.lap("data: chunk hash")
+        a = 0
+        for k in map(len, lens):
+            perm_hash(feats[a : a + k, None]).min(axis=0)
+            a += k
+        clk.lap("data: chunk minhash")
+    for b in blobs:
+        instance_id(b)
+    clk.lap("data: instance hash")
+
+
+def main() -> None:
+    ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
+    ap.add_argument("--seed", type=int, default=1)
+    ap.add_argument("--docs", type=int, default=KernelPages.docs)
+    ap.add_argument("--reps", type=int, default=3)
+    args = ap.parse_args()
+
+    table, _ = gen.pages(args.seed, args.docs, WORDS_8K, farm_every=KernelPages.farm_every)
+    texts = table.column("text").to_pylist()
+    blobs = [b or b"" for b in table.column("html").to_pylist()]
+
+    best: dict[str, float] = {}
+    for _ in range(args.reps):
+        clk = Clock()
+        content_steps(texts, clk)
+        data_steps(blobs, clk)
+        for fn, arg in (
+            (batch.content_text_batch, texts),
+            (batch.data_instance_batch, blobs),
+        ):
+            clk.lap("")
+            fn(arg)
+            clk.lap(f"whole: {fn.__name__}")
+        for step, s in clk.s.items():
+            if step:
+                best[step] = min(best.get(step, s), s)
+
+    n = len(texts)
+    print(f"seed {args.seed}, {n} pages, best of {args.reps}")
+    for prefix in ("text", "data", "whole"):
+        rows = {k: v for k, v in best.items() if k.startswith(prefix)}
+        for step, s in rows.items():
+            print(f"  {step:<36} {s * 1000 / n:8.3f} ms/page")
+        if prefix != "whole":
+            total = sum(rows.values()) * 1000 / n
+            print(f"  {prefix + ': sum of steps':<36} {total:8.3f} ms/page")
+
+
+if __name__ == "__main__":
+    main()

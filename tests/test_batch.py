@@ -6,6 +6,8 @@ import numpy as np
 import pytest
 
 from iscc_specs_spark import kernel
+from iscc_specs_spark.kernel import batch
+from iscc_specs_spark.kernel.constants import GEAR1_MIN, GEAR2_MIN, WINDOW_SIZE_CID_T
 from iscc_specs_spark.kernel.batch import (
     content_text_batch,
     data_instance_batch,
@@ -26,9 +28,9 @@ TEXTS = [
 ]
 
 
-def test_content_text_batch_matches_scalar():
-    out = content_text_batch(TEXTS)
-    for i, t in enumerate(TEXTS):
+def _check_content(texts):
+    out = content_text_batch(texts)
+    for i, t in enumerate(texts):
         code, mh, sim, nf = kernel.content_id_text_full(t if t is not None else "")
         assert out["cid"][i] == code, f"row {i}"
         assert np.array_equal(out["minhash"][i], mh), f"row {i}"
@@ -37,6 +39,26 @@ def test_content_text_batch_matches_scalar():
         # body LONG is the bit-identical two's-complement carrier of the code body
         body_bytes = int(np.uint64(out["cid_body"][i].astype(np.uint64))).to_bytes(8, "big")
         assert kernel.decode(code)[1:] == body_bytes
+
+
+def test_content_text_batch_matches_scalar():
+    _check_content(TEXTS)
+
+
+def test_content_text_batch_mixed_segments():
+    """Short ASCII docs that share one shingle group, each side of a doc
+    longer than the group budget (a group of its own), and a slow-path row
+    between them: every segment boundary must land on its own document."""
+    rng = np.random.default_rng(5)
+    words = ["alpha", "beta", "gamma", "delta", "epsilon", "zeta", "eta", "theta"]
+
+    def doc(n):
+        return " ".join(rng.choice(words, n))
+
+    long_doc = doc(batch._SHINGLE_BUDGET // 4)
+    assert len(long_doc) - WINDOW_SIZE_CID_T + 1 > batch._SHINGLE_BUDGET
+    texts = [doc(3), doc(12), "x" * 13, doc(40), long_doc, doc(7), "ü" + doc(9), doc(25)]
+    _check_content(texts)
 
 
 def test_meta_batch_matches_scalar():
@@ -60,10 +82,37 @@ def test_data_instance_batch_matches_scalar():
         bytes(rng.integers(0, 256, 70000, dtype=np.uint8)),
         None,
     ]
+    _check_data(blobs)
+
+
+def _check_data(blobs):
     out = data_instance_batch(blobs)
     for i, b in enumerate(blobs):
         if b:
-            assert out["did"][i] == kernel.data_id(b)
+            code, mh, nc = kernel.data_id_full(b)
+            assert out["did"][i] == code
+            assert out["n_chunks"][i] == nc
+            assert kernel.decode(code)[1:] == int(
+                np.uint64(out["did_body"][i].astype(np.uint64))
+            ).to_bytes(8, "big")
         code, hexhash = kernel.instance_id(b if b is not None else b"")
         assert out["iid"][i] == code
         assert out["tophash"][i] == hexhash
+
+
+@pytest.mark.parametrize("budget", [None, 4 * 3000])  # groups of <= 3000 blob bytes
+def test_data_instance_batch_mixed_blobs(budget, monkeypatch):
+    """NULL, empty and sub-GEAR1_MIN blobs between chunked ones, and a blob
+    over 64000 bytes (GEAR2 chunks, a 2-leaf Instance-ID tree); with a
+    small budget the chunk-hash groups break between and around them."""
+    if budget:
+        monkeypatch.setattr(batch, "_CHUNK_BYTES_BUDGET", budget)
+    rng = np.random.default_rng(9)
+
+    def blob(n):
+        return rng.integers(0, 256, n, dtype=np.uint8).tobytes()
+
+    blobs = [blob(900), None, blob(7), b"", blob(70000), blob(2500), None, blob(1), b""]
+    assert len(blobs[2]) < GEAR1_MIN and len(blobs[4]) > 64000
+    assert max(map(len, kernel.data_chunks(blobs[4]))) > GEAR2_MIN
+    _check_data(blobs)

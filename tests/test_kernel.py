@@ -12,7 +12,13 @@ import numpy as np
 import pytest
 
 from iscc_specs_spark import kernel
-from iscc_specs_spark.kernel.xxhashes import xxh32, xxh32_fixed, xxh64, xxh64_fixed
+from iscc_specs_spark.kernel.xxhashes import (
+    xxh32,
+    xxh32_fixed,
+    xxh32_var,
+    xxh64,
+    xxh64_fixed,
+)
 
 FIXTURES = Path(__file__).parent / "fixtures"
 
@@ -43,6 +49,44 @@ def test_vectorized_matches_scalar(length):
     for i, row in enumerate(rows):
         assert int(got32[i]) == xxh32(row)
         assert int(got64[i]) == xxh64(row)
+
+
+def test_xxh32_var_matches_scalar():
+    """Variable-length messages at arbitrary offsets of one buffer: every
+    tail shape around the 4- and 16-byte boundaries, empty messages,
+    GEAR2-sized chunks, and a buffer larger than one data_instance_batch
+    chunk-hash group."""
+    from iscc_specs_spark.kernel.batch import _CHUNK_BYTES_BUDGET
+
+    rng = np.random.default_rng(11)
+    lens = np.concatenate([
+        rng.integers(0, 301, 300),
+        [0, 3, 4, 15, 16, 17, 31, 32, 33, 0],
+        [2049, 4096, 6143, 65536],
+        [_CHUNK_BYTES_BUDGET - 70000],
+    ]).astype(np.int64)
+    rng.shuffle(lens)
+    gaps = rng.integers(0, 5, lens.size)  # messages need not be contiguous
+    offsets = np.cumsum(lens + gaps) - lens
+    buf = rng.integers(0, 256, int(offsets[-1] + lens[-1] + 3), dtype=np.uint8).tobytes()
+    assert len(buf) > _CHUNK_BYTES_BUDGET
+    got = xxh32_var(buf, offsets, lens)
+    assert got.dtype == np.uint32
+    assert [int(x) for x in got] == [xxh32(buf[o : o + n]) for o, n in zip(offsets, lens)]
+    assert xxh32_var(b"", np.zeros(0, np.int64), np.zeros(0, np.int64)).size == 0
+
+
+@pytest.mark.parametrize("lens", [[8355], [1], [255] * 9, [256] * 9, [5, 1, 300, 2500, 17]])
+def test_segment_bit_counts_match_unpackbits(lens):
+    from iscc_specs_spark.kernel.sketches import segment_bit_counts
+
+    lens = np.array(lens, dtype=np.int64)
+    rng = np.random.default_rng(int(lens.sum()))
+    digs = rng.integers(0, 1 << 64, int(lens.sum()), dtype=np.uint64)
+    bits = np.unpackbits(digs.astype(">u8").view(np.uint8).reshape(-1, 8), axis=1)
+    starts = np.cumsum(lens) - lens
+    want = np.add.reduceat(bits, starts, axis=0, dtype=np.int64)
+    assert np.array_equal(segment_bit_counts(digs, lens), want)
 
 
 # --- encode/decode roundtrip (ref test_iscc.py:83-92) ------------------------
@@ -161,20 +205,3 @@ def test_instance_id_basics():
     big = b"\xff" * 64001
     iid2, h2 = kernel.instance_id(big)
     assert iid2 != iid
-
-
-def test_mersenne61_fold_equals_mod():
-    import numpy as np
-
-    from iscc_specs_spark.kernel.sketches import _MERSENNE_61, mersenne61_mod
-
-    rng = np.random.RandomState(11)
-    x = rng.randint(0, 1 << 62, size=50000).astype(np.uint64) * np.uint64(4)
-    x += rng.randint(0, 4, size=50000).astype(np.uint64)
-    assert (mersenne61_mod(x) == x % _MERSENNE_61).all()
-    edges = np.array(
-        [0, 1, (1 << 61) - 2, (1 << 61) - 1, 1 << 61, (1 << 61) + 1,
-         2 * ((1 << 61) - 1), 2 * ((1 << 61) - 1) + 1, (1 << 64) - 1, (1 << 64) - 2],
-        dtype=np.uint64,
-    )
-    assert (mersenne61_mod(edges) == edges % _MERSENNE_61).all()

@@ -15,11 +15,16 @@ Everything here is native Spark SQL — band hashes via F.xxhash64 (JVM,
 whole-stage codegen), verification via bit_count(XOR) — no Python UDFs.
 
 Skew mitigation (explicit, per north_rule — AQE skew-join splits join
-partitions but cannot fix an O(k²) hot LSH bucket): bucket sizes are counted
-first (reusing the banding shuffle), buckets ≤ cap self-join into pairs,
-oversized buckets connect hub-and-spoke to their min-url member — O(k)
-edges that preserve connectivity for clustering instead of O(k²); every
-capped bucket is observable in the metrics output.
+partitions but cannot fix an O(k²) hot LSH bucket): one router,
+:func:`hot_buckets`, splits any band-row table into the rows of buckets
+≤ cap and one min-url hub per oversized bucket — O(k) edges that preserve
+connectivity for clustering instead of O(k²). The batch self-join
+(:func:`verified_bucket_pairs`) pairs its cold buckets inline and spokes
+every hot member to its hub; the streaming vs-history probe
+(streaming/ingest.py) pairs new docs with cold history rows and with the
+hubs of hot history buckets. Both verify residual candidates with the one
+join verifier, :func:`verify_pairs`; every capped bucket is observable in
+the metrics output.
 
 Scale regime note (measured at the 4M-page size point): the simhash track's
 key space is 4 sub-keys × 2^16, so by pigeonhole its AVERAGE bucket crosses
@@ -93,8 +98,8 @@ def is_dup(
     sim_max: int = SIMHASH_MAX_HAMMING,
 ) -> Column:
     """The engine's dup predicate over two sides' ``(cid_body, simhash,
-    tophash)`` columns — shared by the inline bucket verifier, the hub-edge
-    verifier and the streaming vs-history probe:
+    tophash)`` columns — shared by the inline bucket verifier and
+    :func:`verify_pairs` (hub edges and the streaming vs-history probe):
 
         hamming(cid_body) ≤ cid_max OR hamming(simhash) ≤ sim_max
         OR tophash equal."""
@@ -204,6 +209,48 @@ def band_rows_table(
     )
 
 
+def hot_buckets(
+    index_rows: DataFrame, bucket_cap: int, url: Column
+) -> tuple[DataFrame, DataFrame]:
+    """The skew split of a (band_id, band_hash, …) row table, shared by the
+    batch self-join (:func:`verified_bucket_pairs`) and the streaming
+    vs-history probe (streaming/ingest.py): returns ``(cold_rows, hubs)``,
+    the rows of buckets with ≤ ``bucket_cap`` rows, and one
+    (band_id, band_hash, hub) row per hotter bucket, ``hub`` its min
+    ``url``.
+
+    Hot buckets are FEW by construction — one row per mega-bucket — so
+    their key list broadcasts at any corpus size. Routing rows via
+    broadcast anti/semi joins means no shuffle ever hash-partitions by a
+    hot key with unbounded rows behind it: the cold side has ≤ bucket_cap
+    rows per key, and the hot side's only wide op is a partial-agg min
+    over the hot rows. The count and the min stay two aggregates: the
+    anti-join needs only the keys, and one ``count + min(url)`` aggregate
+    (a SortAggregate over strings) defeats exchange reuse, costing jobs.
+
+    Recall: a bucket only goes hot when > bucket_cap docs share a full
+    band key, which at 16×4 MinHash banding means a template farm of
+    near-identical docs — a doc that is a true near-dup of ANY farm member
+    is a near-dup of the hub too, so the single hub edge preserves
+    CLUSTER recall (connected components close the hull; the batch
+    pipeline measures 1.0/1.0 at 400 k docs with a planted farm,
+    RECALL.json). The residual miss class is a *heterogeneous* hot bucket
+    (band-hash coincidence between unrelated docs) where a doc matches a
+    non-hub member only — bounded by the cap choice, and mirrored exactly
+    in the DuckDB twins (oracles.py) so parity never masks it."""
+    keys = ["band_id", "band_hash"]
+    hot_keys = F.broadcast(
+        index_rows.groupBy(*keys).count()
+        .where(F.col("count") > bucket_cap).select(*keys)
+    )
+    cold_rows = index_rows.join(hot_keys, keys, "left_anti")
+    hubs = (
+        index_rows.join(hot_keys, keys, "left_semi")
+        .groupBy(*keys).agg(F.min(url).alias("hub"))
+    )
+    return cold_rows, hubs
+
+
 def verified_bucket_pairs(
     slim: DataFrame,
     bands: int = DEFAULT_BANDS,
@@ -221,7 +268,7 @@ def verified_bucket_pairs(
     :func:`is_dup` on the exploded combination structs. Only the band rows
     shuffle; the 512 B minhash column — needed only for the reported
     jaccard estimate, not the dup predicate — never does (attach_jaccard
-    re-attaches it to the few surviving pairs when asked).
+    re-attaches it to the few surviving pairs).
 
     Oversized buckets (> bucket_cap, e.g. template farms): hub-and-spoke
     edges to the bucket-min url, O(k) not O(k²), never collected into one
@@ -239,25 +286,9 @@ def verified_bucket_pairs(
     else:
         band_rows = band_rows.select("m", "band_id", "band_hash")
 
-    sizes = band_rows.groupBy("band_id", "band_hash").agg(
-        F.count("*").alias("bucket_n")
-    )
-    # Skew split: hot buckets (> bucket_cap) are FEW by construction — one
-    # row per mega-bucket — so their key list broadcasts at any corpus
-    # size. Routing rows via broadcast semi/anti joins means no shuffle in
-    # this plan ever hash-partitions by a hot (band_id, band_hash) key with
-    # unbounded rows behind it: the cold join has ≤ bucket_cap rows per key
-    # by construction, and the hot path's only wide op is a partial-agg min.
-    hot_keys = sizes.where(F.col("bucket_n") > bucket_cap).select(
-        "band_id", "band_hash"
-    )
-    cold_rows = band_rows.join(
-        F.broadcast(hot_keys), ["band_id", "band_hash"], "left_anti"
-    )
-    # cold buckets are ≤ bucket_cap by construction (the anti-join removed
-    # every larger one), so the former join-back against `sizes` only ever
-    # supplied the ≥2 filter — size(ms) after the gather gives that for
-    # free, one join fewer in the chain
+    cold_rows, hubs = hot_buckets(band_rows, bucket_cap, F.col("m.url"))
+    # cold buckets hold ≤ bucket_cap rows by construction, so size(ms)
+    # after the gather is the only filter left
     members = cold_rows.groupBy("band_id", "band_hash").agg(
         F.collect_list("m").alias("ms")
     ).where(F.size("ms") >= 2)
@@ -288,17 +319,11 @@ def verified_bucket_pairs(
         .withColumn("verified", F.lit(True))
     )
 
-    big = band_rows.join(
-        F.broadcast(hot_keys), ["band_id", "band_hash"], "left_semi"
-    ).select("band_id", "band_hash", F.col("m.url").alias("url"))
-    # map-side partial min per bucket → hubs is one row per hot bucket
-    # (small) → broadcast back; the hot keys never drive a shuffle partition
-    hubs = big.groupBy("band_id", "band_hash").agg(F.min("url").alias("hub"))
     pairs_big = (
-        big.join(F.broadcast(hubs), ["band_id", "band_hash"])
-        .where(F.col("url") != F.col("hub"))
+        band_rows.join(F.broadcast(hubs), ["band_id", "band_hash"])
+        .where(F.col("m.url") != F.col("hub"))
         .select(
-            F.col("hub").alias("url_a"), F.col("url").alias("url_b"),
+            F.col("hub").alias("url_a"), F.col("m.url").alias("url_b"),
             F.lit(None).cast("int").alias("cid_hamming"),
             F.lit(None).cast("int").alias("simhash_hamming"),
             F.lit(None).cast("boolean").alias("exact_dup"),
@@ -314,13 +339,17 @@ def verify_pairs(
     codes_slim: DataFrame,
     cid_max: int = CID_T_MAX_HAMMING,
     sim_max: int = SIMHASH_MAX_HAMMING,
+    codes_b: DataFrame | None = None,
 ) -> DataFrame:
-    """Exact verification of (url_a, url_b, src) candidate pairs against
-    ``codes_slim``: keeps the pairs that pass :func:`is_dup`, as (url_a,
-    url_b, src, cid_hamming, simhash_hamming, exact_dup)."""
+    """Exact verification of (url_a, url_b, src) candidate pairs: url_a's
+    codes come from ``codes_slim``, url_b's from ``codes_b`` (default
+    ``codes_slim``; the streaming probe passes the history table). Keeps
+    the pairs of two different urls that pass :func:`is_dup` — a url
+    re-crawled into history is never a dup of itself — as (url_a, url_b,
+    src, cid_hamming, simhash_hamming, exact_dup)."""
 
-    def side(s):
-        return codes_slim.select(
+    def side(table, s):
+        return table.select(
             F.col("url").alias(f"url_{s}"),
             F.col("cid_body").alias(f"cid_{s}"),
             F.col("simhash").alias(f"sim_{s}"),
@@ -330,9 +359,9 @@ def verify_pairs(
     a = F.col("cid_a"), F.col("sim_a"), F.col("top_a")
     b = F.col("cid_b"), F.col("sim_b"), F.col("top_b")
     return (
-        cand.join(side("a"), "url_a")
-        .join(side("b"), "url_b")
-        .where(is_dup(a, b, cid_max, sim_max))
+        cand.join(side(codes_slim, "a"), "url_a")
+        .join(side(codes_slim if codes_b is None else codes_b, "b"), "url_b")
+        .where((F.col("url_a") != F.col("url_b")) & is_dup(a, b, cid_max, sim_max))
         .select(
             "url_a",
             "url_b",
@@ -345,20 +374,24 @@ def verify_pairs(
 
 
 def attach_jaccard(pairs: DataFrame, slim: DataFrame) -> DataFrame:
-    """Join the (few) surviving pairs back to the minhash signatures for the
-    reported jaccard_est = (#equal minhash positions)/64 — survivors ≪
-    corpus, so these joins shuffle a bounded fraction of the code table."""
+    """``pairs`` (from :func:`dup_pairs`) plus the reported jaccard_est =
+    (#equal minhash positions)/64, joined back from the representatives'
+    signatures — survivors ≪ corpus, so these joins shuffle a bounded
+    fraction of the code table. Exact pairs carry 1.0: their url_b is no
+    representative, so it has no row in ``slim``."""
     a = slim.select(F.col("url").alias("url_a"), F.col("minhash").alias("mh_a"))
     b = slim.select(F.col("url").alias("url_b"), F.col("minhash").alias("mh_b"))
     eq_minhash = F.expr(
         "aggregate(zip_with(mh_a, mh_b, (x, y) -> CASE WHEN x = y THEN 1 ELSE 0 END), "
         "0, (acc, v) -> acc + v)"
     )
+    jaccard = F.when(F.col("src") == "exact", F.lit(1.0)).otherwise(
+        eq_minhash / F.lit(64.0)
+    )
     return (
-        pairs.join(a, "url_a")
-        .join(b, "url_b")
-        .withColumn("jaccard_est", eq_minhash / F.lit(64.0))
-        .drop("mh_a", "mh_b")
+        pairs.join(a, "url_a", "left")
+        .join(b, "url_b", "left")
+        .select(*pairs.columns, jaccard.alias("jaccard_est"))
     )
 
 
@@ -369,33 +402,26 @@ def dup_pairs(
     bucket_cap: int = 64,
     cid_max: int = CID_T_MAX_HAMMING,
     sim_max: int = SIMHASH_MAX_HAMMING,
-    compute_jaccard: bool = False,
     slim: DataFrame | None = None,
     band_rows: DataFrame | None = None,
 ) -> DataFrame:
     """codes → verified duplicate pairs (exact ∪ minhash-LSH ∪ simhash), as
-    (url_a, url_b, src, cid_hamming, simhash_hamming, jaccard_est,
-    exact_dup).
+    (url_a, url_b, src, cid_hamming, simhash_hamming, exact_dup).
 
     Capped buckets verify inline during candidate generation
     (verified_bucket_pairs); only oversized-bucket hub edges take the
-    residual join-verify path (verify_pairs). ``jaccard_est`` is attached
-    once, to the deduplicated verified set: ``compute_jaccard`` defaults
-    OFF because the dup predicate never uses jaccard — it is reporting
-    metadata — and the two attach joins are pure overhead for
-    every caller that only consumes the pair set (clustering, the
-    ``__spark_entry__`` query rows, the pipeline bench). Pass True where the jaccard column is
-    actually persisted/read (plans/dedup.py's stage table). With the
-    default, ``jaccard_est`` is NULL on every LSH pair (exact pairs carry
-    1.0).
+    residual join-verify path (verify_pairs). The reported jaccard estimate
+    is not part of the pair set — the dup predicate never uses it — so a
+    caller that persists it joins it on with :func:`attach_jaccard`
+    (plans/dedup.py's stage table).
 
     ``slim``: pass a precomputed (ideally already-materialized)
     representative table to share it with other consumers (e.g. the
     lsh_metrics pass in plans/dedup.py) instead of re-aggregating. When
     None, the representative table is built and checkpointed here: it has
-    ~6 downstream consumers (banding, sizes, verify sides, jaccard sides,
-    exact pairs) and without materialization Spark re-expands — and
-    re-shuffles — the full-corpus tophash aggregation once per consumer.
+    several downstream consumers (banding, verify sides, exact pairs) and
+    without materialization Spark re-expands — and re-shuffles — the
+    full-corpus tophash aggregation once per consumer.
     """
     if slim is None:
         slim = rep_codes(codes).localCheckpoint(eager=True)
@@ -412,16 +438,11 @@ def dup_pairs(
         slim, cid_max, sim_max,
     )
     verified = inline_ok.unionByName(hub_ok).dropDuplicates(["url_a", "url_b"])
-    if compute_jaccard:
-        verified = attach_jaccard(verified, slim)
-    else:
-        verified = verified.withColumn("jaccard_est", F.lit(None).cast("double"))
     exact = exact_pairs(codes, slim).select(
         "url_a", "url_b", "src",
         F.lit(0).alias("cid_hamming"), F.lit(0).alias("simhash_hamming"),
-        F.lit(1.0).alias("jaccard_est"), F.lit(True).alias("exact_dup"),
+        F.lit(True).alias("exact_dup"),
     )
     return verified.select(
-        "url_a", "url_b", "src", "cid_hamming", "simhash_hamming",
-        "jaccard_est", "exact_dup",
+        "url_a", "url_b", "src", "cid_hamming", "simhash_hamming", "exact_dup",
     ).unionByName(exact)

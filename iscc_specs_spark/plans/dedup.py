@@ -147,13 +147,14 @@ def run_dedup(
                 partition_by=["band_pfx"],
             )
         band_rows = lsh.band_rows_table(slim, cfg.bands, cfg.rows)
+        pairs = lsh.dup_pairs(
+            codes, cfg.bands, cfg.rows, cfg.bucket_cap, cfg.cid_max,
+            cfg.sim_max, slim=slim, band_rows=band_rows,
+        )
         pairs = store.write(
-            lsh.dup_pairs(
-                codes, cfg.bands, cfg.rows, cfg.bucket_cap, cfg.cid_max,
-                cfg.sim_max, slim=slim, band_rows=band_rows,
-                # the at-rest stage table keeps its jaccard_est column
-                # (operator default flipped to False in r07)
-                compute_jaccard=True,
+            lsh.attach_jaccard(pairs, slim).select(
+                "url_a", "url_b", "src", "cid_hamming", "simhash_hamming",
+                "jaccard_est", "exact_dup",
             ),
             "dup_pairs",
             lsh_metrics(band_rows, cfg.bucket_cap),

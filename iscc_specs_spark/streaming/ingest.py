@@ -1,4 +1,4 @@
-"""Structured Streaming ingest: continuous pages → codes.
+"""Structured Streaming ingest: continuous pages → codes → dup flags.
 
 The reference has zero streaming semantics (SURVEY.md §1.2) and the
 north-rule resumability is batch snapshot/restart — but a production crawl
@@ -13,11 +13,16 @@ a streaming sink:
 Exactly-once: Spark's streaming checkpoint (offset log + commit log) makes
 each micro-batch replay idempotent; the sink writes each batch into its own
 ``ingest_batch=<id>`` partition directory with dynamic partition overwrite,
-so a replayed batch overwrites itself instead of duplicating. Downstream
-(LSH/clustering) runs as periodic batch jobs over the accumulated table —
-near-dup clustering is a global fixpoint, not a per-window computation, so
-windowed streaming state would be the wrong tool (documented deviation in
-SURVEY.md §2.7).
+so a replayed batch overwrites itself instead of duplicating.
+
+Dedup runs incrementally on the same state: ``process_dedup_batch`` flags
+each micro-batch's duplicates, within the batch and against a maintained
+band index of every earlier batch, with the batch engine's own candidate
+router and pair verifier (operators/lsh.py). Near-dup clustering is a
+global fixpoint, not a per-window computation, so windowed streaming state
+would be the wrong tool (SURVEY.md §2.7): ``curate_state`` closes the
+accumulated flags into clusters and canonical picks on demand, with the
+batch operators.
 """
 
 from __future__ import annotations
@@ -399,9 +404,11 @@ def process_dedup_batch(
     index_buckets = _effective_index_buckets(state_dir)
     batch = batch_df.localCheckpoint(eager=True)
 
+    # one representative table per batch: the within-batch pairs and the
+    # vs-history probe (banding + verify side a) all read it
+    new_slim = lsh.rep_codes(batch).localCheckpoint(eager=True)
     # within-batch pairs (standard path; url_a < url_b → flag url_b)
-    intra = lsh.dup_pairs(batch, bucket_cap=bucket_cap,
-                          compute_jaccard=False).select(
+    intra = lsh.dup_pairs(batch, bucket_cap=bucket_cap, slim=new_slim).select(
         F.col("url_b").alias("url"), F.col("url_a").alias("dup_of"),
         F.lit("intra_batch").alias("src"),
     )
@@ -419,14 +426,8 @@ def process_dedup_batch(
         # match against its own prior (uncommitted) write
         hist = hist.where(F.col("ingest_batch") < F.lit(batch_id))
     if hist is not None and hist.head(1):
-        # materialize both: new_slim is a groupBy shuffle consumed by the
-        # banding AND the verify join; nb feeds the prefix collect, the
-        # key semi-join and the broadcast probe — lazy, each reference
-        # would re-run the aggregation + banding (CLAUDE.md rule)
-        new_slim = lsh.rep_codes(batch).localCheckpoint(eager=True)
-        hist_slim = hist.select(
-            "url", "cid_body", "simhash", "minhash", "tophash"
-        )
+        # nb feeds the prefix collect, the key semi-join and the broadcast
+        # probe — lazy, each reference would re-run the banding
         nb = lsh.band_keys(new_slim).localCheckpoint(eager=True)
         # the new batch's key prefixes: ≤ index_buckets ints, collected on
         # the driver and pushed down as a literal partition filter (static
@@ -443,79 +444,28 @@ def process_dedup_batch(
                 f"state dir {state_dir} holds codes history but no band "
                 f"index at {state_dir}/bands; rebuild the state dir"
             )
-        # vs-history candidates with the engine-standard hot-bucket cap:
-        # restrict the index to the new batch's band keys first (semi-join
-        # — each history row matches once per key, NOT once per new url),
-        # size the matched buckets map-side, then
-        #   cold buckets (≤ bucket_cap rows): every (new, hist) pair;
-        #   hot buckets: route new members to the bucket's min-url hub
-        # so a template-farm band key costs O(|new|) candidates per batch
-        # instead of O(|new| × |hist_bucket|) — without this the per-batch
-        # candidate volume grows linearly with the mega-cluster's age.
-        #
-        # Recall under the cap: a bucket only goes hot when > bucket_cap
-        # docs share a full band key, which at 16×4 MinHash banding means
-        # a template farm of near-identical docs — a new member that is a
-        # true near-dup of ANY farm member is a near-dup of the hub too,
-        # so the single hub edge preserves CLUSTER recall (curate_state's
-        # CC closes the transitive hull; pinned by
-        # tests/test_streaming.py::test_hot_bucket_hub_preserves_cluster_
-        # recall, and the batch pipeline's identical routing measures
-        # 1.0/1.0 at 400 k docs with a planted farm — RECALL.json). The
-        # residual miss class is a *heterogeneous* hot bucket (band-hash
-        # coincidence between unrelated docs) where the new doc matches a
-        # non-hub member only — bounded by cap choice, mirrored exactly in
-        # the DuckDB twin so parity never masks it.
+        # vs-history candidates with the engine-standard hot-bucket cap
+        # (lsh.hot_buckets): the index restricted to the new batch's band
+        # keys (semi-join — each history row matches once per key, NOT once
+        # per new url) splits into cold rows, paired with every new member,
+        # and one min-url hub per hot bucket, which takes each new member's
+        # single edge — a template-farm band key costs O(|new|) candidates
+        # per batch, not O(|new| × |hist_bucket|)
         nbn = F.broadcast(nb.withColumnRenamed("url", "new_url"))
         new_keys = nb.select("band_id", "band_hash").dropDuplicates()
         hb_new = hb.join(F.broadcast(new_keys), ["band_id", "band_hash"])
-        sized = (
-            hb_new.groupBy("band_id", "band_hash")
-            .agg(F.count("*").alias("_n"), F.min("url").alias("_hub"))
-            .localCheckpoint(eager=True)  # tiny; consumed by both branches
-        )
-        cold = (
-            hb_new.join(
-                F.broadcast(
-                    sized.where(F.col("_n") <= bucket_cap)
-                    .select("band_id", "band_hash")
-                ),
-                ["band_id", "band_hash"],
-            )
-            .join(nbn, ["band_id", "band_hash"])
-            .select(
-                F.col("new_url").alias("url_a"), F.col("url").alias("url_b")
-            )
-        )
-        hot = (
-            sized.where(F.col("_n") > bucket_cap)
-            .join(nbn, ["band_id", "band_hash"])
-            .select(
-                F.col("new_url").alias("url_a"), F.col("_hub").alias("url_b")
-            )
-        )
+        cold_rows, hubs = lsh.hot_buckets(hb_new, bucket_cap, F.col("url"))
         cand = (
-            cold.unionByName(hot)
-            .withColumn("src", F.lit("lsh"))
+            cold_rows.withColumnRenamed("url", "url_b")
+            .unionByName(hubs.withColumnRenamed("hub", "url_b"))
+            .join(nbn, ["band_id", "band_hash"])
+            .select(
+                F.col("new_url").alias("url_a"), "url_b",
+                F.lit("lsh").alias("src"),
+            )
             .dropDuplicates(["url_a", "url_b"])
         )
-        both = new_slim.select(
-            F.col("url").alias("url_a"), F.col("cid_body").alias("cid_a"),
-            F.col("simhash").alias("sim_a"), F.col("tophash").alias("top_a"),
-        ).join(cand, "url_a").join(
-            hist_slim.select(
-                F.col("url").alias("url_b"), F.col("cid_body").alias("cid_b"),
-                F.col("simhash").alias("sim_b"), F.col("tophash").alias("top_b"),
-            ),
-            "url_b",
-        )
-        cross = both.where(
-            (F.col("url_a") != F.col("url_b"))  # re-crawled url ≠ dup of self
-            & lsh.is_dup(
-                (F.col("cid_a"), F.col("sim_a"), F.col("top_a")),
-                (F.col("cid_b"), F.col("sim_b"), F.col("top_b")),
-            )
-        ).select(
+        cross = lsh.verify_pairs(cand, new_slim, codes_b=hist).select(
             F.col("url_a").alias("url"), F.col("url_b").alias("dup_of"),
             F.lit("vs_history").alias("src"),
         )

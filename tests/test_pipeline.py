@@ -188,12 +188,44 @@ def test_run_dedup_job_budget(spark, tmp_path):
     assert per_doc <= STATE_BYTES_PER_DOC_MAX, per_doc
 
 
+def test_process_dedup_batch_job_budget(spark, tmp_path):
+    """One streaming micro-batch stays within a fixed Spark-job budget, with
+    the same headroom as run_dedup's: the first batch (no history) and a
+    history batch, whose vs-history probe shares the batch's one
+    representative table with the within-batch pairs."""
+    from pyspark.sql import functions as F
+
+    from iscc_specs_spark.operators.codegen import compute_codes
+    from iscc_specs_spark.streaming.ingest import process_dedup_batch
+
+    codes = compute_codes(
+        generate_pages(spark, 60, partitions=2), ("text", "data")
+    ).localCheckpoint(eager=True)
+    b0, b1 = (
+        codes.where(F.crc32("url") % 2 == k).localCheckpoint(eager=True)
+        for k in (0, 1)
+    )
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    state = str(tmp_path / "stream_budget")
+    try:
+        sc.setJobGroup("stream_first", "first micro-batch")
+        process_dedup_batch(b0, 0, state)
+        sc.setJobGroup("stream_history", "history micro-batch")
+        process_dedup_batch(b1, 1, state)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    first = tracker.getJobIdsForGroup("stream_first")
+    history = tracker.getJobIdsForGroup("stream_history")
+    assert 0 < len(first) <= 14, len(first)
+    assert 0 < len(history) <= 28, len(history)
+
+
 def test_dup_pairs_jaccard_est(spark, tmp_path):
     """run_dedup's dup_pairs stage reports jaccard_est = (#equal minhash
     positions)/64 on every LSH pair and 1.0 on every exact pair;
-    lsh.dup_pairs with its default leaves it NULL on every LSH pair."""
-    from pyspark.sql import functions as F
-
+    lsh.dup_pairs itself returns no jaccard_est column."""
     from iscc_specs_spark.operators import lsh
 
     pages = generate_pages(spark, 300, partitions=4)
@@ -211,9 +243,7 @@ def test_dup_pairs_jaccard_est(spark, tmp_path):
             same = np.count_nonzero(mh[p["url_a"]] == mh[p["url_b"]])
             assert p["jaccard_est"] == same / 64, p
 
-    default = lsh.dup_pairs(r["codes"]).where(F.col("src") == "lsh")
-    assert default.count() > 0
-    assert default.where(F.col("jaccard_est").isNotNull()).count() == 0
+    assert "jaccard_est" not in lsh.dup_pairs(r["codes"]).columns
 
 
 def test_canonical_pick_minby_no_window(spark):

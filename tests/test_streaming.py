@@ -345,41 +345,42 @@ def test_curate_state_matches_batch_clusters(spark, tmp_path):
     assert g == w
 
 
+CAP = 64
+
+
+def _vs_history_flags(spark, state, hist_n):
+    """vs-history flags of one new doc probing a fabricated history bucket
+    of ``hist_n`` identical-signature members (identical minhash →
+    identical band keys), with bucket_cap CAP; also the history urls."""
+    from iscc_specs_spark.streaming.ingest import process_dedup_batch
+
+    mh = list(range(64))
+    hist_urls = [f"https://h.example/p/{i:04d}" for i in range(hist_n)]
+    rows = [(u, 5, 7777, mh, f"top_{u}", None) for u in hist_urls]
+    process_dedup_batch(_mini_codes(spark, rows), 0, state, bucket_cap=CAP)
+    new = [("https://new.example/p/1", 5, 7777, mh, "top_new", None)]
+    process_dedup_batch(_mini_codes(spark, new), 1, state, bucket_cap=CAP)
+    flags = spark.read.parquet(state + "/dup_flags").where(
+        "src = 'vs_history'"
+    )
+    return sorted((r["url"], r["dup_of"]) for r in flags.collect()), hist_urls
+
+
 def test_cross_history_hot_bucket_hub_routed(spark, tmp_path):
     """A history band bucket over bucket_cap routes new members to the
     bucket's min-url hub instead of emitting one candidate per history
     member — per-batch candidate volume stays O(|new|) as a mega-cluster
-    ages. Verified with a fabricated 100-member identical-signature
-    history bucket and cap 64."""
-    from pyspark.sql import functions as F
-
-    from iscc_specs_spark.streaming.ingest import process_dedup_batch
-
-    state = str(tmp_path / "state_hot")
-    mh = list(range(64))  # identical minhash → identical band keys
-
-    def mk(urls, cid):
-        rows = [
-            (u, cid, 7777, mh, f"top_{u}", None) for u in urls
-        ]
-        return spark.createDataFrame(
-            rows,
-            "url string, cid_body long, simhash long, minhash array<long>, "
-            "tophash string, warc_ts timestamp",
-        )
-
-    hist_urls = [f"https://h.example/p/{i:04d}" for i in range(100)]
-    process_dedup_batch(mk(hist_urls, cid=5), 0, state, bucket_cap=64)
-    process_dedup_batch(
-        mk(["https://new.example/p/1"], cid=5), 1, state, bucket_cap=64
-    )
-
-    flags = spark.read.parquet(state + "/dup_flags").where(
-        "src = 'vs_history'"
-    )
-    got = [(r["url"], r["dup_of"]) for r in flags.collect()]
+    ages. Verified at the boundary: a bucket of bucket_cap + 1 members."""
+    got, hist_urls = _vs_history_flags(spark, str(tmp_path / "hot"), CAP + 1)
     # exactly ONE flag, routed to the bucket hub (min history url)
     assert got == [("https://new.example/p/1", hist_urls[0])], got
+
+
+def test_cross_history_bucket_at_cap_is_cold(spark, tmp_path):
+    """A history band bucket of exactly bucket_cap members is cold: the new
+    doc is verified against, and flagged as a dup of, every member."""
+    got, hist_urls = _vs_history_flags(spark, str(tmp_path / "cold"), CAP)
+    assert got == [("https://new.example/p/1", u) for u in hist_urls], got
 
 
 def test_hot_bucket_hub_preserves_cluster_recall(spark, tmp_path):
@@ -631,6 +632,7 @@ def test_curate_state_one_row_per_recrawled_url(spark, tmp_path):
     from iscc_specs_spark.streaming.ingest import (
         curate_state,
         process_dedup_batch,
+        read_dup_flags,
     )
 
     state = str(tmp_path / "state_recrawl")
@@ -642,6 +644,9 @@ def test_curate_state_one_row_per_recrawled_url(spark, tmp_path):
     got = curate_state(spark, state).collect()
     urls = [r["url"] for r in got]
     assert len(urls) == len(set(urls)) == 20, "one output row per url"
+    # a re-crawled url is never flagged as a dup of its own earlier crawl
+    self_flags = read_dup_flags(spark, state).where("url = dup_of")
+    assert self_flags.count() == 0, self_flags.collect()
 
 
 def test_curate_state_empty_state_is_schema_stable(spark, tmp_path):

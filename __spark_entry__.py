@@ -108,9 +108,7 @@ def _codes(spark: SparkSession, sf_dir: str) -> DataFrame:
     from iscc_specs_spark.operators.codegen import compute_codes
     from iscc_specs_spark.sources.pages import pages_from_documents
 
-    codes = compute_codes(
-        pages_from_documents(spark, sf_dir), ("text", "data")
-    ).localCheckpoint(eager=True)
+    codes = compute_codes(pages_from_documents(spark, sf_dir)).localCheckpoint(eager=True)
     _stage(codes, sf_dir, "codes")
     return codes
 

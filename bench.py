@@ -289,7 +289,7 @@ def run_headline(sf_dir: str, cpus: int) -> dict:
     n_docs = pages.count()
 
     def pipeline():
-        codes = compute_codes(pages, ("text", "data")).localCheckpoint(eager=True)
+        codes = compute_codes(pages).localCheckpoint(eager=True)
         pairs = lsh.dup_pairs(codes)
         _force(assign_clusters(codes.select("url"), pairs))
 
@@ -368,10 +368,10 @@ def run_pipeline_only(
         pages.count()  # materialize: synthesis excluded from the timed job
     else:
         pages = pages.localCheckpoint(eager=True)  # synthesis excluded
-    compute_codes(pages.limit(64), ("text", "data")).collect()  # warmup
+    compute_codes(pages.limit(64)).collect()  # warmup
 
     def job():
-        codes = compute_codes(pages, ("text", "data")).localCheckpoint(eager=True)
+        codes = compute_codes(pages).localCheckpoint(eager=True)
         pairs = lsh.dup_pairs(codes)
         _force(assign_clusters(codes.select("url"), pairs))
 
@@ -424,7 +424,7 @@ def run_recall(cores: int, n_docs: int, scale_words: int = 4) -> dict:
     ).localCheckpoint(eager=True)
     truth = with_truth.select("url", F.col("cluster_id").alias("t_label"))
     pages = with_truth.drop("cluster_id", "edit_class")
-    codes = compute_codes(pages, ("text", "data")).localCheckpoint(eager=True)
+    codes = compute_codes(pages).localCheckpoint(eager=True)
     clusters = assign_clusters(
         codes.select("url"), lsh.dup_pairs(codes)
     ).localCheckpoint(eager=True)
@@ -497,7 +497,7 @@ def run_recall_streaming(
         pages = generate_pages_with_truth(
             spark, n, partitions=parts, scale_words=scale_words, start=lo
         ).drop("cluster_id", "edit_class")
-        process_dedup_batch(compute_codes(pages, ("text", "data")), i, state_dir)
+        process_dedup_batch(compute_codes(pages), i, state_dir)
     wall = round(time.perf_counter() - t0, 3)
 
     clusters = curate_state(spark, state_dir).localCheckpoint(eager=True)

@@ -30,6 +30,8 @@ from pyspark.sql.types import StructField, StructType
 # oriented edges up to which connected_components finishes on the driver;
 # 200k id pairs stay well under a few hundred MB of driver memory
 LOCAL_EDGE_LIMIT = 200_000
+# large-star/small-star rounds before connected_components gives up
+MAX_ROUNDS = 30
 
 
 def _large_star(edges: DataFrame) -> DataFrame:
@@ -120,7 +122,7 @@ def _local_components(edges: pa.Table) -> tuple[np.ndarray, np.ndarray]:
 
 
 def connected_components(
-    pairs: DataFrame, max_iter: int = 30, src: str = "url_a", dst: str = "url_b"
+    pairs: DataFrame, src: str = "url_a", dst: str = "url_b"
 ) -> DataFrame:
     """pairs(url_a, url_b) → (url, cluster_id) for every node that appears in
     an edge; cluster_id = min url of the component.  Singleton handling is
@@ -158,12 +160,12 @@ def connected_components(
     # star forest), so a pre-round check would pay its endpoint shuffle on
     # the biggest input every call just to detect the rare
     # already-converged case — for which one no-op round is cheap anyway
-    for _ in range(max_iter):
+    for _ in range(MAX_ROUNDS):
         edges = _small_star(_large_star(edges)).localCheckpoint(eager=True)
         if _converged(edges):
             break
     else:
-        raise RuntimeError(f"connected_components: no convergence in {max_iter} rounds")
+        raise RuntimeError(f"connected_components: no convergence in {MAX_ROUNDS} rounds")
     # at the fixpoint every edge is (node → component min)
     return edges.select(F.col("u").alias("url"), F.col("v").alias("cluster_id"))
 

@@ -1,12 +1,11 @@
 """Codegen stage: pages → codes table via one Arrow-batched mapInPandas pass.
 
 Spark-first design notes (100 TB posture):
-  * a single ``mapInPandas`` pass computes all requested code tracks per
-    Arrow batch — one JVM↔Python Arrow crossing, no per-row Python UDFs
-    (BASELINE.json input_hint).
-  * the ``tracks`` argument controls which input columns are *selected*, so
-    Catalyst prunes the parquet scan: a text-only run never reads the heavy
-    ``html`` binary column (check ReadSchema in .explain()).
+  * a single ``mapInPandas`` pass computes all four codes (Meta, Content,
+    Data, Instance) per Arrow batch — one JVM↔Python Arrow crossing, no
+    per-row Python UDFs (BASELINE.json input_hint).
+  * only ``url, warc_ts, text, html`` are selected, so Catalyst prunes the
+    parquet scan to them (check ReadSchema in .explain()).
   * inside the batch, all shingle hashing is vectorized across documents
     (kernel.batch), and the 8-byte code bodies are emitted as LONG columns so
     downstream Hamming verification stays native
@@ -35,14 +34,14 @@ _TITLE_RE = re.compile(rb"<title[^>]*>(.*?)</title>", re.S | re.I)
 # same pattern for the vectorized pandas .str.extract path (str input)
 _TITLE_PAT = "(?is)<title[^>]*>(.*?)</title>"
 
-TEXT_COLS = (
+CODES_SCHEMA = (
+    "url string, warc_ts timestamp, "
     "meta_id string, mid_body long, title string, "
     "content_id string, cid_body long, simhash long, "
-    "minhash array<long>, n_features int"
-)
-DATA_COLS = (
+    "minhash array<long>, n_features int, "
     "data_id string, did_body long, n_chunks int, "
-    "instance_id string, iid_body long, tophash string"
+    "instance_id string, iid_body long, tophash string, "
+    "n_bytes int"
 )
 
 
@@ -55,82 +54,49 @@ def _extract_title(html: bytes | None) -> str:
     return m.group(1).decode("utf-8", "replace")
 
 
-def codes_schema(tracks: tuple[str, ...]) -> str:
-    cols = ["url string", "warc_ts timestamp"]
-    if "text" in tracks:
-        cols.append(TEXT_COLS)
-    if "data" in tracks:
-        cols.append(DATA_COLS)
-    cols.append("n_bytes int")
-    return ", ".join(cols)
-
-
-def compute_codes(
-    pages: DataFrame, tracks: tuple[str, ...] = ("text", "data")
-) -> DataFrame:
-    """pages(url, warc_ts, html, text, lang) → codes table.
-
-    tracks: "text" → Meta-ID + Content-ID-Text + SimHash + MinHash signature;
-            "data" → Data-ID + Instance-ID (reads the html binary column).
-    """
-    in_cols = ["url", "warc_ts"]
-    if "text" in tracks:
-        in_cols.append("text")
-    if "data" in tracks:
-        in_cols.append("html")
-    want_data = "data" in tracks
-    want_text = "text" in tracks
-    schema = codes_schema(tracks)
+def compute_codes(pages: DataFrame) -> DataFrame:
+    """pages(url, warc_ts, html, text, lang) → codes table
+    (:data:`CODES_SCHEMA`): Meta-ID (from the html title), Content-ID-Text
+    + SimHash + MinHash signature (from text), Data-ID + Instance-ID (from
+    the html bytes)."""
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            out = {"url": pdf["url"], "warc_ts": pdf["warc_ts"]}
-            n_bytes = None
-            if want_text:
-                texts = pdf["text"].tolist()
-                if want_data:
-                    htmls = pdf["html"].tolist()
-                    # vectorized pandas .str.extract across the Arrow batch
-                    # (one compiled-regex pass, no per-row Python loop)
-                    titles = (
-                        pdf["html"]
-                        .str.decode("utf-8", "replace")
-                        .str.extract(_TITLE_PAT, expand=False)
-                        .fillna("")
-                        .tolist()
-                    )
-                else:
-                    # text-only run never reads html; derive a title proxy
-                    # from the first 8 words (documented deviation)
-                    titles = [" ".join(t.split(" ")[:8]) if t else "" for t in texts]
-                mids, mid_body, trimmed = meta_batch(titles)
-                tb = content_text_batch(texts)
-                out.update(
-                    meta_id=mids,
-                    mid_body=mid_body,
-                    title=trimmed,
-                    content_id=tb["cid"],
-                    cid_body=tb["cid_body"],
-                    simhash=tb["simhash"],
-                    # one int64 row view per doc: Arrow takes each as a list
-                    # without a Python int per value
-                    minhash=list(tb["minhash"].astype(np.int64)),
-                    n_features=tb["n_features"],
-                )
-                n_bytes = [len((t or "").encode("utf-8")) for t in texts]
-            if want_data:
-                htmls = pdf["html"].tolist()
-                db = data_instance_batch(htmls)
-                out.update(
-                    data_id=db["did"],
-                    did_body=db["did_body"],
-                    n_chunks=db["n_chunks"],
-                    instance_id=db["iid"],
-                    iid_body=db["iid_body"],
-                    tophash=db["tophash"],
-                )
-                n_bytes = [len(h) if h is not None else 0 for h in htmls]
-            out["n_bytes"] = n_bytes
-            yield pd.DataFrame(out)
+            htmls = pdf["html"].tolist()
+            # vectorized pandas .str.extract across the Arrow batch
+            # (one compiled-regex pass, no per-row Python loop)
+            titles = (
+                pdf["html"]
+                .str.decode("utf-8", "replace")
+                .str.extract(_TITLE_PAT, expand=False)
+                .fillna("")
+                .tolist()
+            )
+            mids, mid_body, trimmed = meta_batch(titles)
+            tb = content_text_batch(pdf["text"].tolist())
+            db = data_instance_batch(htmls)
+            yield pd.DataFrame({
+                "url": pdf["url"],
+                "warc_ts": pdf["warc_ts"],
+                "meta_id": mids,
+                "mid_body": mid_body,
+                "title": trimmed,
+                "content_id": tb["cid"],
+                "cid_body": tb["cid_body"],
+                "simhash": tb["simhash"],
+                # one int64 row view per doc: Arrow takes each as a list
+                # without a Python int per value
+                "minhash": list(tb["minhash"].astype(np.int64)),
+                "n_features": tb["n_features"],
+                "data_id": db["did"],
+                "did_body": db["did_body"],
+                "n_chunks": db["n_chunks"],
+                "instance_id": db["iid"],
+                "iid_body": db["iid_body"],
+                "tophash": db["tophash"],
+                "n_bytes": [len(h) if h is not None else 0 for h in htmls],
+            })
 
-    return pages.select(*in_cols).mapInPandas(gen, schema=schema)
+    return pages.select("url", "warc_ts", "text", "html").mapInPandas(
+        gen, schema=CODES_SCHEMA
+    )

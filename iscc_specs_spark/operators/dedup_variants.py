@@ -31,6 +31,8 @@ import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from iscc_specs_spark.operators.lsh import hot_buckets
+
 
 def normalized_fp(col: str = "text"):
     """md5 of casefolded, whitespace-collapsed text (oracle-parity hash)."""
@@ -440,38 +442,31 @@ def rhp_candidate_pairs(
     # per-plane folds were the corpus-side signature cost)
     bucketed = rhp_buckets_arrow(
         e, nbits, ntables, seed, dim, id_col="vec_id", vec_col="v"
-    ).select("vec_id", F.posexplode("sigs").alias("t", "h"))
+    ).select("vec_id", F.posexplode("sigs").alias("band_id", "band_hash"))
     if materialize:
         # the signature subtree (ntables × nbits hyperplane dot products
-        # per vector) has 4 consumers below (sizes, both cold join sides,
-        # hot) — without materialization Spark re-expands it once per
-        # consumer (same incident as lsh.dup_pairs' slim table; CLAUDE.md).
-        # Keys-only now, so the checkpoint is ~10× slimmer than when it
-        # carried the vector payloads. At warehouse scale this is a
-        # written stage table bucketed by (t, h).
+        # per vector) has 4 consumers below (the router's count, cold and
+        # hot joins, the spokes) — without materialization Spark re-expands
+        # it once per consumer (same incident as lsh.dup_pairs' slim table;
+        # CLAUDE.md). Keys-only now, so the checkpoint is ~10× slimmer than
+        # when it carried the vector payloads. At warehouse scale this is a
+        # written stage table bucketed by (band_id, band_hash).
         bucketed = bucketed.localCheckpoint(eager=True)
 
-    sizes = bucketed.groupBy("t", "h").agg(F.count("*").alias("bucket_n"))
-    hot_keys = sizes.where(F.col("bucket_n") > bucket_cap).select("t", "h")
-    cold = bucketed.join(F.broadcast(hot_keys), ["t", "h"], "left_anti")
+    keys = ["band_id", "band_hash"]
+    cold, hubs = hot_buckets(bucketed, bucket_cap, F.col("vec_id"))
     cand_cold = (
-        cold.select(F.col("vec_id").alias("vec_a"), "t", "h")
-        .join(cold.select(F.col("vec_id").alias("vec_b"), "t", "h"), ["t", "h"])
+        cold.select(F.col("vec_id").alias("vec_a"), *keys)
+        .join(cold.select(F.col("vec_id").alias("vec_b"), *keys), keys)
         .where(F.col("vec_a") < F.col("vec_b"))
         .select("vec_a", "vec_b")
     )
-
-    # hot buckets: one hub id per (t, h) via map-side-combinable min →
-    # broadcast back; the hot keys never hash-partition a shuffle with
-    # unbounded rows behind them.
-    hot = bucketed.join(F.broadcast(hot_keys), ["t", "h"], "left_semi")
-    hubs = hot.groupBy("t", "h").agg(F.min("vec_id").alias("hub_id"))
     cand_hot = (
-        hot.join(F.broadcast(hubs), ["t", "h"])
-        .where(F.col("vec_id") != F.col("hub_id"))
+        bucketed.join(F.broadcast(hubs), keys)
+        .where(F.col("vec_id") != F.col("hub"))
         .select(
-            F.least("vec_id", "hub_id").alias("vec_a"),
-            F.greatest("vec_id", "hub_id").alias("vec_b"),
+            F.least("vec_id", "hub").alias("vec_a"),
+            F.greatest("vec_id", "hub").alias("vec_b"),
         )
     )
     return cand_cold.unionByName(cand_hot).dropDuplicates()

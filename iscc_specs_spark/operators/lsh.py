@@ -6,7 +6,7 @@ Three candidate sources, one verification predicate:
              LSH skew up front: empty pages / byte-identical mirrors collapse
              to one representative before any banding).
   * minhash: LSH banding over the 64-value MinHash signature, b bands × r
-             rows (default 16×4: P(collide) = 1-(1-s^4)^16 ≈ 0.996 at
+             rows (16×4: P(collide) = 1-(1-s^4)^16 ≈ 0.996 at
              signature similarity s=0.75).
   * simhash: 4 × 16-bit sub-keys of the 64-bit text SimHash (pigeonhole:
              Hamming ≤ 3 ⇒ at least one sub-key collides exactly).
@@ -34,8 +34,11 @@ per page, all exactly verified downstream (correctness unaffected; the
 minhash track, whose 64-bit band keys never saturate, carries the targeted
 recall). At 10^9+ pages the sim track should shard into p permuted tables
 keyed on wider prefixes (Manku et al. 2007's rotation scheme) — table count
-and prefix width are config, not architecture; the banding/bucket/verify
-machinery here is unchanged by that swap.
+and prefix width are constants here, recorded in both fingerprints
+(:func:`band_geometry`), not architecture; the banding/bucket/verify
+machinery here is unchanged by that swap. A change to how band keys are
+computed must change the recorded geometry, so stale band state fails
+loudly instead of silently matching nothing.
 """
 
 from __future__ import annotations
@@ -43,13 +46,19 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-DEFAULT_BANDS = 16
-DEFAULT_ROWS = 4
+BANDS = 16
+ROWS = 4
+SIMHASH_SUBKEYS = 4
 
 # verification thresholds (Hamming over 64-bit bodies; reference robustness
 # envelope: 1-word edit → CID-T distance ≈ 2, tests/test_iscc.py:103-105)
 CID_T_MAX_HAMMING = 10
 SIMHASH_MAX_HAMMING = 3
+
+
+def band_geometry() -> dict:
+    """How band keys are built: MinHash bands × rows, SimHash sub-keys."""
+    return {"bands": BANDS, "rows": ROWS, "subkeys": SIMHASH_SUBKEYS}
 
 
 def exact_pairs(codes: DataFrame, reps: DataFrame) -> DataFrame:
@@ -92,44 +101,41 @@ def hamming64(a: Column, b: Column) -> Column:
 
 
 def is_dup(
-    a: tuple[Column, Column, Column],
-    b: tuple[Column, Column, Column],
-    cid_max: int = CID_T_MAX_HAMMING,
-    sim_max: int = SIMHASH_MAX_HAMMING,
+    a: tuple[Column, Column, Column], b: tuple[Column, Column, Column]
 ) -> Column:
     """The engine's dup predicate over two sides' ``(cid_body, simhash,
     tophash)`` columns — shared by the inline bucket verifier and
     :func:`verify_pairs` (hub edges and the streaming vs-history probe):
 
-        hamming(cid_body) ≤ cid_max OR hamming(simhash) ≤ sim_max
-        OR tophash equal."""
+        hamming(cid_body) ≤ CID_T_MAX_HAMMING
+        OR hamming(simhash) ≤ SIMHASH_MAX_HAMMING OR tophash equal."""
     (cid_a, sim_a, top_a), (cid_b, sim_b, top_b) = a, b
     return (
-        (hamming64(cid_a, cid_b) <= cid_max)
-        | (hamming64(sim_a, sim_b) <= sim_max)
+        (hamming64(cid_a, cid_b) <= CID_T_MAX_HAMMING)
+        | (hamming64(sim_a, sim_b) <= SIMHASH_MAX_HAMMING)
         | (top_a == top_b)
     )
 
 
-def _minhash_band_structs(bands: int, rows: int) -> list[Column]:
+def _minhash_band_structs() -> list[Column]:
     """struct(band_id, band_hash) per MinHash band: xxhash64 over the band's
-    ``rows`` consecutive signature values, seeded with the band index."""
+    ROWS consecutive signature values, seeded with the band index."""
     return [
         F.struct(
             F.lit(i).alias("band_id"),
             F.xxhash64(
-                F.lit(i), *[F.col("minhash")[j] for j in range(i * rows, (i + 1) * rows)]
+                F.lit(i), *[F.col("minhash")[j] for j in range(i * ROWS, (i + 1) * ROWS)]
             ).alias("band_hash"),
         )
-        for i in range(bands)
+        for i in range(BANDS)
     ]
 
 
-def _simhash_band_structs(subkeys: int = 4) -> list[Column]:
-    """struct(band_id, band_hash) per 64/subkeys-bit SimHash sub-key;
-    band_id offset by 1000 to keep the key space disjoint from minhash
-    bands."""
-    width = 64 // subkeys
+def _simhash_band_structs() -> list[Column]:
+    """struct(band_id, band_hash) per 64/SIMHASH_SUBKEYS-bit SimHash
+    sub-key; band_id offset by 1000 to keep the key space disjoint from
+    minhash bands."""
+    width = 64 // SIMHASH_SUBKEYS
     mask = (1 << width) - 1
     return [
         F.struct(
@@ -137,14 +143,14 @@ def _simhash_band_structs(subkeys: int = 4) -> list[Column]:
             (F.shiftrightunsigned(F.col("simhash"), i * width).bitwiseAND(F.lit(mask)))
             .cast("long").alias("band_hash"),
         )
-        for i in range(subkeys)
+        for i in range(SIMHASH_SUBKEYS)
     ]
 
 
-def _all_band_structs(bands: int, rows: int) -> list[Column]:
+def _band_structs() -> list[Column]:
     """MinHash band structs then SimHash sub-key structs — every band key
     of a row."""
-    return _minhash_band_structs(bands, rows) + _simhash_band_structs()
+    return _minhash_band_structs() + _simhash_band_structs()
 
 
 def _explode_bands(df: DataFrame, lead: str, structs: list[Column]) -> DataFrame:
@@ -155,27 +161,23 @@ def _explode_bands(df: DataFrame, lead: str, structs: list[Column]) -> DataFrame
     )
 
 
-def minhash_bands(
-    codes: DataFrame, bands: int = DEFAULT_BANDS, rows: int = DEFAULT_ROWS
-) -> DataFrame:
+def minhash_bands(codes: DataFrame) -> DataFrame:
     """(url, band_id, band_hash) — xxhash64 MinHash band keys."""
-    return _explode_bands(codes, "url", _minhash_band_structs(bands, rows))
+    return _explode_bands(codes, "url", _minhash_band_structs())
 
 
-def simhash_bands(codes: DataFrame, subkeys: int = 4) -> DataFrame:
+def simhash_bands(codes: DataFrame) -> DataFrame:
     """(url, band_id, band_hash) from 16-bit SimHash sub-keys."""
-    return _explode_bands(codes, "url", _simhash_band_structs(subkeys))
+    return _explode_bands(codes, "url", _simhash_band_structs())
 
 
-def band_keys(
-    codes: DataFrame, bands: int = DEFAULT_BANDS, rows: int = DEFAULT_ROWS
-) -> DataFrame:
+def band_keys(codes: DataFrame) -> DataFrame:
     """(url, band_id, band_hash) — the keys-only band index rows, MinHash
     bands and SimHash sub-keys in one explode: the row set of
     ``minhash_bands ∪ simhash_bands``. The one shape of every band table
     at rest: the batch ``bands`` stage (plans/dedup.py) and the streaming
     maintained index (streaming/ingest.py)."""
-    return _explode_bands(codes, "url", _all_band_structs(bands, rows))
+    return _explode_bands(codes, "url", _band_structs())
 
 
 BAND_PFX_BUCKETS = 64
@@ -192,9 +194,7 @@ def band_pfx(buckets: int = BAND_PFX_BUCKETS):
     ).cast("int")
 
 
-def band_rows_table(
-    slim: DataFrame, bands: int = DEFAULT_BANDS, rows: int = DEFAULT_ROWS
-) -> DataFrame:
+def band_rows_table(slim: DataFrame) -> DataFrame:
     """(m struct(url,cid_body,simhash,tophash), band_id, band_hash) — the
     banded representative table with the verification payload riding along
     (see verified_bucket_pairs): minhash LSH bands + simhash sub-key bands
@@ -204,9 +204,7 @@ def band_rows_table(
     payload = F.struct(
         F.col("url"), F.col("cid_body"), F.col("simhash"), F.col("tophash")
     )
-    return _explode_bands(
-        slim.withColumn("m", payload), "m", _all_band_structs(bands, rows)
-    )
+    return _explode_bands(slim.withColumn("m", payload), "m", _band_structs())
 
 
 def hot_buckets(
@@ -252,13 +250,7 @@ def hot_buckets(
 
 
 def verified_bucket_pairs(
-    slim: DataFrame,
-    bands: int = DEFAULT_BANDS,
-    rows: int = DEFAULT_ROWS,
-    bucket_cap: int = 64,
-    cid_max: int = CID_T_MAX_HAMMING,
-    sim_max: int = SIMHASH_MAX_HAMMING,
-    band_rows: DataFrame | None = None,
+    slim: DataFrame, bucket_cap: int = 64, band_rows: DataFrame | None = None
 ) -> DataFrame:
     """Banding + candidate generation + exact verification in one shuffle
     chain — no post-hoc join back to the code table.
@@ -282,7 +274,7 @@ def verified_bucket_pairs(
     banding; must have band_rows_table's (m, band_id, band_hash) shape.
     """
     if band_rows is None:
-        band_rows = band_rows_table(slim, bands, rows)
+        band_rows = band_rows_table(slim)
     else:
         band_rows = band_rows.select("m", "band_id", "band_hash")
 
@@ -300,7 +292,7 @@ def verified_bucket_pairs(
         # every later member y of the bucket that passes the predicate
         def pair(y, j):
             return F.when(
-                (j > i) & is_dup(side(x), side(y), cid_max, sim_max),
+                (j > i) & is_dup(side(x), side(y)),
                 F.struct(
                     F.least(x["url"], y["url"]).alias("url_a"),
                     F.greatest(x["url"], y["url"]).alias("url_b"),
@@ -335,11 +327,7 @@ def verified_bucket_pairs(
 
 
 def verify_pairs(
-    cand: DataFrame,
-    codes_slim: DataFrame,
-    cid_max: int = CID_T_MAX_HAMMING,
-    sim_max: int = SIMHASH_MAX_HAMMING,
-    codes_b: DataFrame | None = None,
+    cand: DataFrame, codes_slim: DataFrame, codes_b: DataFrame | None = None
 ) -> DataFrame:
     """Exact verification of (url_a, url_b, src) candidate pairs: url_a's
     codes come from ``codes_slim``, url_b's from ``codes_b`` (default
@@ -361,7 +349,7 @@ def verify_pairs(
     return (
         cand.join(side(codes_slim, "a"), "url_a")
         .join(side(codes_slim if codes_b is None else codes_b, "b"), "url_b")
-        .where((F.col("url_a") != F.col("url_b")) & is_dup(a, b, cid_max, sim_max))
+        .where((F.col("url_a") != F.col("url_b")) & is_dup(a, b))
         .select(
             "url_a",
             "url_b",
@@ -397,11 +385,7 @@ def attach_jaccard(pairs: DataFrame, slim: DataFrame) -> DataFrame:
 
 def dup_pairs(
     codes: DataFrame,
-    bands: int = DEFAULT_BANDS,
-    rows: int = DEFAULT_ROWS,
     bucket_cap: int = 64,
-    cid_max: int = CID_T_MAX_HAMMING,
-    sim_max: int = SIMHASH_MAX_HAMMING,
     slim: DataFrame | None = None,
     band_rows: DataFrame | None = None,
 ) -> DataFrame:
@@ -425,9 +409,7 @@ def dup_pairs(
     """
     if slim is None:
         slim = rep_codes(codes).localCheckpoint(eager=True)
-    vb = verified_bucket_pairs(
-        slim, bands, rows, bucket_cap, cid_max, sim_max, band_rows=band_rows
-    )
+    vb = verified_bucket_pairs(slim, bucket_cap, band_rows)
     inline_ok = (
         vb.where(F.col("verified")).drop("verified").withColumn("src", F.lit("lsh"))
     )
@@ -435,7 +417,7 @@ def dup_pairs(
         vb.where(~F.col("verified")).select(
             "url_a", "url_b", F.lit("lsh").alias("src")
         ),
-        slim, cid_max, sim_max,
+        slim,
     )
     verified = inline_ok.unionByName(hub_ok).dropDuplicates(["url_a", "url_b"])
     exact = exact_pairs(codes, slim).select(

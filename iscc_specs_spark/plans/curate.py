@@ -57,6 +57,7 @@ from pyspark.sql import functions as F
 
 from iscc_specs_spark.operators.textstats import quality_scores, token_counts
 from iscc_specs_spark.plans.dedup import DedupConfig, run_dedup
+from iscc_specs_spark.plans.dedup import _fingerprint as dedup_fingerprint
 from iscc_specs_spark.sources.storage import StageStore, config_hash
 
 
@@ -117,6 +118,17 @@ class CurateConfig:
     dsir_hash: str = "xxh64"
 
 
+def _fingerprint(cfg: CurateConfig, decontam: bool, dsir: bool) -> str:
+    """The config plus which optional gates run. The nested dedup config
+    hashes as run_dedup's own fingerprint, so an edit to an LSH constant
+    recomputes every stage built from its clusters, not only the dedup
+    sub-plan's."""
+    return config_hash({
+        **asdict(cfg), "dedup": dedup_fingerprint(cfg.dedup),
+        "decontam": decontam, "dsir": dsir,
+    })
+
+
 def run_curation(
     spark: SparkSession,
     pages: DataFrame,
@@ -134,16 +146,7 @@ def run_curation(
     dsir_k most target-like documents survive."""
     cfg = cfg or CurateConfig()
     dsir_active = target_pages is not None and bool(cfg.dsir_k)
-    store = StageStore(
-        out_dir,
-        config_hash(
-            {
-                **asdict(cfg),
-                "decontam": eval_pages is not None,
-                "dsir": dsir_active,
-            }
-        ),
-    )
+    store = StageStore(out_dir, _fingerprint(cfg, eval_pages is not None, dsir_active))
 
     # ⓪a optional canonical-URL crawl dedup — the cheapest duplicate class
     # (one page, many url spellings) drops before any scoring or kernel

@@ -26,12 +26,15 @@ from iscc_specs_spark.sources.storage import StageStore, config_hash
 
 @dataclass
 class DedupConfig:
-    tracks: tuple[str, ...] = ("text", "data")
-    bands: int = lsh.DEFAULT_BANDS
-    rows: int = lsh.DEFAULT_ROWS
     bucket_cap: int = 64
-    cid_max: int = lsh.CID_T_MAX_HAMMING
-    sim_max: int = lsh.SIMHASH_MAX_HAMMING
+
+
+def _fingerprint(cfg: DedupConfig) -> str:
+    """The config plus the LSH constants every stage is built with."""
+    return config_hash({
+        **asdict(cfg), **lsh.band_geometry(),
+        "cid_max": lsh.CID_T_MAX_HAMMING, "sim_max": lsh.SIMHASH_MAX_HAMMING,
+    })
 
 
 def lsh_metrics(band_table: DataFrame, bucket_cap: int) -> dict:
@@ -62,10 +65,7 @@ def probe_band_stage(
     key set against a finished snapshot computes the keys' prefixes with
     :func:`lsh.band_pfx` and passes them here; Spark pushes the IN-list
     into PartitionFilters, so probe I/O is bounded by prefix coverage, not
-    snapshot size (plan-gated in tests/test_pipeline.py). An out dir written
-    while the stage still carried the verification payload keeps that older
-    layout (band_id, band_hash and an ``m`` struct): resume reuses the
-    stage as it is."""
+    snapshot size (plan-gated in tests/test_pipeline.py)."""
     df = store.read(spark, "bands")
     if pfx is not None:
         df = df.where(F.col("band_pfx").isin([int(p) for p in pfx]))
@@ -107,22 +107,18 @@ def run_dedup(
 ) -> dict:
     """Returns {"clusters": DataFrame, "store": StageStore, ...stage dfs}."""
     cfg = cfg or DedupConfig()
-    store = StageStore(out_dir, config_hash(asdict(cfg)))
+    store = StageStore(out_dir, _fingerprint(cfg))
 
     # ① codes
     if store.has("codes"):
         codes = store.read(spark, "codes")
     else:
-        codes = store.write(compute_codes(pages, cfg.tracks), "codes")
+        codes = store.write(compute_codes(pages), "codes")
 
     # ② dup pairs
     if store.has("dup_pairs"):
         pairs = store.read(spark, "dup_pairs")
     else:
-        if "tophash" not in codes.columns:
-            # text-only run: no Instance-ID — disable the exact stage by
-            # making every "group" the url itself
-            codes = codes.withColumn("tophash", F.col("url"))
         # one slim representative table feeds BOTH the band stage and the
         # exact-dup pairing (previously two independent full-corpus
         # aggregations). No written stage covers it: the bands stage keeps
@@ -140,17 +136,12 @@ def run_dedup(
         # stage is never read back
         if not store.has("bands"):
             store.save(
-                lsh.band_keys(slim, cfg.bands, cfg.rows).withColumn(
-                    "band_pfx", lsh.band_pfx()
-                ),
+                lsh.band_keys(slim).withColumn("band_pfx", lsh.band_pfx()),
                 "bands",
                 partition_by=["band_pfx"],
             )
-        band_rows = lsh.band_rows_table(slim, cfg.bands, cfg.rows)
-        pairs = lsh.dup_pairs(
-            codes, cfg.bands, cfg.rows, cfg.bucket_cap, cfg.cid_max,
-            cfg.sim_max, slim=slim, band_rows=band_rows,
-        )
+        band_rows = lsh.band_rows_table(slim)
+        pairs = lsh.dup_pairs(codes, cfg.bucket_cap, slim=slim, band_rows=band_rows)
         pairs = store.write(
             lsh.attach_jaccard(pairs, slim).select(
                 "url_a", "url_b", "src", "cid_hamming", "simhash_hamming",

@@ -55,9 +55,9 @@ FLAGS_SCHEMA = "url string, dup_of string, src string, ingest_batch int"
 # and the recorded value wins for the state dir's lifetime.
 # process_dedup_batch is the index's only writer and always writes this
 # layout; a state dir whose codes history has no index, or whose index
-# lacks band_pfx, raises BandIndexError. The prefix expression and bucket
-# count are shared with the batch pipeline's at-rest band stage table
-# (operators/lsh.py).
+# lacks band_pfx or records another band geometry, raises BandIndexError.
+# The prefix expression and bucket count are shared with the batch
+# pipeline's at-rest band stage table (operators/lsh.py).
 from iscc_specs_spark.operators.lsh import (  # noqa: E402
     BAND_PFX_BUCKETS as INDEX_BUCKETS,
     band_pfx,
@@ -144,12 +144,11 @@ def start_codes_stream(
     pages_stream: DataFrame,
     out_dir: str,
     checkpoint_dir: str,
-    tracks: tuple[str, ...] = ("text", "data"),
     trigger_once: bool = True,
 ) -> StreamingQuery:
     """pages stream → codes table, exactly-once via checkpoint + per-batch
     partition overwrite."""
-    codes = compute_codes(pages_stream, tracks)
+    codes = compute_codes(pages_stream)
     return _start_stream(
         codes, _partition_overwrite_sink(out_dir), checkpoint_dir, trigger_once
     )
@@ -218,7 +217,6 @@ def start_incremental_dedup_stream(
     pages_stream: DataFrame,
     state_dir: str,
     checkpoint_dir: str,
-    tracks: tuple[str, ...] = ("text", "data"),
     trigger_once: bool = True,
     bucket_cap: int = 64,
 ) -> StreamingQuery:
@@ -250,7 +248,7 @@ def start_incremental_dedup_stream(
     Flags schema: (url, dup_of, src, ingest_batch) — ``dup_of`` is the
     matched earlier url (within-batch matches point to the pair minimum).
     """
-    codes_stream = compute_codes(pages_stream, tracks)
+    codes_stream = compute_codes(pages_stream)
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
         process_dedup_batch(batch_df, batch_id, state_dir, bucket_cap)
@@ -279,29 +277,30 @@ def _read_history(spark: SparkSession, path: str) -> DataFrame | None:
         raise
 
 
-def _effective_index_buckets(state_dir: str, sub: str = "bands") -> int:
-    """The index's ON-DISK bucket count, or :data:`INDEX_BUCKETS` for an
-    index not written yet. The stored value wins over the constant:
-    ``band_pfx`` partition pruning is only correct when probe prefixes are
-    computed with the same modulus the index was written with — a changed
-    constant would silently prune away true vs-history matches (missed dup
-    flags, no error). First writer records the modulus in
-    ``<sub>/_INDEX_META.json`` (underscore-prefixed files are invisible to
-    Spark's parquet listing); later batches — and restarts of a build with
-    a different constant — derive it from there. Local-FS
-    JSON is the sandbox seam; at warehouse scale this is one more field in
-    the table's manifest (sources/storage.py)."""
+def _index_meta(state_dir: str, sub: str) -> dict:
+    """The index's ON-DISK layout record ``<sub>/_INDEX_META.json``, or
+    ``{}`` for an index not written yet. Its ``index_buckets`` wins over
+    :data:`INDEX_BUCKETS`: ``band_pfx`` partition pruning is only correct
+    when probe prefixes are computed with the same modulus the index was
+    written with — a changed constant would silently prune away true
+    vs-history matches (missed dup flags, no error). The band index also
+    records its ``band_geometry``: keys computed another way match
+    nothing. The first writer records the layout (underscore-prefixed
+    files are invisible to Spark's parquet listing); later batches — and
+    restarts of a build with a different constant — read it from there.
+    Local-FS JSON is the sandbox seam; at warehouse scale these are fields
+    of the table's manifest (sources/storage.py)."""
     import json
     import os
 
     meta = os.path.join(state_dir, sub, "_INDEX_META.json")
     if os.path.exists(meta):
         with open(meta) as f:
-            return int(json.load(f)["index_buckets"])
-    return INDEX_BUCKETS
+            return json.load(f)
+    return {}
 
 
-def _record_index_buckets(state_dir: str, n: int, sub: str = "bands") -> None:
+def _record_index_meta(state_dir: str, sub: str, record: dict) -> None:
     import json
     import os
 
@@ -309,19 +308,19 @@ def _record_index_buckets(state_dir: str, n: int, sub: str = "bands") -> None:
     if not os.path.exists(meta):
         os.makedirs(os.path.dirname(meta), exist_ok=True)
         # atomic: a crash mid-write must not leave a truncated JSON file —
-        # _effective_index_buckets would raise on EVERY later batch (the
-        # one crash window with no self-healing path)
+        # _index_meta would raise on EVERY later batch (the one crash
+        # window with no self-healing path)
         tmp = meta + ".tmp"
         with open(tmp, "w") as f:
-            json.dump({"index_buckets": n}, f)
+            json.dump(record, f)
         os.replace(tmp, meta)
 
 
 class BandIndexError(RuntimeError):
     """A streaming state dir whose maintained streaming index is missing or
-    not in the layout its only writer writes: (ingest_batch, band_pfx) for
-    process_dedup_batch's band index, (ingest_batch, url_pfx) for
-    process_url_batch's url index."""
+    not in the layout its only writer writes: (ingest_batch, band_pfx) and
+    this build's band geometry for process_dedup_batch's band index,
+    (ingest_batch, url_pfx) for process_url_batch's url index."""
 
 
 def read_band_index(
@@ -393,15 +392,24 @@ def process_dedup_batch(
     prune away true matches).
 
     A state dir this function did not write fails loudly: when codes
-    history exists but ``state_dir/bands`` does not, or the index lacks
-    the ``band_pfx`` column, :class:`BandIndexError` is raised before any
-    state is written — the stream never degrades to an unpruned or
-    partial probe.
+    history exists but ``state_dir/bands`` does not, the index lacks the
+    ``band_pfx`` column, or its recorded band geometry is missing or not
+    :func:`lsh.band_geometry` (read before any Spark job),
+    :class:`BandIndexError` is raised before any state is written.
     """
+    import os
+
     from iscc_specs_spark.operators import lsh
 
     spark = batch_df.sparkSession
-    index_buckets = _effective_index_buckets(state_dir)
+    meta = _index_meta(state_dir, "bands")
+    geometry = lsh.band_geometry()
+    if os.path.isdir(f"{state_dir}/bands") and meta.get("band_geometry") != geometry:
+        raise BandIndexError(
+            f"band index {state_dir}/bands records band geometry "
+            f"{meta.get('band_geometry')}, not {geometry}; rebuild the state dir"
+        )
+    index_buckets = meta.get("index_buckets", INDEX_BUCKETS)
     batch = batch_df.localCheckpoint(eager=True)
 
     # one representative table per batch: the within-batch pairs and the
@@ -478,7 +486,10 @@ def process_dedup_batch(
     # band index is additionally partitioned by band_pfx for probe pruning,
     # and repartitioned by it first so each band_pfx directory of a batch
     # gets one file (≤ index_buckets files per batch, not tasks × buckets)
-    _record_index_buckets(state_dir, index_buckets)
+    _record_index_meta(
+        state_dir, "bands",
+        {"index_buckets": index_buckets, "band_geometry": geometry},
+    )
     _write_batch(flags, batch_id, f"{state_dir}/dup_flags")
     _write_batch(batch, batch_id, f"{state_dir}/codes")
     _write_batch(
@@ -620,7 +631,7 @@ def process_url_batch(
     from iscc_specs_spark.operators.urls import canonical_url, url_dedup
 
     spark = batch_df.sparkSession
-    url_buckets = _effective_index_buckets(state_dir, sub="urls")
+    url_buckets = _index_meta(state_dir, "urls").get("index_buckets", INDEX_BUCKETS)
     batch = (
         batch_df.select("url", "warc_ts")
         .withColumn("canon_url", canonical_url("url"))
@@ -671,7 +682,7 @@ def process_url_batch(
         )
         flags = intra.unionByName(recrawl)
 
-    _record_index_buckets(state_dir, url_buckets, sub="urls")
+    _record_index_meta(state_dir, "urls", {"index_buckets": url_buckets})
     _write_batch(flags, batch_id, f"{state_dir}/url_flags")
     _write_batch(
         keeper.select("canon_url", "url", "last_ts", "url_pfx"), batch_id,

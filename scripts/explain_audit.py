@@ -76,7 +76,7 @@ def main():
                 ""]
 
     pages = pages_from_documents(spark, sf_dir)
-    codes = compute_codes(pages, ("text", "data"))
+    codes = compute_codes(pages)
     sections.append(audit(
         "codegen (pages → codes)", codes,
         "The only Python stage in the engine (Arrow-batched mapInPandas over "

@@ -3,6 +3,8 @@ per url (catches Arrow/encoding drift), on the synthetic pages table."""
 
 from __future__ import annotations
 
+import re
+
 import numpy as np
 
 from iscc_specs_spark import kernel
@@ -49,11 +51,14 @@ def test_generator_determinism_across_partitionings(spark):
     assert (counts[counts.index.str.startswith("c")] >= 2).all()
 
 
-def test_text_only_track_prunes_html(spark, tmp_path):
+def test_codes_scan_prunes_lang(spark, tmp_path):
+    """The codes stage's parquet scan reads exactly the four columns the
+    codes are computed from; ``lang`` is pruned at the scan."""
     path = str(tmp_path / "pages.parquet")
     generate_pages(spark, 50, partitions=2).write.parquet(path)
-    codes = compute_codes(spark.read.parquet(path), tracks=("text",))
-    assert "data_id" not in codes.columns
+    codes = compute_codes(spark.read.parquet(path))
     plan = codes._jdf.queryExecution().executedPlan().toString()
-    scan = [ln for ln in plan.splitlines() if "ReadSchema" in ln]
-    assert scan and "html" not in scan[0], scan  # binary column pruned at scan
+    scan = re.findall(r"ReadSchema: struct<([^>]*)>", plan)
+    assert len(scan) == 1, plan
+    cols = {f.split(":")[0] for f in scan[0].split(",")}
+    assert cols == {"url", "warc_ts", "text", "html"}, scan

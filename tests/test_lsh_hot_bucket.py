@@ -26,7 +26,7 @@ CAP = 4
 @pytest.fixture(scope="module")
 def codes(spark):
     pages = generate_pages(spark, N_DOCS, partitions=8)
-    return compute_codes(pages, ("text", "data")).localCheckpoint(eager=True)
+    return compute_codes(pages).localCheckpoint(eager=True)
 
 
 def _popcount(v: np.ndarray) -> np.ndarray:
@@ -56,8 +56,8 @@ class Reference:
         reps = np.flatnonzero(rep_url == self.urls)
 
         mh = np.stack(pdf["minhash"].to_numpy()).astype(np.int64)[reps]
-        r = lsh.DEFAULT_ROWS
-        keys = [mh[:, b * r:(b + 1) * r] for b in range(lsh.DEFAULT_BANDS)]
+        r = lsh.ROWS
+        keys = [mh[:, b * r:(b + 1) * r] for b in range(lsh.BANDS)]
         keys += [
             ((self.sim[reps] >> np.uint64(16 * k)) & np.uint64(0xFFFF))[:, None]
             for k in range(4)

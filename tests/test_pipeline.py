@@ -130,6 +130,47 @@ def test_resume_reproduces_clusters_and_skips_stages(spark, tmp_path):
     assert r3["store"].manifest("codes")["config_hash"] != codes_manifest_1["config_hash"]
 
 
+LSH_CONSTANTS = (
+    "BANDS", "ROWS", "SIMHASH_SUBKEYS", "CID_T_MAX_HAMMING", "SIMHASH_MAX_HAMMING",
+)
+
+
+def test_fingerprint_covers_lsh_constants(monkeypatch):
+    """The LSH geometry and dup predicate are module constants, not config
+    fields, so run_dedup's stage fingerprint must cover them itself:
+    editing any one of them must never resume stale dup_pairs. No Spark."""
+    from iscc_specs_spark.operators import lsh
+    from iscc_specs_spark.plans.dedup import _fingerprint
+
+    base = _fingerprint(DedupConfig())
+    assert _fingerprint(DedupConfig()) == base
+    assert _fingerprint(DedupConfig(bucket_cap=32)) != base
+    for name in LSH_CONSTANTS:
+        with monkeypatch.context() as m:
+            m.setattr(lsh, name, getattr(lsh, name) + 1)
+            assert _fingerprint(DedupConfig()) != base, name
+
+
+def test_curation_fingerprint_covers_lsh_constants(monkeypatch):
+    """run_curation resumes its corpus stage and every stage after it from
+    its own fingerprint, so that fingerprint must change with the LSH
+    constants too: clusters built with an old geometry must never feed a
+    resumed corpus. No Spark."""
+    from iscc_specs_spark.operators import lsh
+    from iscc_specs_spark.plans.curate import CurateConfig, _fingerprint
+
+    base = _fingerprint(CurateConfig(), False, False)
+    assert _fingerprint(CurateConfig(), False, False) == base
+    capped = CurateConfig(dedup=DedupConfig(bucket_cap=32))
+    assert _fingerprint(capped, False, False) != base
+    assert _fingerprint(CurateConfig(), True, False) != base
+    assert _fingerprint(CurateConfig(), False, True) != base
+    for name in LSH_CONSTANTS:
+        with monkeypatch.context() as m:
+            m.setattr(lsh, name, getattr(lsh, name) + 1)
+            assert _fingerprint(CurateConfig(), False, False) != base, name
+
+
 def test_lineage_and_metrics_recorded(spark, tmp_path):
     """Manifest lineage comes from the parquet footers: rows, files and
     bytes match what a Spark read of the stage sees, for every stage
@@ -198,9 +239,7 @@ def test_process_dedup_batch_job_budget(spark, tmp_path):
     from iscc_specs_spark.operators.codegen import compute_codes
     from iscc_specs_spark.streaming.ingest import process_dedup_batch
 
-    codes = compute_codes(
-        generate_pages(spark, 60, partitions=2), ("text", "data")
-    ).localCheckpoint(eager=True)
+    codes = compute_codes(generate_pages(spark, 60, partitions=2)).localCheckpoint(eager=True)
     b0, b1 = (
         codes.where(F.crc32("url") % 2 == k).localCheckpoint(eager=True)
         for k in (0, 1)

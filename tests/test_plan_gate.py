@@ -91,9 +91,7 @@ def test_dedup_pairs_is_jvm_side_after_codegen(spark):
     from iscc_specs_spark.operators.codegen import compute_codes
     from iscc_specs_spark.sources.pages import generate_pages
 
-    codes = compute_codes(
-        generate_pages(spark, 200, partitions=4), ("text", "data")
-    ).localCheckpoint(eager=True)
+    codes = compute_codes(generate_pages(spark, 200, partitions=4)).localCheckpoint(eager=True)
     txt = _plan(lsh.dup_pairs(codes))
     assert not re.search(
         r"ArrowEvalPython|BatchEvalPython|MapInPandas|FlatMapGroupsInPandas", txt

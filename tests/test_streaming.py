@@ -34,7 +34,7 @@ def test_streaming_codes_match_batch(spark, tmp_path):
     q.awaitTermination(120)
 
     got = spark.read.parquet(out).drop("ingest_batch")
-    want = compute_codes(pages, ("text", "data"))
+    want = compute_codes(pages)
     g = {r["url"]: r for r in got.collect()}
     w = {r["url"]: r for r in want.collect()}
     assert set(g) == set(w) and len(g) == 120
@@ -101,7 +101,7 @@ def test_pending_batch_replay_is_idempotent(spark, tmp_path):
 
     state = str(tmp_path / "state_replay")
     pages = generate_pages(spark, 40, partitions=2)
-    codes = compute_codes(pages, ("text", "data")).localCheckpoint(eager=True)
+    codes = compute_codes(pages).localCheckpoint(eager=True)
     b0 = codes.where("url like '%/p/0'")
     b1 = codes.where("url not like '%/p/0'")
 
@@ -139,7 +139,7 @@ def test_history_bands_probed_from_maintained_index(spark, tmp_path):
 
     state = str(tmp_path / "state_bandidx")
     pages = generate_pages(spark, 40, partitions=2)
-    codes = compute_codes(pages, ("text", "data")).localCheckpoint(eager=True)
+    codes = compute_codes(pages).localCheckpoint(eager=True)
     # block 0: positions 0..1 are a planted duplicate pair (k=2)
     b0 = codes.where("url like '%/p/0'")
     b1 = codes.where("url like '%/p/1'")
@@ -186,7 +186,7 @@ def test_band_index_writes_one_file_per_partition(spark, tmp_path):
 
     state = str(tmp_path / "state_files")
     pages = generate_pages(spark, 40, partitions=2)
-    codes = compute_codes(pages, ("text", "data")).repartition(4)
+    codes = compute_codes(pages).repartition(4)
     codes = codes.localCheckpoint(eager=True)
     process_dedup_batch(codes.where("url like '%/p/0'"), 0, state)
     process_dedup_batch(codes.where("url not like '%/p/0'"), 1, state)
@@ -218,7 +218,7 @@ def test_read_dup_flags_empty_state(spark, tmp_path):
     # batch of singletons only → zero flags written
     state = str(tmp_path / "state_noflags")
     pages = generate_pages(spark, 40, partitions=1)
-    codes = compute_codes(pages, ("text", "data")).localCheckpoint(eager=True)
+    codes = compute_codes(pages).localCheckpoint(eager=True)
     singles = codes.where(
         "url like '%/p/15' or url like '%/p/16' or url like '%/p/17'"
     )
@@ -327,7 +327,7 @@ def test_curate_state_matches_batch_clusters(spark, tmp_path):
 
     state = str(tmp_path / "state_curate")
     pages = generate_pages(spark, 60, partitions=2)
-    codes = compute_codes(pages, ("text", "data")).localCheckpoint(eager=True)
+    codes = compute_codes(pages).localCheckpoint(eager=True)
     parity = "cast(regexp_extract(url, '(\\\\d+)$', 1) as long) % 2"
     process_dedup_batch(codes.where(f"{parity} = 0"), 0, state)
     process_dedup_batch(codes.where(f"{parity} = 1"), 1, state)
@@ -540,19 +540,20 @@ def test_index_bucket_modulus_survives_restart(spark, tmp_path, monkeypatch):
 
     from pyspark.sql import functions as F
 
-    from iscc_specs_spark.operators.lsh import band_pfx
+    from iscc_specs_spark.operators.lsh import band_geometry, band_pfx
     from iscc_specs_spark.streaming import ingest
 
     state = str(tmp_path / "state_modulus")
     pages = generate_pages(spark, 40, partitions=2)
-    codes = compute_codes(pages, ("text", "data")).localCheckpoint(eager=True)
+    codes = compute_codes(pages).localCheckpoint(eager=True)
     b0 = codes.where("url like '%/p/0'")
     b1 = codes.where("url not like '%/p/0'")
 
     assert ingest.INDEX_BUCKETS == 64
     ingest.process_dedup_batch(b0, 0, state)
+    meta = {"index_buckets": 64, "band_geometry": band_geometry()}
     with open(state + "/bands/_INDEX_META.json") as f:
-        assert json.load(f) == {"index_buckets": 64}
+        assert json.load(f) == meta
 
     # restart under a DIFFERENT constant: the stored layout must win
     monkeypatch.setattr(ingest, "INDEX_BUCKETS", 8)
@@ -567,7 +568,7 @@ def test_index_bucket_modulus_survives_restart(spark, tmp_path, monkeypatch):
     assert rows.where(F.col("band_pfx") != band_pfx(64)).count() == 0
     assert rows.where("band_pfx >= 8").count() > 0
     with open(state + "/bands/_INDEX_META.json") as f:
-        assert json.load(f) == {"index_buckets": 64}  # unchanged
+        assert json.load(f) == meta  # unchanged
 
 
 def test_missing_or_unpartitioned_band_index_fails_loudly(spark, tmp_path):
@@ -588,7 +589,7 @@ def test_missing_or_unpartitioned_band_index_fails_loudly(spark, tmp_path):
 
     state = str(tmp_path / "state_bad_index")
     pages = generate_pages(spark, 60, partitions=2)
-    codes = compute_codes(pages, ("text", "data")).localCheckpoint(eager=True)
+    codes = compute_codes(pages).localCheckpoint(eager=True)
     b0 = codes.where("url like '%/p/0'")
     b1 = codes.where("url like '%/p/1'")
     b2 = codes.where("url not like '%/p/0' and url not like '%/p/1'")
@@ -613,16 +614,64 @@ def test_missing_or_unpartitioned_band_index_fails_loudly(spark, tmp_path):
     assert snap("dup_flags", "codes") == before
     assert not os.path.exists(state + "/bands")
 
-    # (b) an index partitioned by ingest_batch only (no band_pfx)
+    # (b) an index partitioned by ingest_batch only (no band_pfx), under
+    # a layout record of this build's geometry
     (
         spark.read.parquet(saved).drop("band_pfx")
         .write.partitionBy("ingest_batch")
         .parquet(state + "/bands")
     )
+    shutil.copy(saved + "/_INDEX_META.json", state + "/bands")
     before = snap("dup_flags", "codes", "bands")
-    with pytest.raises(BandIndexError, match=re.escape(state)):
+    no_pfx = re.escape(state + "/bands has no band_pfx")
+    with pytest.raises(BandIndexError, match=no_pfx):
         process_dedup_batch(b2, 2, state)
     assert snap("dup_flags", "codes", "bands") == before
+
+
+def test_band_index_of_another_geometry_fails_loudly(spark, tmp_path):
+    """A band index built with another band-key geometry (or recording
+    none, or with no record file) holds keys no new batch can match: vs-history flags would drop
+    to zero with no error. process_dedup_batch must raise BandIndexError
+    from the index's JSON record alone, before writing any state."""
+    import json
+
+    import pytest
+
+    from iscc_specs_spark.operators.lsh import band_geometry
+    from iscc_specs_spark.streaming.ingest import (
+        BandIndexError,
+        process_dedup_batch,
+    )
+
+    state = str(tmp_path / "state_geometry")
+    pages = generate_pages(spark, 40, partitions=2)
+    codes = compute_codes(pages).localCheckpoint(eager=True)
+    b0 = codes.where("url like '%/p/0'")
+    b1 = codes.where("url not like '%/p/0'")
+    process_dedup_batch(b0, 0, state)
+
+    meta_path = state + "/bands/_INDEX_META.json"
+    with open(meta_path) as f:
+        meta = json.load(f)
+    assert meta["band_geometry"] == band_geometry()
+    other = dict(meta["band_geometry"], rows=meta["band_geometry"]["rows"] + 1)
+    sc = spark.sparkContext
+    # another geometry, a record without one, and no record at all
+    stale = ({**meta, "band_geometry": other}, {"index_buckets": 64}, None)
+    for record in stale:
+        if record is None:
+            os.remove(meta_path)
+        else:
+            with open(meta_path, "w") as f:
+                json.dump(record, f)
+        sc.setJobGroup("stale_geometry", "batch 1 over a stale index")
+        with pytest.raises(BandIndexError, match="band geometry"):
+            process_dedup_batch(b1, 1, state)
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        assert not sc.statusTracker().getJobIdsForGroup("stale_geometry")
+        for sub in ("dup_flags", "codes", "bands"):
+            assert not os.path.exists(f"{state}/{sub}/ingest_batch=1"), sub
 
 
 def test_curate_state_one_row_per_recrawled_url(spark, tmp_path):
@@ -637,7 +686,7 @@ def test_curate_state_one_row_per_recrawled_url(spark, tmp_path):
 
     state = str(tmp_path / "state_recrawl")
     pages = generate_pages(spark, 20, partitions=2)
-    codes = compute_codes(pages, ("text", "data")).localCheckpoint(eager=True)
+    codes = compute_codes(pages).localCheckpoint(eager=True)
     process_dedup_batch(codes, 0, state)
     process_dedup_batch(codes, 1, state)  # every url re-crawled
 

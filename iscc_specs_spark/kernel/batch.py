@@ -159,28 +159,21 @@ def content_text_batch(texts: Sequence[str | None]):
     }
 
 
-def meta_batch(titles: Sequence[str | None], extras: Sequence[str] | None = None):
-    """Meta-ID codes for a batch. Returns (mid list[str], mid_body int64 (R,),
-    title_trimmed list[str])."""
+def meta_batch(titles: Sequence[str | None]):
+    """Meta-ID codes for a batch of titles (no extra). Returns (mid
+    list[str], mid_body int64 (R,), title_trimmed list[str])."""
     n_rows = len(titles)
     mids: list[str | None] = [None] * n_rows
     mid_body = np.zeros(n_rows, dtype=np.int64)
-    trimmed: list[str] = [""] * n_rows
+    trimmed = [text_trim(text_normalize(t or "", keep_ws=True)) for t in titles]
 
     width = WINDOW_SIZE_MID
-    concats: list[str] = []
-    for i in range(n_rows):
-        t = text_trim(text_normalize(titles[i] or "", keep_ws=True))
-        e = text_trim(text_normalize(extras[i] if extras else "", keep_ws=True))
-        trimmed[i] = t
-        concats.append(" ".join((t, e)).strip())
-
-    fast = [i for i, c in enumerate(concats) if c.isascii() and len(c) >= width]
+    fast = [i for i, c in enumerate(trimmed) if c.isascii() and len(c) >= width]
     fast_set = set(fast)
     slow = [i for i in range(n_rows) if i not in fast_set]
 
     if fast:
-        mat, _, lens = _shingle_matrix([concats[i] for i in fast], width, 1)
+        mat, _, lens = _shingle_matrix([trimmed[i] for i in fast], width, 1)
         old = np.seterr(over="ignore")
         try:
             digs = xxh64_fixed(mat)
@@ -193,7 +186,7 @@ def meta_batch(titles: Sequence[str | None], extras: Sequence[str] | None = None
             mids[i] = encode(HEAD_MID + int(sims[g]).to_bytes(8, "big"))
 
     for i in slow:
-        bufs = [g.encode("utf-8") for g in sliding_window(concats[i], width)]
+        bufs = [g.encode("utf-8") for g in sliding_window(trimmed[i], width)]
         digs = _hash_buffers(bufs, xxh64_fixed, xxh64)
         sim = _simhash_u64(digs)
         mid_body[i] = np.uint64(sim).astype(np.int64)

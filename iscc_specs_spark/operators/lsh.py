@@ -186,9 +186,9 @@ BAND_PFX_BUCKETS = 64
 def band_pfx(buckets: int = BAND_PFX_BUCKETS):
     """Partition-prefix expression over a (band_id, band_hash) row — the
     shared at-rest bucketing key for band tables (batch stage table in
-    plans/dedup.py, streaming maintained index in streaming/ingest.py):
-    a reader probing a known key set prunes to pmod-matching partition
-    directories instead of scanning the table."""
+    plans/dedup.py, streaming maintained index in streaming/ingest.py).
+    The streaming vs-history probe reads its index pruned to the new
+    batch's prefixes instead of scanning it."""
     return F.pmod(
         F.xxhash64(F.col("band_id"), F.col("band_hash")), F.lit(buckets)
     ).cast("int")

@@ -55,23 +55,6 @@ def lsh_metrics(band_table: DataFrame, bucket_cap: int) -> dict:
     return {k: int(row[k] or 0) for k in row.asDict()}
 
 
-def probe_band_stage(
-    spark: SparkSession, store: StageStore, pfx: list[int] | None = None
-) -> DataFrame:
-    """Read a run's at-rest band index — keys-only (url, band_id,
-    band_hash, band_pfx) rows, the same shape as the streaming index
-    (streaming/ingest.read_band_index) — statically pruned to the given
-    ``band_pfx`` buckets. An incremental re-check of a
-    key set against a finished snapshot computes the keys' prefixes with
-    :func:`lsh.band_pfx` and passes them here; Spark pushes the IN-list
-    into PartitionFilters, so probe I/O is bounded by prefix coverage, not
-    snapshot size (plan-gated in tests/test_pipeline.py)."""
-    df = store.read(spark, "bands")
-    if pfx is not None:
-        df = df.where(F.col("band_pfx").isin([int(p) for p in pfx]))
-    return df
-
-
 def canonical_pick(codes: DataFrame, clusters: DataFrame) -> DataFrame:
     """(url, cluster_id, is_canonical): keep the oldest (warc_ts, url) per
     cluster.
@@ -124,16 +107,11 @@ def run_dedup(
         # aggregations). No written stage covers it: the bands stage keeps
         # only band keys, not the payload verification and jaccard read
         slim = lsh.rep_codes(codes).localCheckpoint(eager=True)
-        # the band index is a WRITTEN stage of keys-only rows (url,
-        # band_id, band_hash), at rest partitioned by band_pfx (pmod of the
-        # band key): the manifest records the bucketed layout, and a
-        # key-set probe of the stage (e.g. an incremental re-check against
-        # this snapshot) reads only matching partition directories — the
-        # same shape and contract as the streaming band index
-        # (streaming/ingest.py). The metrics pass and the pair generator
-        # consume the payload-carrying band rows in-plan over the
-        # checkpointed slim table, which a resume rebuilds anyway: the
-        # stage is never read back
+        # the bands stage: keys-only rows (url, band_id, band_hash) at rest,
+        # partitioned by band_pfx like the streaming band index. Nothing
+        # reads it back: the metrics pass and the pair generator consume
+        # the payload-carrying band rows in-plan over the checkpointed slim
+        # table, which a resume rebuilds anyway
         if not store.has("bands"):
             store.save(
                 lsh.band_keys(slim).withColumn("band_pfx", lsh.band_pfx()),

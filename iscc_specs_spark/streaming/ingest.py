@@ -2,13 +2,14 @@
 
 The reference has zero streaming semantics (SURVEY.md §1.2) and the
 north-rule resumability is batch snapshot/restart — but a production crawl
-delivers pages continuously, so the engine also exposes the codegen stage as
-a streaming sink:
+delivers pages continuously, so the engine also runs its Arrow-batched
+stages on streams. mapInPandas is streaming-capable, so the stage is the
+batch one, and one append stream (:func:`start_table_stream`) writes any
+of them:
 
-    pages stream (file source over the same pages schema)
-      → compute_codes (the identical Arrow-vectorized mapInPandas stage —
-        mapInPandas is streaming-capable, no separate code path)
-      → foreachBatch append into a codes table partitioned by ingest batch
+    pages or assets stream (file source over the same schema)
+      → compute_codes / image_codes / av_codes (the caller's stage)
+      → foreachBatch append into a table partitioned by ingest batch
 
 Exactly-once: Spark's streaming checkpoint (offset log + commit log) makes
 each micro-batch replay idempotent; the sink writes each batch into its own
@@ -18,11 +19,15 @@ so a replayed batch overwrites itself instead of duplicating.
 Dedup runs incrementally on the same state: ``process_dedup_batch`` flags
 each micro-batch's duplicates, within the batch and against a maintained
 band index of every earlier batch, with the batch engine's own candidate
-router and pair verifier (operators/lsh.py). Near-dup clustering is a
-global fixpoint, not a per-window computation, so windowed streaming state
-would be the wrong tool (SURVEY.md §2.7): ``curate_state`` closes the
-accumulated flags into clusters and canonical picks on demand, with the
-batch operators.
+router and pair verifier (operators/lsh.py); ``process_url_batch`` flags
+re-crawls against a maintained url index. The two indexes share one
+layout — (ingest_batch, pfx) directories under an ``_INDEX_META.json``
+record — and one reader of it: one layout check (:func:`_index_buckets`),
+one prefix collect and one pruned reader (:func:`_read_index`).
+Near-dup clustering is a global fixpoint, not a per-window computation, so
+windowed streaming state would be the wrong tool (SURVEY.md §2.7):
+``curate_state`` closes the accumulated flags into clusters and canonical
+picks on demand, with the batch operators.
 """
 
 from __future__ import annotations
@@ -43,21 +48,16 @@ PAGES_SCHEMA = (
 # schema inference cannot read.
 FLAGS_SCHEMA = "url string, dup_of string, src string, ingest_batch int"
 
-# The maintained band index at ``state_dir/bands`` is partitioned by
-# (ingest_batch, band_pfx) where band_pfx = pmod(xxhash64(band_id,
-# band_hash), INDEX_BUCKETS): ingest_batch gives replay-safe `< batch_id`
-# pruning, band_pfx gives the vs-history probe *static partition pruning*
-# down to the new batch's own key prefixes — per-batch probe I/O is bounded
-# by |distinct new prefixes| / INDEX_BUCKETS of the index instead of a full
-# scan. INDEX_BUCKETS is the modulus of both streaming indexes (band_pfx
-# here, url_pfx for the url index); it is baked into the stored directory
-# layout, so each index records it in ``_INDEX_META.json`` at first write
-# and the recorded value wins for the state dir's lifetime.
-# process_dedup_batch is the index's only writer and always writes this
-# layout; a state dir whose codes history has no index, or whose index
-# lacks band_pfx or records another band geometry, raises BandIndexError.
-# The prefix expression and bucket count are shared with the batch
-# pipeline's at-rest band stage table (operators/lsh.py).
+# INDEX_BUCKETS is the prefix modulus of both maintained streaming indexes
+# — band_pfx = pmod(xxhash64(band_id, band_hash), INDEX_BUCKETS) for the
+# band index at ``state_dir/bands``, url_pfx for the url index at
+# ``state_dir/urls`` — partitioned (ingest_batch, pfx): ingest_batch gives
+# replay-safe ``< batch_id`` pruning, pfx gives the vs-history probe static
+# partition pruning down to the new batch's own prefixes. The modulus is
+# baked into the directory layout, so each index records it in
+# ``_INDEX_META.json`` at first write (:func:`_index_buckets`). The prefix
+# expression and bucket count are shared with the batch pipeline's at-rest
+# band stage table (operators/lsh.py).
 from iscc_specs_spark.operators.lsh import (  # noqa: E402
     BAND_PFX_BUCKETS as INDEX_BUCKETS,
     band_pfx,
@@ -116,9 +116,9 @@ def read_pages_stream(
 def _start_stream(
     df: DataFrame, sink, checkpoint_dir: str, trigger_once: bool
 ) -> StreamingQuery:
-    """Shared writeStream scaffolding for every track — append mode,
+    """Shared writeStream scaffolding for every stream — append mode,
     checkpointed ``foreachBatch``, optional run-to-completion trigger —
-    in ONE place so exactly-once wiring cannot diverge between tracks."""
+    in ONE place so exactly-once wiring cannot diverge between streams."""
     writer = (
         df.writeStream.outputMode("append")
         .option("checkpointLocation", checkpoint_dir)
@@ -129,29 +129,23 @@ def _start_stream(
     return writer.start()
 
 
-def _partition_overwrite_sink(out_dir: str):
-    """``foreachBatch`` body shared by the three codes tracks: exactly-once
-    via per-batch ``ingest_batch`` dynamic partition overwrite (a replayed
-    batch overwrites its own partition)."""
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        _write_batch(batch_df, batch_id, out_dir)
-
-    return sink
-
-
-def start_codes_stream(
-    pages_stream: DataFrame,
+def start_table_stream(
+    stream: DataFrame,
     out_dir: str,
     checkpoint_dir: str,
     trigger_once: bool = True,
 ) -> StreamingQuery:
-    """pages stream → codes table, exactly-once via checkpoint + per-batch
-    partition overwrite."""
-    codes = compute_codes(pages_stream)
-    return _start_stream(
-        codes, _partition_overwrite_sink(out_dir), checkpoint_dir, trigger_once
-    )
+    """A stage's stream → the table at ``out_dir``, exactly-once via
+    checkpoint + per-batch ``ingest_batch`` partition overwrite (a
+    replayed batch overwrites its own partition). Pass the stage applied
+    to a source stream: ``compute_codes(read_pages_stream(...))``,
+    ``image_codes(read_assets_stream(...))`` or
+    ``av_codes(read_assets_stream(...))``."""
+
+    def sink(batch_df: DataFrame, batch_id: int) -> None:
+        _write_batch(batch_df, batch_id, out_dir)
+
+    return _start_stream(stream, sink, checkpoint_dir, trigger_once)
 
 
 def read_assets_stream(
@@ -165,51 +159,6 @@ def read_assets_stream(
         spark.readStream.schema(ASSET_SCHEMA)
         .option("maxFilesPerTrigger", max_files_per_trigger)
         .parquet(source_dir)
-    )
-
-
-def start_image_codes_stream(
-    assets_stream: DataFrame,
-    out_dir: str,
-    checkpoint_dir: str,
-    trigger_once: bool = True,
-) -> StreamingQuery:
-    """Multimodal assets arriving continuously → Content-ID-Image table.
-
-    The identical Arrow-batched ``image_codes`` stage as batch (mapInPandas
-    is streaming-capable — no separate code path): PNG/GIF payloads run the
-    real decode → normalize → DCT-hash kernel. Exactly-once the same way as
-    the text stream: checkpoint + per-batch ``ingest_batch`` partition
-    overwrite, so a replayed batch overwrites itself."""
-    from iscc_specs_spark.operators.multimodal import image_codes
-
-    return _start_stream(
-        image_codes(assets_stream),
-        _partition_overwrite_sink(out_dir),
-        checkpoint_dir,
-        trigger_once,
-    )
-
-
-def start_av_codes_stream(
-    assets_stream: DataFrame,
-    out_dir: str,
-    checkpoint_dir: str,
-    trigger_once: bool = True,
-) -> StreamingQuery:
-    """Audio/video assets arriving continuously → engine-defined CID-A/CID-V
-    fingerprint table — the A/V sibling of :func:`start_image_codes_stream`
-    (operators/multimodal.py:av_codes is the identical Arrow-batched stage
-    as batch: WAV-PCM window sampling + animated-GIF frame sampling).
-    Exactly-once via checkpoint + per-batch ``ingest_batch`` partition
-    overwrite, so a replayed batch overwrites itself."""
-    from iscc_specs_spark.operators.multimodal import av_codes
-
-    return _start_stream(
-        av_codes(assets_stream),
-        _partition_overwrite_sink(out_dir),
-        checkpoint_dir,
-        trigger_once,
     )
 
 
@@ -277,27 +226,45 @@ def _read_history(spark: SparkSession, path: str) -> DataFrame | None:
         raise
 
 
-def _index_meta(state_dir: str, sub: str) -> dict:
-    """The index's ON-DISK layout record ``<sub>/_INDEX_META.json``, or
-    ``{}`` for an index not written yet. Its ``index_buckets`` wins over
-    :data:`INDEX_BUCKETS`: ``band_pfx`` partition pruning is only correct
-    when probe prefixes are computed with the same modulus the index was
-    written with — a changed constant would silently prune away true
-    vs-history matches (missed dup flags, no error). The band index also
-    records its ``band_geometry``: keys computed another way match
-    nothing. The first writer records the layout (underscore-prefixed
-    files are invisible to Spark's parquet listing); later batches — and
-    restarts of a build with a different constant — read it from there.
+def _index_buckets(
+    state_dir: str, sub: str, geometry: dict | None = None
+) -> int:
+    """The bucket modulus of the index at ``state_dir/sub``, from its
+    ON-DISK layout record ``_INDEX_META.json`` and before any Spark job:
+    the recorded ``index_buckets``, or :data:`INDEX_BUCKETS` for an index
+    not written yet. The record wins over the constant: prefix pruning is
+    only correct when probe prefixes are computed with the same modulus the
+    index was written with — a changed constant would silently prune away
+    true vs-history matches (missed flags, no error). The band index also
+    records its band ``geometry``: keys computed another way match
+    nothing. An existing index whose record is missing, lacks
+    ``index_buckets`` or records another geometry raises
+    :class:`BandIndexError`. The first writer records the layout
+    (underscore-prefixed files are invisible to Spark's parquet listing).
     Local-FS JSON is the sandbox seam; at warehouse scale these are fields
     of the table's manifest (sources/storage.py)."""
     import json
     import os
 
-    meta = os.path.join(state_dir, sub, "_INDEX_META.json")
-    if os.path.exists(meta):
-        with open(meta) as f:
-            return json.load(f)
-    return {}
+    path = os.path.join(state_dir, sub)
+    if not os.path.isdir(path):
+        return INDEX_BUCKETS
+    meta_path = os.path.join(path, "_INDEX_META.json")
+    meta = {}
+    if os.path.exists(meta_path):
+        with open(meta_path) as f:
+            meta = json.load(f)
+    if "index_buckets" not in meta or (
+        geometry is not None and meta.get("band_geometry") != geometry
+    ):
+        want = "index_buckets" + (
+            f" and band geometry {geometry}" if geometry is not None else ""
+        )
+        raise BandIndexError(
+            f"index {path} records {meta or 'no layout'}, not {want}; "
+            "rebuild the state dir"
+        )
+    return meta["index_buckets"]
 
 
 def _record_index_meta(state_dir: str, sub: str, record: dict) -> None:
@@ -308,7 +275,7 @@ def _record_index_meta(state_dir: str, sub: str, record: dict) -> None:
     if not os.path.exists(meta):
         os.makedirs(os.path.dirname(meta), exist_ok=True)
         # atomic: a crash mid-write must not leave a truncated JSON file —
-        # _index_meta would raise on EVERY later batch (the one crash
+        # _index_buckets would raise on EVERY later batch (the one crash
         # window with no self-healing path)
         tmp = meta + ".tmp"
         with open(tmp, "w") as f:
@@ -323,33 +290,54 @@ class BandIndexError(RuntimeError):
     (ingest_batch, url_pfx) for process_url_batch's url index."""
 
 
+def _collect_pfx(df: DataFrame, pfx) -> list[int]:
+    """A batch's distinct index prefixes: ≤ the modulus ints, collected on
+    the driver (a bounded list, same class as the lineage/metric collects)
+    and pushed down as the probe's literal partition filter."""
+    return sorted(r[0] for r in df.select(pfx).distinct().collect())
+
+
+def _read_index(
+    spark: SparkSession,
+    state_dir: str,
+    sub: str,
+    pfx: str,
+    batch_id: int,
+    new_pfx: list[int] | None,
+) -> DataFrame | None:
+    """Pruned view of the maintained index at ``state_dir/sub`` for batch
+    ``batch_id``'s vs-history probe: replay-safe ``ingest_batch <
+    batch_id`` plus — when the probe supplies its prefix set — a literal
+    ``pfx IN (...)`` partition filter, so the scan lists only matching
+    partition directories (static pruning: both predicates are on
+    partition columns and appear as PartitionFilters in the plan). Returns
+    None iff the index does not exist yet; raises :class:`BandIndexError`
+    if it lacks the ``pfx`` partition column."""
+    idx = _read_history(spark, f"{state_dir}/{sub}")
+    if idx is None:
+        return None
+    if pfx not in idx.columns:
+        raise BandIndexError(
+            f"index {state_dir}/{sub} has no {pfx} partition column: it was "
+            f"not written in the (ingest_batch, {pfx}) layout; rebuild the "
+            "state dir"
+        )
+    idx = idx.where(F.col("ingest_batch") < F.lit(batch_id))
+    if new_pfx is not None:
+        idx = idx.where(F.col(pfx).isin(sorted(new_pfx)))
+    return idx
+
+
 def read_band_index(
     spark: SparkSession,
     state_dir: str,
     batch_id: int,
     new_pfx: list[int] | None = None,
 ) -> DataFrame | None:
-    """Pruned view of the maintained band index for batch ``batch_id``'s
-    vs-history probe: replay-safe ``ingest_batch < batch_id`` plus — when
-    the probe supplies its prefix set — a literal ``band_pfx IN (...)``
-    partition filter, so the scan lists only matching partition
-    directories (static pruning: both predicates are on partition columns
-    and appear as PartitionFilters in the plan). Returns None iff the index
-    does not exist yet; raises :class:`BandIndexError` if it lacks the
-    ``band_pfx`` partition column."""
-    hb = _read_history(spark, f"{state_dir}/bands")
-    if hb is None:
-        return None
-    if "band_pfx" not in hb.columns:
-        raise BandIndexError(
-            f"band index {state_dir}/bands has no band_pfx partition column: "
-            "it was not written by process_dedup_batch's (ingest_batch, "
-            "band_pfx) layout; rebuild the state dir"
-        )
-    hb = hb.where(F.col("ingest_batch") < F.lit(batch_id))
-    if new_pfx is not None:
-        hb = hb.where(F.col("band_pfx").isin(sorted(new_pfx)))
-    return hb.select("url", "band_id", "band_hash")
+    """The band index's pruned probe view (:func:`_read_index` over
+    ``bands`` by ``band_pfx``): (url, band_id, band_hash) rows, or None."""
+    hb = _read_index(spark, state_dir, "bands", "band_pfx", batch_id, new_pfx)
+    return None if hb is None else hb.select("url", "band_id", "band_hash")
 
 
 def process_dedup_batch(
@@ -378,38 +366,24 @@ def process_dedup_batch(
     cost would grow linearly with corpus age; with it, per-batch work is
     O(|batch|) banding + one pruned probe of the index.
 
-    Index layout: partitioned by (ingest_batch, band_pfx) where band_pfx =
-    pmod(xxhash64(band_id, band_hash), INDEX_BUCKETS). Before the probe,
-    the new batch's ≤ INDEX_BUCKETS distinct prefixes are collected (a
-    bounded driver list, same class as the lineage/metric collects) and
-    pushed down as a literal IN partition filter — the probe's scan lists
-    only matching partition directories (static pruning, visible in the
-    plan's PartitionFilters and in ``inputFiles()``), so probe I/O per
-    batch is bounded by the new batch's key-prefix coverage of the index
-    rather than the index's full size. The bucket modulus is recorded in
-    the index's ``_INDEX_META.json`` on first write and ALWAYS wins over
-    :data:`INDEX_BUCKETS` afterwards (a mismatched modulus would silently
-    prune away true matches).
+    Index layout: partitioned by (ingest_batch, band_pfx). Before the
+    probe, the new batch's distinct prefixes are collected and pushed down
+    as a literal IN partition filter (:func:`_read_index`), so probe I/O
+    per batch is bounded by the new batch's key-prefix coverage of the
+    index rather than the index's full size. The modulus recorded in the
+    index's ``_INDEX_META.json`` ALWAYS wins over :data:`INDEX_BUCKETS`.
 
     A state dir this function did not write fails loudly: when codes
     history exists but ``state_dir/bands`` does not, the index lacks the
-    ``band_pfx`` column, or its recorded band geometry is missing or not
+    ``band_pfx`` column, or its record is missing or does not hold
     :func:`lsh.band_geometry` (read before any Spark job),
     :class:`BandIndexError` is raised before any state is written.
     """
-    import os
-
     from iscc_specs_spark.operators import lsh
 
     spark = batch_df.sparkSession
-    meta = _index_meta(state_dir, "bands")
     geometry = lsh.band_geometry()
-    if os.path.isdir(f"{state_dir}/bands") and meta.get("band_geometry") != geometry:
-        raise BandIndexError(
-            f"band index {state_dir}/bands records band geometry "
-            f"{meta.get('band_geometry')}, not {geometry}; rebuild the state dir"
-        )
-    index_buckets = meta.get("index_buckets", INDEX_BUCKETS)
+    index_buckets = _index_buckets(state_dir, "bands", geometry)
     batch = batch_df.localCheckpoint(eager=True)
 
     # one representative table per batch: the within-batch pairs and the
@@ -437,15 +411,9 @@ def process_dedup_batch(
         # nb feeds the prefix collect, the key semi-join and the broadcast
         # probe — lazy, each reference would re-run the banding
         nb = lsh.band_keys(new_slim).localCheckpoint(eager=True)
-        # the new batch's key prefixes: ≤ index_buckets ints, collected on
-        # the driver and pushed down as a literal partition filter (static
-        # pruning — the probe never lists non-matching band_pfx dirs)
-        new_pfx = sorted(
-            r[0]
-            for r in nb.select(band_pfx(index_buckets).alias("p"))
-            .distinct()
-            .collect()
-        )
+        # the new batch's key prefixes (static pruning — the probe never
+        # lists non-matching band_pfx dirs)
+        new_pfx = _collect_pfx(nb, band_pfx(index_buckets))
         hb = read_band_index(spark, state_dir, batch_id, new_pfx)
         if hb is None:
             raise BandIndexError(
@@ -570,25 +538,12 @@ def read_url_index(
     batch_id: int,
     new_pfx: list[int] | None = None,
 ) -> DataFrame | None:
-    """Pruned view of the maintained url index for batch ``batch_id``'s
-    re-crawl probe: replay-safe ``ingest_batch < batch_id`` plus a literal
-    ``url_pfx IN (...)`` partition filter when the probe supplies its
-    prefix set (both predicates on partition columns — static pruning,
-    same contract as :func:`read_band_index`). Returns None iff the index
-    does not exist yet (first batch); raises :class:`BandIndexError` if it
-    lacks the ``url_pfx`` partition column."""
-    hist = _read_history(spark, f"{state_dir}/urls")
+    """The url index's pruned probe view (:func:`_read_index` over ``urls``
+    by ``url_pfx``): (canon_url, url, last_ts, ingest_batch) rows, or
+    None."""
+    hist = _read_index(spark, state_dir, "urls", "url_pfx", batch_id, new_pfx)
     if hist is None:
         return None
-    if "url_pfx" not in hist.columns:
-        raise BandIndexError(
-            f"url index {state_dir}/urls has no url_pfx partition column: "
-            "it was not written by process_url_batch's (ingest_batch, "
-            "url_pfx) layout; rebuild the state dir"
-        )
-    hist = hist.where(F.col("ingest_batch") < F.lit(batch_id))
-    if new_pfx is not None:
-        hist = hist.where(F.col("url_pfx").isin(sorted(new_pfx)))
     return hist.select("canon_url", "url", "last_ts", "ingest_batch")
 
 
@@ -625,13 +580,14 @@ def process_url_batch(
     The bucket modulus is recorded in ``urls/_INDEX_META.json`` on first
     write and always wins over :data:`INDEX_BUCKETS` afterwards (same
     invariant as the band index: a mismatched modulus would silently prune
-    true re-crawl matches). An index without the ``url_pfx`` column raises
+    true re-crawl matches). An index without that record (read before any
+    Spark job) or without the ``url_pfx`` column raises
     :class:`BandIndexError` before any state is written.
     """
     from iscc_specs_spark.operators.urls import canonical_url, url_dedup
 
     spark = batch_df.sparkSession
-    url_buckets = _index_meta(state_dir, "urls").get("index_buckets", INDEX_BUCKETS)
+    url_buckets = _index_buckets(state_dir, "urls")
     batch = (
         batch_df.select("url", "warc_ts")
         .withColumn("canon_url", canonical_url("url"))
@@ -654,9 +610,7 @@ def process_url_batch(
     )
 
     keeper = kept.withColumn("url_pfx", _url_pfx(url_buckets))
-    new_pfx = sorted(
-        r[0] for r in keeper.select("url_pfx").distinct().collect()
-    )
+    new_pfx = _collect_pfx(keeper, "url_pfx")
     hist = read_url_index(spark, state_dir, batch_id, new_pfx)
     flags = intra
     if hist is not None and hist.head(1):

@@ -14,11 +14,13 @@ Usage: python scripts/explain_audit.py [sf_dir]
 from __future__ import annotations
 
 import io
+import os
 import re
 import sys
 from contextlib import redirect_stdout
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from iscc_specs_spark.session import get_spark  # noqa: E402
 
@@ -280,7 +282,7 @@ def main():
         "never sorts in a single task (partial_min_by combines map-side).",
     ))
 
-    with open("/root/repo/PLANS.md", "w") as f:
+    with open(os.path.join(ROOT, "PLANS.md"), "w") as f:
         f.write("\n".join(sections))
     print("wrote PLANS.md")
     spark.stop()

@@ -12,11 +12,13 @@ Prints one JSON line.
 from __future__ import annotations
 
 import json
+import os
 import sys
 import time
 from multiprocessing import Pool
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 
 def work(args):

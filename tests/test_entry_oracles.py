@@ -11,7 +11,8 @@ import sys
 import duckdb
 import pytest
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 SF_DIR = "/root/testdata/sf0.001"
 # staged-parquet oracles must point at this sf's stage dir (set before

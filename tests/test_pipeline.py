@@ -9,7 +9,7 @@ import os
 import numpy as np
 import pandas as pd
 
-from iscc_specs_spark.plans.dedup import DedupConfig, probe_band_stage, run_dedup
+from iscc_specs_spark.plans.dedup import DedupConfig, run_dedup
 from iscc_specs_spark.sources.pages import generate_pages
 
 N_DOCS = 2500
@@ -261,6 +261,42 @@ def test_process_dedup_batch_job_budget(spark, tmp_path):
     assert 0 < len(history) <= 28, len(history)
 
 
+def test_process_url_batch_job_budget(spark, tmp_path):
+    """One re-crawl micro-batch stays within a fixed Spark-job budget, with
+    the same headroom as process_dedup_batch's: the first batch (no
+    history) and a history batch that re-crawls every url of the first
+    under another spelling."""
+    import datetime
+
+    from iscc_specs_spark.streaming.ingest import process_url_batch, read_url_flags
+
+    t0 = datetime.datetime(2024, 1, 1)
+    b0, b1 = (
+        spark.createDataFrame(
+            [(f"https://{host}s{i}.example/p",
+              t0 + datetime.timedelta(seconds=100 * k + i)) for i in range(40)],
+            "url string, warc_ts timestamp",
+        ).localCheckpoint(eager=True)
+        for k, host in enumerate(("", "www."))
+    )
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    state = str(tmp_path / "url_budget")
+    try:
+        sc.setJobGroup("url_first", "first url micro-batch")
+        process_url_batch(b0, 0, state)
+        sc.setJobGroup("url_history", "history url micro-batch")
+        process_url_batch(b1, 1, state)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    first = tracker.getJobIdsForGroup("url_first")
+    history = tracker.getJobIdsForGroup("url_history")
+    assert read_url_flags(spark, state).where("src = 'vs_history'").count() == 40
+    assert 0 < len(first) <= 13, len(first)
+    assert 0 < len(history) <= 17, len(history)
+
+
 def test_dup_pairs_jaccard_est(spark, tmp_path):
     """run_dedup's dup_pairs stage reports jaccard_est = (#equal minhash
     positions)/64 on every LSH pair and 1.0 on every exact pair;
@@ -351,15 +387,14 @@ def test_generate_pages_slices_union_to_full_range(spark):
 
 
 def test_band_stage_is_bucketed_at_rest(spark, tmp_path):
-    """The band index is a WRITTEN stage of keys-only rows (url, band_id,
-    band_hash) partitioned by band_pfx — the streaming index's shape: its
-    rows are minhash_bands ∪ simhash_bands over the representative table,
-    the manifest records the layout, the directory has the pfx dirs, and a
-    key-filtered probe of the stage carries the partition filter (static
-    pruning). The codes stage carries no data_minhash column. Killed after
-    the bands stage, a resume rebuilds the band rows in plan (the stage is
-    never read back), reproduces dup_pairs — Hamming columns and
-    jaccard_est included — and clusters, and does not rewrite the stage."""
+    """The bands stage holds keys-only rows (url, band_id, band_hash)
+    partitioned by band_pfx — the streaming index's shape: its rows are
+    minhash_bands ∪ simhash_bands over the representative table, the
+    manifest records the layout and the directory has the pfx dirs. The
+    codes stage carries no data_minhash column. Killed after the bands
+    stage, a resume rebuilds the band rows in plan (the stage is never read
+    back), reproduces dup_pairs — Hamming columns and jaccard_est included
+    — and clusters, and does not rewrite the stage."""
     from iscc_specs_spark.operators import lsh
 
     out = str(tmp_path / "bandstage")
@@ -389,18 +424,3 @@ def test_band_stage_is_bucketed_at_rest(spark, tmp_path):
     assert sorted(map(tuple, r2["clusters"].collect())) == clusters_1
     with open(os.path.join(out, "bands.manifest.json"), "rb") as f:
         assert f.read() == bands_manifest_1
-    # a key-set probe of the RESUMED snapshot must be a pure pruned parquet
-    # scan: both mirror assertions from the streaming gate
-    # (test_streaming.test_band_index_probe_plan_is_pruned_scan) — the
-    # prefixes land in PartitionFilters (static pruning, probe I/O bounded
-    # by prefix coverage) and no Python/banding subtree re-derives history
-    probe = probe_band_stage(spark, r2["store"], pfx=[1, 2, 3]).select(
-        "band_id", "band_hash", "band_pfx"
-    )
-    plan = probe._jdf.queryExecution().executedPlan().toString()
-    pf = next((ln for ln in plan.splitlines() if "PartitionFilters" in ln), "")
-    assert "band_pfx" in pf, plan
-    for banned in ("MapInPandas", "ArrowEvalPython", "BatchEvalPython"):
-        assert banned not in plan, plan
-    got_pfx = {r["band_pfx"] for r in probe.collect()}
-    assert got_pfx and got_pfx <= {1, 2, 3}

@@ -4,7 +4,7 @@ import os
 
 from iscc_specs_spark.operators.codegen import compute_codes
 from iscc_specs_spark.sources.pages import generate_pages
-from iscc_specs_spark.streaming.ingest import read_pages_stream, start_codes_stream
+from iscc_specs_spark.streaming.ingest import read_pages_stream, start_table_stream
 
 
 def test_streaming_codes_match_batch(spark, tmp_path):
@@ -27,8 +27,10 @@ def test_streaming_codes_match_batch(spark, tmp_path):
                 shutil.move(f"{src}/{d}/{f}", f"{src}/all/b{n}.parquet")
                 n += 1
 
-    q = start_codes_stream(
-        read_pages_stream(spark, src + "/all", max_files_per_trigger=1),
+    q = start_table_stream(
+        compute_codes(
+            read_pages_stream(spark, src + "/all", max_files_per_trigger=1)
+        ),
         out, ckpt,
     )
     q.awaitTermination(120)
@@ -43,7 +45,9 @@ def test_streaming_codes_match_batch(spark, tmp_path):
         assert g[url]["instance_id"] == w[url]["instance_id"]
 
     # restart with same checkpoint: no new batches, no duplicates (idempotent)
-    q2 = start_codes_stream(read_pages_stream(spark, src + "/all"), out, ckpt)
+    q2 = start_table_stream(
+        compute_codes(read_pages_stream(spark, src + "/all")), out, ckpt
+    )
     q2.awaitTermination(60)
     assert spark.read.parquet(out).count() == 120
 
@@ -232,10 +236,7 @@ def test_streaming_image_codes_match_batch(spark, tmp_path):
     """Image assets arriving in two micro-batch drops produce the same
     Content-ID-Image codes as one batch pass (real PNG decode kernel)."""
     from iscc_specs_spark.operators.multimodal import image_codes, synthetic_assets
-    from iscc_specs_spark.streaming.ingest import (
-        read_assets_stream,
-        start_image_codes_stream,
-    )
+    from iscc_specs_spark.streaming.ingest import read_assets_stream
 
     src = str(tmp_path / "assets_src")
     out = str(tmp_path / "image_codes_out")
@@ -254,8 +255,9 @@ def test_streaming_image_codes_match_batch(spark, tmp_path):
                 shutil.move(f"{src}/{d}/{f}", f"{src}/b{n}.parquet")
                 n += 1
 
-    q = start_image_codes_stream(
-        read_assets_stream(spark, src, max_files_per_trigger=1), out, ckpt
+    q = start_table_stream(
+        image_codes(read_assets_stream(spark, src, max_files_per_trigger=1)),
+        out, ckpt,
     )
     q.awaitTermination(120)
 
@@ -274,10 +276,7 @@ def test_streaming_av_codes_match_batch(spark, tmp_path):
     engine-defined fingerprints and failure classes as one batch pass
     (real WAV-PCM / animated-GIF sampling kernels)."""
     from iscc_specs_spark.operators.multimodal import av_codes, synthetic_assets
-    from iscc_specs_spark.streaming.ingest import (
-        read_assets_stream,
-        start_av_codes_stream,
-    )
+    from iscc_specs_spark.streaming.ingest import read_assets_stream
 
     src = str(tmp_path / "av_src")
     out = str(tmp_path / "av_codes_out")
@@ -296,8 +295,9 @@ def test_streaming_av_codes_match_batch(spark, tmp_path):
                 shutil.move(f"{src}/{d}/{f}", f"{src}/b{n}.parquet")
                 n += 1
 
-    q = start_av_codes_stream(
-        read_assets_stream(spark, src, max_files_per_trigger=1), out, ckpt
+    q = start_table_stream(
+        av_codes(read_assets_stream(spark, src, max_files_per_trigger=1)),
+        out, ckpt,
     )
     q.awaitTermination(120)
 

@@ -160,10 +160,11 @@ def test_url_index_modulus_survives_restart(spark, tmp_path, monkeypatch):
 
 def test_unpartitioned_url_index_fails_loudly(spark, tmp_path):
     """process_url_batch is the url index's only writer and always writes
-    the (ingest_batch, url_pfx) layout. An index partitioned by
-    ingest_batch only must raise BandIndexError naming the state dir —
-    before any state is written, so url_flags and urls stay exactly as
-    they were."""
+    the (ingest_batch, url_pfx) layout under its ``_INDEX_META.json``
+    record. An index partitioned by ingest_batch only, or one whose record
+    was lost (the modulus its prefixes were written under is unknown), must
+    raise BandIndexError naming the state dir — before any state is
+    written, so url_flags and urls stay exactly as they were."""
     import os
     import re
     import shutil
@@ -188,6 +189,13 @@ def test_unpartitioned_url_index_fails_loudly(spark, tmp_path):
                         out[os.path.relpath(os.path.join(root, f), state)] = fh.read()
         return out
 
+    def batch_2():
+        I.process_url_batch(
+            _pages(spark, [("https://a.example/p?utm_source=z", _ts(4))]),
+            2, state,
+        )
+
+    # (a) an index partitioned by ingest_batch only, under its layout record
     saved = state + "__urls"
     shutil.move(f"{state}/urls", saved)
     (
@@ -195,12 +203,19 @@ def test_unpartitioned_url_index_fails_loudly(spark, tmp_path):
         .write.partitionBy("ingest_batch")
         .parquet(f"{state}/urls")
     )
+    shutil.copy(saved + "/_INDEX_META.json", state + "/urls")
+    before = snap("url_flags", "urls")
+    with pytest.raises(I.BandIndexError, match=re.escape(state + "/urls has no url_pfx")):
+        batch_2()
+    assert snap("url_flags", "urls") == before
+
+    # (b) the index as written, with its layout record deleted
+    shutil.rmtree(f"{state}/urls")
+    shutil.move(saved, f"{state}/urls")
+    os.remove(f"{state}/urls/_INDEX_META.json")
     before = snap("url_flags", "urls")
     with pytest.raises(I.BandIndexError, match=re.escape(state)):
-        I.process_url_batch(
-            _pages(spark, [("https://a.example/p?utm_source=z", _ts(4))]),
-            2, state,
-        )
+        batch_2()
     assert snap("url_flags", "urls") == before
 
 

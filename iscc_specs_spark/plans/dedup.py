@@ -138,11 +138,14 @@ def run_dedup(
         )
 
     # ④ canonical representative per cluster: keep oldest (warc_ts, url)
-    # (skew-free min_by aggregation — see canonical_pick)
+    # (skew-free min_by — see canonical_pick), url-sorted within each file
+    # so its bytes do not follow the arrival order of shuffle blocks
     if store.has("canonical"):
         canonical = store.read(spark, "canonical")
     else:
-        canonical = store.write(canonical_pick(codes, clusters), "canonical")
+        canonical = store.write(
+            canonical_pick(codes, clusters).sortWithinPartitions("url"), "canonical"
+        )
 
     return {
         "codes": codes,

@@ -22,8 +22,10 @@ band index of every earlier batch, with the batch engine's own candidate
 router and pair verifier (operators/lsh.py); ``process_url_batch`` flags
 re-crawls against a maintained url index. The two indexes share one
 layout — (ingest_batch, pfx) directories under an ``_INDEX_META.json``
-record — and one reader of it: one layout check (:func:`_index_buckets`),
-one prefix collect and one pruned reader (:func:`_read_index`).
+record — and one reader of it: one on-disk layout check, run before
+any Spark job (:func:`_index_buckets`), one prefix collect and one pruned
+reader (:func:`_read_index`). Every state table is read with its schema
+given (:func:`_read_state`), never inferred.
 Near-dup clustering is a global fixpoint, not a per-window computation, so
 windowed streaming state would be the wrong tool (SURVEY.md §2.7):
 ``curate_state`` closes the accumulated flags into clusters and canonical
@@ -36,7 +38,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from iscc_specs_spark.operators.codegen import compute_codes
+from iscc_specs_spark.operators.codegen import CODES_SCHEMA, compute_codes
 
 PAGES_SCHEMA = (
     "url string, warc_ts timestamp, html binary, text string, lang string"
@@ -63,19 +65,25 @@ from iscc_specs_spark.operators.lsh import (  # noqa: E402
     band_pfx,
 )
 
+# the codes history's schema, and each index's prefix column and schema
+_CODES_HISTORY_SCHEMA = CODES_SCHEMA + ", ingest_batch int"
+_INDEXES = {
+    "bands": ("band_pfx", "url string, band_id int, band_hash long, "
+              "ingest_batch int, band_pfx int"),
+    "urls": ("url_pfx", "canon_url string, url string, ingest_batch int, url_pfx int"),
+}
 
-def _read_state(spark: SparkSession, path: str, schema: str) -> DataFrame:
-    """An accumulated state table read with its explicit schema: an empty
-    dir or an absent dir gives an empty DataFrame, never a
-    schema-inference failure."""
-    from pyspark.errors import AnalysisException
 
-    try:
-        return spark.read.schema(schema).parquet(path)
-    except AnalysisException as e:
-        if "PATH_NOT_FOUND" in str(e) or "Path does not exist" in str(e):
-            return spark.createDataFrame([], schema)
-        raise
+def _read_state(
+    spark: SparkSession, path: str, schema: str
+) -> DataFrame | None:
+    """A state table read with its ``schema`` given, or None iff ``path``
+    does not exist (checked on disk: no inference job, no failed read)."""
+    import os
+
+    if not os.path.isdir(path):
+        return None
+    return spark.read.schema(schema).parquet(path)
 
 
 def _write_batch(
@@ -97,7 +105,8 @@ def read_dup_flags(spark: SparkSession, state_dir: str) -> DataFrame:
     """Accumulated dup-flags state, schema-stable even when no batch has
     emitted a flag yet (empty dir → empty DataFrame, absent dir → empty
     DataFrame, never a schema-inference failure)."""
-    return _read_state(spark, f"{state_dir}/dup_flags", FLAGS_SCHEMA)
+    flags = _read_state(spark, f"{state_dir}/dup_flags", FLAGS_SCHEMA)
+    return spark.createDataFrame([], FLAGS_SCHEMA) if flags is None else flags
 
 
 def read_pages_stream(
@@ -178,16 +187,10 @@ def start_incremental_dedup_stream(
 
       1. codes for the new pages (same Arrow-vectorized stage as batch);
       2. within-batch dup pairs via the standard ``lsh.dup_pairs``;
-      3. batch-vs-history candidates: the *new* batch's band keys join the
-         MAINTAINED band index at ``state_dir/bands`` (appended batch by
-         batch — history codes are never re-banded, so per-batch kernel
-         work stays O(|batch|) regardless of corpus age) — the new side is
-         tiny, so Spark broadcasts it and the index streams through;
-         verification is the same native Hamming predicate. The index is
-         additionally partitioned by ``band_pfx`` (a hash prefix of the
-         band key), so the probe statically prunes to the partitions
-         holding the new batch's own prefixes instead of scanning the
-         whole index;
+      3. batch-vs-history candidates: the *new* batch's band keys probe
+         the MAINTAINED band index at ``state_dir/bands``, pruned to the
+         batch's own ``band_pfx`` partitions (:func:`process_dedup_batch`),
+         and pass the same dup predicate;
       4. append codes to ``state_dir/codes``, flags to
          ``state_dir/dup_flags`` and band rows to ``state_dir/bands``,
          each into an ``ingest_batch=<id>`` partition with dynamic
@@ -205,27 +208,6 @@ def start_incremental_dedup_stream(
     return _start_stream(codes_stream, sink, checkpoint_dir, trigger_once)
 
 
-def _read_history(spark: SparkSession, path: str) -> DataFrame | None:
-    """History codes table, or None iff the path does not exist yet (first
-    batch). Any other failure — corrupt files, permissions, transient FS
-    faults — propagates and fails the stream rather than silently skipping
-    vs-history flagging for the batch."""
-    from pyspark.errors import AnalysisException
-
-    try:
-        return spark.read.parquet(path)
-    except AnalysisException as e:
-        if (
-            "PATH_NOT_FOUND" in str(e)
-            or "Path does not exist" in str(e)
-            # an empty first batch writes only _SUCCESS — no schema to
-            # infer yet, semantically the same as "no history"
-            or "UNABLE_TO_INFER_SCHEMA" in str(e)
-        ):
-            return None
-        raise
-
-
 def _index_buckets(
     state_dir: str, sub: str, geometry: dict | None = None
 ) -> int:
@@ -237,17 +219,24 @@ def _index_buckets(
     index was written with — a changed constant would silently prune away
     true vs-history matches (missed flags, no error). The band index also
     records its band ``geometry``: keys computed another way match
-    nothing. An existing index whose record is missing, lacks
-    ``index_buckets`` or records another geometry raises
-    :class:`BandIndexError`. The first writer records the layout
+    nothing. Codes history without a band index, and an existing index
+    whose record is missing, lacks ``index_buckets`` or records another
+    geometry, or whose directories are not (ingest_batch, pfx) partitions,
+    raise :class:`BandIndexError`. The first writer records the layout
     (underscore-prefixed files are invisible to Spark's parquet listing).
     Local-FS JSON is the sandbox seam; at warehouse scale these are fields
     of the table's manifest (sources/storage.py)."""
+    import glob
     import json
     import os
 
     path = os.path.join(state_dir, sub)
     if not os.path.isdir(path):
+        if sub == "bands" and os.path.isdir(os.path.join(state_dir, "codes")):
+            raise BandIndexError(
+                f"state dir {state_dir} holds codes history but no band "
+                f"index at {path}; rebuild the state dir"
+            )
         return INDEX_BUCKETS
     meta_path = os.path.join(path, "_INDEX_META.json")
     meta = {}
@@ -263,6 +252,20 @@ def _index_buckets(
         raise BandIndexError(
             f"index {path} records {meta or 'no layout'}, not {want}; "
             "rebuild the state dir"
+        )
+    # every entry Spark lists (glob skips ``_``/``.`` names, as Spark does)
+    # must be an ingest_batch=* dir holding only <pfx>=* dirs
+    pfx = _INDEXES[sub][0]
+    layout = (("[!_]*", "ingest_batch="), ("ingest_batch=*/[!_]*", pfx + "="))
+    if any(
+        not os.path.basename(p).startswith(part)
+        for pattern, part in layout
+        for p in glob.glob(os.path.join(path, pattern))
+    ):
+        raise BandIndexError(
+            f"index {path} has no {pfx} partition column: it was not "
+            f"written in the (ingest_batch, {pfx}) layout; rebuild the "
+            "state dir"
         )
     return meta["index_buckets"]
 
@@ -301,7 +304,6 @@ def _read_index(
     spark: SparkSession,
     state_dir: str,
     sub: str,
-    pfx: str,
     batch_id: int,
     new_pfx: list[int] | None,
 ) -> DataFrame | None:
@@ -311,17 +313,13 @@ def _read_index(
     ``pfx IN (...)`` partition filter, so the scan lists only matching
     partition directories (static pruning: both predicates are on
     partition columns and appear as PartitionFilters in the plan). Returns
-    None iff the index does not exist yet; raises :class:`BandIndexError`
-    if it lacks the ``pfx`` partition column."""
-    idx = _read_history(spark, f"{state_dir}/{sub}")
+    None iff the index does not exist yet; an index that fails the layout
+    check (:func:`_index_buckets`) raises :class:`BandIndexError`."""
+    _index_buckets(state_dir, sub)
+    pfx, schema = _INDEXES[sub]
+    idx = _read_state(spark, f"{state_dir}/{sub}", schema)
     if idx is None:
         return None
-    if pfx not in idx.columns:
-        raise BandIndexError(
-            f"index {state_dir}/{sub} has no {pfx} partition column: it was "
-            f"not written in the (ingest_batch, {pfx}) layout; rebuild the "
-            "state dir"
-        )
     idx = idx.where(F.col("ingest_batch") < F.lit(batch_id))
     if new_pfx is not None:
         idx = idx.where(F.col(pfx).isin(sorted(new_pfx)))
@@ -336,7 +334,7 @@ def read_band_index(
 ) -> DataFrame | None:
     """The band index's pruned probe view (:func:`_read_index` over
     ``bands`` by ``band_pfx``): (url, band_id, band_hash) rows, or None."""
-    hb = _read_index(spark, state_dir, "bands", "band_pfx", batch_id, new_pfx)
+    hb = _read_index(spark, state_dir, "bands", batch_id, new_pfx)
     return None if hb is None else hb.select("url", "band_id", "band_hash")
 
 
@@ -374,10 +372,11 @@ def process_dedup_batch(
     index's ``_INDEX_META.json`` ALWAYS wins over :data:`INDEX_BUCKETS`.
 
     A state dir this function did not write fails loudly: when codes
-    history exists but ``state_dir/bands`` does not, the index lacks the
-    ``band_pfx`` column, or its record is missing or does not hold
-    :func:`lsh.band_geometry` (read before any Spark job),
-    :class:`BandIndexError` is raised before any state is written.
+    history exists but ``state_dir/bands`` does not, the index's
+    directories are not (ingest_batch, band_pfx) partitions, or its record
+    is missing or does not hold :func:`lsh.band_geometry`,
+    :class:`BandIndexError` is raised by the on-disk layout check, before
+    any Spark job runs and before any state is written.
     """
     from iscc_specs_spark.operators import lsh
 
@@ -402,12 +401,11 @@ def process_dedup_batch(
         "band_pfx", band_pfx(index_buckets)
     )
 
-    hist = _read_history(spark, f"{state_dir}/codes")
+    hist = _read_state(spark, f"{state_dir}/codes", _CODES_HISTORY_SCHEMA)
     if hist is not None:
         # exclude this batch's own partition: a replayed batch must not
         # match against its own prior (uncommitted) write
         hist = hist.where(F.col("ingest_batch") < F.lit(batch_id))
-    if hist is not None and hist.head(1):
         # nb feeds the prefix collect, the key semi-join and the broadcast
         # probe — lazy, each reference would re-run the banding
         nb = lsh.band_keys(new_slim).localCheckpoint(eager=True)
@@ -415,11 +413,6 @@ def process_dedup_batch(
         # lists non-matching band_pfx dirs)
         new_pfx = _collect_pfx(nb, band_pfx(index_buckets))
         hb = read_band_index(spark, state_dir, batch_id, new_pfx)
-        if hb is None:
-            raise BandIndexError(
-                f"state dir {state_dir} holds codes history but no band "
-                f"index at {state_dir}/bands; rebuild the state dir"
-            )
         # vs-history candidates with the engine-standard hot-bucket cap
         # (lsh.hot_buckets): the index restricted to the new batch's band
         # keys (semi-join — each history row matches once per key, NOT once
@@ -483,16 +476,16 @@ def curate_state(spark: SparkSession, state_dir: str) -> DataFrame:
     representative (the oldest (warc_ts, url) member, matching
     plans/dedup.py §④). Run after any micro-batch to get the
     curated-corpus delta without waiting for a global batch job; a
-    rerun over unchanged state is deterministic.
+    rerun over unchanged state is deterministic; a state dir with no
+    codes rows yet gives an empty frame of the same columns.
     """
     from iscc_specs_spark.operators.cluster import assign_clusters
     from iscc_specs_spark.plans.dedup import canonical_pick
 
-    codes = _read_history(spark, f"{state_dir}/codes")
+    codes = _read_state(spark, f"{state_dir}/codes", _CODES_HISTORY_SCHEMA)
     if codes is None:
-        # no batch has landed data yet (missing dir, or an empty first
-        # micro-batch's _SUCCESS-only drop): schema-stable empty result,
-        # same hardening contract as read_dup_flags
+        # no batch has run yet: schema-stable empty result, same contract
+        # as read_dup_flags
         return spark.createDataFrame(
             [], "url string, cluster_id string, is_canonical boolean"
         )
@@ -529,7 +522,8 @@ def _url_pfx(buckets: int):
 def read_url_flags(spark: SparkSession, state_dir: str) -> DataFrame:
     """Accumulated url-recrawl flags, schema-stable when empty (same
     contract as :func:`read_dup_flags`)."""
-    return _read_state(spark, f"{state_dir}/url_flags", URL_FLAGS_SCHEMA)
+    flags = _read_state(spark, f"{state_dir}/url_flags", URL_FLAGS_SCHEMA)
+    return spark.createDataFrame([], URL_FLAGS_SCHEMA) if flags is None else flags
 
 
 def read_url_index(
@@ -539,12 +533,11 @@ def read_url_index(
     new_pfx: list[int] | None = None,
 ) -> DataFrame | None:
     """The url index's pruned probe view (:func:`_read_index` over ``urls``
-    by ``url_pfx``): (canon_url, url, last_ts, ingest_batch) rows, or
-    None."""
-    hist = _read_index(spark, state_dir, "urls", "url_pfx", batch_id, new_pfx)
-    if hist is None:
-        return None
-    return hist.select("canon_url", "url", "last_ts", "ingest_batch")
+    by ``url_pfx``): (canon_url, url, ingest_batch) rows — one per
+    canonical url and ingesting batch — or None. An index written with a
+    ``last_ts`` column still reads; the column is ignored."""
+    hist = _read_index(spark, state_dir, "urls", batch_id, new_pfx)
+    return None if hist is None else hist.select("canon_url", "url", "ingest_batch")
 
 
 def process_url_batch(
@@ -566,8 +559,9 @@ def process_url_batch(
          with a literal prefix IN-list exactly like the band index, so
          probe I/O is bounded by the batch's own prefix coverage, never
          the index's age. A keeper whose canonical url is already indexed
-         is flagged ``src='vs_history'`` against the EARLIEST indexed
-         spelling (first-arrival wins across batches — a stream cannot
+         is flagged ``src='vs_history'`` against its first arrival: the
+         keeper of the earliest ingesting batch (the index holds one per
+         batch; first-arrival wins across batches — a stream cannot
          retract what it already emitted, so later re-crawls are flagged
          rather than replacing; the batch plan's latest-wins rule applies
          when the corpus is re-curated from state);
@@ -580,9 +574,10 @@ def process_url_batch(
     The bucket modulus is recorded in ``urls/_INDEX_META.json`` on first
     write and always wins over :data:`INDEX_BUCKETS` afterwards (same
     invariant as the band index: a mismatched modulus would silently prune
-    true re-crawl matches). An index without that record (read before any
-    Spark job) or without the ``url_pfx`` column raises
-    :class:`BandIndexError` before any state is written.
+    true re-crawl matches). An index without that record, or whose
+    directories are not (ingest_batch, url_pfx) partitions, raises
+    :class:`BandIndexError` from the on-disk layout check, before any Spark
+    job runs and before any state is written.
     """
     from iscc_specs_spark.operators.urls import canonical_url, url_dedup
 
@@ -613,10 +608,10 @@ def process_url_batch(
     new_pfx = _collect_pfx(keeper, "url_pfx")
     hist = read_url_index(spark, state_dir, batch_id, new_pfx)
     flags = intra
-    if hist is not None and hist.head(1):
+    if hist is not None:
         first = (
             hist.groupBy("canon_url")
-            .agg(F.min(F.struct("ingest_batch", "last_ts", "url")).alias("m"))
+            .agg(F.min(F.struct("ingest_batch", "url")).alias("m"))
             .select("canon_url", F.col("m.url").alias("dup_of"))
         )
         recrawl = (
@@ -639,7 +634,7 @@ def process_url_batch(
     _record_index_meta(state_dir, "urls", {"index_buckets": url_buckets})
     _write_batch(flags, batch_id, f"{state_dir}/url_flags")
     _write_batch(
-        keeper.select("canon_url", "url", "last_ts", "url_pfx"), batch_id,
+        keeper.select("canon_url", "url", "url_pfx"), batch_id,
         f"{state_dir}/urls", "url_pfx",
     )
 

@@ -575,7 +575,8 @@ def test_missing_or_unpartitioned_band_index_fails_loudly(spark, tmp_path):
     """process_dedup_batch is the band index's only writer and always
     writes the (ingest_batch, band_pfx) layout. A state dir whose codes
     history has no index, or whose index lacks band_pfx, must raise
-    BandIndexError naming the state dir — before any state is written, so
+    BandIndexError naming the state dir from the on-disk layout check —
+    before any Spark job runs and before any state is written, so
     dup_flags and codes stay exactly as they were."""
     import re
     import shutil
@@ -605,12 +606,22 @@ def test_missing_or_unpartitioned_band_index_fails_loudly(spark, tmp_path):
                         out[os.path.relpath(os.path.join(root, f), state)] = fh.read()
         return out
 
+    sc = spark.sparkContext
+
+    def batch_2(group, match):
+        sc.setJobGroup(group, "batch 2 over a bad band index")
+        try:
+            with pytest.raises(BandIndexError, match=match):
+                process_dedup_batch(b2, 2, state)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert not sc.statusTracker().getJobIdsForGroup(group), group
+
     # (a) codes history without a band index
     saved = state + "__bands"
     shutil.move(state + "/bands", saved)
     before = snap("dup_flags", "codes")
-    with pytest.raises(BandIndexError, match=re.escape(state)):
-        process_dedup_batch(b2, 2, state)
+    batch_2("no_band_index", re.escape(state))
     assert snap("dup_flags", "codes") == before
     assert not os.path.exists(state + "/bands")
 
@@ -623,9 +634,7 @@ def test_missing_or_unpartitioned_band_index_fails_loudly(spark, tmp_path):
     )
     shutil.copy(saved + "/_INDEX_META.json", state + "/bands")
     before = snap("dup_flags", "codes", "bands")
-    no_pfx = re.escape(state + "/bands has no band_pfx")
-    with pytest.raises(BandIndexError, match=no_pfx):
-        process_dedup_batch(b2, 2, state)
+    batch_2("unpartitioned_band_index", re.escape(state + "/bands has no band_pfx"))
     assert snap("dup_flags", "codes", "bands") == before
 
 
@@ -699,8 +708,30 @@ def test_curate_state_one_row_per_recrawled_url(spark, tmp_path):
 
 
 def test_curate_state_empty_state_is_schema_stable(spark, tmp_path):
-    from iscc_specs_spark.streaming.ingest import curate_state
+    """curate_state over a state dir no batch has written, and over one
+    whose first micro-batch held no rows, is an empty frame of the same
+    columns; a batch with rows after that empty batch ingests, flags only
+    its own within-batch dups, and curates to one row per url."""
+    from iscc_specs_spark.streaming.ingest import (
+        curate_state,
+        process_dedup_batch,
+        read_dup_flags,
+    )
 
     out = curate_state(spark, str(tmp_path / "never_written"))
     assert out.columns == ["url", "cluster_id", "is_canonical"]
     assert out.count() == 0
+
+    state = str(tmp_path / "empty_first_batch")
+    codes = compute_codes(generate_pages(spark, 20, partitions=2)).localCheckpoint(eager=True)
+    process_dedup_batch(codes.limit(0), 0, state)
+    out = curate_state(spark, state)
+    assert out.columns == ["url", "cluster_id", "is_canonical"]
+    assert out.count() == 0
+
+    process_dedup_batch(codes, 1, state)
+    flags = read_dup_flags(spark, state).collect()
+    assert flags and {f["src"] for f in flags} == {"intra_batch"}, flags
+    assert {f["ingest_batch"] for f in flags} == {1}
+    urls = [r["url"] for r in curate_state(spark, state).collect()]
+    assert len(urls) == len(set(urls)) == 20

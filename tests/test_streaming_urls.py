@@ -164,7 +164,8 @@ def test_unpartitioned_url_index_fails_loudly(spark, tmp_path):
     record. An index partitioned by ingest_batch only, or one whose record
     was lost (the modulus its prefixes were written under is unknown), must
     raise BandIndexError naming the state dir — before any state is
-    written, so url_flags and urls stay exactly as they were."""
+    written, so url_flags and urls stay exactly as they were, and for the
+    unpartitioned index before any Spark job runs."""
     import os
     import re
     import shutil
@@ -205,8 +206,15 @@ def test_unpartitioned_url_index_fails_loudly(spark, tmp_path):
     )
     shutil.copy(saved + "/_INDEX_META.json", state + "/urls")
     before = snap("url_flags", "urls")
-    with pytest.raises(I.BandIndexError, match=re.escape(state + "/urls has no url_pfx")):
-        batch_2()
+    sc = spark.sparkContext
+    sc.setJobGroup("unpartitioned_url_index", "batch 2 over an unpartitioned index")
+    try:
+        with pytest.raises(I.BandIndexError, match=re.escape(state + "/urls has no url_pfx")):
+            batch_2()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    # the on-disk layout check raises before any Spark job
+    assert not sc.statusTracker().getJobIdsForGroup("unpartitioned_url_index")
     assert snap("url_flags", "urls") == before
 
     # (b) the index as written, with its layout record deleted

@@ -137,8 +137,7 @@ def _q_lsh_band_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     from iscc_specs_spark.operators import lsh
 
     codes = _codes(spark, sf_dir)
-    slim = lsh.rep_codes(codes)
-    bands = lsh.minhash_bands(slim).union(lsh.simhash_bands(slim))
+    bands = lsh.band_keys(lsh.rep_codes(codes))
     return (
         bands.groupBy("band_id", "band_hash")
         .agg(F.count("*").alias("bucket_size"))

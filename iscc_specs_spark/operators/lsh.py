@@ -258,16 +258,17 @@ def verified_bucket_pairs(
     The verification fields (cid_body, simhash, tophash ≈ 80 B) ride along
     with each band row, so in-bucket pairs are verified inline by
     :func:`is_dup` on the exploded combination structs. Only the band rows
-    shuffle; the 512 B minhash column — needed only for the reported
-    jaccard estimate, not the dup predicate — never does (attach_jaccard
-    re-attaches it to the few surviving pairs).
+    shuffle; the 512 B minhash column, which the dup predicate never reads,
+    stays out of the payload.
 
     Oversized buckets (> bucket_cap, e.g. template farms): hub-and-spoke
     edges to the bucket-min url, O(k) not O(k²), never collected into one
     row; their verification happens on the (small) residual via
     verify_pairs. Returns (url_a, url_b, cid_hamming, simhash_hamming,
     exact_dup) for capped buckets plus unverified hub edges flagged
-    verified=false.
+    verified=false. A pair that several bands find appears once per band
+    on the inline side, every column equal: :func:`dup_pairs` dedupes the
+    union once. The hub edges are deduped here, one per (hub, member).
 
     ``band_rows``: pass a precomputed band table (e.g. the one
     plans/dedup.py also feeds to its metrics pass) to skip the in-plan
@@ -307,7 +308,6 @@ def verified_bucket_pairs(
     pairs_small = (
         members.select(F.explode(F.flatten(F.transform("ms", pairs_with))).alias("p"))
         .select("p.url_a", "p.url_b", "p.cid_hamming", "p.simhash_hamming", "p.exact_dup")
-        .dropDuplicates(["url_a", "url_b"])
         .withColumn("verified", F.lit(True))
     )
 
@@ -361,28 +361,6 @@ def verify_pairs(
     )
 
 
-def attach_jaccard(pairs: DataFrame, slim: DataFrame) -> DataFrame:
-    """``pairs`` (from :func:`dup_pairs`) plus the reported jaccard_est =
-    (#equal minhash positions)/64, joined back from the representatives'
-    signatures — survivors ≪ corpus, so these joins shuffle a bounded
-    fraction of the code table. Exact pairs carry 1.0: their url_b is no
-    representative, so it has no row in ``slim``."""
-    a = slim.select(F.col("url").alias("url_a"), F.col("minhash").alias("mh_a"))
-    b = slim.select(F.col("url").alias("url_b"), F.col("minhash").alias("mh_b"))
-    eq_minhash = F.expr(
-        "aggregate(zip_with(mh_a, mh_b, (x, y) -> CASE WHEN x = y THEN 1 ELSE 0 END), "
-        "0, (acc, v) -> acc + v)"
-    )
-    jaccard = F.when(F.col("src") == "exact", F.lit(1.0)).otherwise(
-        eq_minhash / F.lit(64.0)
-    )
-    return (
-        pairs.join(a, "url_a", "left")
-        .join(b, "url_b", "left")
-        .select(*pairs.columns, jaccard.alias("jaccard_est"))
-    )
-
-
 def dup_pairs(
     codes: DataFrame,
     bucket_cap: int = 64,
@@ -394,10 +372,9 @@ def dup_pairs(
 
     Capped buckets verify inline during candidate generation
     (verified_bucket_pairs); only oversized-bucket hub edges take the
-    residual join-verify path (verify_pairs). The reported jaccard estimate
-    is not part of the pair set — the dup predicate never uses it — so a
-    caller that persists it joins it on with :func:`attach_jaccard`
-    (plans/dedup.py's stage table).
+    residual join-verify path (verify_pairs). This is the one pair table:
+    plans/dedup.py stores it as the ``dup_pairs`` stage unchanged, and the
+    driver's ``dedup_pairs`` row selects the same six columns.
 
     ``slim``: pass a precomputed (ideally already-materialized)
     representative table to share it with other consumers (e.g. the

@@ -105,7 +105,7 @@ def run_dedup(
         # one slim representative table feeds BOTH the band stage and the
         # exact-dup pairing (previously two independent full-corpus
         # aggregations). No written stage covers it: the bands stage keeps
-        # only band keys, not the payload verification and jaccard read
+        # only band keys, not the payload verification reads
         slim = lsh.rep_codes(codes).localCheckpoint(eager=True)
         # the bands stage: keys-only rows (url, band_id, band_hash) at rest,
         # partitioned by band_pfx like the streaming band index. Nothing
@@ -119,12 +119,8 @@ def run_dedup(
                 partition_by=["band_pfx"],
             )
         band_rows = lsh.band_rows_table(slim)
-        pairs = lsh.dup_pairs(codes, cfg.bucket_cap, slim=slim, band_rows=band_rows)
         pairs = store.write(
-            lsh.attach_jaccard(pairs, slim).select(
-                "url_a", "url_b", "src", "cid_hamming", "simhash_hamming",
-                "jaccard_est", "exact_dup",
-            ),
+            lsh.dup_pairs(codes, cfg.bucket_cap, slim=slim, band_rows=band_rows),
             "dup_pairs",
             lsh_metrics(band_rows, cfg.bucket_cap),
         )

@@ -88,10 +88,10 @@ def main():
     sections.append(audit(
         "dup_pairs (LSH banding + inline verify)", lsh.dup_pairs(ck),
         "Banding, bucket capping, in-bucket verification, over the "
-        "materialized codes table (as plans/dedup.py runs it). Verification "
-        "fields ride the band shuffle — no join back to the full code "
-        "table; the 512 B minhash column only joins the few survivors "
-        "(jaccard attach).",
+        "materialized codes table (as plans/dedup.py runs it and stores it "
+        "as its dup_pairs stage). Verification fields ride the band "
+        "shuffle — no join back to the full code table; the 512 B minhash "
+        "column stays out of the band payload.",
     ))
     sections.append(audit(
         "token_counts", qs["token_counts"](spark, sf_dir),

@@ -464,8 +464,8 @@ def run_recall_streaming(
     The SAME planted corpus, fed through ``process_dedup_batch`` in
     ``n_batches`` arrival-ordered doc_id slices against an on-disk state
     dir — so every mechanism unique to the streaming path is on the
-    measured path: the maintained (ingest_batch, band_pfx) band index,
-    static partition-pruned history probes, the hot-bucket hub routing of
+    measured path: the maintained band index (one ``ingest_batch=<id>``
+    directory per batch), the history probes, the hot-bucket hub routing of
     the ~1%-of-corpus template farm (whose members land in EVERY batch),
     and flags-as-edges curation. Recall/precision are computed over
     ``curate_state``'s clusters with the same contingency-table pair

@@ -180,17 +180,12 @@ def band_keys(codes: DataFrame) -> DataFrame:
     return _explode_bands(codes, "url", _band_structs())
 
 
-BAND_PFX_BUCKETS = 64
-
-
-def band_pfx(buckets: int = BAND_PFX_BUCKETS):
-    """Partition-prefix expression over a (band_id, band_hash) row — the
-    shared at-rest bucketing key for band tables (batch stage table in
-    plans/dedup.py, streaming maintained index in streaming/ingest.py).
-    The streaming vs-history probe reads its index pruned to the new
-    batch's prefixes instead of scanning it."""
+def band_pfx():
+    """A 64-value prefix of a (band_id, band_hash) row's key. No table at
+    rest is partitioned by it; ``streaming.ingest.read_band_index`` takes
+    a list of prefixes as a row filter."""
     return F.pmod(
-        F.xxhash64(F.col("band_id"), F.col("band_hash")), F.lit(buckets)
+        F.xxhash64(F.col("band_id"), F.col("band_hash")), F.lit(64)
     ).cast("int")
 
 

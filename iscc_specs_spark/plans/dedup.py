@@ -108,16 +108,12 @@ def run_dedup(
         # only band keys, not the payload verification reads
         slim = lsh.rep_codes(codes).localCheckpoint(eager=True)
         # the bands stage: keys-only rows (url, band_id, band_hash) at rest,
-        # partitioned by band_pfx like the streaming band index. Nothing
+        # unpartitioned, the streaming band index's row shape. Nothing
         # reads it back: the metrics pass and the pair generator consume
         # the payload-carrying band rows in-plan over the checkpointed slim
         # table, which a resume rebuilds anyway
         if not store.has("bands"):
-            store.save(
-                lsh.band_keys(slim).withColumn("band_pfx", lsh.band_pfx()),
-                "bands",
-                partition_by=["band_pfx"],
-            )
+            store.save(lsh.band_keys(slim), "bands")
         band_rows = lsh.band_rows_table(slim)
         pairs = store.write(
             lsh.dup_pairs(codes, cfg.bucket_cap, slim=slim, band_rows=band_rows),

@@ -102,8 +102,7 @@ class StageStore:
             return json.load(f)
 
     def _write_manifest(
-        self, df: DataFrame, stage: str, wall_ms: int, extra: dict,
-        metrics: dict | None,
+        self, df: DataFrame, stage: str, wall_ms: int, metrics: dict | None
     ) -> None:
         manifest = {
             "stage": stage,
@@ -112,7 +111,6 @@ class StageStore:
             **_footer_lineage(self._dir(stage)),
             "wall_ms": wall_ms,
             "written_at": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
-            **extra,
             "schema_ddl": df._jdf.schema().toDDL(),
             "metrics": metrics or {},
         }
@@ -120,36 +118,20 @@ class StageStore:
             json.dump(manifest, f, separators=(",", ":"))
 
     def save(
-        self,
-        df: DataFrame,
-        stage: str,
-        extra_metrics: dict | None = None,
-        partition_by: list[str] | None = None,
+        self, df: DataFrame, stage: str, extra_metrics: dict | None = None
     ) -> None:
         """Materialize a stage and its manifest without reading it back.
         Recording the stage adds no Spark job to the write's own."""
         t0 = time.monotonic()
-        writer = df.write.mode("overwrite")
-        if partition_by:
-            writer = writer.partitionBy(*partition_by)
-        writer.parquet(self._dir(stage))
+        df.write.mode("overwrite").parquet(self._dir(stage))
         wall_ms = int((time.monotonic() - t0) * 1000)
-        self._write_manifest(
-            df, stage, wall_ms, {"partition_by": partition_by or []},
-            extra_metrics,
-        )
+        self._write_manifest(df, stage, wall_ms, extra_metrics)
 
     def write(
-        self,
-        df: DataFrame,
-        stage: str,
-        extra_metrics: dict | None = None,
-        partition_by: list[str] | None = None,
+        self, df: DataFrame, stage: str, extra_metrics: dict | None = None
     ) -> DataFrame:
         """Materialize a stage; returns the re-read DataFrame (cuts lineage,
-        making every downstream stage restartable from disk). The re-read
-        lists the stage's files; with many partition directories Spark
-        lists them in a job of its own — use :meth:`save` where the caller
-        does not consume the re-read."""
-        self.save(df, stage, extra_metrics, partition_by)
+        making every downstream stage restartable from disk). Use
+        :meth:`save` where the caller does not consume the re-read."""
+        self.save(df, stage, extra_metrics)
         return self.read(df.sparkSession, stage)

@@ -21,11 +21,15 @@ each micro-batch's duplicates, within the batch and against a maintained
 band index of every earlier batch, with the batch engine's own candidate
 router and pair verifier (operators/lsh.py); ``process_url_batch`` flags
 re-crawls against a maintained url index. The two indexes share one
-layout — (ingest_batch, pfx) directories under an ``_INDEX_META.json``
-record — and one reader of it: one on-disk layout check, run before
-any Spark job (:func:`_index_buckets`), one prefix collect and one pruned
-reader (:func:`_read_index`). Every state table is read with its schema
-given (:func:`_read_state`), never inferred.
+layout — each micro-batch's rows in its own ``ingest_batch=<id>``
+directory of parquet files — and one reader of it: one on-disk layout
+check, run before any Spark job (:func:`_check_index`), and one
+replay-safe reader (:func:`_read_index`). A vs-history probe reads every
+history batch's index files; the broadcast key semi-join then keeps the
+rows that share a key with the new batch. Spark lists a table's
+``ingest_batch=*`` directories serially, and in one parallel
+listing job once there are more than 32 of them. Every state table is
+read with its schema given (:func:`_read_state`), never inferred.
 Near-dup clustering is a global fixpoint, not a per-window computation, so
 windowed streaming state would be the wrong tool (SURVEY.md §2.7):
 ``curate_state`` closes the accumulated flags into clusters and canonical
@@ -50,27 +54,12 @@ PAGES_SCHEMA = (
 # schema inference cannot read.
 FLAGS_SCHEMA = "url string, dup_of string, src string, ingest_batch int"
 
-# INDEX_BUCKETS is the prefix modulus of both maintained streaming indexes
-# — band_pfx = pmod(xxhash64(band_id, band_hash), INDEX_BUCKETS) for the
-# band index at ``state_dir/bands``, url_pfx for the url index at
-# ``state_dir/urls`` — partitioned (ingest_batch, pfx): ingest_batch gives
-# replay-safe ``< batch_id`` pruning, pfx gives the vs-history probe static
-# partition pruning down to the new batch's own prefixes. The modulus is
-# baked into the directory layout, so each index records it in
-# ``_INDEX_META.json`` at first write (:func:`_index_buckets`). The prefix
-# expression and bucket count are shared with the batch pipeline's at-rest
-# band stage table (operators/lsh.py).
-from iscc_specs_spark.operators.lsh import (  # noqa: E402
-    BAND_PFX_BUCKETS as INDEX_BUCKETS,
-    band_pfx,
-)
-
-# the codes history's schema, and each index's prefix column and schema
+# the codes history's schema, and each maintained index's schema: the band
+# index at ``state_dir/bands``, the url index at ``state_dir/urls``
 _CODES_HISTORY_SCHEMA = CODES_SCHEMA + ", ingest_batch int"
 _INDEXES = {
-    "bands": ("band_pfx", "url string, band_id int, band_hash long, "
-              "ingest_batch int, band_pfx int"),
-    "urls": ("url_pfx", "canon_url string, url string, ingest_batch int, url_pfx int"),
+    "bands": "url string, band_id int, band_hash long, ingest_batch int",
+    "urls": "canon_url string, url string, ingest_batch int",
 }
 
 
@@ -86,17 +75,15 @@ def _read_state(
     return spark.read.schema(schema).parquet(path)
 
 
-def _write_batch(
-    df: DataFrame, batch_id: int, path: str, *parts: str
-) -> None:
+def _write_batch(df: DataFrame, batch_id: int, path: str) -> None:
     """Write one micro-batch's rows into its own ``ingest_batch=<id>``
-    partition (then ``parts``) with dynamic partition overwrite, so a
-    replayed batch overwrites its own earlier write."""
+    partition with dynamic partition overwrite, so a replayed batch
+    overwrites its own earlier write."""
     (
         df.withColumn("ingest_batch", F.lit(batch_id))
         .write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("ingest_batch", *parts)
+        .partitionBy("ingest_batch")
         .parquet(path)
     )
 
@@ -188,9 +175,10 @@ def start_incremental_dedup_stream(
       1. codes for the new pages (same Arrow-vectorized stage as batch);
       2. within-batch dup pairs via the standard ``lsh.dup_pairs``;
       3. batch-vs-history candidates: the *new* batch's band keys probe
-         the MAINTAINED band index at ``state_dir/bands``, pruned to the
-         batch's own ``band_pfx`` partitions (:func:`process_dedup_batch`),
-         and pass the same dup predicate;
+         the MAINTAINED band index at ``state_dir/bands`` — every history
+         batch's index files, filtered to the new keys by a broadcast
+         semi-join (:func:`process_dedup_batch`) — and pass the same dup
+         predicate;
       4. append codes to ``state_dir/codes``, flags to
          ``state_dir/dup_flags`` and band rows to ``state_dir/bands``,
          each into an ``ingest_batch=<id>`` partition with dynamic
@@ -208,24 +196,22 @@ def start_incremental_dedup_stream(
     return _start_stream(codes_stream, sink, checkpoint_dir, trigger_once)
 
 
-def _index_buckets(
+def _check_index(
     state_dir: str, sub: str, geometry: dict | None = None
-) -> int:
-    """The bucket modulus of the index at ``state_dir/sub``, from its
-    ON-DISK layout record ``_INDEX_META.json`` and before any Spark job:
-    the recorded ``index_buckets``, or :data:`INDEX_BUCKETS` for an index
-    not written yet. The record wins over the constant: prefix pruning is
-    only correct when probe prefixes are computed with the same modulus the
-    index was written with — a changed constant would silently prune away
-    true vs-history matches (missed flags, no error). The band index also
-    records its band ``geometry``: keys computed another way match
-    nothing. Codes history without a band index, and an existing index
-    whose record is missing, lacks ``index_buckets`` or records another
-    geometry, or whose directories are not (ingest_batch, pfx) partitions,
-    raise :class:`BandIndexError`. The first writer records the layout
-    (underscore-prefixed files are invisible to Spark's parquet listing).
-    Local-FS JSON is the sandbox seam; at warehouse scale these are fields
-    of the table's manifest (sources/storage.py)."""
+) -> None:
+    """The ON-DISK layout check of the index at ``state_dir/sub``, before
+    any Spark job: every entry Spark lists must be an ``ingest_batch=<id>``
+    directory of parquet files, and the band index's ``_INDEX_META.json``
+    record must hold exactly this build's band ``geometry`` — keys
+    computed another way match nothing, so vs-history flags would drop to
+    zero with no error. Codes history without a band index, a record that
+    is missing or holds anything else, and an index in another layout
+    (such as the older (ingest_batch, pfx) directories) raise
+    :class:`BandIndexError`. An index not written yet passes; its first
+    writer records the geometry (underscore-prefixed files are invisible
+    to Spark's parquet listing). Local-FS JSON is the sandbox seam; at
+    warehouse scale it is a field of the table's manifest
+    (sources/storage.py)."""
     import glob
     import json
     import os
@@ -237,93 +223,70 @@ def _index_buckets(
                 f"state dir {state_dir} holds codes history but no band "
                 f"index at {path}; rebuild the state dir"
             )
-        return INDEX_BUCKETS
-    meta_path = os.path.join(path, "_INDEX_META.json")
-    meta = {}
-    if os.path.exists(meta_path):
-        with open(meta_path) as f:
-            meta = json.load(f)
-    if "index_buckets" not in meta or (
-        geometry is not None and meta.get("band_geometry") != geometry
-    ):
-        want = "index_buckets" + (
-            f" and band geometry {geometry}" if geometry is not None else ""
-        )
+        return
+    if geometry is not None:
+        meta_path = os.path.join(path, "_INDEX_META.json")
+        meta = {}
+        if os.path.exists(meta_path):
+            with open(meta_path) as f:
+                meta = json.load(f)
+        if meta != {"band_geometry": geometry}:
+            raise BandIndexError(
+                f"index {path} records {meta or 'nothing'}, not band "
+                f"geometry {geometry}; rebuild the state dir"
+            )
+    # glob skips ``_``/``.`` names, as Spark's listing does
+    bad = [
+        p for p in glob.glob(os.path.join(path, "[!_]*"))
+        if not os.path.basename(p).startswith("ingest_batch=")
+    ] + [
+        p for p in glob.glob(os.path.join(path, "ingest_batch=*", "[!_]*"))
+        if os.path.isdir(p)
+    ]
+    if bad:
         raise BandIndexError(
-            f"index {path} records {meta or 'no layout'}, not {want}; "
-            "rebuild the state dir"
+            f"index {path} holds {os.path.relpath(bad[0], path)}, not only "
+            "ingest_batch=<id> directories of parquet files: it was "
+            "written in another layout; rebuild the state dir"
         )
-    # every entry Spark lists (glob skips ``_``/``.`` names, as Spark does)
-    # must be an ingest_batch=* dir holding only <pfx>=* dirs
-    pfx = _INDEXES[sub][0]
-    layout = (("[!_]*", "ingest_batch="), ("ingest_batch=*/[!_]*", pfx + "="))
-    if any(
-        not os.path.basename(p).startswith(part)
-        for pattern, part in layout
-        for p in glob.glob(os.path.join(path, pattern))
-    ):
-        raise BandIndexError(
-            f"index {path} has no {pfx} partition column: it was not "
-            f"written in the (ingest_batch, {pfx}) layout; rebuild the "
-            "state dir"
-        )
-    return meta["index_buckets"]
 
 
-def _record_index_meta(state_dir: str, sub: str, record: dict) -> None:
+def _record_band_geometry(state_dir: str, geometry: dict) -> None:
     import json
     import os
 
-    meta = os.path.join(state_dir, sub, "_INDEX_META.json")
+    meta = os.path.join(state_dir, "bands", "_INDEX_META.json")
     if not os.path.exists(meta):
         os.makedirs(os.path.dirname(meta), exist_ok=True)
         # atomic: a crash mid-write must not leave a truncated JSON file —
-        # _index_buckets would raise on EVERY later batch (the one crash
+        # _check_index would raise on EVERY later batch (the one crash
         # window with no self-healing path)
         tmp = meta + ".tmp"
         with open(tmp, "w") as f:
-            json.dump(record, f)
+            json.dump({"band_geometry": geometry}, f)
         os.replace(tmp, meta)
 
 
 class BandIndexError(RuntimeError):
     """A streaming state dir whose maintained streaming index is missing or
-    not in the layout its only writer writes: (ingest_batch, band_pfx) and
-    this build's band geometry for process_dedup_batch's band index,
-    (ingest_batch, url_pfx) for process_url_batch's url index."""
-
-
-def _collect_pfx(df: DataFrame, pfx) -> list[int]:
-    """A batch's distinct index prefixes: ≤ the modulus ints, collected on
-    the driver (a bounded list, same class as the lineage/metric collects)
-    and pushed down as the probe's literal partition filter."""
-    return sorted(r[0] for r in df.select(pfx).distinct().collect())
+    not in the layout its only writer writes: ``ingest_batch=<id>``
+    directories of parquet files, under a record of this build's band
+    geometry for process_dedup_batch's band index."""
 
 
 def _read_index(
-    spark: SparkSession,
-    state_dir: str,
-    sub: str,
-    batch_id: int,
-    new_pfx: list[int] | None,
+    spark: SparkSession, state_dir: str, sub: str, batch_id: int
 ) -> DataFrame | None:
-    """Pruned view of the maintained index at ``state_dir/sub`` for batch
-    ``batch_id``'s vs-history probe: replay-safe ``ingest_batch <
-    batch_id`` plus — when the probe supplies its prefix set — a literal
-    ``pfx IN (...)`` partition filter, so the scan lists only matching
-    partition directories (static pruning: both predicates are on
-    partition columns and appear as PartitionFilters in the plan). Returns
-    None iff the index does not exist yet; an index that fails the layout
-    check (:func:`_index_buckets`) raises :class:`BandIndexError`."""
-    _index_buckets(state_dir, sub)
-    pfx, schema = _INDEXES[sub]
-    idx = _read_state(spark, f"{state_dir}/{sub}", schema)
-    if idx is None:
-        return None
-    idx = idx.where(F.col("ingest_batch") < F.lit(batch_id))
-    if new_pfx is not None:
-        idx = idx.where(F.col(pfx).isin(sorted(new_pfx)))
-    return idx
+    """Batch ``batch_id``'s view of the maintained index at
+    ``state_dir/sub``: the rows of every earlier batch, ``ingest_batch <
+    batch_id`` (replay-safe, and a PartitionFilter in the plan). The
+    probe reads all of their files; its key join keeps the matching rows.
+    Returns None iff the index does not exist yet; an index that fails
+    the layout check (:func:`_check_index`) raises
+    :class:`BandIndexError`."""
+    _check_index(state_dir, sub)
+    idx = _read_state(spark, f"{state_dir}/{sub}", _INDEXES[sub])
+    return None if idx is None else idx.where(F.col("ingest_batch") < F.lit(batch_id))
 
 
 def read_band_index(
@@ -332,10 +295,18 @@ def read_band_index(
     batch_id: int,
     new_pfx: list[int] | None = None,
 ) -> DataFrame | None:
-    """The band index's pruned probe view (:func:`_read_index` over
-    ``bands`` by ``band_pfx``): (url, band_id, band_hash) rows, or None."""
-    hb = _read_index(spark, state_dir, "bands", batch_id, new_pfx)
-    return None if hb is None else hb.select("url", "band_id", "band_hash")
+    """The band index's probe view (:func:`_read_index` over ``bands``):
+    (url, band_id, band_hash) rows, or None. ``new_pfx`` keeps the rows
+    whose :func:`lsh.band_pfx` is in it — a row filter, not a partition
+    filter: every history file is still read."""
+    from iscc_specs_spark.operators.lsh import band_pfx
+
+    hb = _read_index(spark, state_dir, "bands", batch_id)
+    if hb is None:
+        return None
+    if new_pfx is not None:
+        hb = hb.where(band_pfx().isin(sorted(new_pfx)))
+    return hb.select("url", "band_id", "band_hash")
 
 
 def process_dedup_batch(
@@ -360,21 +331,19 @@ def process_dedup_batch(
     ``state_dir/bands`` (same ``ingest_batch`` partition-overwrite sink as
     codes/flags, so replay overwrites itself), and the vs-history probe
     reads that table directly. Without the index, banding the accumulated
-    codes table costs O(|history|) *kernel work* per micro-batch — ingest
-    cost would grow linearly with corpus age; with it, per-batch work is
-    O(|batch|) banding + one pruned probe of the index.
-
-    Index layout: partitioned by (ingest_batch, band_pfx). Before the
-    probe, the new batch's distinct prefixes are collected and pushed down
-    as a literal IN partition filter (:func:`_read_index`), so probe I/O
-    per batch is bounded by the new batch's key-prefix coverage of the
-    index rather than the index's full size. The modulus recorded in the
-    index's ``_INDEX_META.json`` ALWAYS wins over :data:`INDEX_BUCKETS`.
+    codes table costs O(|history|) *kernel work* per micro-batch. With it,
+    the banding is O(|batch|), and the probe reads every history batch's
+    index files (:func:`_read_index`); a broadcast semi-join on the new
+    batch's (band_id, band_hash) keys keeps the matching rows. Each batch
+    writes its index rows straight into its ``ingest_batch=<id>``
+    directory, one file per partition of the batch. Spark lists the
+    ``ingest_batch=*`` directories serially, and in one parallel
+    listing job once there are more than 32 of them.
 
     A state dir this function did not write fails loudly: when codes
-    history exists but ``state_dir/bands`` does not, the index's
-    directories are not (ingest_batch, band_pfx) partitions, or its record
-    is missing or does not hold :func:`lsh.band_geometry`,
+    history exists but ``state_dir/bands`` does not, the index's entries
+    are not ``ingest_batch=<id>`` directories of parquet files, or its
+    record is missing or does not hold exactly :func:`lsh.band_geometry`,
     :class:`BandIndexError` is raised by the on-disk layout check, before
     any Spark job runs and before any state is written.
     """
@@ -382,7 +351,7 @@ def process_dedup_batch(
 
     spark = batch_df.sparkSession
     geometry = lsh.band_geometry()
-    index_buckets = _index_buckets(state_dir, "bands", geometry)
+    _check_index(state_dir, "bands", geometry)
     batch = batch_df.localCheckpoint(eager=True)
 
     # one representative table per batch: the within-batch pairs and the
@@ -397,22 +366,17 @@ def process_dedup_batch(
     # this batch's contribution to the band index (ALL rows, matching the
     # probe semantics: every historical row must be findable, not just its
     # exact-dup representative)
-    own_bands = lsh.band_keys(batch).withColumn(
-        "band_pfx", band_pfx(index_buckets)
-    )
+    own_bands = lsh.band_keys(batch)
 
     hist = _read_state(spark, f"{state_dir}/codes", _CODES_HISTORY_SCHEMA)
     if hist is not None:
         # exclude this batch's own partition: a replayed batch must not
         # match against its own prior (uncommitted) write
         hist = hist.where(F.col("ingest_batch") < F.lit(batch_id))
-        # nb feeds the prefix collect, the key semi-join and the broadcast
-        # probe — lazy, each reference would re-run the banding
+        # nb feeds the key semi-join and the broadcast probe — lazy, each
+        # reference would re-run the banding
         nb = lsh.band_keys(new_slim).localCheckpoint(eager=True)
-        # the new batch's key prefixes (static pruning — the probe never
-        # lists non-matching band_pfx dirs)
-        new_pfx = _collect_pfx(nb, band_pfx(index_buckets))
-        hb = read_band_index(spark, state_dir, batch_id, new_pfx)
+        hb = read_band_index(spark, state_dir, batch_id)
         # vs-history candidates with the engine-standard hot-bucket cap
         # (lsh.hot_buckets): the index restricted to the new batch's band
         # keys (semi-join — each history row matches once per key, NOT once
@@ -443,20 +407,11 @@ def process_dedup_batch(
         flags = intra
 
     # flags + codes + this batch's band-index rows, each into its own
-    # ingest_batch partition (replay overwrites itself in all three); the
-    # band index is additionally partitioned by band_pfx for probe pruning,
-    # and repartitioned by it first so each band_pfx directory of a batch
-    # gets one file (≤ index_buckets files per batch, not tasks × buckets)
-    _record_index_meta(
-        state_dir, "bands",
-        {"index_buckets": index_buckets, "band_geometry": geometry},
-    )
+    # ingest_batch partition (replay overwrites itself in all three)
+    _record_band_geometry(state_dir, geometry)
     _write_batch(flags, batch_id, f"{state_dir}/dup_flags")
     _write_batch(batch, batch_id, f"{state_dir}/codes")
-    _write_batch(
-        own_bands.repartition("band_pfx"), batch_id, f"{state_dir}/bands",
-        "band_pfx",
-    )
+    _write_batch(own_bands, batch_id, f"{state_dir}/bands")
 
 
 def curate_state(spark: SparkSession, state_dir: str) -> DataFrame:
@@ -515,10 +470,6 @@ URL_FLAGS_SCHEMA = (
 )
 
 
-def _url_pfx(buckets: int):
-    return F.pmod(F.xxhash64(F.col("canon_url")), F.lit(buckets)).cast("int")
-
-
 def read_url_flags(spark: SparkSession, state_dir: str) -> DataFrame:
     """Accumulated url-recrawl flags, schema-stable when empty (same
     contract as :func:`read_dup_flags`)."""
@@ -527,17 +478,12 @@ def read_url_flags(spark: SparkSession, state_dir: str) -> DataFrame:
 
 
 def read_url_index(
-    spark: SparkSession,
-    state_dir: str,
-    batch_id: int,
-    new_pfx: list[int] | None = None,
+    spark: SparkSession, state_dir: str, batch_id: int
 ) -> DataFrame | None:
-    """The url index's pruned probe view (:func:`_read_index` over ``urls``
-    by ``url_pfx``): (canon_url, url, ingest_batch) rows — one per
-    canonical url and ingesting batch — or None. An index written with a
-    ``last_ts`` column still reads; the column is ignored."""
-    hist = _read_index(spark, state_dir, "urls", batch_id, new_pfx)
-    return None if hist is None else hist.select("canon_url", "url", "ingest_batch")
+    """The url index's probe view (:func:`_read_index` over ``urls``):
+    (canon_url, url, ingest_batch) rows — one per canonical url and
+    ingesting batch — of every batch before ``batch_id``, or None."""
+    return _read_index(spark, state_dir, "urls", batch_id)
 
 
 def process_url_batch(
@@ -555,10 +501,9 @@ def process_url_batch(
          every other spelling is flagged ``src='intra_batch'`` against the
          keeper;
       2. vs history: the keeper set probes the MAINTAINED url index at
-         ``state_dir/urls`` — partitioned (ingest_batch, url_pfx), probed
-         with a literal prefix IN-list exactly like the band index, so
-         probe I/O is bounded by the batch's own prefix coverage, never
-         the index's age. A keeper whose canonical url is already indexed
+         ``state_dir/urls`` — one ``ingest_batch=<id>`` directory per
+         batch; the probe reads every history batch's files and joins them
+         on ``canon_url``. A keeper whose canonical url is already indexed
          is flagged ``src='vs_history'`` against its first arrival: the
          keeper of the earliest ingesting batch (the index holds one per
          batch; first-arrival wins across batches — a stream cannot
@@ -571,18 +516,15 @@ def process_url_batch(
          itself and (via ``ingest_batch < batch_id`` in the probe) never
          matches its own prior uncommitted write.
 
-    The bucket modulus is recorded in ``urls/_INDEX_META.json`` on first
-    write and always wins over :data:`INDEX_BUCKETS` afterwards (same
-    invariant as the band index: a mismatched modulus would silently prune
-    true re-crawl matches). An index without that record, or whose
-    directories are not (ingest_batch, url_pfx) partitions, raises
-    :class:`BandIndexError` from the on-disk layout check, before any Spark
-    job runs and before any state is written.
+    An index whose entries are not ``ingest_batch=<id>`` directories of
+    parquet files (such as the older (ingest_batch, url_pfx) layout)
+    raises :class:`BandIndexError` from the on-disk layout check, before
+    any Spark job runs and before any state is written.
     """
     from iscc_specs_spark.operators.urls import canonical_url, url_dedup
 
     spark = batch_df.sparkSession
-    url_buckets = _index_buckets(state_dir, "urls")
+    _check_index(state_dir, "urls")
     batch = (
         batch_df.select("url", "warc_ts")
         .withColumn("canon_url", canonical_url("url"))
@@ -604,9 +546,7 @@ def process_url_batch(
         )
     )
 
-    keeper = kept.withColumn("url_pfx", _url_pfx(url_buckets))
-    new_pfx = _collect_pfx(keeper, "url_pfx")
-    hist = read_url_index(spark, state_dir, batch_id, new_pfx)
+    hist = read_url_index(spark, state_dir, batch_id)
     flags = intra
     if hist is not None:
         first = (
@@ -615,7 +555,7 @@ def process_url_batch(
             .select("canon_url", F.col("m.url").alias("dup_of"))
         )
         recrawl = (
-            keeper.join(first, "canon_url")
+            kept.join(first, "canon_url")
             # a re-crawl under the IDENTICAL spelling would flag itself
             # (url == dup_of): drop it — the page is not a dup of a
             # different spelling, and a self-loop flag would make the
@@ -631,12 +571,8 @@ def process_url_batch(
         )
         flags = intra.unionByName(recrawl)
 
-    _record_index_meta(state_dir, "urls", {"index_buckets": url_buckets})
     _write_batch(flags, batch_id, f"{state_dir}/url_flags")
-    _write_batch(
-        keeper.select("canon_url", "url", "url_pfx"), batch_id,
-        f"{state_dir}/urls", "url_pfx",
-    )
+    _write_batch(kept.select("canon_url", "url"), batch_id, f"{state_dir}/urls")
 
 
 def start_url_dedup_stream(

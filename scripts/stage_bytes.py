@@ -4,8 +4,8 @@ bytes per document — read from the parquet footers alone (no Spark job).
 Every stage with a ``<stage>.manifest.json`` next to its directory is
 listed. A column's bytes are its column chunks' compressed sizes summed
 over all row groups of all files; ``(footer+other)`` is the rest of the
-file bytes (footers, page indexes, magic). Partition columns (e.g. the
-bands stage's ``band_pfx``) live in directory names and cost no bytes.
+file bytes (footers, page indexes, magic). A partition column would live
+in directory names and cost no bytes; no ``run_dedup`` stage has one.
 The document count is the codes stage's row count.
 
 Usage: python scripts/stage_bytes.py OUT_DIR

@@ -179,7 +179,7 @@ def test_curation_fingerprint_covers_lsh_constants(monkeypatch):
 def test_lineage_and_metrics_recorded(spark, tmp_path):
     """Manifest lineage comes from the parquet footers: rows, files and
     bytes match what a Spark read of the stage sees, for every stage
-    run_dedup writes (the band_pfx-partitioned bands stage included)."""
+    run_dedup writes (the keys-only bands stage included)."""
     out = str(tmp_path / "metrics")
     pages = generate_pages(spark, 300, partitions=4)
     r = run_dedup(spark, pages, out, DedupConfig())
@@ -199,10 +199,10 @@ def test_lineage_and_metrics_recorded(spark, tmp_path):
 
 
 # bytes at rest per document of a cold run_dedup over the 300-page fixture,
-# the five stage manifests' ``bytes`` summed: 1300 measured, 23% headroom —
+# the five stage manifests' ``bytes`` summed: 825 measured, 23% headroom —
 # a bands stage carrying the verification payload, or a data_minhash codes
 # column, puts it at ~3300
-STATE_BYTES_PER_DOC_MAX = 1600
+STATE_BYTES_PER_DOC_MAX = 1015
 
 
 def test_run_dedup_job_budget(spark, tmp_path):
@@ -268,9 +268,41 @@ def test_process_dedup_batch_job_budget(spark, tmp_path):
     history = tracker.getJobIdsForGroup("stream_history")
     curate = tracker.getJobIdsForGroup("stream_curate")
     assert len(curated) == 60
-    assert 0 < len(first) <= 14, len(first)
-    assert 0 < len(history) <= 25, len(history)
+    assert 0 < len(first) <= 12, len(first)
+    assert 0 < len(history) <= 20, len(history)
     assert 0 < len(curate) <= 10, len(curate)
+
+
+def test_process_dedup_batch_jobs_flat_in_history(spark, tmp_path):
+    """A micro-batch's Spark jobs do not grow with the stream's age: seven
+    micro-batches into one state dir, and the last history batch runs as
+    many jobs as the first one. Each batch writes its band-index rows
+    into its own ingest_batch=<id> directory, at most one file per
+    partition of the batch."""
+    import glob
+
+    from pyspark.sql import functions as F
+
+    from iscc_specs_spark.operators.codegen import compute_codes
+    from iscc_specs_spark.streaming.ingest import process_dedup_batch
+
+    codes = compute_codes(generate_pages(spark, 70, partitions=2)).localCheckpoint(eager=True)
+    sc = spark.sparkContext
+    state = str(tmp_path / "stream_flat")
+    jobs = []
+    try:
+        for k in range(7):
+            batch = codes.where(F.crc32("url") % 7 == k).localCheckpoint(eager=True)
+            sc.setJobGroup(f"stream_flat_{k}", f"micro-batch {k}")
+            process_dedup_batch(batch, k, state)
+            jobs.append(len(sc.statusTracker().getJobIdsForGroup(f"stream_flat_{k}")))
+            files = glob.glob(f"{state}/bands/ingest_batch={k}/*")
+            assert 0 < len(files) <= batch.rdd.getNumPartitions(), files
+            assert all(f.endswith(".parquet") for f in files), files
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert jobs[-1] == jobs[1], jobs
 
 
 def test_process_url_batch_job_budget(spark, tmp_path):
@@ -305,8 +337,8 @@ def test_process_url_batch_job_budget(spark, tmp_path):
     first = tracker.getJobIdsForGroup("url_first")
     history = tracker.getJobIdsForGroup("url_history")
     assert read_url_flags(spark, state).where("src = 'vs_history'").count() == 40
-    assert 0 < len(first) <= 13, len(first)
-    assert 0 < len(history) <= 15, len(history)
+    assert 0 < len(first) <= 10, len(first)
+    assert 0 < len(history) <= 12, len(history)
 
 
 # the driver's dedup_pairs row (__spark_entry__._q_dedup_pairs)
@@ -419,30 +451,28 @@ def test_generate_pages_slices_union_to_full_range(spark):
 
 
 def test_band_stage_is_bucketed_at_rest(spark, tmp_path):
-    """The bands stage holds keys-only rows (url, band_id, band_hash)
-    partitioned by band_pfx — the streaming index's shape: its rows are
-    minhash_bands ∪ simhash_bands over the representative table, the
-    manifest records the layout and the directory has the pfx dirs. The
-    codes stage carries no data_minhash column. Killed after the bands
-    stage, a resume rebuilds the band rows in plan (the stage is never read
-    back), reproduces dup_pairs — Hamming columns included — and
-    clusters, and does not rewrite the stage."""
+    """The bands stage holds keys-only rows (url, band_id, band_hash),
+    unpartitioned — the streaming index's row shape: its rows are
+    band_keys over the representative table, and the directory holds
+    parquet files only, no partition dirs. The codes stage carries no
+    data_minhash column. Killed after the bands stage, a resume rebuilds
+    the band rows in plan (the stage is never read back), reproduces
+    dup_pairs — Hamming columns included — and clusters, and does not
+    rewrite the stage."""
     from iscc_specs_spark.operators import lsh
 
     out = str(tmp_path / "bandstage")
     pages = generate_pages(spark, 300, partitions=4)
     r1 = run_dedup(spark, pages, out, DedupConfig())
     store = r1["store"]
-    man = store.manifest("bands")
-    assert man["partition_by"] == ["band_pfx"]
-    pfx_dirs = [d for d in os.listdir(out + "/bands") if d.startswith("band_pfx=")]
-    assert len(pfx_dirs) > 1
+    assert "partition_by" not in store.manifest("bands")
+    assert not [
+        d for d in os.listdir(out + "/bands") if os.path.isdir(f"{out}/bands/{d}")
+    ]
     bands = store.read(spark, "bands")
-    assert bands.columns == ["url", "band_id", "band_hash", "band_pfx"]
-    slim = lsh.rep_codes(r1["codes"])
-    want = lsh.minhash_bands(slim).union(lsh.simhash_bands(slim))
-    got = sorted(map(tuple, bands.select("url", "band_id", "band_hash").collect()))
-    assert got == sorted(map(tuple, want.collect()))
+    assert bands.columns == ["url", "band_id", "band_hash"]
+    want = lsh.band_keys(lsh.rep_codes(r1["codes"]))
+    assert sorted(map(tuple, bands.collect())) == sorted(map(tuple, want.collect()))
     assert "data_minhash" not in store.read(spark, "codes").columns
     # resume (kill after the bands stage)
     pairs_1 = sorted(map(tuple, r1["dup_pairs"].collect()))

@@ -180,27 +180,6 @@ def test_history_bands_probed_from_maintained_index(spark, tmp_path):
     assert os.path.isdir(state + "/bands/ingest_batch=1")
 
 
-def test_band_index_writes_one_file_per_partition(spark, tmp_path):
-    """Each micro-batch writes one parquet file per ingest_batch=k/
-    band_pfx=p directory of the band index — at most INDEX_BUCKETS files
-    per batch however many tasks produced its band rows."""
-    import glob
-
-    from iscc_specs_spark.streaming.ingest import INDEX_BUCKETS, process_dedup_batch
-
-    state = str(tmp_path / "state_files")
-    pages = generate_pages(spark, 40, partitions=2)
-    codes = compute_codes(pages).repartition(4)
-    codes = codes.localCheckpoint(eager=True)
-    process_dedup_batch(codes.where("url like '%/p/0'"), 0, state)
-    process_dedup_batch(codes.where("url not like '%/p/0'"), 1, state)
-    for k in (0, 1):
-        dirs = glob.glob(f"{state}/bands/ingest_batch={k}/band_pfx=*")
-        assert 1 < len(dirs) <= INDEX_BUCKETS
-        for d in dirs:
-            assert len(glob.glob(d + "/*.parquet")) == 1, d
-
-
 def test_read_dup_flags_empty_state(spark, tmp_path):
     """A stream whose batches emitted zero flags leaves an empty partitioned
     dup_flags dir; read_dup_flags must return an empty, correctly-typed
@@ -421,92 +400,13 @@ def _mini_codes(spark, rows):
     )
 
 
-def test_band_index_probe_prunes_partitions(spark, tmp_path):
-    """The vs-history probe must statically prune the band index to the new
-    batch's own band_pfx partitions — per-batch probe I/O bounded by prefix
-    coverage, not index size.
-
-    Proof by poison row: a band-index row whose (band_id, band_hash) DOES
-    collide with the new batch but which sits under a band_pfx partition
-    directory the new batch's prefixes don't cover. Its codes row is a
-    hamming-0 match, so ANY implementation that lists that partition would
-    emit a vs_history flag for it; a partition-pruning probe never reads
-    the file. A genuine twin under the CORRECT prefix pins the probe as
-    still live (the test can't pass via a broken/empty probe)."""
-    from pyspark.sql import functions as F
-
-    from iscc_specs_spark.operators import lsh
-    from iscc_specs_spark.streaming.ingest import (
-        INDEX_BUCKETS,
-        band_pfx,
-        process_dedup_batch,
-    )
-
-    state = str(tmp_path / "state_prune")
-    mh = [7919 * i + 13 for i in range(64)]
-    new_url = "https://new.example/p/1"
-    genuine = "https://genuine.example/p/0"
-    poison = "https://poison.example/p/0"
-
-    # batch 0: the genuine near-dup (same signature → same band keys, same
-    # correctly-computed band_pfx partitions)
-    process_dedup_batch(
-        _mini_codes(spark, [(genuine, 5, 4242, mh, "top_g", None)]), 0, state
-    )
-    assert any(
-        d.startswith("band_pfx=")
-        for d in os.listdir(state + "/bands/ingest_batch=0")
-    )
-
-    # the new batch's band keys and their prefixes (what the probe will push)
-    new_batch = _mini_codes(spark, [(new_url, 5, 4242, mh, "top_n", None)])
-    nb = (
-        lsh.minhash_bands(new_batch)
-        .union(lsh.simhash_bands(new_batch))
-        .withColumn("p", band_pfx(INDEX_BUCKETS))
-    )
-    keys = nb.select("band_id", "band_hash", "p").collect()
-    new_pfx = {r["p"] for r in keys}
-    assert len(new_pfx) < INDEX_BUCKETS, "fixture needs uncovered prefixes"
-    wrong_pfx = min(set(range(INDEX_BUCKETS)) - new_pfx)
-    k = keys[0]
-
-    # poison: codes row is a hamming-0 match in history, band row carries a
-    # genuinely-colliding key but lives in an uncovered partition directory
-    (
-        _mini_codes(spark, [(poison, 5, 4242, mh, "top_p", None)])
-        .drop("warc_ts")
-        .withColumn("warc_ts", F.lit(None).cast("timestamp"))
-        .write.mode("append")
-        .parquet(state + "/codes/ingest_batch=0")
-    )
-    (
-        spark.createDataFrame(
-            [(poison, k["band_id"], k["band_hash"])],
-            "url string, band_id int, band_hash long",
-        )
-        .write.mode("append")
-        .parquet(f"{state}/bands/ingest_batch=0/band_pfx={wrong_pfx}")
-    )
-
-    process_dedup_batch(new_batch, 1, state)
-    hits = {
-        (r["url"], r["dup_of"])
-        for r in spark.read.parquet(state + "/dup_flags")
-        .where("src = 'vs_history'")
-        .collect()
-    }
-    assert (new_url, genuine) in hits, hits       # probe is live
-    assert all(d != poison for _, d in hits), (   # uncovered dir never read
-        f"probe scanned a band_pfx partition outside the batch's prefixes: {hits}"
-    )
-
-
 def test_band_index_probe_plan_is_pruned_scan(spark, tmp_path):
-    """read_band_index's plan must carry BOTH partition columns as
-    PartitionFilters (static pruning) and contain no Python/banding subtree
-    — the probe is a pure pruned parquet scan (pins the round-3 regression:
-    history is never re-banded per micro-batch)."""
+    """read_band_index's plan must carry ingest_batch as a PartitionFilter
+    (replay-safe pruning) and contain no Python/banding subtree — the
+    probe is a pure parquet scan (pins the round-3 regression: history is
+    never re-banded per micro-batch). A prefix list is a row filter of the
+    same scan, and keeps exactly the rows whose band_pfx is in it."""
+    from iscc_specs_spark.operators.lsh import band_pfx
     from iscc_specs_spark.streaming.ingest import (
         process_dedup_batch,
         read_band_index,
@@ -524,65 +424,30 @@ def test_band_index_probe_plan_is_pruned_scan(spark, tmp_path):
     pf = next(
         (ln for ln in plan.splitlines() if "PartitionFilters" in ln), ""
     )
-    assert "ingest_batch" in pf and "band_pfx" in pf, plan
+    assert "ingest_batch" in pf, plan
     for banned in ("MapInPandas", "ArrowEvalPython", "BatchEvalPython"):
         assert banned not in plan, plan
-
-
-def test_index_bucket_modulus_survives_restart(spark, tmp_path, monkeypatch):
-    """The band index's on-disk bucket modulus must win over a changed
-    INDEX_BUCKETS constant after a restart: probe prefixes computed with
-    a different modulus would prune away true vs-history matches
-    SILENTLY. _INDEX_META.json records the modulus at first write; a later
-    batch run under a different constant derives the stored one and still
-    flags the cross-batch near-dups."""
-    import json
-
-    from pyspark.sql import functions as F
-
-    from iscc_specs_spark.operators.lsh import band_geometry, band_pfx
-    from iscc_specs_spark.streaming import ingest
-
-    state = str(tmp_path / "state_modulus")
-    pages = generate_pages(spark, 40, partitions=2)
-    codes = compute_codes(pages).localCheckpoint(eager=True)
-    b0 = codes.where("url like '%/p/0'")
-    b1 = codes.where("url not like '%/p/0'")
-
-    assert ingest.INDEX_BUCKETS == 64
-    ingest.process_dedup_batch(b0, 0, state)
-    meta = {"index_buckets": 64, "band_geometry": band_geometry()}
-    with open(state + "/bands/_INDEX_META.json") as f:
-        assert json.load(f) == meta
-
-    # restart under a DIFFERENT constant: the stored layout must win
-    monkeypatch.setattr(ingest, "INDEX_BUCKETS", 8)
-    ingest.process_dedup_batch(b1, 1, state)
-    flags = spark.read.parquet(state + "/dup_flags").collect()
-    assert any(r["src"] == "vs_history" for r in flags), (
-        "cross-batch near-dups lost under a mismatched bucket modulus"
-    )
-    # batch 1's index rows went down under the stored modulus too (near-dups
-    # share many band keys, so the flags alone barely notice a wrong one)
-    rows = spark.read.parquet(state + "/bands").where("ingest_batch = 1")
-    assert rows.where(F.col("band_pfx") != band_pfx(64)).count() == 0
-    assert rows.where("band_pfx >= 8").count() > 0
-    with open(state + "/bands/_INDEX_META.json") as f:
-        assert json.load(f) == meta  # unchanged
+    every = read_band_index(spark, state, batch_id=99)
+    want = every.where(band_pfx().isin(3, 5, 11))
+    assert sorted(map(tuple, df.collect())) == sorted(map(tuple, want.collect()))
+    assert every.count() == 20  # 16 MinHash bands + 4 SimHash sub-keys
 
 
 def test_missing_or_unpartitioned_band_index_fails_loudly(spark, tmp_path):
     """process_dedup_batch is the band index's only writer and always
-    writes the (ingest_batch, band_pfx) layout. A state dir whose codes
-    history has no index, or whose index lacks band_pfx, must raise
-    BandIndexError naming the state dir from the on-disk layout check —
-    before any Spark job runs and before any state is written, so
-    dup_flags and codes stay exactly as they were."""
+    writes one ingest_batch=<id> directory of parquet files per batch. A
+    state dir whose codes history has no index, or whose index is in the
+    older (ingest_batch, band_pfx) layout, must raise BandIndexError
+    naming the state dir from the on-disk layout check — before any Spark
+    job runs and before any state is written, so dup_flags and codes stay
+    exactly as they were."""
+    import json
     import re
     import shutil
 
     import pytest
 
+    from iscc_specs_spark.operators.lsh import band_geometry, band_pfx
     from iscc_specs_spark.streaming.ingest import (
         BandIndexError,
         process_dedup_batch,
@@ -625,17 +490,23 @@ def test_missing_or_unpartitioned_band_index_fails_loudly(spark, tmp_path):
     assert snap("dup_flags", "codes") == before
     assert not os.path.exists(state + "/bands")
 
-    # (b) an index partitioned by ingest_batch only (no band_pfx), under
-    # a layout record of this build's geometry
+    # (b) the same rows in the older (ingest_batch, band_pfx) layout: under
+    # the record its writer left, and under this build's record
     (
-        spark.read.parquet(saved).drop("band_pfx")
-        .write.partitionBy("ingest_batch")
+        spark.read.parquet(saved).withColumn("band_pfx", band_pfx())
+        .write.partitionBy("ingest_batch", "band_pfx")
         .parquet(state + "/bands")
     )
-    shutil.copy(saved + "/_INDEX_META.json", state + "/bands")
-    before = snap("dup_flags", "codes", "bands")
-    batch_2("unpartitioned_band_index", re.escape(state + "/bands has no band_pfx"))
-    assert snap("dup_flags", "codes", "bands") == before
+    with open(saved + "/_INDEX_META.json") as f:
+        meta = json.load(f)
+    assert meta == {"band_geometry": band_geometry()}
+    old_meta = {"index_buckets": 64, **meta}
+    for record, match in ((old_meta, "records"), (meta, "band_pfx=")):
+        with open(state + "/bands/_INDEX_META.json", "w") as f:
+            json.dump(record, f)
+        before = snap("dup_flags", "codes", "bands")
+        batch_2("old_layout_band_index", re.escape(state + "/bands") + ".*" + match)
+        assert snap("dup_flags", "codes", "bands") == before
 
 
 def test_band_index_of_another_geometry_fails_loudly(spark, tmp_path):

@@ -1,7 +1,8 @@
 """Streaming canonical-URL crawl dedup (streaming/ingest.py:
 process_url_batch / start_url_dedup_stream): intra-batch keeper pick,
-vs-history re-crawl flagging off the maintained (ingest_batch, url_pfx)
-index, replay idempotence, static probe pruning."""
+vs-history re-crawl flagging off the maintained url index (one
+ingest_batch=<id> directory per batch), replay idempotence, replay-safe
+probe pruning."""
 
 from __future__ import annotations
 
@@ -9,6 +10,7 @@ import datetime
 
 from pyspark.sql import functions as F
 
+from iscc_specs_spark.operators.urls import canonical_url
 from iscc_specs_spark.streaming import ingest as I
 
 
@@ -82,90 +84,54 @@ def test_url_batch_replay_is_idempotent(spark, tmp_path):
 
 
 def test_url_index_probe_prunes_partitions(spark, tmp_path):
-    """Static pruning, proven two ways (same protocol as the band index
-    tests): the probe plan carries both partition columns as
-    PartitionFilters, and a poison index row — same canonical url, BETTER
-    first-arrival sort key, but planted under an uncovered url_pfx
-    directory — is never read, while the genuine history row still flags."""
+    """Replay-safe pruning, proven two ways: the probe plan carries
+    ingest_batch as a PartitionFilter, and a poison index row planted in
+    the probing batch's own ingest_batch directory (an earlier write of a
+    replayed batch) is never read, while the genuine history row still
+    flags."""
     state = str(tmp_path / "state")
     genuine = "https://a.example/p"
     I.process_url_batch(_pages(spark, [(genuine, _ts(10))]), 0, state)
 
-    # the probe's prefix for canon(a) and a deliberately-wrong partition
-    canon_pfx = (
-        spark.read.parquet(f"{state}/urls")
-        .select("canon_url", "url_pfx").collect()
-    )
-    assert len(canon_pfx) == 1
-    canon, right = canon_pfx[0]["canon_url"], canon_pfx[0]["url_pfx"]
-    wrong = (right + 1) % I.INDEX_BUCKETS
-    # poison: earlier ts AND lexicographically smaller url — a full-scan
-    # probe would pick it as dup_of; a pruning probe never lists its dir
+    # poison: the only indexed keeper of canon(b), under ingest_batch=1 —
+    # a probe that read it would flag batch 1's spelling of b as vs_history
+    canon_b = spark.range(1).select(
+        canonical_url(F.lit("https://b.example/q")).alias("c")
+    ).first()["c"]
     spark.createDataFrame(
-        [(canon, "https://0poison.example/p", _ts(1))],
-        "canon_url string, url string, last_ts timestamp",
-    ).write.mode("append").parquet(
-        f"{state}/urls/ingest_batch=0/url_pfx={wrong}"
-    )
+        [(canon_b, "https://0poison.example/q")],
+        "canon_url string, url string",
+    ).write.mode("append").parquet(f"{state}/urls/ingest_batch=1")
 
-    # plan shape: both partition columns pushed as PartitionFilters
-    df = I.read_url_index(spark, state, batch_id=1, new_pfx=[right])
+    df = I.read_url_index(spark, state, batch_id=1)
     plan = df._jdf.queryExecution().executedPlan().toString()
     pf = next(
         (ln for ln in plan.splitlines() if "PartitionFilters" in ln), ""
     )
-    assert "ingest_batch" in pf and "url_pfx" in pf, plan
+    assert "ingest_batch" in pf, plan
 
     # behavior: re-crawl flags against the genuine keeper, never the poison
     I.process_url_batch(
-        _pages(spark, [("https://www.a.example/p", _ts(20))]), 1, state
+        _pages(spark, [("https://www.a.example/p", _ts(20)),
+                       ("https://www.b.example/q", _ts(21))]), 1, state
     )
     hits = {
         (f["url"], f["dup_of"])
         for f in I.read_url_flags(spark, state)
         .where("src = 'vs_history'").collect()
     }
-    assert ("https://www.a.example/p", genuine) in hits, hits
-    assert all("0poison" not in d for _, d in hits), hits
-
-
-def test_url_index_modulus_survives_restart(spark, tmp_path, monkeypatch):
-    """The url index's on-disk bucket modulus must win over a changed
-    INDEX_BUCKETS constant after a restart: probe prefixes computed with
-    a different modulus would prune away true re-crawl matches SILENTLY.
-    Sixteen canonical urls spread over the prefixes, so a probe under the
-    wrong modulus misses some of their re-crawls."""
-    import json
-
-    state = str(tmp_path / "state_modulus")
-    first = [(f"https://s{i}.example/p", _ts(i)) for i in range(16)]
-    assert I.INDEX_BUCKETS == 64
-    I.process_url_batch(_pages(spark, first), 0, state)
-    with open(f"{state}/urls/_INDEX_META.json") as f:
-        assert json.load(f) == {"index_buckets": 64}
-
-    # restart under a DIFFERENT constant: the stored layout must win
-    monkeypatch.setattr(I, "INDEX_BUCKETS", 8)
-    again = [(f"https://www.s{i}.example/p", _ts(100 + i)) for i in range(16)]
-    I.process_url_batch(_pages(spark, again), 1, state)
-    hits = {
-        (f["url"], f["dup_of"])
-        for f in I.read_url_flags(spark, state)
-        .where("src = 'vs_history'").collect()
-    }
-    assert hits == {(a[0], b[0]) for a, b in zip(again, first)}, hits
-    with open(f"{state}/urls/_INDEX_META.json") as f:
-        assert json.load(f) == {"index_buckets": 64}  # unchanged
+    assert hits == {("https://www.a.example/p", genuine)}, hits
 
 
 def test_unpartitioned_url_index_fails_loudly(spark, tmp_path):
     """process_url_batch is the url index's only writer and always writes
-    the (ingest_batch, url_pfx) layout under its ``_INDEX_META.json``
-    record. An index partitioned by ingest_batch only, or one whose record
-    was lost (the modulus its prefixes were written under is unknown), must
-    raise BandIndexError naming the state dir — before any state is
-    written, so url_flags and urls stay exactly as they were, and for the
-    unpartitioned index before any Spark job runs."""
+    one ingest_batch=<id> directory of parquet files per batch, with no
+    layout record. An index in the older (ingest_batch, url_pfx) layout —
+    under the ``_INDEX_META.json`` record its writer left, or without it
+    — must raise BandIndexError naming the state dir from the on-disk
+    layout check, before any Spark job runs and before any state is
+    written, so url_flags and urls stay exactly as they were."""
+    import json
     import os
     import re
     import shutil
@@ -180,6 +146,7 @@ def test_unpartitioned_url_index_fails_loudly(spark, tmp_path):
     I.process_url_batch(
         _pages(spark, [("https://b.example/q", _ts(3))]), 1, state
     )
+    assert not os.path.exists(f"{state}/urls/_INDEX_META.json")
 
     def snap(*subs):
         out = {}
@@ -190,41 +157,40 @@ def test_unpartitioned_url_index_fails_loudly(spark, tmp_path):
                         out[os.path.relpath(os.path.join(root, f), state)] = fh.read()
         return out
 
-    def batch_2():
-        I.process_url_batch(
-            _pages(spark, [("https://a.example/p?utm_source=z", _ts(4))]),
-            2, state,
-        )
-
-    # (a) an index partitioned by ingest_batch only, under its layout record
     saved = state + "__urls"
     shutil.move(f"{state}/urls", saved)
     (
-        spark.read.parquet(saved).drop("url_pfx")
-        .write.partitionBy("ingest_batch")
+        spark.read.parquet(saved)
+        .withColumn(
+            "url_pfx", F.pmod(F.xxhash64("canon_url"), F.lit(64)).cast("int")
+        )
+        .write.partitionBy("ingest_batch", "url_pfx")
         .parquet(f"{state}/urls")
     )
-    shutil.copy(saved + "/_INDEX_META.json", state + "/urls")
-    before = snap("url_flags", "urls")
     sc = spark.sparkContext
-    sc.setJobGroup("unpartitioned_url_index", "batch 2 over an unpartitioned index")
-    try:
-        with pytest.raises(I.BandIndexError, match=re.escape(state + "/urls has no url_pfx")):
-            batch_2()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    # the on-disk layout check raises before any Spark job
-    assert not sc.statusTracker().getJobIdsForGroup("unpartitioned_url_index")
-    assert snap("url_flags", "urls") == before
-
-    # (b) the index as written, with its layout record deleted
-    shutil.rmtree(f"{state}/urls")
-    shutil.move(saved, f"{state}/urls")
-    os.remove(f"{state}/urls/_INDEX_META.json")
-    before = snap("url_flags", "urls")
-    with pytest.raises(I.BandIndexError, match=re.escape(state)):
-        batch_2()
-    assert snap("url_flags", "urls") == before
+    meta_path = f"{state}/urls/_INDEX_META.json"
+    for record in ({"index_buckets": 64}, None):
+        if record is None:
+            os.remove(meta_path)
+        else:
+            with open(meta_path, "w") as f:
+                json.dump(record, f)
+        before = snap("url_flags", "urls")
+        sc.setJobGroup("old_layout_url_index", "batch 2 over an old index")
+        try:
+            with pytest.raises(
+                I.BandIndexError,
+                match=re.escape(state + "/urls holds ingest_batch=") + ".*url_pfx=",
+            ):
+                I.process_url_batch(
+                    _pages(spark, [("https://a.example/p?utm_source=z", _ts(4))]),
+                    2, state,
+                )
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        # the on-disk layout check raises before any Spark job
+        assert not sc.statusTracker().getJobIdsForGroup("old_layout_url_index")
+        assert snap("url_flags", "urls") == before
 
 
 def test_url_stream_end_to_end(spark, tmp_path):

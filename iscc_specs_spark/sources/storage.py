@@ -7,6 +7,17 @@ lineage: rows, files and bytes).  Swapping ``format("parquet")`` for
 ``format("iceberg")`` + snapshot-id bookkeeping is localized to this module
 (SURVEY.md §7.1).
 
+Codec at rest: every table the engine keeps — each ``StageStore`` stage
+and each streaming state table (``streaming/ingest.py``) — is written as
+``PARQUET_CODEC`` (zstd) parquet, set on the writer so the on-disk format
+does not depend on how the session was built. zstd's entropy coder
+shrinks what snappy cannot: random hex ``tophash`` strings and the zero
+high halves of ``uint32`` MinHash values in ``array<long>`` slots.
+Iceberg's own default parquet codec is zstd, so the Iceberg swap keeps
+it. Readers pick the codec per file, so tables written with another codec
+(Spark's default, snappy) still read, resume and probe; a directory may
+mix codecs.
+
 Lineage comes from the parquet footers the write just produced
 (``pyarrow.parquet.read_metadata``), not from a Spark rescan: recording a
 stage costs no Spark job. Re-reads pass the written schema
@@ -27,6 +38,9 @@ from typing import Any
 
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
+
+# the parquet codec of every table the engine keeps at rest
+PARQUET_CODEC = "zstd"
 
 
 def config_hash(cfg: dict[str, Any]) -> str:
@@ -123,7 +137,9 @@ class StageStore:
         """Materialize a stage and its manifest without reading it back.
         Recording the stage adds no Spark job to the write's own."""
         t0 = time.monotonic()
-        df.write.mode("overwrite").parquet(self._dir(stage))
+        df.write.mode("overwrite").option("compression", PARQUET_CODEC).parquet(
+            self._dir(stage)
+        )
         wall_ms = int((time.monotonic() - t0) * 1000)
         self._write_manifest(df, stage, wall_ms, extra_metrics)
 

@@ -34,6 +34,21 @@ Near-dup clustering is a global fixpoint, not a per-window computation, so
 windowed streaming state would be the wrong tool (SURVEY.md §2.7):
 ``curate_state`` closes the accumulated flags into clusters and canonical
 picks on demand, with the batch operators.
+
+State layout: a state dir holds one table per subdirectory, each a set of
+``ingest_batch=<id>`` directories of parquet files written by
+:func:`_write_batch` in the storage seam's codec
+(``sources.storage.PARQUET_CODEC``, zstd):
+
+    codes/      codes history (``codegen.CODES_SCHEMA``)
+    bands/      band index (url, band_id, band_hash), + _INDEX_META.json
+    dup_flags/  dup flags (``FLAGS_SCHEMA``)
+    urls/       url index (canon_url, url)
+    url_flags/  url re-crawl flags (``URL_FLAGS_SCHEMA``)
+
+Readers pick the codec per file, so a state dir written with snappy
+parquet (Spark's default) still takes new batches, and the batches
+written after it are zstd.
 """
 
 from __future__ import annotations
@@ -43,6 +58,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from iscc_specs_spark.operators.codegen import CODES_SCHEMA, compute_codes
+from iscc_specs_spark.sources.storage import PARQUET_CODEC
 
 PAGES_SCHEMA = (
     "url string, warc_ts timestamp, html binary, text string, lang string"
@@ -76,13 +92,14 @@ def _read_state(
 
 
 def _write_batch(df: DataFrame, batch_id: int, path: str) -> None:
-    """Write one micro-batch's rows into its own ``ingest_batch=<id>``
-    partition with dynamic partition overwrite, so a replayed batch
-    overwrites its own earlier write."""
+    """Write one micro-batch's rows, as ``PARQUET_CODEC`` parquet, into its
+    own ``ingest_batch=<id>`` partition with dynamic partition overwrite,
+    so a replayed batch overwrites its own earlier write."""
     (
         df.withColumn("ingest_batch", F.lit(batch_id))
         .write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")
+        .option("compression", PARQUET_CODEC)
         .partitionBy("ingest_batch")
         .parquet(path)
     )

@@ -199,10 +199,10 @@ def test_lineage_and_metrics_recorded(spark, tmp_path):
 
 
 # bytes at rest per document of a cold run_dedup over the 300-page fixture,
-# the five stage manifests' ``bytes`` summed: 825 measured, 23% headroom —
-# a bands stage carrying the verification payload, or a data_minhash codes
-# column, puts it at ~3300
-STATE_BYTES_PER_DOC_MAX = 1015
+# the five stage manifests' ``bytes`` summed: 618 measured as zstd parquet
+# (825 as snappy), 23% headroom — a bands stage carrying the verification
+# payload, or a data_minhash codes column, puts it at ~3300
+STATE_BYTES_PER_DOC_MAX = 760
 
 
 def test_run_dedup_job_budget(spark, tmp_path):

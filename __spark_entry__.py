@@ -805,7 +805,7 @@ def _q_streaming_url_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _stream_state(spark: SparkSession, sf_dir: str) -> str:
     """Build the two-batch (+replay) streaming dedup state once per process;
-    returns the state dir (codes / dup_flags / bands tables)."""
+    returns the state dir (codes / dup_flags tables)."""
     import shutil
 
     from iscc_specs_spark.streaming.ingest import process_dedup_batch

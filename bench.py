@@ -464,9 +464,10 @@ def run_recall_streaming(
     The SAME planted corpus, fed through ``process_dedup_batch`` in
     ``n_batches`` arrival-ordered doc_id slices against an on-disk state
     dir — so every mechanism unique to the streaming path is on the
-    measured path: the maintained band index (one ``ingest_batch=<id>``
-    directory per batch), the history probes, the hot-bucket hub routing of
-    the ~1%-of-corpus template farm (whose members land in EVERY batch),
+    measured path: the codes history (one ``ingest_batch=<id>``
+    directory per batch), the history probes that band it, the
+    hot-bucket hub routing of the ~1%-of-corpus template farm (whose
+    members land in EVERY batch),
     and flags-as-edges curation. Recall/precision are computed over
     ``curate_state``'s clusters with the same contingency-table pair
     counting as the batch ladder, so the two JSON files are directly
@@ -614,8 +615,8 @@ def run_scaling(n_docs: int) -> None:
             f"{sc_['n_docs']} --batches {sc_['n_batches']}`) — the SAME"
             " planted corpus fed through `process_dedup_batch` in"
             f" {sc_['n_batches']} arrival-ordered micro-batches against an"
-            " on-disk state dir, so the maintained band index, the"
-            " partition-pruned history probes, and the hot-bucket HUB"
+            " on-disk state dir, so the partition-pruned history probes"
+            " (banded from the codes history), and the hot-bucket HUB"
             " routing of the template farm (members in every batch) are all"
             f" on the measured path: **recall {sc_['recall']}, precision"
             f" {sc_['precision']}** over {sc_['truth_pairs']:,} truth pairs"

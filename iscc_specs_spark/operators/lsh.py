@@ -34,11 +34,13 @@ per page, all exactly verified downstream (correctness unaffected; the
 minhash track, whose 64-bit band keys never saturate, carries the targeted
 recall). At 10^9+ pages the sim track should shard into p permuted tables
 keyed on wider prefixes (Manku et al. 2007's rotation scheme) — table count
-and prefix width are constants here, recorded in both fingerprints
-(:func:`band_geometry`), not architecture; the banding/bucket/verify
-machinery here is unchanged by that swap. A change to how band keys are
-computed must change the recorded geometry, so stale band state fails
-loudly instead of silently matching nothing.
+and prefix width are constants here, recorded in the run_dedup and
+run_curation stage fingerprints (:func:`band_geometry`), not architecture;
+the banding/bucket/verify machinery here is unchanged by that swap. A
+change to how band keys are computed must change the recorded geometry,
+so a batch out dir's stages are recomputed instead of resumed. The
+streaming state keeps no band keys: its probe bands the codes history
+with this build's geometry.
 """
 
 from __future__ import annotations
@@ -172,11 +174,12 @@ def simhash_bands(codes: DataFrame) -> DataFrame:
 
 
 def band_keys(codes: DataFrame) -> DataFrame:
-    """(url, band_id, band_hash) — the keys-only band index rows, MinHash
+    """(url, band_id, band_hash) — the keys-only band rows, MinHash
     bands and SimHash sub-keys in one explode: the row set of
-    ``minhash_bands ∪ simhash_bands``. The one shape of every band table
-    at rest: the batch ``bands`` stage (plans/dedup.py) and the streaming
-    maintained index (streaming/ingest.py)."""
+    ``minhash_bands ∪ simhash_bands``. The one shape of every band table:
+    the batch ``bands`` stage (plans/dedup.py) and the streaming
+    vs-history probe's rows, banded from the codes history
+    (streaming/ingest.py)."""
     return _explode_bands(codes, "url", _band_structs())
 
 
@@ -251,10 +254,11 @@ def verified_bucket_pairs(
     chain — no post-hoc join back to the code table.
 
     The verification fields (cid_body, simhash, tophash ≈ 80 B) ride along
-    with each band row, so in-bucket pairs are verified inline by
-    :func:`is_dup` on the exploded combination structs. Only the band rows
-    shuffle; the 512 B minhash column, which the dup predicate never reads,
-    stays out of the payload.
+    with each band row, so in-bucket pairs come from an equi self-join of
+    the capped buckets' rows on (band_id, band_hash), ``url_a < url_b``,
+    verified inline by :func:`is_dup` — the shape of the DuckDB twin's
+    ``cand_cold``. Only the band rows shuffle; the 512 B minhash column,
+    which the dup predicate never reads, stays out of the payload.
 
     Oversized buckets (> bucket_cap, e.g. template farms): hub-and-spoke
     edges to the bucket-min url, O(k) not O(k²), never collected into one
@@ -274,40 +278,32 @@ def verified_bucket_pairs(
     else:
         band_rows = band_rows.select("m", "band_id", "band_hash")
 
+    keys = ["band_id", "band_hash"]
     cold_rows, hubs = hot_buckets(band_rows, bucket_cap, F.col("m.url"))
-    # cold buckets hold ≤ bucket_cap rows by construction, so size(ms)
-    # after the gather is the only filter left
-    members = cold_rows.groupBy("band_id", "band_hash").agg(
-        F.collect_list("m").alias("ms")
-    ).where(F.size("ms") >= 2)
+    # cold buckets hold ≤ bucket_cap rows by construction, so the equi
+    # self-join emits ≤ bucket_cap² rows per key; url_a < url_b drops each
+    # row's pair with itself, and with the other crawl of its url (one
+    # url, two tophash groups) — never a (url, url) pair
+    x, y = F.col("x"), F.col("y")
 
     def side(m):
         return m["cid_body"], m["simhash"], m["tophash"]
 
-    def pairs_with(x, i):
-        # every later member y of the bucket that passes the predicate
-        def pair(y, j):
-            return F.when(
-                (j > i) & is_dup(side(x), side(y)),
-                F.struct(
-                    F.least(x["url"], y["url"]).alias("url_a"),
-                    F.greatest(x["url"], y["url"]).alias("url_b"),
-                    hamming64(x["cid_body"], y["cid_body"]).alias("cid_hamming"),
-                    hamming64(x["simhash"], y["simhash"]).alias("simhash_hamming"),
-                    (x["tophash"] == y["tophash"]).alias("exact_dup"),
-                ),
-            )
-
-        return F.filter(F.transform("ms", pair), lambda p: p.isNotNull())
-
     pairs_small = (
-        members.select(F.explode(F.flatten(F.transform("ms", pairs_with))).alias("p"))
-        .select("p.url_a", "p.url_b", "p.cid_hamming", "p.simhash_hamming", "p.exact_dup")
-        .withColumn("verified", F.lit(True))
+        cold_rows.select(F.col("m").alias("x"), *keys)
+        .join(cold_rows.select(F.col("m").alias("y"), *keys), keys)
+        .where((x["url"] < y["url"]) & is_dup(side(x), side(y)))
+        .select(
+            x["url"].alias("url_a"), y["url"].alias("url_b"),
+            hamming64(x["cid_body"], y["cid_body"]).alias("cid_hamming"),
+            hamming64(x["simhash"], y["simhash"]).alias("simhash_hamming"),
+            (x["tophash"] == y["tophash"]).alias("exact_dup"),
+            F.lit(True).alias("verified"),
+        )
     )
 
     pairs_big = (
-        band_rows.join(F.broadcast(hubs), ["band_id", "band_hash"])
+        band_rows.join(F.broadcast(hubs), keys)
         .where(F.col("m.url") != F.col("hub"))
         .select(
             F.col("hub").alias("url_a"), F.col("m.url").alias("url_b"),

@@ -108,7 +108,7 @@ def run_dedup(
         # only band keys, not the payload verification reads
         slim = lsh.rep_codes(codes).localCheckpoint(eager=True)
         # the bands stage: keys-only rows (url, band_id, band_hash) at rest,
-        # unpartitioned, the streaming band index's row shape. Nothing
+        # unpartitioned, the streaming probe's band-row shape. Nothing
         # reads it back: the metrics pass and the pair generator consume
         # the payload-carrying band rows in-plan over the checkpointed slim
         # table, which a resume rebuilds anyway

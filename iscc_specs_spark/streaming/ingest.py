@@ -17,19 +17,22 @@ each micro-batch replay idempotent; the sink writes each batch into its own
 so a replayed batch overwrites itself instead of duplicating.
 
 Dedup runs incrementally on the same state: ``process_dedup_batch`` flags
-each micro-batch's duplicates, within the batch and against a maintained
-band index of every earlier batch, with the batch engine's own candidate
-router and pair verifier (operators/lsh.py); ``process_url_batch`` flags
-re-crawls against a maintained url index. The two indexes share one
-layout — each micro-batch's rows in its own ``ingest_batch=<id>``
-directory of parquet files — and one reader of it: one on-disk layout
-check, run before any Spark job (:func:`_check_index`), and one
-replay-safe reader (:func:`_read_index`). A vs-history probe reads every
-history batch's index files; the broadcast key semi-join then keeps the
-rows that share a key with the new batch. Spark lists a table's
-``ingest_batch=*`` directories serially, and in one parallel
-listing job once there are more than 32 of them. Every state table is
-read with its schema given (:func:`_read_state`), never inferred.
+each micro-batch's duplicates, within the batch and against the codes
+history of every earlier batch, with the batch engine's own candidate
+router and pair verifier (operators/lsh.py). Its vs-history probe bands
+the history it reads for verification with ``lsh.band_keys`` (native
+Spark SQL, no kernel work), so band keys are never kept at rest and are
+always this build's. ``process_url_batch`` flags re-crawls against a
+maintained url index, each micro-batch's rows in its own
+``ingest_batch=<id>`` directory of parquet files, under an on-disk
+layout check run before any Spark job (:func:`_check_index`). Both
+probes read the history through one replay-safe reader
+(:func:`_read_history`, ``ingest_batch < batch_id``), every history
+batch's files; a broadcast key semi-join then keeps the rows that share
+a key with the new batch. Spark lists a table's ``ingest_batch=*``
+directories serially, and in one parallel listing job once there are
+more than 32 of them. Every state table is read with its schema given
+(:func:`_read_state`), never inferred.
 Near-dup clustering is a global fixpoint, not a per-window computation, so
 windowed streaming state would be the wrong tool (SURVEY.md §2.7):
 ``curate_state`` closes the accumulated flags into clusters and canonical
@@ -41,14 +44,14 @@ State layout: a state dir holds one table per subdirectory, each a set of
 (``sources.storage.PARQUET_CODEC``, zstd):
 
     codes/      codes history (``codegen.CODES_SCHEMA``)
-    bands/      band index (url, band_id, band_hash), + _INDEX_META.json
     dup_flags/  dup flags (``FLAGS_SCHEMA``)
     urls/       url index (canon_url, url)
     url_flags/  url re-crawl flags (``URL_FLAGS_SCHEMA``)
 
 Readers pick the codec per file, so a state dir written with snappy
 parquet (Spark's default) still takes new batches, and the batches
-written after it are zstd.
+written after it are zstd. A ``bands/`` band index that older builds
+kept beside the codes history is neither read nor deleted.
 """
 
 from __future__ import annotations
@@ -70,13 +73,9 @@ PAGES_SCHEMA = (
 # schema inference cannot read.
 FLAGS_SCHEMA = "url string, dup_of string, src string, ingest_batch int"
 
-# the codes history's schema, and each maintained index's schema: the band
-# index at ``state_dir/bands``, the url index at ``state_dir/urls``
+# the codes history's schema, and the url index's at ``state_dir/urls``
 _CODES_HISTORY_SCHEMA = CODES_SCHEMA + ", ingest_batch int"
-_INDEXES = {
-    "bands": "url string, band_id int, band_hash long, ingest_batch int",
-    "urls": "canon_url string, url string, ingest_batch int",
-}
+_URL_INDEX_SCHEMA = "canon_url string, url string, ingest_batch int"
 
 
 def _read_state(
@@ -89,6 +88,17 @@ def _read_state(
     if not os.path.isdir(path):
         return None
     return spark.read.schema(schema).parquet(path)
+
+
+def _read_history(
+    spark: SparkSession, path: str, schema: str, batch_id: int
+) -> DataFrame | None:
+    """Batch ``batch_id``'s view of the state table at ``path``: the rows
+    of every earlier batch, ``ingest_batch < batch_id`` — replay-safe (a
+    retried batch never sees its own earlier write) and a PartitionFilter
+    in the plan — or None iff the table does not exist."""
+    df = _read_state(spark, path, schema)
+    return None if df is None else df.where(F.col("ingest_batch") < F.lit(batch_id))
 
 
 def _write_batch(df: DataFrame, batch_id: int, path: str) -> None:
@@ -192,15 +202,14 @@ def start_incremental_dedup_stream(
       1. codes for the new pages (same Arrow-vectorized stage as batch);
       2. within-batch dup pairs via the standard ``lsh.dup_pairs``;
       3. batch-vs-history candidates: the *new* batch's band keys probe
-         the MAINTAINED band index at ``state_dir/bands`` — every history
-         batch's index files, filtered to the new keys by a broadcast
-         semi-join (:func:`process_dedup_batch`) — and pass the same dup
-         predicate;
-      4. append codes to ``state_dir/codes``, flags to
-         ``state_dir/dup_flags`` and band rows to ``state_dir/bands``,
-         each into an ``ingest_batch=<id>`` partition with dynamic
-         overwrite — a replayed batch overwrites itself, so the stream
-         stays exactly-once end-to-end.
+         the band keys of the codes history at ``state_dir/codes`` —
+         every history batch's files, banded in plan and filtered to the
+         new keys by a broadcast semi-join (:func:`process_dedup_batch`)
+         — and pass the same dup predicate;
+      4. append codes to ``state_dir/codes`` and flags to
+         ``state_dir/dup_flags``, each into an ``ingest_batch=<id>``
+         partition with dynamic overwrite — a replayed batch overwrites
+         itself, so the stream stays exactly-once end-to-end.
 
     Flags schema: (url, dup_of, src, ingest_batch) — ``dup_of`` is the
     matched earlier url (within-batch matches point to the pair minimum).
@@ -213,45 +222,15 @@ def start_incremental_dedup_stream(
     return _start_stream(codes_stream, sink, checkpoint_dir, trigger_once)
 
 
-def _check_index(
-    state_dir: str, sub: str, geometry: dict | None = None
-) -> None:
-    """The ON-DISK layout check of the index at ``state_dir/sub``, before
-    any Spark job: every entry Spark lists must be an ``ingest_batch=<id>``
-    directory of parquet files, and the band index's ``_INDEX_META.json``
-    record must hold exactly this build's band ``geometry`` — keys
-    computed another way match nothing, so vs-history flags would drop to
-    zero with no error. Codes history without a band index, a record that
-    is missing or holds anything else, and an index in another layout
-    (such as the older (ingest_batch, pfx) directories) raise
-    :class:`BandIndexError`. An index not written yet passes; its first
-    writer records the geometry (underscore-prefixed files are invisible
-    to Spark's parquet listing). Local-FS JSON is the sandbox seam; at
-    warehouse scale it is a field of the table's manifest
-    (sources/storage.py)."""
+def _check_index(path: str) -> None:
+    """The ON-DISK layout check of the url index at ``path``, before any
+    Spark job: every entry Spark lists must be an ``ingest_batch=<id>``
+    directory of parquet files. An index in another layout (such as the
+    older (ingest_batch, url_pfx) directories) raises
+    :class:`BandIndexError`; an index not written yet passes."""
     import glob
-    import json
     import os
 
-    path = os.path.join(state_dir, sub)
-    if not os.path.isdir(path):
-        if sub == "bands" and os.path.isdir(os.path.join(state_dir, "codes")):
-            raise BandIndexError(
-                f"state dir {state_dir} holds codes history but no band "
-                f"index at {path}; rebuild the state dir"
-            )
-        return
-    if geometry is not None:
-        meta_path = os.path.join(path, "_INDEX_META.json")
-        meta = {}
-        if os.path.exists(meta_path):
-            with open(meta_path) as f:
-                meta = json.load(f)
-        if meta != {"band_geometry": geometry}:
-            raise BandIndexError(
-                f"index {path} records {meta or 'nothing'}, not band "
-                f"geometry {geometry}; rebuild the state dir"
-            )
     # glob skips ``_``/``.`` names, as Spark's listing does
     bad = [
         p for p in glob.glob(os.path.join(path, "[!_]*"))
@@ -268,42 +247,10 @@ def _check_index(
         )
 
 
-def _record_band_geometry(state_dir: str, geometry: dict) -> None:
-    import json
-    import os
-
-    meta = os.path.join(state_dir, "bands", "_INDEX_META.json")
-    if not os.path.exists(meta):
-        os.makedirs(os.path.dirname(meta), exist_ok=True)
-        # atomic: a crash mid-write must not leave a truncated JSON file —
-        # _check_index would raise on EVERY later batch (the one crash
-        # window with no self-healing path)
-        tmp = meta + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump({"band_geometry": geometry}, f)
-        os.replace(tmp, meta)
-
-
 class BandIndexError(RuntimeError):
-    """A streaming state dir whose maintained streaming index is missing or
-    not in the layout its only writer writes: ``ingest_batch=<id>``
-    directories of parquet files, under a record of this build's band
-    geometry for process_dedup_batch's band index."""
-
-
-def _read_index(
-    spark: SparkSession, state_dir: str, sub: str, batch_id: int
-) -> DataFrame | None:
-    """Batch ``batch_id``'s view of the maintained index at
-    ``state_dir/sub``: the rows of every earlier batch, ``ingest_batch <
-    batch_id`` (replay-safe, and a PartitionFilter in the plan). The
-    probe reads all of their files; its key join keeps the matching rows.
-    Returns None iff the index does not exist yet; an index that fails
-    the layout check (:func:`_check_index`) raises
-    :class:`BandIndexError`."""
-    _check_index(state_dir, sub)
-    idx = _read_state(spark, f"{state_dir}/{sub}", _INDEXES[sub])
-    return None if idx is None else idx.where(F.col("ingest_batch") < F.lit(batch_id))
+    """A streaming state dir whose maintained url index is not in the
+    layout its only writer writes: ``ingest_batch=<id>`` directories of
+    parquet files."""
 
 
 def read_band_index(
@@ -312,18 +259,21 @@ def read_band_index(
     batch_id: int,
     new_pfx: list[int] | None = None,
 ) -> DataFrame | None:
-    """The band index's probe view (:func:`_read_index` over ``bands``):
-    (url, band_id, band_hash) rows, or None. ``new_pfx`` keeps the rows
-    whose :func:`lsh.band_pfx` is in it — a row filter, not a partition
-    filter: every history file is still read."""
-    from iscc_specs_spark.operators.lsh import band_pfx
+    """The vs-history probe's band rows for batch ``batch_id``:
+    :func:`lsh.band_keys` over the codes history of every earlier batch
+    (:func:`_read_history`), as (url, band_id, band_hash) rows — 20 per
+    history row — or None before the first batch. ``new_pfx`` keeps the
+    rows whose :func:`lsh.band_pfx` is in it — a row filter, not a
+    partition filter: every history file is still read."""
+    from iscc_specs_spark.operators import lsh
 
-    hb = _read_index(spark, state_dir, "bands", batch_id)
-    if hb is None:
+    hist = _read_history(
+        spark, f"{state_dir}/codes", _CODES_HISTORY_SCHEMA, batch_id
+    )
+    if hist is None:
         return None
-    if new_pfx is not None:
-        hb = hb.where(band_pfx().isin(sorted(new_pfx)))
-    return hb.select("url", "band_id", "band_hash")
+    hb = lsh.band_keys(hist)
+    return hb if new_pfx is None else hb.where(lsh.band_pfx().isin(sorted(new_pfx)))
 
 
 def process_dedup_batch(
@@ -343,32 +293,21 @@ def process_dedup_batch(
     flag every doc as a hamming-0 dup of itself). ``ingest_batch`` is the
     partition column, so the filter is partition pruning, not a scan.
 
-    The historical band table is a *maintained index*, not a per-batch
-    recomputation: each batch appends its own band rows to
-    ``state_dir/bands`` (same ``ingest_batch`` partition-overwrite sink as
-    codes/flags, so replay overwrites itself), and the vs-history probe
-    reads that table directly. Without the index, banding the accumulated
-    codes table costs O(|history|) *kernel work* per micro-batch. With it,
-    the banding is O(|batch|), and the probe reads every history batch's
-    index files (:func:`_read_index`); a broadcast semi-join on the new
-    batch's (band_id, band_hash) keys keeps the matching rows. Each batch
-    writes its index rows straight into its ``ingest_batch=<id>``
-    directory, one file per partition of the batch. Spark lists the
-    ``ingest_batch=*`` directories serially, and in one parallel
-    listing job once there are more than 32 of them.
-
-    A state dir this function did not write fails loudly: when codes
-    history exists but ``state_dir/bands`` does not, the index's entries
-    are not ``ingest_batch=<id>`` directories of parquet files, or its
-    record is missing or does not hold exactly :func:`lsh.band_geometry`,
-    :class:`BandIndexError` is raised by the on-disk layout check, before
-    any Spark job runs and before any state is written.
+    The vs-history probe bands the codes history it already reads to
+    verify candidates: :func:`lsh.band_keys` over every earlier batch's
+    rows (all of them, not only exact-dup representatives, so every
+    history row is findable) is native Spark SQL over the stored MinHash
+    and SimHash — no kernel work, and keys of this build's
+    :func:`lsh.band_geometry`, which cannot go stale. A broadcast
+    semi-join on the new batch's (band_id, band_hash) keys keeps the
+    matching rows. The probe reads every history batch's codes files;
+    Spark lists the ``ingest_batch=*`` directories serially, and in one
+    parallel listing job once there are more than 32 of them. A ``bands/``
+    index that older builds kept in the state dir is ignored.
     """
     from iscc_specs_spark.operators import lsh
 
     spark = batch_df.sparkSession
-    geometry = lsh.band_geometry()
-    _check_index(state_dir, "bands", geometry)
     batch = batch_df.localCheckpoint(eager=True)
 
     # one representative table per batch: the within-batch pairs and the
@@ -380,30 +319,27 @@ def process_dedup_batch(
         F.lit("intra_batch").alias("src"),
     )
 
-    # this batch's contribution to the band index (ALL rows, matching the
-    # probe semantics: every historical row must be findable, not just its
-    # exact-dup representative)
-    own_bands = lsh.band_keys(batch)
-
-    hist = _read_state(spark, f"{state_dir}/codes", _CODES_HISTORY_SCHEMA)
+    # exclude this batch's own partition: a replayed batch must not match
+    # against its own prior (uncommitted) write
+    hist = _read_history(
+        spark, f"{state_dir}/codes", _CODES_HISTORY_SCHEMA, batch_id
+    )
     if hist is not None:
-        # exclude this batch's own partition: a replayed batch must not
-        # match against its own prior (uncommitted) write
-        hist = hist.where(F.col("ingest_batch") < F.lit(batch_id))
         # nb feeds the key semi-join and the broadcast probe — lazy, each
         # reference would re-run the banding
         nb = lsh.band_keys(new_slim).localCheckpoint(eager=True)
-        hb = read_band_index(spark, state_dir, batch_id)
         # vs-history candidates with the engine-standard hot-bucket cap
-        # (lsh.hot_buckets): the index restricted to the new batch's band
-        # keys (semi-join — each history row matches once per key, NOT once
-        # per new url) splits into cold rows, paired with every new member,
-        # and one min-url hub per hot bucket, which takes each new member's
-        # single edge — a template-farm band key costs O(|new|) candidates
-        # per batch, not O(|new| × |hist_bucket|)
+        # (lsh.hot_buckets): the history's band rows restricted to the new
+        # batch's band keys (semi-join — each history row matches once per
+        # key, NOT once per new url) split into cold rows, paired with
+        # every new member, and one min-url hub per hot bucket, which
+        # takes each new member's single edge — a template-farm band key
+        # costs O(|new|) candidates per batch, not O(|new| × |hist_bucket|)
         nbn = F.broadcast(nb.withColumnRenamed("url", "new_url"))
         new_keys = nb.select("band_id", "band_hash").dropDuplicates()
-        hb_new = hb.join(F.broadcast(new_keys), ["band_id", "band_hash"])
+        hb_new = lsh.band_keys(hist).join(
+            F.broadcast(new_keys), ["band_id", "band_hash"]
+        )
         cold_rows, hubs = lsh.hot_buckets(hb_new, bucket_cap, F.col("url"))
         cand = (
             cold_rows.withColumnRenamed("url", "url_b")
@@ -423,12 +359,10 @@ def process_dedup_batch(
     else:
         flags = intra
 
-    # flags + codes + this batch's band-index rows, each into its own
-    # ingest_batch partition (replay overwrites itself in all three)
-    _record_band_geometry(state_dir, geometry)
+    # flags + codes, each into its own ingest_batch partition (replay
+    # overwrites itself in both)
     _write_batch(flags, batch_id, f"{state_dir}/dup_flags")
     _write_batch(batch, batch_id, f"{state_dir}/codes")
-    _write_batch(own_bands, batch_id, f"{state_dir}/bands")
 
 
 def curate_state(spark: SparkSession, state_dir: str) -> DataFrame:
@@ -497,10 +431,14 @@ def read_url_flags(spark: SparkSession, state_dir: str) -> DataFrame:
 def read_url_index(
     spark: SparkSession, state_dir: str, batch_id: int
 ) -> DataFrame | None:
-    """The url index's probe view (:func:`_read_index` over ``urls``):
-    (canon_url, url, ingest_batch) rows — one per canonical url and
-    ingesting batch — of every batch before ``batch_id``, or None."""
-    return _read_index(spark, state_dir, "urls", batch_id)
+    """The url index's probe view: (canon_url, url, ingest_batch) rows —
+    one per canonical url and ingesting batch — of every batch before
+    ``batch_id`` (:func:`_read_history`), or None. An index that fails
+    the layout check (:func:`_check_index`) raises
+    :class:`BandIndexError`."""
+    path = f"{state_dir}/urls"
+    _check_index(path)
+    return _read_history(spark, path, _URL_INDEX_SCHEMA, batch_id)
 
 
 def process_url_batch(
@@ -541,7 +479,7 @@ def process_url_batch(
     from iscc_specs_spark.operators.urls import canonical_url, url_dedup
 
     spark = batch_df.sparkSession
-    _check_index(state_dir, "urls")
+    _check_index(f"{state_dir}/urls")
     batch = (
         batch_df.select("url", "warc_ts")
         .withColumn("canon_url", canonical_url("url"))

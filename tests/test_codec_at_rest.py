@@ -18,7 +18,7 @@ from iscc_specs_spark.sources.pages import generate_pages
 from iscc_specs_spark.sources.storage import parquet_files
 from iscc_specs_spark.streaming import ingest as I
 
-STATE_TABLES = ("codes", "bands", "dup_flags", "urls", "url_flags")
+STATE_TABLES = ("codes", "dup_flags", "urls", "url_flags")
 STAGES = ("codes", "bands", "dup_pairs", "clusters", "canonical")
 
 
@@ -65,8 +65,8 @@ def _ingest(spark, state, code_batches):
 
 
 def test_every_table_at_rest_is_zstd(spark, tmp_path):
-    """run_dedup's stages, and the codes history, band index, dup flags,
-    url index and url flags after two batches of each stream: every column
+    """run_dedup's stages, and the codes history, dup flags, url index
+    and url flags after two batches of each stream: every column
     chunk of every file is ZSTD, and every table holds rows."""
     out = str(tmp_path / "out")
     state = str(tmp_path / "state")
@@ -91,11 +91,9 @@ def test_snappy_history_takes_zstd_batches(spark, tmp_path, monkeypatch):
     monkeypatch.setattr(I, "PARQUET_CODEC", "snappy")
     I.process_dedup_batch(batches[0], 0, mixed)
     monkeypatch.undo()
-    for t in ("codes", "bands"):
-        assert _codecs(os.path.join(mixed, t)) == {"SNAPPY"}
+    assert _codecs(os.path.join(mixed, "codes")) == {"SNAPPY"}
     I.process_dedup_batch(batches[1], 1, mixed)
-    for t in ("codes", "bands"):
-        assert _codecs(os.path.join(mixed, t, "ingest_batch=1")) == {"ZSTD"}
+    assert _codecs(os.path.join(mixed, "codes", "ingest_batch=1")) == {"ZSTD"}
 
     def flags(state):
         return sorted(map(tuple, I.read_dup_flags(spark, state).collect()))

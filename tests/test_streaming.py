@@ -127,59 +127,6 @@ def test_pending_batch_replay_is_idempotent(spark, tmp_path):
     assert not any(url == dup_of for url, dup_of, _, _ in replayed)
 
 
-def test_history_bands_probed_from_maintained_index(spark, tmp_path):
-    """The vs-history probe must read the persisted band index, not re-band
-    the accumulated codes table (O(|history|) kernel work per micro-batch).
-
-    Proof by corruption: after batch 0 lands, zero out minhash+simhash in
-    the *history codes* partition (keeping cid/tophash, which verification
-    uses). A later near-dup batch can then only find its vs_history
-    candidate through the band rows persisted at batch-0 time — an
-    implementation that re-derives bands from history codes sees garbage
-    signatures and finds nothing."""
-    from pyspark.sql import functions as F
-
-    from iscc_specs_spark.streaming.ingest import process_dedup_batch
-
-    state = str(tmp_path / "state_bandidx")
-    pages = generate_pages(spark, 40, partitions=2)
-    codes = compute_codes(pages).localCheckpoint(eager=True)
-    # block 0: positions 0..1 are a planted duplicate pair (k=2)
-    b0 = codes.where("url like '%/p/0'")
-    b1 = codes.where("url like '%/p/1'")
-
-    process_dedup_batch(b0, 0, state)
-    assert os.path.isdir(state + "/bands/ingest_batch=0")
-
-    # corrupt the signatures in history CODES (band index stays intact)
-    corrupted = (
-        spark.read.parquet(state + "/codes")
-        .where("ingest_batch = 0")
-        .withColumn(
-            "minhash", F.transform("minhash", lambda x: F.lit(0).cast("long"))
-        )
-        .withColumn("simhash", F.lit(123456789).cast("long"))
-        .localCheckpoint(eager=True)  # break file lineage before overwrite
-    )
-    (
-        corrupted.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("ingest_batch")
-        .parquet(state + "/codes")
-    )
-
-    process_dedup_batch(b1, 1, state)
-    flags = spark.read.parquet(state + "/dup_flags")
-    hits = {
-        (r["url"], r["dup_of"])
-        for r in flags.where("src = 'vs_history'").collect()
-    }
-    assert any(
-        url.endswith("/p/1") and dup_of.endswith("/p/0") for url, dup_of in hits
-    ), hits
-    assert os.path.isdir(state + "/bands/ingest_batch=1")
-
-
 def test_read_dup_flags_empty_state(spark, tmp_path):
     """A stream whose batches emitted zero flags leaves an empty partitioned
     dup_flags dir; read_dup_flags must return an empty, correctly-typed
@@ -401,11 +348,12 @@ def _mini_codes(spark, rows):
 
 
 def test_band_index_probe_plan_is_pruned_scan(spark, tmp_path):
-    """read_band_index's plan must carry ingest_batch as a PartitionFilter
-    (replay-safe pruning) and contain no Python/banding subtree — the
-    probe is a pure parquet scan (pins the round-3 regression: history is
-    never re-banded per micro-batch). A prefix list is a row filter of the
-    same scan, and keeps exactly the rows whose band_pfx is in it."""
+    """read_band_index bands the codes history in plan: the plan carries
+    ingest_batch as a PartitionFilter of the codes-history scan
+    (replay-safe pruning) and holds no Python — the banding is native
+    Spark SQL, never kernel work per micro-batch. A prefix list is a row
+    filter over the same scan, and keeps exactly the rows whose band_pfx
+    is in it; each history doc gives 20 rows."""
     from iscc_specs_spark.operators.lsh import band_pfx
     from iscc_specs_spark.streaming.ingest import (
         process_dedup_batch,
@@ -433,125 +381,92 @@ def test_band_index_probe_plan_is_pruned_scan(spark, tmp_path):
     assert every.count() == 20  # 16 MinHash bands + 4 SimHash sub-keys
 
 
-def test_missing_or_unpartitioned_band_index_fails_loudly(spark, tmp_path):
-    """process_dedup_batch is the band index's only writer and always
-    writes one ingest_batch=<id> directory of parquet files per batch. A
-    state dir whose codes history has no index, or whose index is in the
-    older (ingest_batch, band_pfx) layout, must raise BandIndexError
-    naming the state dir from the on-disk layout check — before any Spark
-    job runs and before any state is written, so dup_flags and codes stay
-    exactly as they were."""
+def test_recrawled_url_is_never_its_own_dup(spark, tmp_path):
+    """One url crawled twice into one input — different bytes, so two
+    exact-dup groups, with near-dup content — shares every band bucket
+    with itself. lsh.dup_pairs must not pair the url with itself, and
+    process_dedup_batch must not flag it as a dup of itself."""
+    from iscc_specs_spark.operators import lsh
+    from iscc_specs_spark.streaming.ingest import process_dedup_batch, read_dup_flags
+
+    mh = list(range(64))
+    a, b = "https://a.example/p", "https://b.example/p"
+    codes = _mini_codes(
+        spark,
+        [(a, 5, 7, mh, "t_0", None), (a, 5, 7, mh, "t_1", None),
+         (b, 5, 7, mh, "t_2", None)],
+    )
+    pairs = {(r["url_a"], r["url_b"], r["src"]) for r in lsh.dup_pairs(codes).collect()}
+    assert pairs == {(a, b, "lsh")}, pairs
+    state = str(tmp_path / "state_self")
+    process_dedup_batch(codes, 0, state)
+    flags = {
+        (r["url"], r["dup_of"], r["src"])
+        for r in read_dup_flags(spark, state).collect()
+    }
+    assert flags == {(b, a, "intra_batch")}, flags
+
+
+def test_old_band_index_is_ignored(spark, tmp_path):
+    """Older builds kept a band index at state_dir/bands; the vs-history
+    probe now bands the codes history. A state dir holding such an index
+    — here in the older (ingest_batch, band_pfx) layout under a record of
+    another geometry — takes its next batch with the flags and curated
+    rows of a fresh state dir, and its bands/ is neither read nor changed."""
     import json
-    import re
     import shutil
 
-    import pytest
+    from pyspark.sql import functions as F
 
-    from iscc_specs_spark.operators.lsh import band_geometry, band_pfx
+    from iscc_specs_spark.operators import lsh
     from iscc_specs_spark.streaming.ingest import (
-        BandIndexError,
+        curate_state,
         process_dedup_batch,
+        read_dup_flags,
     )
 
-    state = str(tmp_path / "state_bad_index")
-    pages = generate_pages(spark, 60, partitions=2)
-    codes = compute_codes(pages).localCheckpoint(eager=True)
-    b0 = codes.where("url like '%/p/0'")
-    b1 = codes.where("url like '%/p/1'")
-    b2 = codes.where("url not like '%/p/0' and url not like '%/p/1'")
-    process_dedup_batch(b0, 0, state)
-    process_dedup_batch(b1, 1, state)
+    codes = compute_codes(generate_pages(spark, 60, partitions=2)).localCheckpoint(eager=True)
+    b0, b1 = (
+        codes.where(F.crc32("url") % 2 == k).localCheckpoint(eager=True)
+        for k in (0, 1)
+    )
+    fresh, old = str(tmp_path / "fresh"), str(tmp_path / "old")
+    for state in (fresh, old):
+        process_dedup_batch(b0, 0, state)
+    bands = old + "/bands"
+    shutil.rmtree(bands, ignore_errors=True)
+    (
+        lsh.band_keys(b0).withColumn("ingest_batch", F.lit(0))
+        .withColumn("band_pfx", lsh.band_pfx())
+        .write.partitionBy("ingest_batch", "band_pfx").parquet(bands)
+    )
+    geometry = dict(lsh.band_geometry(), rows=lsh.ROWS + 1)
+    with open(bands + "/_INDEX_META.json", "w") as f:
+        json.dump({"index_buckets": 64, "band_geometry": geometry}, f)
 
-    def snap(*subs):
+    def snap():
         out = {}
-        for sub in subs:
-            for root, _, files in os.walk(os.path.join(state, sub)):
-                for f in files:
-                    with open(os.path.join(root, f), "rb") as fh:
-                        out[os.path.relpath(os.path.join(root, f), state)] = fh.read()
+        for root, _, files in os.walk(bands):
+            for name in files:
+                with open(os.path.join(root, name), "rb") as fh:
+                    out[os.path.relpath(os.path.join(root, name), bands)] = fh.read()
         return out
 
-    sc = spark.sparkContext
+    before = snap()
+    for state in (fresh, old):
+        process_dedup_batch(b1, 1, state)
+    assert snap() == before
+    assert not os.path.exists(fresh + "/bands")
 
-    def batch_2(group, match):
-        sc.setJobGroup(group, "batch 2 over a bad band index")
-        try:
-            with pytest.raises(BandIndexError, match=match):
-                process_dedup_batch(b2, 2, state)
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-        assert not sc.statusTracker().getJobIdsForGroup(group), group
+    def flags(state):
+        return sorted(map(tuple, read_dup_flags(spark, state).collect()))
 
-    # (a) codes history without a band index
-    saved = state + "__bands"
-    shutil.move(state + "/bands", saved)
-    before = snap("dup_flags", "codes")
-    batch_2("no_band_index", re.escape(state))
-    assert snap("dup_flags", "codes") == before
-    assert not os.path.exists(state + "/bands")
+    def curated(state):
+        return sorted(map(tuple, curate_state(spark, state).collect()))
 
-    # (b) the same rows in the older (ingest_batch, band_pfx) layout: under
-    # the record its writer left, and under this build's record
-    (
-        spark.read.parquet(saved).withColumn("band_pfx", band_pfx())
-        .write.partitionBy("ingest_batch", "band_pfx")
-        .parquet(state + "/bands")
-    )
-    with open(saved + "/_INDEX_META.json") as f:
-        meta = json.load(f)
-    assert meta == {"band_geometry": band_geometry()}
-    old_meta = {"index_buckets": 64, **meta}
-    for record, match in ((old_meta, "records"), (meta, "band_pfx=")):
-        with open(state + "/bands/_INDEX_META.json", "w") as f:
-            json.dump(record, f)
-        before = snap("dup_flags", "codes", "bands")
-        batch_2("old_layout_band_index", re.escape(state + "/bands") + ".*" + match)
-        assert snap("dup_flags", "codes", "bands") == before
-
-
-def test_band_index_of_another_geometry_fails_loudly(spark, tmp_path):
-    """A band index built with another band-key geometry (or recording
-    none, or with no record file) holds keys no new batch can match: vs-history flags would drop
-    to zero with no error. process_dedup_batch must raise BandIndexError
-    from the index's JSON record alone, before writing any state."""
-    import json
-
-    import pytest
-
-    from iscc_specs_spark.operators.lsh import band_geometry
-    from iscc_specs_spark.streaming.ingest import (
-        BandIndexError,
-        process_dedup_batch,
-    )
-
-    state = str(tmp_path / "state_geometry")
-    pages = generate_pages(spark, 40, partitions=2)
-    codes = compute_codes(pages).localCheckpoint(eager=True)
-    b0 = codes.where("url like '%/p/0'")
-    b1 = codes.where("url not like '%/p/0'")
-    process_dedup_batch(b0, 0, state)
-
-    meta_path = state + "/bands/_INDEX_META.json"
-    with open(meta_path) as f:
-        meta = json.load(f)
-    assert meta["band_geometry"] == band_geometry()
-    other = dict(meta["band_geometry"], rows=meta["band_geometry"]["rows"] + 1)
-    sc = spark.sparkContext
-    # another geometry, a record without one, and no record at all
-    stale = ({**meta, "band_geometry": other}, {"index_buckets": 64}, None)
-    for record in stale:
-        if record is None:
-            os.remove(meta_path)
-        else:
-            with open(meta_path, "w") as f:
-                json.dump(record, f)
-        sc.setJobGroup("stale_geometry", "batch 1 over a stale index")
-        with pytest.raises(BandIndexError, match="band geometry"):
-            process_dedup_batch(b1, 1, state)
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        assert not sc.statusTracker().getJobIdsForGroup("stale_geometry")
-        for sub in ("dup_flags", "codes", "bands"):
-            assert not os.path.exists(f"{state}/{sub}/ingest_batch=1"), sub
+    assert any(f[2] == "vs_history" for f in flags(fresh))
+    assert flags(old) == flags(fresh)
+    assert curated(old) == curated(fresh)
 
 
 def test_curate_state_one_row_per_recrawled_url(spark, tmp_path):

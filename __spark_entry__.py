@@ -616,7 +616,6 @@ def _curated(spark: SparkSession, sf_dir: str) -> str:
     own codes table (dedup/codes) for the DuckDB twins."""
     import shutil
 
-    from iscc_specs_spark.plans.curate import CurateConfig, run_curation
     from iscc_specs_spark.sources.pages import pages_from_documents
 
     out = os.path.join(_stage_dir(sf_dir), "curation")
@@ -633,16 +632,15 @@ def _curated(spark: SparkSession, sf_dir: str) -> str:
         eval_pages = pages.where(
             F.element_at(F.split("url", "/"), -1).cast("long") % 37 == 5
         ).select("url", "text")
-        run_curation(
+        curate.run_curation(
             spark,
             pages,
             out,
-            CurateConfig(
+            curate.CurateConfig(
                 semantic=True,
-                semantic_hash="md5",
                 sample_fractions={"en": 0.8, "de": 0.6, "fr": 0.5},
                 sample_default=0.4,
-                sample_hash="md5",
+                hash_fn="md5",
             ),
             eval_pages=eval_pages,
         )
@@ -1030,6 +1028,7 @@ from iscc_specs_spark.operators.textstats import (  # noqa: E402
     QUALITY_STOPWORDS,
     STOPWORDS,
 )
+from iscc_specs_spark.plans import curate  # noqa: E402
 
 _BPE_RE = BPE_TOKEN_RE.replace("'", "''")
 _PUNCT_RE = PUNCT_RE.replace("'", "''")
@@ -1057,7 +1056,7 @@ _COS = (
 )
 
 
-_CURATION_DEC = {"n": 13, "eval_where": "doc_id % 37 = 5"}
+_CURATION_DEC = {"n": curate.DECONTAM_N, "eval_where": "doc_id % 37 = 5"}
 _CURATION_SMP = {
     "thresholds": {"en": 800000, "de": 600000, "fr": 500000},
     "default": 400000,
@@ -1066,13 +1065,12 @@ _CURATION_SMP = {
 
 def _CURATION_SEM(stage: str) -> dict:
     """Staged-model paths + params of the curation run's SemDeDup stage
-    (must mirror _curated's CurateConfig: md5 hash, dim 64, threshold 0.9,
-    StageStore layout under <stage>/curation)."""
+    (StageStore layout under <stage>/curation)."""
     return {
         "cent_path": f"{stage}/curation/sem_centroids/*.parquet",
         "asg_path": f"{stage}/curation/sem_assign/*.parquet",
-        "dim": 64,
-        "threshold": 0.9,
+        "dim": curate.SEMANTIC_DIM,
+        "threshold": curate.SEMANTIC_THRESHOLD,
     }
 
 
@@ -1224,12 +1222,14 @@ def oracle_sql() -> dict[str, str]:
         "streaming_url_dedup": _o.streaming_url_dedup_sql(),
         "curation_corpus": _o.curation_corpus_sql(
             f"{stage}/curation/dedup/codes/*.parquet",
+            min_quality=curate.MIN_QUALITY,
             semantic=_CURATION_SEM(stage),
             decontam=_CURATION_DEC,
             sample=_CURATION_SMP,
         ),
         "curation_funnel": _o.curation_funnel_sql(
             f"{stage}/curation/dedup/codes/*.parquet",
+            min_quality=curate.MIN_QUALITY,
             semantic=_CURATION_SEM(stage),
             decontam=_CURATION_DEC,
             sample=_CURATION_SMP,

@@ -147,6 +147,9 @@ def suffix_ranks(
     the full range sort. A caller that reads the ranks more than once
     materializes them itself (``localCheckpoint(eager=True)``); the
     doubling path (longer prefixes) already returns checkpointed ranks.
+    :func:`sa_long_matches`, and through it the curation plan's
+    ``substring_exact`` stage, takes this direct path and reads the ranks
+    exactly once.
     """
     txt = F.coalesce(F.col(text_col), F.lit(""))
     n = F.length(txt)

@@ -8,32 +8,32 @@ the same page under many url spellings collapses to one crawl record,
 latest warc_ts wins — the cheapest duplicate class, removed before even
 the quality projection runs → ⓪c optional domain gate
 (CurateConfig.domain_min_quality): per-registrable-domain aggregate
-quality drops content farms as whole sites → ⓪ quality gate (narrow native-SQL scoring
-+ filter — cheap pruning BEFORE any expensive kernel work) → ⓪b optional benchmark
-decontamination (active when ``run_curation`` receives ``eval_pages``):
-13-gram eval-overlap docs are dropped BEFORE the kernel ever codes them,
-so a leaked benchmark can never become a cluster's canonical
+quality drops content farms as whole sites → ⓪ quality gate (narrow
+native-SQL scoring + filter — cheap pruning BEFORE any expensive kernel
+work) → ⓪b optional benchmark decontamination (active when
+``run_curation`` receives ``eval_pages``): docs sharing a
+DECONTAM_N-gram with the eval set are dropped BEFORE the kernel ever
+codes them, so a leaked benchmark can never become a cluster's canonical
 representative → ①–④ near-dup detection + clustering + canonical pick
 (plans/dedup.py:run_dedup, resumable) → ⑤ corpus (canonical survivors
 only) with token accounting → ⑤b optional exact long-match removal
 (CurateConfig.substring_cut, Lee et al. 2022 ExactSubstr): residual
-cross-document spans ≥ min_len chars (shared boilerplate, quoted
-passages) are cut keep-first from the canonical text and token
+cross-document spans ≥ SUBSTRING_MIN_LEN chars (shared boilerplate,
+quoted passages) are cut keep-first from the canonical text and token
 accounting is recomputed — rewrites, not drops, so the funnel records
 ``docs_rewritten_substring``/``chars_cut_substring`` instead of a drop
 term; ``substring_exact`` swaps the winnowed screen for the suffix-array
 instrument (every span found, byte-verified) → ⑥ optional SemDeDup
-semantic stage
-(CurateConfig.semantic): hashing-trick text embeddings + staged quantizer
-+ keep-the-novel per group — the syntactic tracks upstream catch copies,
-this stage drops paraphrase-level redundancy the paper shows syntactic
-dedup misses → ⑦ optional stratified mixing sample
+semantic stage (CurateConfig.semantic): hashing-trick text embeddings +
+staged quantizer + keep-the-novel per group — the syntactic tracks
+upstream catch copies, this stage drops paraphrase-level redundancy the
+paper shows syntactic dedup misses → ⑦ optional stratified mixing sample
 (CurateConfig.sample_fractions): deterministic hash-threshold draw per
 language — mixing weights apply to the CLEAN corpus → ⑧ optional DSIR
 selection (CurateConfig.dsir_k + a ``target_pages`` table): the dsir_k
 most target-like documents survive a deterministic Gumbel-top-k draw
-under hashed-n-gram importance weights (operators/dsir.py) — the data-
-selection budget is the very last decision.
+under hashed-n-gram importance weights (operators/dsir.py) — the
+data-selection budget is the very last decision.
 
 Every stage materializes through the same StageStore seam as run_dedup
 (parquet snapshot + manifest + per-stage metrics), so a killed run resumes
@@ -44,13 +44,14 @@ auditor can read it.
 Scale notes: the quality gate is a pure projection+filter (whole-stage
 codegen, zero shuffle) so it prunes the corpus before the Python codegen
 stage ever sees it; everything downstream inherits run_dedup's posture
-(skew-capped LSH, O(log n) connected components, broadcast canonical
-window per cluster id).
+(skew-capped LSH, O(log n) connected components, and a skew-free
+canonical pick: one ``min_by`` per cluster id plus an equi-join, no
+window — plans/dedup.py).
 """
 
 from __future__ import annotations
 
-from dataclasses import asdict, dataclass, field
+from dataclasses import asdict, dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -59,6 +60,19 @@ from iscc_specs_spark.operators.textstats import quality_scores, token_counts
 from iscc_specs_spark.plans.dedup import DedupConfig, run_dedup
 from iscc_specs_spark.plans.dedup import _fingerprint as dedup_fingerprint
 from iscc_specs_spark.sources.storage import StageStore, config_hash
+
+
+# The stages' tuning values. They are recorded in the stage fingerprint,
+# so an edit to one recomputes the stages, as an edit to an LSH constant
+# recomputes run_dedup's.
+MIN_QUALITY = 0.35  # ⓪ quality gate: keep pages scoring at least this
+DECONTAM_N = 13  # ⓪b eval-overlap gram width
+SUBSTRING_MIN_LEN = 48  # ⑤b shortest cross-document span cut, in chars
+SEMANTIC_THRESHOLD = 0.9  # ⑥ cosine at which two docs are one group
+SEMANTIC_DIM = 64  # ⑥ hashed-BoW embedding width
+SEMANTIC_K_LISTS = 8  # ⑥ quantizer lists
+SEMANTIC_ITERS = 2  # ⑥ quantizer training iterations
+DSIR_BUCKETS = 4096  # ⑧ hashed n-gram feature buckets
 
 
 @dataclass
@@ -72,41 +86,24 @@ class CurateConfig:
     # falls below the threshold — content farms fail as a site, not page
     # by page. Active when set.
     domain_min_quality: float | None = None
-    min_quality: float = 0.35
-    dedup: DedupConfig = field(default_factory=DedupConfig)
     # ⑥ optional SemDeDup stage over the canonical corpus: hashing-trick
     # text embeddings → ivf_build quantizer → within-list cosine groups →
-    # keep-the-novel representative (operators/semantic.py). hash_fn 'md5'
-    # makes the whole stage cross-engine value-checkable (the driver row's
-    # posture); production default 'xxh64'.
+    # keep-the-novel representative (operators/semantic.py)
     semantic: bool = False
-    semantic_threshold: float = 0.9
-    semantic_dim: int = 64
-    semantic_k_lists: int = 8
-    semantic_iters: int = 2
-    semantic_hash: str = "xxh64"
-    # ⓪b decontamination gram width (the stage runs iff run_curation gets
-    # an eval_pages table — the benchmark is external input, not config)
-    decontam_n: int = 13
     # ⑤b optional exact long-match removal over the canonical corpus
     # (Lee et al. 2022 ExactSubstr): verified cross-document spans ≥
-    # substring_min_len chars are cut from the higher-url doc (keep-first),
-    # then token accounting is recomputed on the rewritten text. Same
-    # md5-for-oracle / xxh64-production hash dual as the other stages.
+    # SUBSTRING_MIN_LEN chars are cut from the higher-url doc (keep-first),
+    # then token accounting is recomputed on the rewritten text
     substring_cut: bool = False
-    substring_min_len: int = 48
-    substring_hash: str = "xxh64"
     # substring_exact=True swaps the winnowed probabilistic anchor screen
     # for the suffix-array instrument (operators/suffixarray.py): every
-    # cross-document span >= substring_min_len is found and byte-verified —
+    # cross-document span >= SUBSTRING_MIN_LEN is found and byte-verified —
     # the per-shard EXACT posture, quadratic-free but round-heavier
     substring_exact: bool = False
     # ⑦ optional stratified mixing sample over the final corpus: stratum →
-    # fraction (strata absent from the map get sample_default). Same
-    # md5-for-oracle / xxh64-production dual as the semantic stage.
+    # fraction (strata absent from the map get sample_default)
     sample_fractions: dict | None = None
     sample_default: float = 0.0
-    sample_hash: str = "xxh64"
     # ⑧ optional DSIR selection (Xie et al. 2023): keep the dsir_k docs
     # whose hashed-n-gram profile is most target-like (Gumbel-top-k, i.e.
     # weighted sampling without replacement). Active when ``run_curation``
@@ -114,17 +111,25 @@ class CurateConfig:
     # external input, like the decontamination benchmark. Runs last: data
     # selection is a budget decision over the already-clean corpus.
     dsir_k: int | None = None
-    dsir_buckets: int = 4096
-    dsir_hash: str = "xxh64"
+    # the hash of every hashed stage (⑤b anchors, ⑥ features, ⑦ sample
+    # draw, ⑧ features): 'md5' makes each decision cross-engine
+    # value-checkable (the driver row's posture); production 'xxh64'
+    hash_fn: str = "xxh64"
 
 
 def _fingerprint(cfg: CurateConfig, decontam: bool, dsir: bool) -> str:
-    """The config plus which optional gates run. The nested dedup config
-    hashes as run_dedup's own fingerprint, so an edit to an LSH constant
-    recomputes every stage built from its clusters, not only the dedup
-    sub-plan's."""
+    """The config, the stage constants and which optional gates run. The
+    dedup sub-plan hashes as run_dedup's own fingerprint, so an edit to an
+    LSH constant recomputes every stage built from its clusters, not only
+    the dedup sub-plan's."""
     return config_hash({
-        **asdict(cfg), "dedup": dedup_fingerprint(cfg.dedup),
+        **asdict(cfg),
+        "min_quality": MIN_QUALITY, "decontam_n": DECONTAM_N,
+        "substring_min_len": SUBSTRING_MIN_LEN,
+        "semantic_threshold": SEMANTIC_THRESHOLD, "semantic_dim": SEMANTIC_DIM,
+        "semantic_k_lists": SEMANTIC_K_LISTS, "semantic_iters": SEMANTIC_ITERS,
+        "dsir_buckets": DSIR_BUCKETS,
+        "dedup": dedup_fingerprint(DedupConfig()),
         "decontam": decontam, "dsir": dsir,
     })
 
@@ -140,7 +145,7 @@ def run_curation(
     """Returns {"corpus": final DataFrame, "metrics": funnel dict, ...}.
 
     ``eval_pages`` (url, text) switches on the ⓪b decontamination gate:
-    quality-kept pages sharing any ``cfg.decontam_n``-gram with the eval
+    quality-kept pages sharing any ``DECONTAM_N``-gram with the eval
     set are dropped before dedup. ``target_pages`` (url, text) plus
     ``cfg.dsir_k`` switches on the ⑧ DSIR selection stage: only the
     dsir_k most target-like documents survive."""
@@ -221,7 +226,7 @@ def run_curation(
             else quality_scores(gated, id_col="url")
         )
         scored = store.write(gated.join(per_doc, "url"), "scored")
-    kept = scored.where(F.col("quality_score") >= cfg.min_quality)
+    kept = scored.where(F.col("quality_score") >= MIN_QUALITY)
 
     # ⓪b optional decontamination gate: the per-doc overlap report is the
     # staged audit artifact (every kept doc, hit counts included), the
@@ -235,9 +240,7 @@ def run_curation(
             rep = store.read(spark, "decontam")
         else:
             rep = store.write(
-                decontaminate(
-                    kept, eval_pages, n=cfg.decontam_n, id_col="url"
-                ),
+                decontaminate(kept, eval_pages, n=DECONTAM_N, id_col="url"),
                 "decontam",
             )
         clean = kept.join(
@@ -247,7 +250,7 @@ def run_curation(
         )
 
     # ①–④ dedup on the surviving pages (resumable sub-plan, own manifest)
-    dd = run_dedup(spark, clean, f"{out_dir}/dedup", cfg.dedup)
+    dd = run_dedup(spark, clean, f"{out_dir}/dedup", DedupConfig())
 
     # ⑤ final corpus: canonical representative per cluster only, with
     # per-document token accounting for downstream data budgeting
@@ -291,14 +294,14 @@ def run_curation(
                 # exact match_len feeds the same keep-first cut as the
                 # screen's lower bound
                 matches = sa_long_matches(
-                    corpus, min_len=cfg.substring_min_len, id_col="url"
+                    corpus, min_len=SUBSTRING_MIN_LEN, id_col="url"
                 ).withColumnRenamed("match_len", "match_len_lb")
             cut = store.write(
                 _substring_cut(
                     corpus,
                     matches=matches,
-                    min_len=cfg.substring_min_len,
-                    anchor=cfg.substring_hash,
+                    min_len=SUBSTRING_MIN_LEN,
+                    anchor=cfg.hash_fn,
                     id_col="url",
                 ),
                 "sub_cut",
@@ -336,18 +339,15 @@ def run_curation(
         else:
             emb = store.write(
                 featurize_text(
-                    corpus,
-                    dim=cfg.semantic_dim,
-                    id_col="url",
-                    hash_fn=cfg.semantic_hash,
+                    corpus, dim=SEMANTIC_DIM, id_col="url", hash_fn=cfg.hash_fn
                 ).select(F.col("url").alias("vec_id"), "embedding"),
                 "sem_vecs",
             )
             cents, assign = ivf_build(
                 emb,
-                k_lists=cfg.semantic_k_lists,
-                iters=cfg.semantic_iters,
-                dim=cfg.semantic_dim,
+                k_lists=SEMANTIC_K_LISTS,
+                iters=SEMANTIC_ITERS,
+                dim=SEMANTIC_DIM,
                 id_type="string",
             )
             store.write(
@@ -363,8 +363,8 @@ def run_curation(
             assign = store.write(assign, "sem_assign")
             sem = semantic_dedup(
                 emb,
-                threshold=cfg.semantic_threshold,
-                dim=cfg.semantic_dim,
+                threshold=SEMANTIC_THRESHOLD,
+                dim=SEMANTIC_DIM,
                 model=(cents, assign),
             )
             sem_keep = store.write(
@@ -390,11 +390,9 @@ def run_curation(
 
     # ⑦ optional stratified mixing sample — the last stage: fractions are
     # the data-budget knob and must apply to the already-clean corpus
-    n_sem = None
     if cfg.sample_fractions is not None:
         from iscc_specs_spark.operators.sampling import stratified_sample
 
-        n_sem = final.count()
         if store.has("corpus_sampled"):
             final = store.read(spark, "corpus_sampled")
         else:
@@ -405,7 +403,7 @@ def run_curation(
                     default_fraction=cfg.sample_default,
                     strata_col="lang",
                     key_col="url",
-                    hash_fn=cfg.sample_hash,
+                    hash_fn=cfg.hash_fn,
                 ),
                 "corpus_sampled",
             )
@@ -414,11 +412,9 @@ def run_curation(
     # target), keep the dsir_k highest Gumbel-perturbed-weight docs. Model
     # and selection are staged (the model is the audit artifact: which
     # feature buckets pulled docs in); the corpus filter is a semi-join.
-    n_mix = None
     if dsir_active:
         from iscc_specs_spark.operators import dsir as _dsir
 
-        n_mix = final.count()
         if store.has("corpus_dsir"):
             final = store.read(spark, "corpus_dsir")
         else:
@@ -427,9 +423,9 @@ def run_curation(
                     spark,
                     final,
                     target_pages,
-                    buckets=cfg.dsir_buckets,
+                    buckets=DSIR_BUCKETS,
                     id_col="url",
-                    hash_fn=cfg.dsir_hash,
+                    hash_fn=cfg.hash_fn,
                 ),
                 "dsir_model",
             )
@@ -438,9 +434,9 @@ def run_curation(
                     final,
                     model,
                     k=cfg.dsir_k,
-                    buckets=cfg.dsir_buckets,
+                    buckets=DSIR_BUCKETS,
                     id_col="url",
-                    hash_fn=cfg.dsir_hash,
+                    hash_fn=cfg.hash_fn,
                 ),
                 "dsir_selected",
             )
@@ -449,6 +445,9 @@ def run_curation(
                 "corpus_dsir",
             )
 
+    # tables that are never staged are counted; every staged table's rows
+    # come from its manifest (parquet footers, no Spark job). A stage that
+    # did not run dropped nothing, so its count is the previous one.
     n_in = pages.count()
     n_crawl = crawl.count() if cfg.url_dedup else n_in
     n_dom = (
@@ -456,7 +455,9 @@ def run_curation(
     )
     n_kept = kept.count()
     n_clean = clean.count() if eval_pages is not None else n_kept
-    n_corpus = corpus.count()
+    n_corpus = store.manifest(
+        "corpus_cut" if cfg.substring_cut else "corpus"
+    )["rows"]
     sub_rewritten = sub_chars_cut = 0
     if cfg.substring_cut:
         row = corpus.agg(
@@ -464,29 +465,15 @@ def run_curation(
             F.sum("chars_cut").alias("c"),
         ).collect()[0]
         sub_rewritten, sub_chars_cut = int(row["d"] or 0), int(row["c"] or 0)
-    # n_sem: docs after the semantic stage; n_mix: docs after the mixing
-    # sample (== before DSIR). Each is counted at the next stage's entry
-    # when that stage is active, else derived without an extra action.
-    if n_mix is not None:
-        # DSIR was active: n_mix was counted at its entry; when sampling
-        # was off nothing dropped between the semantic stage and DSIR, so
-        # the same count serves as n_sem
-        n_sem = n_sem if n_sem is not None else n_mix
-        n_mix_final = n_mix
-    else:
-        n_sem = n_sem if n_sem is not None else (
-            final.count() if cfg.semantic else n_corpus
-        )
-        n_mix_final = (
-            final.count() if cfg.sample_fractions is not None else n_sem
-        )
-    n_out = (
-        final.count()
-        # `is not None`, matching the stage guard: an EMPTY fractions dict
-        # still runs the sampler (everything at sample_default)
-        if (cfg.semantic or cfg.sample_fractions is not None or dsir_active)
-        else n_corpus
+    n_sem = store.manifest("corpus_sem")["rows"] if cfg.semantic else n_corpus
+    # `is not None`, matching the stage guard: an EMPTY fractions dict
+    # still runs the sampler (everything at sample_default)
+    n_mix = (
+        store.manifest("corpus_sampled")["rows"]
+        if cfg.sample_fractions is not None
+        else n_sem
     )
+    n_out = store.manifest("corpus_dsir")["rows"] if dsir_active else n_mix
     tokens_out = final.agg(F.sum("n_tokens")).collect()[0][0] or 0
     metrics = {
         "docs_in": n_in,
@@ -498,8 +485,8 @@ def run_curation(
         "docs_rewritten_substring": sub_rewritten,
         "chars_cut_substring": sub_chars_cut,
         "docs_dropped_semantic": n_corpus - n_sem,
-        "docs_dropped_sampling": n_sem - n_mix_final,
-        "docs_dropped_dsir": n_mix_final - n_out,
+        "docs_dropped_sampling": n_sem - n_mix,
+        "docs_dropped_dsir": n_mix - n_out,
         "docs_out": n_out,
         "tokens_out": int(tokens_out),
     }

@@ -89,7 +89,7 @@ def test_curation_semantic_stage(spark, tmp_path):
     re-run resumes from the staged quantizer + keep table."""
     out = str(tmp_path / "curate_sem")
     pages = generate_pages(spark, 200, partitions=4).localCheckpoint(eager=True)
-    cfg = CurateConfig(semantic=True, semantic_threshold=0.9)
+    cfg = CurateConfig(semantic=True)
     res = run_curation(spark, pages, out, cfg)
     m = res["metrics"]
 
@@ -295,7 +295,7 @@ def test_curation_dsir_stage(spark, tmp_path):
         .select("url", "text")
         .localCheckpoint(eager=True)
     )
-    cfg = CurateConfig(dsir_k=20, dsir_buckets=256)
+    cfg = CurateConfig(dsir_k=20)
     res = run_curation(spark, pages, out, cfg, target_pages=target)
     m = res["metrics"]
 
@@ -411,3 +411,34 @@ def test_curation_substring_cut_exact_mode(spark, tmp_path):
             + m["docs_dropped_duplicate"]
             + m["docs_out"]
         )
+
+
+def test_curation_resume_job_budget(spark, tmp_path):
+    """A resumed run_curation reads every staged table back and takes each
+    staged table's row count from its manifest (parquet footers), so it
+    launches only the jobs that count the unstaged tables (pages, the
+    quality-kept and decontaminated sets) and sum the output tokens. The
+    config is the driver row's: decontamination, SemDeDup and the mixing
+    sample, md5 hashes."""
+    out = str(tmp_path / "curate_budget")
+    pages = generate_pages(spark, 200, partitions=4).localCheckpoint(eager=True)
+    eval_pages = pages.where(
+        F.element_at(F.split("url", "/"), -1).cast("long") % 37 == 5
+    ).select("url", "text").localCheckpoint(eager=True)
+    cfg = CurateConfig(
+        semantic=True,
+        sample_fractions={"en": 0.8, "de": 0.6, "fr": 0.5},
+        sample_default=0.4,
+        hash_fn="md5",
+    )
+    first = run_curation(spark, pages, out, cfg, eval_pages=eval_pages)
+    sc = spark.sparkContext
+    try:
+        sc.setJobGroup("curation_resume", "resumed run_curation")
+        again = run_curation(spark, pages, out, cfg, eval_pages=eval_pages)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    jobs = sc.statusTracker().getJobIdsForGroup("curation_resume")
+    assert again["metrics"] == first["metrics"]
+    assert 0 < len(jobs) <= 9, len(jobs)

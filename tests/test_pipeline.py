@@ -166,14 +166,34 @@ def test_curation_fingerprint_covers_lsh_constants(monkeypatch):
 
     base = _fingerprint(CurateConfig(), False, False)
     assert _fingerprint(CurateConfig(), False, False) == base
-    capped = CurateConfig(dedup=DedupConfig(bucket_cap=32))
-    assert _fingerprint(capped, False, False) != base
     assert _fingerprint(CurateConfig(), True, False) != base
     assert _fingerprint(CurateConfig(), False, True) != base
     for name in LSH_CONSTANTS:
         with monkeypatch.context() as m:
             m.setattr(lsh, name, getattr(lsh, name) + 1)
             assert _fingerprint(CurateConfig(), False, False) != base, name
+
+
+CURATION_CONSTANTS = (
+    "MIN_QUALITY", "DECONTAM_N", "SUBSTRING_MIN_LEN", "SEMANTIC_THRESHOLD",
+    "SEMANTIC_DIM", "SEMANTIC_K_LISTS", "SEMANTIC_ITERS", "DSIR_BUCKETS",
+)
+
+
+def test_curation_fingerprint_covers_constants(monkeypatch):
+    """run_curation's tuning values are module constants, not config
+    fields, so its fingerprint must record each of them: a stage built with
+    an old threshold, width or bucket count must never be resumed. No
+    Spark."""
+    from iscc_specs_spark.plans import curate
+
+    base = curate._fingerprint(curate.CurateConfig(), False, False)
+    for name in CURATION_CONSTANTS:
+        with monkeypatch.context() as m:
+            m.setattr(curate, name, getattr(curate, name) + 1)
+            assert curate._fingerprint(
+                curate.CurateConfig(), False, False
+            ) != base, name
 
 
 def test_lineage_and_metrics_recorded(spark, tmp_path):

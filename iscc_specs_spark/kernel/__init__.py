@@ -1,4 +1,5 @@
-"""Pure-Python/NumPy ISCC kernel (no Spark imports).
+"""Python/NumPy ISCC kernel (no Spark imports); the batch path's MinHash
+and CDC cut are C, built at first import of ``kernel.batch`` (``native``).
 
 These are the functions the vectorized pandas UDFs in
 ``iscc_specs_spark.operators`` call per Arrow batch.  Semantics follow the

@@ -1,0 +1,112 @@
+/* The kernel's two hot loops, compiled at first import by kernel/native.py
+ * and called through ctypes. Both reproduce a reference path bit for bit:
+ *
+ *   minhash_segments  sketches.minhash_np over each segment of a feature
+ *                     array, without the (K, 64) perm_hash matrix;
+ *   cdc_lengths       [len(c) for c in cdc.data_chunks(blob)] for each blob
+ *                     of a joined buffer, quirks included.
+ *
+ * The spec data (permutation pairs, gear table, CDC parameters) comes from
+ * constants.py through the callers; nothing here allocates memory.
+ */
+
+#include <stdint.h>
+
+#define MERSENNE_61 ((UINT64_C(1) << 61) - 1)
+#define MAX32 UINT64_C(0xFFFFFFFF)
+#define N_PERM 64
+
+/* For each of the n_seg consecutive segments of feats (lens[s] rows each,
+ * every segment at least one row) and each of the 64 permutations (a, b):
+ * the min over the segment's features x of ((x*a + b) mod 2^64)
+ * mod (2^61 - 1) & MAX32, written to out[s*64 + p].
+ *
+ * h mod M, M = 2^61 - 1, is the fold f = (h & M) + (h >> 61), which is
+ * below 2M for any 64-bit h, then the conditional subtract of M written
+ * without a branch: f >= M exactly when bit 61 of f + 1 is set, and then
+ * f - M = (f + 1) - 2^61. The result is below 2^32 after & MAX32, so the
+ * running mins are 32-bit, which lets the compiler vectorise the loop. */
+void minhash_segments(const uint64_t *feats, const int64_t *lens, int64_t n_seg,
+                      const uint64_t *a, const uint64_t *b, uint64_t *out)
+{
+    for (int64_t s = 0; s < n_seg; s++) {
+        uint32_t mins[N_PERM];
+        for (int p = 0; p < N_PERM; p++)
+            mins[p] = UINT32_MAX;
+        for (int64_t k = lens[s]; k > 0; k--) {
+            uint64_t x = *feats++;
+            for (int p = 0; p < N_PERM; p++) {
+                uint64_t h = x * a[p] + b[p];
+                h = (h & MERSENNE_61) + (h >> 61);
+                uint32_t v = (uint32_t)((h + ((h + 1) >> 61)) & MAX32);
+                mins[p] = v < mins[p] ? v : mins[p];
+            }
+        }
+        for (int p = 0; p < N_PERM; p++)
+            out[s * N_PERM + p] = mins[p];
+    }
+}
+
+/* cdc.chunk_boundary: length of the next chunk at the head of data[0:n]. */
+static int64_t chunk_boundary(const uint8_t *data, int64_t n, const uint64_t *gear,
+                              int64_t norm_size, int64_t min_size, int64_t max_size,
+                              uint64_t mask_1, uint64_t mask_2)
+{
+    if (n <= min_size)
+        return n;
+    uint64_t pattern = 0;
+    int64_t i = min_size;
+    int64_t end = norm_size < n ? norm_size : n;
+    for (; i < end; i++) {
+        pattern = (pattern << 1) + gear[data[i]];
+        if (!(pattern & mask_1))
+            return i;
+    }
+    end = max_size < n ? max_size : n;
+    for (; i < end; i++) {
+        pattern = (pattern << 1) + gear[data[i]];
+        if (!(pattern & mask_2))
+            return i;
+    }
+    return i;
+}
+
+/* cdc.data_chunks over each of the n_blobs consecutive blobs of data
+ * (blob_lens[j] bytes each): the chunk lengths of all blobs, in order, to
+ * chunk_lens, and each blob's chunk count to n_chunks[j]. Returns the total
+ * count. chunk_lens needs room for sum(blob_lens) / GEAR1_MIN + n_blobs
+ * values: every chunk but a blob's last is at least GEAR1_MIN long.
+ *
+ * params holds the two gear parameter sets, (norm, min, max, mask_1,
+ * mask_2) for GEAR1 then GEAR2. As in the reference, a blob's first 100
+ * chunks use GEAR1 and later ones GEAR2, and each iteration tops the
+ * section (data[start:end]) up by at most one max-sized read. */
+int64_t cdc_lengths(const uint8_t *data, const int64_t *blob_lens, int64_t n_blobs,
+                    const uint64_t *gear, const uint64_t *params,
+                    int64_t *chunk_lens, int64_t *n_chunks)
+{
+    int64_t total = 0;
+    for (int64_t j = 0; j < n_blobs; j++) {
+        int64_t n = blob_lens[j];
+        int64_t start = 0;
+        int64_t end = n < (int64_t)params[2] ? n : (int64_t)params[2];
+        int64_t emitted = 0;
+        for (;;) {
+            const uint64_t *g = emitted < 100 ? params : params + 5;
+            int64_t max_size = (int64_t)g[2];
+            if (end - start < max_size)
+                end = end + max_size < n ? end + max_size : n;
+            if (end == start)
+                break;
+            int64_t cut = chunk_boundary(data + start, end - start, gear, (int64_t)g[0],
+                                         (int64_t)g[1], max_size, g[3], g[4]);
+            chunk_lens[total + emitted] = cut;
+            start += cut;
+            emitted++;
+        }
+        n_chunks[j] = emitted;
+        total += emitted;
+        data += n;
+    }
+    return total;
+}

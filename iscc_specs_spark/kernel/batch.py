@@ -4,13 +4,17 @@ The pandas-UDF hot path: instead of per-document NumPy calls, all shingles of
 all ASCII documents in an Arrow batch are hashed in a handful of vectorized
 sweeps, and each document's MinHash/SimHash is reduced from its segment of
 rows. A shingle group is capped at ``_SHINGLE_BUDGET`` rows, so a ~8 KB page
-(~8k shingles) is a group of its own: the per-segment reductions are plain
-``min(axis=0)`` over one slice and one ``bincount`` of digest bytes. Data-ID
-cuts each blob sequentially, then hashes all CDC chunks of a group of blobs
-in one vectorised ``xxh32_var``.
+(~8k shingles) is a group of its own. The two loops NumPy does badly run in
+C (``kernel.native``): the MinHash of every segment of a group in one fused
+pass that never builds the (K, 64) permutation matrix, and the CDC cut of
+every blob of a group in one call. Data-ID then hashes all CDC chunks of the
+group in one vectorised ``xxh32_var`` and takes their MinHash in one fused
+pass. SimHash is one ``bincount`` of digest bytes per group.
 Non-ASCII or sub-window documents fall back to the per-document kernel path
 (identical results — the fast path is pinned to the scalar path by
-tests/test_batch.py property checks and transitively by the golden vectors).
+tests/test_batch.py property checks and transitively by the golden vectors;
+the C loops to ``sketches.minhash_np`` and ``cdc.data_chunks`` by
+tests/test_native.py).
 """
 
 from __future__ import annotations
@@ -20,7 +24,6 @@ from typing import Sequence
 import numpy as np
 
 from iscc_specs_spark.kernel.codec import encode
-from iscc_specs_spark.kernel.cdc import data_chunks
 from iscc_specs_spark.kernel.codes import (
     content_id_text_full,
     instance_id,
@@ -36,18 +39,16 @@ from iscc_specs_spark.kernel.constants import (
     WINDOW_SIZE_CID_T,
     WINDOW_SIZE_MID,
 )
-from iscc_specs_spark.kernel.sketches import (
-    lsb_digest,
-    minhash_np,
-    perm_hash,
-    segment_bit_counts,
-)
+from iscc_specs_spark.kernel.native import cdc_lengths, minhash_segments
+from iscc_specs_spark.kernel.sketches import lsb_digest, segment_bit_counts
 from iscc_specs_spark.kernel.textnorm import text_normalize, text_trim
 from iscc_specs_spark.kernel.xxhashes import xxh32_fixed, xxh32_var, xxh64, xxh64_fixed
 
-# cap transient (n_shingles × 64) uint64 matrices: 3k shingles → ~1.5 MB,
-# L2-resident per worker — the kernel runs 32× concurrently per host and
-# DRAM bandwidth, not ALU, is the budget (measured: 3k ≈ 1.9× faster than 24k)
+# cap a shingle group's temporaries, L2-resident per worker (the kernel runs
+# 32× concurrently per host, so DRAM bandwidth is the budget): the (K, 25)
+# uint8 shingle matrix, the xxh32/xxh64 sweeps and the bit-count bincount
+# keys, ~150 B per shingle, so 3k shingles → ~0.5 MB. The MinHash keeps
+# only 64 running mins per segment, whatever the group size.
 _SHINGLE_BUDGET = 3_000
 # cap the temporaries of hashing one group of blobs' CDC chunks: the joined
 # blobs plus ~100 B per chunk; web pages average ~85 B per chunk, so a group
@@ -79,7 +80,7 @@ def _pack_u64_rows(bits: np.ndarray) -> np.ndarray:
 def _shingle_matrix(docs: list[str], width: int, step: int):
     """Stack the character ``width``-grams of ASCII docs (each at least one
     window long), ``step - 1`` spaces between characters → (K, L) uint8
-    matrix, segment starts, segment lens. Content-ID hashes the grams
+    matrix, segment lens. Content-ID hashes the grams
     space-joined (step 2, 13 chars → 25 bytes), Meta-ID as they are."""
     lens = np.array([len(d) - width + 1 for d in docs], dtype=np.int64)
     starts = np.cumsum(lens) - lens
@@ -87,22 +88,17 @@ def _shingle_matrix(docs: list[str], width: int, step: int):
     for d, a, k in zip(docs, starts, lens):
         chars = np.frombuffer(d.encode("ascii"), dtype=np.uint8)
         mat[a : a + k, ::step] = np.lib.stride_tricks.sliding_window_view(chars, width)
-    return mat, starts, lens
+    return mat, lens
 
 
-def _segments_minhash_simhash(mat: np.ndarray, starts: np.ndarray, lens: np.ndarray):
-    """Hash an (K, L) shingle matrix and reduce per segment.
+def _segments_minhash_simhash(mat: np.ndarray, lens: np.ndarray):
+    """Hash an (K, L) shingle matrix and reduce per segment of ``lens`` rows.
 
     Returns (minhash (R,64) uint64, simhash (R,) uint64).
     """
     old = np.seterr(over="ignore")
     try:
-        feats = xxh32_fixed(mat).astype(np.uint64)
-        h = perm_hash(feats[:, None])
-        mh = np.empty((lens.size, h.shape[1]), dtype=np.uint64)
-        for g, (a, k) in enumerate(zip(starts, lens)):
-            h[a : a + k].min(axis=0, out=mh[g])
-
+        mh = minhash_segments(xxh32_fixed(mat), lens)
         counts = segment_bit_counts(xxh64_fixed(mat), lens)
         sim_bits = (2 * counts >= lens[:, None]).astype(np.uint8)
         return mh, _pack_u64_rows(sim_bits)
@@ -140,8 +136,8 @@ def content_text_batch(texts: Sequence[str | None]):
 
     sizes = [len(norms[i]) - WINDOW_SIZE_CID_T + 1 for i in fast]
     for group in _budget_groups(fast, sizes, _SHINGLE_BUDGET):
-        mat, starts, lens = _shingle_matrix([norms[i] for i in group], WINDOW_SIZE_CID_T, 2)
-        mh, sim = _segments_minhash_simhash(mat, starts, lens)
+        mat, lens = _shingle_matrix([norms[i] for i in group], WINDOW_SIZE_CID_T, 2)
+        mh, sim = _segments_minhash_simhash(mat, lens)
         bodies = _pack_u64_rows((mh & np.uint64(1)).astype(np.uint8))
         for g, i in enumerate(group):
             minhash[i] = mh[g]
@@ -173,7 +169,7 @@ def meta_batch(titles: Sequence[str | None]):
     slow = [i for i in range(n_rows) if i not in fast_set]
 
     if fast:
-        mat, _, lens = _shingle_matrix([trimmed[i] for i in fast], width, 1)
+        mat, lens = _shingle_matrix([trimmed[i] for i in fast], width, 1)
         old = np.seterr(over="ignore")
         try:
             digs = xxh64_fixed(mat)
@@ -198,9 +194,10 @@ def meta_batch(titles: Sequence[str | None]):
 def data_instance_batch(blobs: Sequence[bytes | None]):
     """Data-ID + Instance-ID for a batch of binary blobs.
 
-    CDC is a sequential per-document recurrence, so each blob is cut on its
-    own; the chunks of a group of blobs (bounded by ``_CHUNK_BYTES_BUDGET``)
-    are then hashed in one ``xxh32_var`` call over the joined blobs.
+    The blobs of a group (bounded by ``_CHUNK_BYTES_BUDGET``) are joined
+    once: one C call cuts every blob into its CDC chunks, one ``xxh32_var``
+    call hashes all chunks, and one fused MinHash with the chunk counts as
+    segment lengths gives every blob's Data-ID body.
 
     Returns dict: did list[str], did_body int64, n_chunks int32,
     iid list[str], iid_body int64, tophash list[str].
@@ -217,18 +214,15 @@ def data_instance_batch(blobs: Sequence[bytes | None]):
     full = [i for i in range(n_rows) if data[i]]
     sizes = [len(data[i]) for i in full]
     for group in _budget_groups(full, sizes, _CHUNK_BYTES_BUDGET // 4):
-        lens = [np.fromiter(map(len, data_chunks(data[i])), dtype=np.int64) for i in group]
-        chunk_lens = np.concatenate(lens)
+        joined = b"".join(data[i] for i in group)
+        chunk_lens, counts = cdc_lengths(joined, [len(data[i]) for i in group])
         offsets = np.cumsum(chunk_lens) - chunk_lens
-        feats = xxh32_var(b"".join(data[i] for i in group), offsets, chunk_lens)
-        feats = feats.astype(np.uint64)
-        a = 0
-        for i, k in zip(group, map(len, lens)):
-            body = lsb_digest(minhash_np(feats[a : a + k]))
-            did[i] = encode(HEAD_DID + body)
-            did_body[i] = np.frombuffer(body, dtype=">i8")[0]
-            n_chunks[i] = k
-            a += k
+        mh = minhash_segments(xxh32_var(joined, offsets, chunk_lens), counts)
+        bodies = _pack_u64_rows((mh & np.uint64(1)).astype(np.uint8))
+        for g, i in enumerate(group):
+            did[i] = encode(HEAD_DID + int(bodies[g]).to_bytes(8, "big"))
+            did_body[i] = bodies[g].astype(np.int64)
+            n_chunks[i] = counts[g]
 
     for i, b in enumerate(data):
         code, hexhash = instance_id(b)

@@ -1,0 +1,161 @@
+"""The kernel's compiled loops: ``_native.c``, built at first import and
+called through ``ctypes``.
+
+The source is read with ``pkgutil.get_data``, so it loads from a checkout
+and from a ``--py-files`` zip alike. It is compiled with ``cc`` into
+``<sha256(source + flags)>.so`` in this user's build dir,
+``iscc_specs_spark-<uid>`` in ``tempfile.gettempdir()``: a process that
+finds the file loads it, one that does not compiles to a temporary name
+and renames it into place, so concurrent Python workers race safely and
+the same build is shared by every worker of a host. The name is
+predictable, so the dir (mode 0o700) and the library are loaded only if
+this user owns them and no one else can write them: another user's or a
+world-writable library is rebuilt, an open dir is refused at import.
+
+There is no fallback: without a C compiler on ``PATH`` (and no built
+library) this module fails to import, and so does ``kernel.batch`` and,
+through it, ``operators.codegen`` — the Spark driver needs the compiler
+as well as the executors. The temp dir must allow exec (a ``noexec``
+mount cannot map the library; point ``TMPDIR`` elsewhere).
+
+No ``-march``: the executors of one cluster may have different CPUs.
+"""
+
+from __future__ import annotations
+
+import ctypes
+import hashlib
+import os
+import pkgutil
+import shutil
+import stat
+import subprocess
+import tempfile
+
+import numpy as np
+
+from iscc_specs_spark.kernel.constants import (
+    CHUNKING_GEAR,
+    GEAR1_MASK1,
+    GEAR1_MASK2,
+    GEAR1_MAX,
+    GEAR1_MIN,
+    GEAR1_NORM,
+    GEAR2_MASK1,
+    GEAR2_MASK2,
+    GEAR2_MAX,
+    GEAR2_MIN,
+    GEAR2_NORM,
+)
+from iscc_specs_spark.kernel.sketches import _PERM_A, _PERM_B
+
+_FLAGS = ("-O3", "-shared", "-fPIC")
+_SRC = pkgutil.get_data(__name__.rpartition(".")[0], "_native.c")
+_NAME = hashlib.sha256(_SRC + " ".join(_FLAGS).encode()).hexdigest() + ".so"
+
+
+def _private(path: str, kind: int) -> bool:
+    """``path`` is a ``kind`` (not a symlink) owned by this user that
+    group and others cannot write."""
+    st = os.lstat(path)
+    return (
+        stat.S_IFMT(st.st_mode) == kind
+        and st.st_uid == os.getuid()
+        and not st.st_mode & (stat.S_IWGRP | stat.S_IWOTH)
+    )
+
+
+def _build() -> str:
+    """Path of the compiled library, compiling it if this user's build dir
+    holds no trusted copy yet."""
+    cache = os.path.join(tempfile.gettempdir(), f"iscc_specs_spark-{os.getuid()}")
+    try:
+        os.mkdir(cache, 0o700)
+    except FileExistsError:
+        pass
+    if not _private(cache, stat.S_IFDIR):
+        raise ImportError(
+            f"refusing the kernel's build dir {cache}: it must be a directory "
+            "owned by this user that group and others cannot write"
+        )
+    path = os.path.join(cache, _NAME)
+    if os.path.lexists(path) and _private(path, stat.S_IFREG):
+        return path
+    cc = shutil.which("cc")
+    if cc is None:
+        raise ImportError(
+            "iscc_specs_spark.kernel needs a C compiler to build _native.c: "
+            "no `cc` on PATH"
+        )
+    fd, tmp = tempfile.mkstemp(prefix=f"{_NAME}.", suffix=".tmp", dir=cache)
+    os.close(fd)
+    try:
+        proc = subprocess.run(
+            [cc, *_FLAGS, "-x", "c", "-", "-o", tmp], input=_SRC, capture_output=True
+        )
+        if proc.returncode != 0:
+            raise ImportError(
+                f"`{cc}` failed to build _native.c:\n{proc.stderr.decode(errors='replace')}"
+            )
+        os.chmod(tmp, 0o700)  # the linker's mode follows the umask
+        os.replace(tmp, path)
+    finally:
+        if os.path.exists(tmp):
+            os.unlink(tmp)
+    return path
+
+
+def _load() -> ctypes.CDLL:
+    path = _build()
+    try:
+        return ctypes.CDLL(path)
+    except OSError as e:
+        raise ImportError(
+            f"cannot load the kernel library {path}: {e} (a temp dir mounted "
+            "noexec cannot map it; set TMPDIR to a dir that allows exec)"
+        ) from e
+
+
+_u64 = np.ctypeslib.ndpointer(np.uint64, flags="C_CONTIGUOUS")
+_i64 = np.ctypeslib.ndpointer(np.int64, flags="C_CONTIGUOUS")
+
+_LIB = _load()
+_LIB.minhash_segments.argtypes = (_u64, _i64, ctypes.c_int64, _u64, _u64, _u64)
+_LIB.minhash_segments.restype = None
+_LIB.cdc_lengths.argtypes = (ctypes.c_char_p, _i64, ctypes.c_int64, _u64, _u64, _i64, _i64)
+_LIB.cdc_lengths.restype = ctypes.c_int64
+
+_GEAR = np.array(CHUNKING_GEAR, dtype=np.uint64)
+_CDC_PARAMS = np.array(
+    (GEAR1_NORM, GEAR1_MIN, GEAR1_MAX, GEAR1_MASK1, GEAR1_MASK2,
+     GEAR2_NORM, GEAR2_MIN, GEAR2_MAX, GEAR2_MASK1, GEAR2_MASK2),
+    dtype=np.uint64,
+)
+
+
+def minhash_segments(features: np.ndarray, lens: np.ndarray) -> np.ndarray:
+    """MinHash of each segment of a (K,) uint64 feature array cut into
+    consecutive segments of ``lens`` rows → (R, 64) uint64; row r equals
+    ``sketches.minhash_np`` of segment r. Every segment needs a row."""
+    feats = np.ascontiguousarray(features, dtype=np.uint64)
+    lens = np.ascontiguousarray(lens, dtype=np.int64)
+    if lens.size and (lens.min() < 1 or lens.sum() != feats.size):
+        raise ValueError("segment lengths must be positive and sum to the feature count")
+    out = np.empty((lens.size, 64), dtype=np.uint64)
+    _LIB.minhash_segments(feats, lens, lens.size, _PERM_A, _PERM_B, out)
+    return out
+
+
+def cdc_lengths(joined: bytes, blob_lens: np.ndarray):
+    """CDC chunk lengths of each blob of ``joined`` (consecutive blobs of
+    ``blob_lens`` bytes) → (chunk_lens (C,) int64, n_chunks (R,) int64);
+    blob r's lengths equal ``[len(c) for c in cdc.data_chunks(blob_r)]``."""
+    blob_lens = np.ascontiguousarray(blob_lens, dtype=np.int64)
+    if blob_lens.size and (blob_lens.min() < 0 or blob_lens.sum() != len(joined)):
+        raise ValueError("blob lengths must be non-negative and sum to the buffer length")
+    chunk_lens = np.empty(len(joined) // GEAR1_MIN + blob_lens.size, dtype=np.int64)
+    n_chunks = np.empty(blob_lens.size, dtype=np.int64)
+    total = _LIB.cdc_lengths(
+        joined, blob_lens, blob_lens.size, _GEAR, _CDC_PARAMS, chunk_lens, n_chunks
+    )
+    return chunk_lens[:total], n_chunks

@@ -3,7 +3,9 @@
 Parity targets: /root/reference/src/iscc/iscc.py:236-268 (similarity_hash,
 minimum_hash); permutation pairs are spec data (const.py:70-327).  Both are
 NumPy-vectorized — ``similarity_hash`` via unpackbits column sums,
-``minimum_hash`` via a broadcast (features × 64 permutations) matrix.
+``minimum_hash`` via a broadcast (features × 64 permutations) matrix. The
+MinHash here is the reference the scalar kernel uses; the batch hot path
+takes the same MinHash per segment in C (``kernel.native``).
 """
 
 from __future__ import annotations
@@ -17,7 +19,8 @@ from iscc_specs_spark.kernel.constants import MINHASH_PERMUTATIONS
 _MERSENNE_61 = np.uint64((1 << 61) - 1)
 _MAX32 = np.uint64((1 << 32) - 1)
 
-# (64,) uint64 permutation coefficient vectors, used by the hot path
+# (64,) uint64 permutation coefficient vectors, of minhash_np and of the C
+# MinHash in kernel.native
 _PERM_A = np.array([a for a, _ in MINHASH_PERMUTATIONS[:64]], dtype=np.uint64)
 _PERM_B = np.array([b for _, b in MINHASH_PERMUTATIONS[:64]], dtype=np.uint64)
 
@@ -68,35 +71,30 @@ def segment_bit_counts(digests: np.ndarray, lens: np.ndarray) -> np.ndarray:
     return (hist @ _DIGIT_BITS[w]).reshape(r, 64)
 
 
-def perm_hash(features_col: np.ndarray, n: int = 64) -> np.ndarray:
-    """(K,1)-broadcast permutation hash matrix: ((a*f+b) mod 2^64)
-    mod (2^61−1) & MAX32, shared by minhash_np and the batch hot path.
-
-    Exactly one (K,n) allocation; every subsequent op is in-place — the
-    kernel runs 32× concurrently per host, so DRAM traffic (not ALU) is
-    the budget. NumPy's scalar-divisor ``np.mod`` is a single memory pass;
-    a shift/add Mersenne fold in NumPy takes several and measured 2.8×
-    slower (4-vCPU x86 VM, NumPy 1.26)."""
-    h = features_col * _PERM_A[None, :n]
-    h += _PERM_B[None, :n]
-    np.mod(h, _MERSENNE_61, out=h)
-    h &= _MAX32
-    return h
-
-
 def minhash_np(features: np.ndarray, n: int = 64) -> np.ndarray:
     """MinHash signature of a (K,) uint64 feature array → (n,) uint64.
 
     Per permutation p: min over features of ((a_p*f + b_p) mod 2^64)
     mod (2^61-1), truncated to 32 bits.  uint64 multiply wraps natively,
     which is exactly the `& MAX_INT64` of the spec.
+
+    The reference: the scalar kernel (and through it the batch path's
+    non-ASCII rows) calls it, and the C ``kernel.native.minhash_segments``
+    of the batch hot path is pinned to it. One (K,n) allocation, every later op
+    in place: NumPy's scalar-divisor ``np.mod`` is a single memory pass,
+    where a shift/add Mersenne fold in NumPy takes several and measured
+    2.8× slower (4-vCPU x86 VM, NumPy 1.26).
     """
     if features.size == 0:
         raise ValueError("minhash of empty feature set")
     f = features.astype(np.uint64, copy=False)
     old = np.seterr(over="ignore")
     try:
-        return perm_hash(f[:, None], n).min(axis=0)
+        h = f[:, None] * _PERM_A[None, :n]
+        h += _PERM_B[None, :n]
+        np.mod(h, _MERSENNE_61, out=h)
+        h &= _MAX32
+        return h.min(axis=0)
     finally:
         np.seterr(**old)
 

@@ -2,8 +2,8 @@
 generated ~8 KB pages, in one thread and with no Spark.
 
 The steps replay ``kernel.batch.content_text_batch`` (normalise, build
-the shingle matrix, xxh32/xxh64 of the shingles, ``perm_hash``, segment
-min, SimHash bit counts) and ``data_instance_batch`` (CDC cut, chunk hash,
+the shingle matrix, xxh32/xxh64 of the shingles, the fused C MinHash,
+SimHash bit counts) and ``data_instance_batch`` (the C CDC cut, chunk hash,
 chunk MinHash, Instance-ID) on the same inputs and budgets; the two batch
 functions are also timed whole, so the sum of the steps can be checked
 against them. Each figure is the best of ``--reps`` passes over all pages.
@@ -29,10 +29,10 @@ import gen  # noqa: E402
 from workloads import WORDS_8K, KernelPages  # noqa: E402
 
 from iscc_specs_spark.kernel import batch  # noqa: E402
-from iscc_specs_spark.kernel.cdc import data_chunks  # noqa: E402
 from iscc_specs_spark.kernel.codes import instance_id  # noqa: E402
 from iscc_specs_spark.kernel.constants import WINDOW_SIZE_CID_T  # noqa: E402
-from iscc_specs_spark.kernel.sketches import perm_hash, segment_bit_counts  # noqa: E402
+from iscc_specs_spark.kernel.native import cdc_lengths, minhash_segments  # noqa: E402
+from iscc_specs_spark.kernel.sketches import segment_bit_counts  # noqa: E402
 from iscc_specs_spark.kernel.textnorm import text_normalize  # noqa: E402
 from iscc_specs_spark.kernel.xxhashes import (  # noqa: E402
     xxh32_fixed,
@@ -62,17 +62,14 @@ def content_steps(texts: list[str], clk: Clock) -> None:
     fast = [i for i, s in enumerate(norms) if s.isascii() and len(s) >= width]
     sizes = [len(norms[i]) - width + 1 for i in fast]
     for group in batch._budget_groups(fast, sizes, batch._SHINGLE_BUDGET):
-        mat, starts, lens = batch._shingle_matrix([norms[i] for i in group], width, 2)
+        mat, lens = batch._shingle_matrix([norms[i] for i in group], width, 2)
         clk.lap("text: shingle matrix")
-        feats = xxh32_fixed(mat).astype(np.uint64)
+        feats = xxh32_fixed(mat)
         clk.lap("text: shingle xxh32")
         digs = xxh64_fixed(mat)
         clk.lap("text: shingle xxh64")
-        h = perm_hash(feats[:, None])
-        clk.lap("text: perm_hash")
-        for a, k in zip(starts, lens):
-            h[a : a + k].min(axis=0)
-        clk.lap("text: segment min")
+        minhash_segments(feats, lens)
+        clk.lap("text: fused minhash")
         segment_bit_counts(digs, lens)
         clk.lap("text: bit counts")
 
@@ -82,17 +79,12 @@ def data_steps(blobs: list[bytes], clk: Clock) -> None:
     full = [i for i, b in enumerate(blobs) if b]
     sizes = [len(blobs[i]) for i in full]
     for group in batch._budget_groups(full, sizes, batch._CHUNK_BYTES_BUDGET // 4):
-        lens = [np.fromiter(map(len, data_chunks(blobs[i])), dtype=np.int64) for i in group]
+        joined = b"".join(blobs[i] for i in group)
+        chunk_lens, counts = cdc_lengths(joined, [len(blobs[i]) for i in group])
         clk.lap("data: CDC cut")
-        chunk_lens = np.concatenate(lens)
-        feats = xxh32_var(
-            b"".join(blobs[i] for i in group), np.cumsum(chunk_lens) - chunk_lens, chunk_lens
-        ).astype(np.uint64)
+        feats = xxh32_var(joined, np.cumsum(chunk_lens) - chunk_lens, chunk_lens)
         clk.lap("data: chunk hash")
-        a = 0
-        for k in map(len, lens):
-            perm_hash(feats[a : a + k, None]).min(axis=0)
-            a += k
+        minhash_segments(feats, counts)
         clk.lap("data: chunk minhash")
     for b in blobs:
         instance_id(b)

@@ -9,8 +9,12 @@ executor:
     spark-submit --py-files dist/iscc_specs_spark.zip \
         --conf spark.sql.shuffle.partitions=4096 your_job.py
 
-The zip contains only .py/.json files (spec tables ride along); executors
-need numpy+pandas+pyarrow, which every PySpark image ships.
+The zip contains only .py/.json/.c files (spec tables and the kernel's C
+source ride along). Executors need numpy, pandas and pyarrow, which every
+PySpark image ships, and, like the driver, a C compiler (``cc`` on
+``PATH``) and a temp dir that allows exec: the kernel builds its C loops
+from the zipped source at first import
+(``iscc_specs_spark/kernel/native.py``) and fails to import without them.
 """
 
 from __future__ import annotations
@@ -31,7 +35,7 @@ def main() -> None:
             if "__pycache__" in root:
                 continue
             for fn in sorted(files):
-                if fn.endswith((".py", ".json")):
+                if fn.endswith((".py", ".json", ".c")):
                     full = os.path.join(root, fn)
                     zf.write(full, os.path.relpath(full, REPO))
                     n += 1

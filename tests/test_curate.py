@@ -8,17 +8,27 @@ import os
 
 from pyspark.sql import functions as F
 
-from iscc_specs_spark.plans.curate import CurateConfig, run_curation
+from iscc_specs_spark.plans.curate import MIN_QUALITY, CurateConfig, run_curation
 from iscc_specs_spark.sources.pages import generate_pages
 
 
 def test_curation_funnel(spark, tmp_path):
+    """Every 10th page keeps its (good) domain but gets junk text (no
+    stopwords, few tokens), so the per-document quality gate drops exactly
+    those pages; every generated page scores at least MIN_QUALITY."""
     out = str(tmp_path / "curate")
-    pages = generate_pages(spark, 200, partitions=4).localCheckpoint(eager=True)
+    pages = generate_pages(spark, 200, partitions=4)
+    junk = F.element_at(F.split("url", "/"), -1).cast("long") % 10 == 4
+    pages = pages.withColumn(
+        "text", F.when(junk, F.lit("buy cheap now")).otherwise(F.col("text"))
+    ).localCheckpoint(eager=True)
+    junk_urls = {r["url"] for r in pages.where(junk).select("url").collect()}
+    assert len(junk_urls) > 1
     res = run_curation(spark, pages, out)
     m = res["metrics"]
 
     assert m["docs_in"] == 200
+    assert m["docs_dropped_quality"] == len(junk_urls)
     assert m["docs_in"] == (
         m["docs_dropped_quality"] + m["docs_dropped_duplicate"] + m["docs_out"]
     )
@@ -29,8 +39,9 @@ def test_curation_funnel(spark, tmp_path):
     # exactly one canonical survivor per cluster
     per_cluster = corpus.groupBy("cluster_id").count()
     assert per_cluster.where(F.col("count") > 1).count() == 0
-    # every survivor clears the quality bar
-    assert corpus.where(F.col("quality_score") < 0.35).count() == 0
+    # every survivor clears the quality bar, and no junk page survives
+    assert corpus.where(F.col("quality_score") < MIN_QUALITY).count() == 0
+    assert corpus.where(F.col("url").isin(*junk_urls)).count() == 0
 
     # funnel metrics are recorded on disk for auditing
     with open(os.path.join(out, "funnel.metrics.json")) as f:

@@ -1,0 +1,257 @@
+"""The kernel's C loops (``kernel.native``) == their NumPy/Python reference
+(``sketches.minhash_np``, ``cdc.data_chunks``), and the library builds from
+a ``--py-files`` zip. No Spark."""
+
+from __future__ import annotations
+
+import importlib.util
+import json
+import os
+import pathlib
+import subprocess
+import sys
+
+import numpy as np
+import pytest
+
+from iscc_specs_spark.kernel import native
+from iscc_specs_spark.kernel.batch import content_text_batch
+from iscc_specs_spark.kernel.cdc import data_chunks
+from iscc_specs_spark.kernel.constants import GEAR1_MAX, GEAR1_MIN, GEAR2_MAX
+from iscc_specs_spark.kernel.sketches import _PERM_A, _PERM_B, minhash_np
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+FIXTURES = os.path.join(REPO, "tests", "fixtures")
+M61 = (1 << 61) - 1
+U64 = 1 << 64
+
+
+def _check_minhash(feats: np.ndarray, lens) -> None:
+    lens = np.asarray(lens, dtype=np.int64)
+    got = native.minhash_segments(feats, lens)
+    assert got.shape == (lens.size, 64) and got.dtype == np.uint64
+    a = 0
+    for r, k in enumerate(lens):
+        assert np.array_equal(got[r], minhash_np(feats[a : a + k])), f"segment {r}"
+        a += k
+
+
+@pytest.mark.parametrize("k", [800, 8000])
+def test_minhash_random_features(k):
+    rng = np.random.default_rng(k)
+    feats = rng.integers(0, U64, k, dtype=np.uint64)
+    cuts = np.sort(rng.choice(np.arange(1, k), 9, replace=False))
+    _check_minhash(feats, np.diff(np.concatenate(([0], cuts, [k]))))
+    _check_minhash(feats, [k])
+
+
+def test_minhash_fold_edges():
+    """Features at the ends of the range, and for every permutation the
+    features whose hash x*a + b lands on each edge of the Mersenne fold
+    (every a is odd, so x = (h - b) / a mod 2^64 exists for any h)."""
+    ends = [0, 1, 2, M61 - 1, M61, M61 + 1, 1 << 61, 1 << 63, U64 - 2, U64 - 1]
+    targets = [0, M61 - 1, M61, M61 + 1, 2 * M61 - 1, 2 * M61, 1 << 62,
+               (7 << 61) + M61 - 1, (7 << 61) + M61, U64 - 1]
+    hit = [
+        (h - int(b)) * pow(int(a), -1, U64) % U64
+        for a, b in zip(_PERM_A, _PERM_B)
+        for h in targets
+    ]
+    feats = np.array(ends + hit, dtype=np.uint64)
+    _check_minhash(feats, np.ones(feats.size, dtype=np.int64))  # one row each
+    _check_minhash(feats, [feats.size])
+    _check_minhash(feats, [len(ends), len(hit)])
+
+
+def test_minhash_single_feature():
+    _check_minhash(np.array([12345], dtype=np.uint64), [1])
+    _check_minhash(np.array([U64 - 1], dtype=np.uint64), [1])
+
+
+def test_minhash_rejects_bad_segments():
+    feats = np.arange(5, dtype=np.uint64)
+    for lens in ([5, 0], [2, 2], [3, 3]):
+        with pytest.raises(ValueError):
+            native.minhash_segments(feats, np.array(lens))
+
+
+def _blobs():
+    rng = np.random.default_rng(16)
+    sizes = [1, GEAR1_MIN, GEAR1_MIN + 1, GEAR1_MAX, GEAR1_MAX + 1, 5000]
+    blobs = [rng.bytes(n) for n in sizes]
+    blobs += [bytes(5000), bytes(200_000)]  # all zeros: max-size cuts
+    blobs += [rng.bytes(int(n)) for n in rng.integers(1, 200_001, 6)]
+    return blobs
+
+
+def test_cdc_lengths_per_blob():
+    for b in _blobs():
+        want = [len(c) for c in data_chunks(b)]
+        lens, counts = native.cdc_lengths(b, [len(b)])
+        assert lens.tolist() == want, len(b)
+        assert counts.tolist() == [len(want)]
+
+
+def test_cdc_lengths_joined_blobs():
+    """One call over a group, as data_instance_batch makes it; the long
+    blobs run past 100 chunks into GEAR2 and its 64 KB refills."""
+    blobs = _blobs() + [b""]
+    want = [[len(c) for c in data_chunks(b)] for b in blobs]
+    assert max(map(len, want)) > 100
+    assert GEAR2_MAX in want[blobs.index(bytes(200_000))]
+    lens, counts = native.cdc_lengths(b"".join(blobs), [len(b) for b in blobs])
+    assert counts.tolist() == list(map(len, want))
+    assert lens.tolist() == [n for w in want for n in w]
+
+
+def test_cdc_lengths_rejects_bad_blob_lens():
+    with pytest.raises(ValueError):
+        native.cdc_lengths(b"abcd", [2, 3])
+
+
+def _make_zip(tmp_path, monkeypatch) -> str:
+    """Build the --py-files zip of this checkout into tmp_path."""
+    spec = importlib.util.spec_from_file_location(
+        "make_pyfiles", os.path.join(REPO, "scripts", "make_pyfiles.py")
+    )
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+    out = str(tmp_path / "iscc_specs_spark.zip")
+    monkeypatch.setattr(mod, "OUT", out)
+    mod.main()
+    return out
+
+
+def _run(path_entry: str, code: str, env_path: str, tmpdir: pathlib.Path):
+    """Run ``code`` in a fresh interpreter that imports the package from
+    ``path_entry`` only (the zip or the checkout), with the given PATH and
+    temp dir."""
+    env = {"PATH": env_path, "TMPDIR": str(tmpdir)}
+    prelude = f"import sys; sys.path.insert(0, {path_entry!r})\n"
+    return subprocess.run(
+        [sys.executable, "-I", "-c", prelude + code],
+        env=env, cwd=str(tmpdir), capture_output=True, text=True, timeout=120,
+    )
+
+
+def _cache(tmpdir: pathlib.Path) -> pathlib.Path:
+    """The build dir ``kernel.native`` uses under ``tmpdir``."""
+    return tmpdir / f"iscc_specs_spark-{os.getuid()}"
+
+
+def test_zip_builds_and_codes_match_golden(tmp_path, monkeypatch):
+    zip_path = _make_zip(tmp_path, monkeypatch)
+    tmpdir = tmp_path / "tmp"
+    tmpdir.mkdir()
+    with open(os.path.join(FIXTURES, "test_data.json")) as f:
+        vectors = json.load(f)
+    text, _ = vectors["content_id_text"]["test_003_long"]["inputs"]
+    want_cid = vectors["content_id_text"]["test_003_long"]["outputs"]
+    files = {
+        os.path.join(FIXTURES, v["inputs"][0]): v["outputs"]
+        for k, v in vectors["data_id"].items() if k != "required"
+    }
+    code = f"""
+import iscc_specs_spark
+from iscc_specs_spark.kernel.batch import content_text_batch, data_instance_batch
+assert iscc_specs_spark.__file__.startswith({zip_path!r}), iscc_specs_spark.__file__
+print(content_text_batch([{text!r}])["cid"][0])
+blobs = [open(p, "rb").read() for p in {list(files)!r}]
+print(" ".join(data_instance_batch(blobs)["did"]))
+"""
+    proc = _run(zip_path, code, os.environ.get("PATH", ""), tmpdir)
+    assert proc.returncode == 0, proc.stderr
+    cid, dids = proc.stdout.split("\n")[:2]
+    assert cid == want_cid
+    assert dids.split() == list(files.values())
+    # the library was built from the zip's source into this user's private
+    # build dir under the empty temp dir
+    cache = _cache(tmpdir)
+    assert list(tmpdir.iterdir()) == [cache]
+    assert cache.stat().st_mode & 0o777 == 0o700
+    assert [p.name for p in cache.iterdir()] == [native._NAME]
+
+
+def test_zip_without_compiler_fails_at_import(tmp_path, monkeypatch):
+    zip_path = _make_zip(tmp_path, monkeypatch)
+    tmpdir = tmp_path / "tmp"
+    tmpdir.mkdir()
+    empty_bin = tmp_path / "bin"
+    empty_bin.mkdir()
+    proc = _run(zip_path, "import iscc_specs_spark.kernel.batch", str(empty_bin), tmpdir)
+    assert proc.returncode != 0
+    assert "ImportError" in proc.stderr and "C compiler" in proc.stderr, proc.stderr
+    assert list(_cache(tmpdir).iterdir()) == []
+
+
+_HELLO = """
+from iscc_specs_spark.kernel.batch import content_text_batch
+print(content_text_batch(["hello world"])["cid"][0])
+"""
+
+
+@pytest.mark.parametrize("planted", ["world-writable", "foreign"])
+def test_planted_library_is_rebuilt_not_loaded(tmp_path, planted):
+    """A file another user could have put at the library's predictable
+    name is never loaded: the import rebuilds it and runs the real code."""
+    if planted == "foreign" and os.getuid() != 0:
+        pytest.skip("planting a file owned by another user needs root")
+    tmpdir = tmp_path / "tmp"
+    cache = _cache(tmpdir)
+    cache.mkdir(parents=True, mode=0o700)
+    lib = cache / native._NAME
+    lib.write_bytes(b"not a library")  # loading it would fail
+    if planted == "world-writable":
+        lib.chmod(0o666)
+    else:
+        os.chown(lib, 65534, 65534)
+    proc = _run(REPO, _HELLO, os.environ.get("PATH", ""), tmpdir)
+    assert proc.returncode == 0, proc.stderr
+    assert proc.stdout.strip() == content_text_batch(["hello world"])["cid"][0]
+    st = lib.stat()
+    assert lib.read_bytes()[:4] == b"\x7fELF"
+    assert st.st_uid == os.getuid() and not st.st_mode & 0o022
+
+
+@pytest.mark.parametrize("build_dir", ["group-writable", "symlink", "foreign"])
+def test_untrusted_build_dir_is_refused(tmp_path, build_dir):
+    """The build dir must be this user's own, closed dir; else the import
+    fails, naming it, and nothing is loaded from or built into it."""
+    if build_dir == "foreign" and os.getuid() != 0:
+        pytest.skip("a dir owned by another user needs root")
+    tmpdir = tmp_path / "tmp"
+    tmpdir.mkdir()
+    cache = _cache(tmpdir)
+    if build_dir == "symlink":
+        target = tmp_path / "elsewhere"
+        target.mkdir(mode=0o700)
+        cache.symlink_to(target)
+    else:
+        cache.mkdir(mode=0o700)
+        if build_dir == "group-writable":
+            cache.chmod(0o770)
+        else:
+            os.chown(cache, 65534, 65534)
+    proc = _run(REPO, _HELLO, os.environ.get("PATH", ""), tmpdir)
+    assert proc.returncode != 0
+    assert "ImportError" in proc.stderr and str(cache) in proc.stderr, proc.stderr
+    assert list(cache.iterdir()) == []
+
+
+def test_unmappable_library_fails_at_import(tmp_path):
+    """A library the loader cannot map (as from a noexec temp dir) fails the
+    import with an ImportError that names the path and the likely cause."""
+    tmpdir = tmp_path / "tmp"
+    tmpdir.mkdir()
+    code = """
+import ctypes
+def cdll(path, *a, **k):
+    raise OSError(path + ": failed to map segment from shared object")
+ctypes.CDLL = cdll
+import iscc_specs_spark.kernel.native
+"""
+    proc = _run(REPO, code, os.environ.get("PATH", ""), tmpdir)
+    assert proc.returncode != 0
+    err = proc.stderr.strip().splitlines()[-1]
+    assert err.startswith("ImportError") and "noexec" in err, proc.stderr
+    assert str(_cache(tmpdir) / native._NAME) in err

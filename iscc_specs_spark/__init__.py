@@ -2,7 +2,7 @@
 clustering engine built around ISCC similarity-preserving content codes.
 
 Layout:
-    kernel/     Python/NumPy ISCC primitives, two hot loops in C (no Spark dependency)
+    kernel/     Python/NumPy ISCC primitives, hashing and hot loops in C (no Spark dependency)
     operators/  Spark DataFrame operators (codegen, LSH, clustering, ...)
     sources/    storage seam (parquet-with-snapshot-manifest), synthetic pages
     plans/      end-to-end pipelines (dedup) with checkpoint/resume + metrics

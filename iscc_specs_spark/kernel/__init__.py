@@ -1,5 +1,9 @@
-"""Python/NumPy ISCC kernel (no Spark imports); the batch path's MinHash
-and CDC cut are C, built at first import of ``kernel.batch`` (``native``).
+"""Python/NumPy ISCC kernel (no Spark imports); its xxh32/xxh64 and the
+batch path's MinHash and CDC cut are C (``native``), built with ``cc`` when
+this package is first imported: ``kernel.codes`` hashes through it, so
+every importer of any kernel module (the Spark driver and executors,
+``oracles.py``, ``scripts/check_oracles.py``) needs a C compiler and an
+exec-capable temp dir.
 
 These are the functions the vectorized pandas UDFs in
 ``iscc_specs_spark.operators`` call per Arrow batch.  Semantics follow the

@@ -1,10 +1,12 @@
-/* The kernel's two hot loops, compiled at first import by kernel/native.py
- * and called through ctypes. Both reproduce a reference path bit for bit:
+/* The kernel's hot loops, compiled at first import by kernel/native.py
+ * and called through ctypes. Each reproduces a reference path bit for bit:
  *
  *   minhash_segments  sketches.minhash_np over each segment of a feature
  *                     array, without the (K, 64) perm_hash matrix;
  *   cdc_lengths       [len(c) for c in cdc.data_chunks(blob)] for each blob
- *                     of a joined buffer, quirks included.
+ *                     of a joined buffer, quirks included;
+ *   xxh32_var,        xxhashes.xxh32 / xxh64 (seed 0) of each message
+ *   xxh64_var         (offset, length) of one buffer.
  *
  * The spec data (permutation pairs, gear table, CDC parameters) comes from
  * constants.py through the callers; nothing here allocates memory.
@@ -109,4 +111,106 @@ int64_t cdc_lengths(const uint8_t *data, const int64_t *blob_lens, int64_t n_blo
         data += n;
     }
     return total;
+}
+
+#define P32_1 UINT32_C(2654435761)
+#define P32_2 UINT32_C(2246822519)
+#define P32_3 UINT32_C(3266489917)
+#define P32_4 UINT32_C(668265263)
+#define P32_5 UINT32_C(374761393)
+#define P64_1 UINT64_C(11400714785074694791)
+#define P64_2 UINT64_C(14029467366897019727)
+#define P64_3 UINT64_C(1609587929392839161)
+#define P64_4 UINT64_C(9650029242287828579)
+#define P64_5 UINT64_C(2870177450012600261)
+
+/* little-endian loads, whatever the host's byte order */
+static uint32_t read32(const uint8_t *p)
+{
+    return (uint32_t)p[0] | (uint32_t)p[1] << 8 | (uint32_t)p[2] << 16 | (uint32_t)p[3] << 24;
+}
+
+static uint64_t read64(const uint8_t *p)
+{
+    return (uint64_t)read32(p) | (uint64_t)read32(p + 4) << 32;
+}
+
+static uint32_t rotl32(uint32_t x, int r) { return (x << r) | (x >> (32 - r)); }
+static uint64_t rotl64(uint64_t x, int r) { return (x << r) | (x >> (64 - r)); }
+
+static uint32_t xxh32(const uint8_t *p, int64_t n)
+{
+    const uint8_t *end = p + n;
+    uint32_t acc;
+    if (n >= 16) {
+        uint32_t v[4] = {P32_1 + P32_2, P32_2, 0, 0 - P32_1};
+        for (; end - p >= 16; p += 16)
+            for (int j = 0; j < 4; j++)
+                v[j] = rotl32(v[j] + read32(p + 4 * j) * P32_2, 13) * P32_1;
+        acc = rotl32(v[0], 1) + rotl32(v[1], 7) + rotl32(v[2], 12) + rotl32(v[3], 18);
+    } else {
+        acc = P32_5;
+    }
+    acc += (uint32_t)n;
+    for (; end - p >= 4; p += 4)
+        acc = rotl32(acc + read32(p) * P32_3, 17) * P32_4;
+    for (; p < end; p++)
+        acc = rotl32(acc + *p * P32_5, 11) * P32_1;
+    acc ^= acc >> 15;
+    acc *= P32_2;
+    acc ^= acc >> 13;
+    acc *= P32_3;
+    return acc ^ (acc >> 16);
+}
+
+static uint64_t round64(uint64_t acc, uint64_t lane)
+{
+    return rotl64(acc + lane * P64_2, 31) * P64_1;
+}
+
+static uint64_t xxh64(const uint8_t *p, int64_t n)
+{
+    const uint8_t *end = p + n;
+    uint64_t acc;
+    if (n >= 32) {
+        uint64_t v[4] = {P64_1 + P64_2, P64_2, 0, 0 - P64_1};
+        for (; end - p >= 32; p += 32)
+            for (int j = 0; j < 4; j++)
+                v[j] = round64(v[j], read64(p + 8 * j));
+        acc = rotl64(v[0], 1) + rotl64(v[1], 7) + rotl64(v[2], 12) + rotl64(v[3], 18);
+        for (int j = 0; j < 4; j++)
+            acc = (acc ^ round64(0, v[j])) * P64_1 + P64_4;
+    } else {
+        acc = P64_5;
+    }
+    acc += (uint64_t)n;
+    for (; end - p >= 8; p += 8)
+        acc = rotl64(acc ^ round64(0, read64(p)), 27) * P64_1 + P64_4;
+    if (end - p >= 4) {
+        acc = rotl64(acc ^ read32(p) * P64_1, 23) * P64_2 + P64_3;
+        p += 4;
+    }
+    for (; p < end; p++)
+        acc = rotl64(acc ^ *p * P64_5, 11) * P64_1;
+    acc ^= acc >> 33;
+    acc *= P64_2;
+    acc ^= acc >> 29;
+    acc *= P64_3;
+    return acc ^ (acc >> 32);
+}
+
+/* out[m] = xxh32 / xxh64 of data[offsets[m] : offsets[m] + lengths[m]] for
+ * each of the n messages; the caller has checked they lie inside data. */
+void xxh32_var(const uint8_t *data, const int64_t *offsets, const int64_t *lengths,
+               int64_t n, uint64_t *out)
+{
+    for (int64_t m = 0; m < n; m++)
+        out[m] = xxh32(data + offsets[m], lengths[m]);
+}
+
+void xxh64_var(const uint8_t *data, const int64_t *offsets, const int64_t *lengths,
+               int64_t n, uint64_t *out)
+{
+    for (int64_t m = 0; m < n; m++)
+        out[m] = xxh64(data + offsets[m], lengths[m]);
 }

@@ -1,20 +1,20 @@
 """Batch (cross-document) vectorized code generation.
 
-The pandas-UDF hot path: instead of per-document NumPy calls, all shingles of
-all ASCII documents in an Arrow batch are hashed in a handful of vectorized
-sweeps, and each document's MinHash/SimHash is reduced from its segment of
+The pandas-UDF hot path: instead of per-document calls, all shingles of all
+ASCII documents in an Arrow batch are stacked into one shingle matrix per
+group and each document's MinHash/SimHash is reduced from its segment of
 rows. A shingle group is capped at ``_SHINGLE_BUDGET`` rows, so a ~8 KB page
-(~8k shingles) is a group of its own. The two loops NumPy does badly run in
-C (``kernel.native``): the MinHash of every segment of a group in one fused
-pass that never builds the (K, 64) permutation matrix, and the CDC cut of
-every blob of a group in one call. Data-ID then hashes all CDC chunks of the
-group in one vectorised ``xxh32_var`` and takes their MinHash in one fused
-pass. SimHash is one ``bincount`` of digest bytes per group.
+(~8k shingles) is a group of its own. The loops run in C (``kernel.native``):
+xxh32 and xxh64 of every shingle row of a group, one call per width; the
+MinHash of every segment in one fused pass that never builds the (K, 64)
+permutation matrix; the CDC cut of every blob of a group in one call, then
+xxh32 of all its chunks in one call and their MinHash in one fused pass.
+SimHash is one ``bincount`` of digest bytes per group.
 Non-ASCII or sub-window documents fall back to the per-document kernel path
 (identical results — the fast path is pinned to the scalar path by
 tests/test_batch.py property checks and transitively by the golden vectors;
-the C loops to ``sketches.minhash_np`` and ``cdc.data_chunks`` by
-tests/test_native.py).
+the C loops to ``sketches.minhash_np``, ``cdc.data_chunks`` and the scalar
+``xxhashes`` by tests/test_native.py and tests/test_kernel.py).
 """
 
 from __future__ import annotations
@@ -39,20 +39,26 @@ from iscc_specs_spark.kernel.constants import (
     WINDOW_SIZE_CID_T,
     WINDOW_SIZE_MID,
 )
-from iscc_specs_spark.kernel.native import cdc_lengths, minhash_segments
+from iscc_specs_spark.kernel.native import (
+    cdc_lengths,
+    minhash_segments,
+    xxh32_var,
+    xxh64_var,
+)
 from iscc_specs_spark.kernel.sketches import lsb_digest, segment_bit_counts
 from iscc_specs_spark.kernel.textnorm import text_normalize, text_trim
-from iscc_specs_spark.kernel.xxhashes import xxh32_fixed, xxh32_var, xxh64, xxh64_fixed
 
 # cap a shingle group's temporaries, L2-resident per worker (the kernel runs
 # 32× concurrently per host, so DRAM bandwidth is the budget): the (K, 25)
-# uint8 shingle matrix, the xxh32/xxh64 sweeps and the bit-count bincount
-# keys, ~150 B per shingle, so 3k shingles → ~0.5 MB. The MinHash keeps
-# only 64 running mins per segment, whatever the group size.
+# uint8 shingle matrix, its row offsets and lengths, the xxh32/xxh64 digests
+# and the bit-count bincount keys, ~150 B per shingle, so 3k shingles →
+# ~0.5 MB. The MinHash keeps only 64 running mins per segment, whatever the
+# group size.
 _SHINGLE_BUDGET = 3_000
 # cap the temporaries of hashing one group of blobs' CDC chunks: the joined
-# blobs plus ~100 B per chunk; web pages average ~85 B per chunk, so a group
-# takes at most a quarter of the budget in blob bytes (one blob at least)
+# blobs plus ~40 B per chunk (lengths, offsets, hashes); web pages average
+# ~85 B per chunk, so a group takes at most a quarter of the budget in blob
+# bytes (one blob at least)
 _CHUNK_BYTES_BUDGET = 1 << 20
 
 
@@ -91,19 +97,22 @@ def _shingle_matrix(docs: list[str], width: int, step: int):
     return mat, lens
 
 
+def _hash_rows(hash_var, mat: np.ndarray) -> np.ndarray:
+    """``native.xxh32_var`` or ``xxh64_var`` of each row of a (K, L) uint8
+    matrix → (K,) uint64."""
+    k, width = mat.shape
+    return hash_var(mat, np.arange(k, dtype=np.int64) * width, np.full(k, width))
+
+
 def _segments_minhash_simhash(mat: np.ndarray, lens: np.ndarray):
     """Hash an (K, L) shingle matrix and reduce per segment of ``lens`` rows.
 
     Returns (minhash (R,64) uint64, simhash (R,) uint64).
     """
-    old = np.seterr(over="ignore")
-    try:
-        mh = minhash_segments(xxh32_fixed(mat), lens)
-        counts = segment_bit_counts(xxh64_fixed(mat), lens)
-        sim_bits = (2 * counts >= lens[:, None]).astype(np.uint8)
-        return mh, _pack_u64_rows(sim_bits)
-    finally:
-        np.seterr(**old)
+    mh = minhash_segments(_hash_rows(xxh32_var, mat), lens)
+    counts = segment_bit_counts(_hash_rows(xxh64_var, mat), lens)
+    sim_bits = (2 * counts >= lens[:, None]).astype(np.uint8)
+    return mh, _pack_u64_rows(sim_bits)
 
 
 def content_text_batch(texts: Sequence[str | None]):
@@ -170,12 +179,7 @@ def meta_batch(titles: Sequence[str | None]):
 
     if fast:
         mat, lens = _shingle_matrix([trimmed[i] for i in fast], width, 1)
-        old = np.seterr(over="ignore")
-        try:
-            digs = xxh64_fixed(mat)
-        finally:
-            np.seterr(**old)
-        counts = segment_bit_counts(digs, lens)
+        counts = segment_bit_counts(_hash_rows(xxh64_var, mat), lens)
         sims = _pack_u64_rows((2 * counts >= lens[:, None]).astype(np.uint8))
         for g, i in enumerate(fast):
             mid_body[i] = sims[g].astype(np.int64)
@@ -183,7 +187,7 @@ def meta_batch(titles: Sequence[str | None]):
 
     for i in slow:
         bufs = [g.encode("utf-8") for g in sliding_window(trimmed[i], width)]
-        digs = _hash_buffers(bufs, xxh64_fixed, xxh64)
+        digs = _hash_buffers(bufs, xxh64_var)
         sim = _simhash_u64(digs)
         mid_body[i] = np.uint64(sim).astype(np.int64)
         mids[i] = encode(HEAD_MID + sim.to_bytes(8, "big"))
@@ -195,9 +199,9 @@ def data_instance_batch(blobs: Sequence[bytes | None]):
     """Data-ID + Instance-ID for a batch of binary blobs.
 
     The blobs of a group (bounded by ``_CHUNK_BYTES_BUDGET``) are joined
-    once: one C call cuts every blob into its CDC chunks, one ``xxh32_var``
-    call hashes all chunks, and one fused MinHash with the chunk counts as
-    segment lengths gives every blob's Data-ID body.
+    once: one C call cuts every blob into its CDC chunks, one C
+    ``xxh32_var`` call hashes all chunks, and one fused MinHash with the
+    chunk counts as segment lengths gives every blob's Data-ID body.
 
     Returns dict: did list[str], did_body int64, n_chunks int32,
     iid list[str], iid_body int64, tophash list[str].

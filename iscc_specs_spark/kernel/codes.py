@@ -29,6 +29,7 @@ from iscc_specs_spark.kernel.constants import (
     WINDOW_SIZE_CID_T,
     WINDOW_SIZE_MID,
 )
+from iscc_specs_spark.kernel.native import xxh32_var, xxh64_var
 from iscc_specs_spark.kernel.sketches import (
     lsb_digest,
     minhash_np,
@@ -36,7 +37,7 @@ from iscc_specs_spark.kernel.sketches import (
     similarity_hash,
 )
 from iscc_specs_spark.kernel.textnorm import text_normalize, text_trim
-from iscc_specs_spark.kernel.xxhashes import xxh32, xxh32_fixed, xxh64, xxh64_fixed
+from iscc_specs_spark.kernel.xxhashes import xxh32
 
 
 def sliding_window(seq, width: int):
@@ -46,27 +47,11 @@ def sliding_window(seq, width: int):
     return (seq[i : i + width] for i in range(max(len(seq) - width + 1, 1)))
 
 
-# ---------------------------------------------------------------------------
-# batched variable-length hashing helpers
-# ---------------------------------------------------------------------------
-
-def _hash_buffers(bufs: list[bytes], fixed_fn, scalar_fn) -> np.ndarray:
-    """Hash a list of byte strings; equal-length groups go through the
-    vectorized fixed-width kernel, stragglers through the scalar one."""
-    out = np.zeros(len(bufs), dtype=np.uint64)
-    by_len: dict[int, list[int]] = {}
-    for idx, b in enumerate(bufs):
-        by_len.setdefault(len(b), []).append(idx)
-    for length, idxs in by_len.items():
-        if length > 0 and len(idxs) >= 4:
-            mat = np.frombuffer(
-                b"".join(bufs[i] for i in idxs), dtype=np.uint8
-            ).reshape(len(idxs), length)
-            out[idxs] = fixed_fn(mat).astype(np.uint64)
-        else:
-            for i in idxs:
-                out[i] = scalar_fn(bufs[i])
-    return out
+def _hash_buffers(bufs: list[bytes], hash_var) -> np.ndarray:
+    """``hash_var`` (``native.xxh32_var`` or ``xxh64_var``) of each byte
+    string → (N,) uint64: one join, one C call."""
+    lens = np.fromiter(map(len, bufs), dtype=np.int64, count=len(bufs))
+    return hash_var(b"".join(bufs), np.cumsum(lens) - lens, lens)
 
 
 def _joined_ngram_features(norm: str, width: int = WINDOW_SIZE_CID_T):
@@ -77,23 +62,8 @@ def _joined_ngram_features(norm: str, width: int = WINDOW_SIZE_CID_T):
     character (reference iscc.py:57), so an ASCII 13-gram hashes as 25 bytes.
     Returns (feats32, digs64) as uint64 arrays.
     """
-    enc = norm.encode("utf-8")
-    n = len(norm)
-    if len(enc) == n and n >= width:
-        # pure-ASCII fast path: build the (N, 2*width-1) joined matrix directly
-        a = np.frombuffer(enc, dtype=np.uint8)
-        win = np.lib.stride_tricks.sliding_window_view(a, width)
-        mat = np.full((win.shape[0], 2 * width - 1), 32, dtype=np.uint8)
-        mat[:, ::2] = win
-        return (
-            xxh32_fixed(mat).astype(np.uint64),
-            xxh64_fixed(mat),
-        )
     bufs = [" ".join(w).encode("utf-8") for w in sliding_window(norm, width)]
-    return (
-        _hash_buffers(bufs, xxh32_fixed, xxh32),
-        _hash_buffers(bufs, xxh64_fixed, xxh64),
-    )
+    return _hash_buffers(bufs, xxh32_var), _hash_buffers(bufs, xxh64_var)
 
 
 def _simhash_u64(digests: np.ndarray) -> int:
@@ -113,7 +83,7 @@ def meta_id(title: str | bytes, extra: str | bytes = "") -> list[str]:
     extra_t = text_trim(text_normalize(extra, keep_ws=True))
     concat = " ".join((title_t, extra_t)).strip()
     bufs = [g.encode("utf-8") for g in sliding_window(concat, WINDOW_SIZE_MID)]
-    digs = _hash_buffers(bufs, xxh64_fixed, xxh64)
+    digs = _hash_buffers(bufs, xxh64_var)
     sim = _simhash_u64(digs)
     code = encode(HEAD_MID + sim.to_bytes(8, "big"))
     return [code, title_t, extra_t]

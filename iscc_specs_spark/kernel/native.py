@@ -1,5 +1,9 @@
 """The kernel's compiled loops: ``_native.c``, built at first import and
-called through ``ctypes``.
+called through ``ctypes``. They are the batch path's MinHash and CDC cut,
+and xxh32/xxh64: every hashing caller of the kernel, batch and scalar
+path alike, makes one ``xxh32_var``/``xxh64_var`` call per width, except
+``codes.data_id_full``, which keeps the scalar ``xxhashes.xxh32`` as the
+independent code tests/test_batch.py checks the chunk hash against.
 
 The source is read with ``pkgutil.get_data``, so it loads from a checkout
 and from a ``--py-files`` zip alike. It is compiled with ``cc`` into
@@ -13,9 +17,11 @@ this user owns them and no one else can write them: another user's or a
 world-writable library is rebuilt, an open dir is refused at import.
 
 There is no fallback: without a C compiler on ``PATH`` (and no built
-library) this module fails to import, and so does ``kernel.batch`` and,
-through it, ``operators.codegen`` — the Spark driver needs the compiler
-as well as the executors. The temp dir must allow exec (a ``noexec``
+library) this module fails to import, and so does the ``kernel`` package
+(``kernel.codes`` hashes through it) and everything that imports any of
+its modules: ``operators.codegen``, ``oracles.py`` and
+``scripts/check_oracles.py`` — the Spark driver needs the compiler as
+well as the executors. The temp dir must allow exec (a ``noexec``
 mount cannot map the library; point ``TMPDIR`` elsewhere).
 
 No ``-march``: the executors of one cluster may have different CPUs.
@@ -116,6 +122,7 @@ def _load() -> ctypes.CDLL:
         ) from e
 
 
+_u8 = np.ctypeslib.ndpointer(np.uint8, flags="C_CONTIGUOUS")
 _u64 = np.ctypeslib.ndpointer(np.uint64, flags="C_CONTIGUOUS")
 _i64 = np.ctypeslib.ndpointer(np.int64, flags="C_CONTIGUOUS")
 
@@ -124,6 +131,9 @@ _LIB.minhash_segments.argtypes = (_u64, _i64, ctypes.c_int64, _u64, _u64, _u64)
 _LIB.minhash_segments.restype = None
 _LIB.cdc_lengths.argtypes = (ctypes.c_char_p, _i64, ctypes.c_int64, _u64, _u64, _i64, _i64)
 _LIB.cdc_lengths.restype = ctypes.c_int64
+for _fn in (_LIB.xxh32_var, _LIB.xxh64_var):
+    _fn.argtypes = (_u8, _i64, _i64, ctypes.c_int64, _u64)
+    _fn.restype = None
 
 _GEAR = np.array(CHUNKING_GEAR, dtype=np.uint64)
 _CDC_PARAMS = np.array(
@@ -159,3 +169,30 @@ def cdc_lengths(joined: bytes, blob_lens: np.ndarray):
         joined, blob_lens, blob_lens.size, _GEAR, _CDC_PARAMS, chunk_lens, n_chunks
     )
     return chunk_lens[:total], n_chunks
+
+
+def _hash_messages(fn, buf, offsets, lengths) -> np.ndarray:
+    data = np.frombuffer(buf, dtype=np.uint8)
+    offsets = np.ascontiguousarray(offsets, dtype=np.int64)
+    lengths = np.ascontiguousarray(lengths, dtype=np.int64)
+    if offsets.shape != lengths.shape or offsets.ndim != 1:
+        raise ValueError("offsets and lengths must be 1-D arrays of one size")
+    if offsets.size and (
+        offsets.min() < 0 or lengths.min() < 0 or np.any(lengths > data.size - offsets)
+    ):
+        raise ValueError("every message must lie inside the buffer")
+    out = np.empty(offsets.size, dtype=np.uint64)
+    fn(data, offsets, lengths, offsets.size, out)
+    return out
+
+
+def xxh32_var(buf, offsets, lengths) -> np.ndarray:
+    """xxh32 (seed 0) of each message ``buf[offsets[m] : offsets[m] +
+    lengths[m]]`` of a bytes-like ``buf`` → (M,) uint64; equals
+    ``xxhashes.xxh32`` of each."""
+    return _hash_messages(_LIB.xxh32_var, buf, offsets, lengths)
+
+
+def xxh64_var(buf, offsets, lengths) -> np.ndarray:
+    """xxh64 (seed 0) of each message of ``buf``, as :func:`xxh32_var`."""
+    return _hash_messages(_LIB.xxh64_var, buf, offsets, lengths)

@@ -1,13 +1,13 @@
 """xxHash32 / xxHash64 implemented from the public xxHash specification.
 
-The sandbox has no ``xxhash`` C module, so the kernel carries its own
-implementation (seed is always 0 in ISCC).  Two forms:
-
-* scalar ``xxh32(data)`` / ``xxh64(data)`` over ``bytes`` — reference path,
-  used for odd-sized inputs (CDC chunks).
-* ``xxh32_fixed(arr)`` / ``xxh64_fixed(arr)`` — NumPy-vectorized over a 2-D
-  ``uint8`` array of N equal-length messages (the n-gram hot path: thousands
-  of shingles per document hashed in one vectorized sweep).
+The kernel depends on no ``xxhash`` package; it carries its own (seed is
+always 0 in ISCC). These scalar ``xxh32(data)`` / ``xxh64(data)`` over
+``bytes`` are the reference that tests/test_kernel.py pins the C loops
+``kernel.native.xxh32_var`` / ``xxh64_var`` to (one call over many
+messages of one buffer). Every hashing caller of the kernel makes one
+such call, except ``codes.data_id_full``: it hashes its chunks here, so
+that tests/test_batch.py checks the batch path's chunk hash against
+independent code.
 
 Correctness is transitively pinned by the ISCC golden vectors (every Meta-ID
 vector exercises xxh64, every Content-ID-Text / Data-ID vector exercises
@@ -16,8 +16,6 @@ Algorithm reference: https://github.com/Cyan4973/xxHash/blob/dev/doc/xxhash_spec
 """
 
 from __future__ import annotations
-
-import numpy as np
 
 _M32 = 0xFFFFFFFF
 _M64 = 0xFFFFFFFFFFFFFFFF
@@ -135,181 +133,3 @@ def xxh64(data: bytes, seed: int = 0) -> int:
     acc = (acc * P64_3) & _M64
     acc ^= acc >> 32
     return acc
-
-
-# ---------------------------------------------------------------------------
-# NumPy-vectorized, N messages of equal byte-length L (2-D uint8 array)
-# ---------------------------------------------------------------------------
-
-_u32 = np.uint32
-_u64 = np.uint64
-
-
-def _vrotl32(x: np.ndarray, r: int) -> np.ndarray:
-    return (x << _u32(r)) | (x >> _u32(32 - r))
-
-
-def _vrotl64(x: np.ndarray, r: int) -> np.ndarray:
-    return (x << _u64(r)) | (x >> _u64(64 - r))
-
-
-def _lane32(arr: np.ndarray, off: int) -> np.ndarray:
-    """Little-endian u32 at byte ``off`` of each row: a view of those 4
-    bytes only (``astype`` of the whole matrix per lane was the cost)."""
-    return arr[:, off : off + 4].view("<u4")[:, 0]
-
-
-def _lane64(arr: np.ndarray, off: int) -> np.ndarray:
-    return arr[:, off : off + 8].view("<u8")[:, 0]
-
-
-def xxh32_fixed(arr: np.ndarray) -> np.ndarray:
-    """xxh32 (seed 0) of each row of an (N, L) uint8 array → (N,) uint32."""
-    n_rows, n = arr.shape
-    i = 0
-    old = np.seterr(over="ignore")
-    try:
-        if n >= 16:
-            v1 = np.full(n_rows, (P32_1 + P32_2) & _M32, dtype=_u32)
-            v2 = np.full(n_rows, P32_2, dtype=_u32)
-            v3 = np.zeros(n_rows, dtype=_u32)
-            v4 = np.full(n_rows, (-P32_1) & _M32, dtype=_u32)
-            p1, p2 = _u32(P32_1), _u32(P32_2)
-            while i + 16 <= n:
-                v1 = _vrotl32(v1 + _lane32(arr, i) * p2, 13) * p1
-                v2 = _vrotl32(v2 + _lane32(arr, i + 4) * p2, 13) * p1
-                v3 = _vrotl32(v3 + _lane32(arr, i + 8) * p2, 13) * p1
-                v4 = _vrotl32(v4 + _lane32(arr, i + 12) * p2, 13) * p1
-                i += 16
-            acc = _vrotl32(v1, 1) + _vrotl32(v2, 7) + _vrotl32(v3, 12) + _vrotl32(v4, 18)
-        else:
-            acc = np.full(n_rows, P32_5, dtype=_u32)
-
-        acc = acc + _u32(n & _M32)
-        p3, p4, p5, p1 = _u32(P32_3), _u32(P32_4), _u32(P32_5), _u32(P32_1)
-        while i + 4 <= n:
-            acc = _vrotl32(acc + _lane32(arr, i) * p3, 17) * p4
-            i += 4
-        while i < n:
-            acc = _vrotl32(acc + arr[:, i].astype(_u32) * p5, 11) * p1
-            i += 1
-
-        acc = acc ^ (acc >> _u32(15))
-        acc = acc * _u32(P32_2)
-        acc = acc ^ (acc >> _u32(13))
-        acc = acc * _u32(P32_3)
-        acc = acc ^ (acc >> _u32(16))
-        return acc
-    finally:
-        np.seterr(**old)
-
-
-# lane offsets within a 16-byte xxh32 stripe, and the accumulators' seeds
-_STRIPE_LANES = np.arange(0, 16, 4)
-_V32_INIT = np.array([(P32_1 + P32_2) & _M32, P32_2, 0, (-P32_1) & _M32], dtype=_u32)
-
-
-def xxh32_var(buf, offsets: np.ndarray, lengths: np.ndarray) -> np.ndarray:
-    """xxh32 (seed 0) of M variable-length messages
-    ``buf[offsets[m] : offsets[m] + lengths[m]]`` → (M,) uint32.
-
-    Messages run longest first, so each 16-byte stripe step works on the
-    prefix of rows that still have a stripe left: the number of steps is
-    the longest message's stripe count, not one per message. The caller
-    bounds the temporaries (~100 B per message) by the size of ``buf``."""
-    data = np.frombuffer(buf, dtype=np.uint8)
-    # the little-endian u32 at every byte offset, as a zero-copy view
-    words = np.ndarray((max(data.size - 3, 0),), dtype="<u4", buffer=data, strides=(1,))
-    lengths = np.asarray(lengths, dtype=np.int64)
-    order = np.argsort(-lengths, kind="stable")
-    ln = lengths[order]
-    pos = np.asarray(offsets, dtype=np.int64)[order]
-    stripes = ln >> 4
-    acc = np.full(ln.size, P32_5, dtype=_u32)
-    n_big = int(np.count_nonzero(stripes))
-    if n_big:
-        v = np.tile(_V32_INIT, (n_big, 1))
-        p1, p2 = _u32(P32_1), _u32(P32_2)
-        # rows with more than s stripes: a prefix, as stripes descend
-        active = np.searchsorted(-stripes[:n_big], -np.arange(stripes[0]))
-        for k in active:
-            lanes = words[pos[:k, None] + _STRIPE_LANES]
-            v[:k] = _vrotl32(v[:k] + lanes * p2, 13) * p1
-            pos[:k] += 16
-        acc[:n_big] = (
-            _vrotl32(v[:, 0], 1) + _vrotl32(v[:, 1], 7)
-            + _vrotl32(v[:, 2], 12) + _vrotl32(v[:, 3], 18)
-        )
-    acc += ln.astype(_u32)
-    # tails: up to three 4-byte lanes, then up to three single bytes
-    rem = ln & 15
-    p3, p4, p5, p1 = _u32(P32_3), _u32(P32_4), _u32(P32_5), _u32(P32_1)
-    for t in range(3):
-        rows = np.flatnonzero(rem >= 4 * (t + 1))
-        acc[rows] = _vrotl32(acc[rows] + words[pos[rows]] * p3, 17) * p4
-        pos[rows] += 4
-    for t in range(3):
-        rows = np.flatnonzero((rem & 3) > t)
-        acc[rows] = _vrotl32(acc[rows] + data[pos[rows]].astype(_u32) * p5, 11) * p1
-        pos[rows] += 1
-
-    acc ^= acc >> _u32(15)
-    acc *= _u32(P32_2)
-    acc ^= acc >> _u32(13)
-    acc *= _u32(P32_3)
-    acc ^= acc >> _u32(16)
-    out = np.empty_like(acc)
-    out[order] = acc
-    return out
-
-
-def _vround64(acc: np.ndarray, lane: np.ndarray) -> np.ndarray:
-    return _vrotl64(acc + lane * _u64(P64_2), 31) * _u64(P64_1)
-
-
-def xxh64_fixed(arr: np.ndarray) -> np.ndarray:
-    """xxh64 (seed 0) of each row of an (N, L) uint8 array → (N,) uint64."""
-    n_rows, n = arr.shape
-    i = 0
-    old = np.seterr(over="ignore")
-    try:
-        if n >= 32:
-            v1 = np.full(n_rows, (P64_1 + P64_2) & _M64, dtype=_u64)
-            v2 = np.full(n_rows, P64_2, dtype=_u64)
-            v3 = np.zeros(n_rows, dtype=_u64)
-            v4 = np.full(n_rows, (-P64_1) & _M64, dtype=_u64)
-            while i + 32 <= n:
-                v1 = _vround64(v1, _lane64(arr, i))
-                v2 = _vround64(v2, _lane64(arr, i + 8))
-                v3 = _vround64(v3, _lane64(arr, i + 16))
-                v4 = _vround64(v4, _lane64(arr, i + 24))
-                i += 32
-            acc = _vrotl64(v1, 1) + _vrotl64(v2, 7) + _vrotl64(v3, 12) + _vrotl64(v4, 18)
-            for v in (v1, v2, v3, v4):
-                acc = acc ^ _vround64(np.zeros(n_rows, dtype=_u64), v)
-                acc = acc * _u64(P64_1) + _u64(P64_4)
-        else:
-            acc = np.full(n_rows, P64_5, dtype=_u64)
-
-        acc = acc + _u64(n)
-        while i + 8 <= n:
-            acc = acc ^ _vround64(np.zeros(n_rows, dtype=_u64), _lane64(arr, i))
-            acc = _vrotl64(acc, 27) * _u64(P64_1) + _u64(P64_4)
-            i += 8
-        if i + 4 <= n:
-            acc = acc ^ (_lane32(arr, i).astype(_u64) * _u64(P64_1))
-            acc = _vrotl64(acc, 23) * _u64(P64_2) + _u64(P64_3)
-            i += 4
-        while i < n:
-            acc = acc ^ (arr[:, i].astype(_u64) * _u64(P64_5))
-            acc = _vrotl64(acc, 11) * _u64(P64_1)
-            i += 1
-
-        acc = acc ^ (acc >> _u64(33))
-        acc = acc * _u64(P64_2)
-        acc = acc ^ (acc >> _u64(29))
-        acc = acc * _u64(P64_3)
-        acc = acc ^ (acc >> _u64(32))
-        return acc
-    finally:
-        np.seterr(**old)

@@ -8,7 +8,8 @@ per-bit Mixed-CID majority vote, base58 encoding — independently in DuckDB
 from that staged parquet.  Kernel values themselves are pinned bit-for-bit
 by tests/test_conformance.py (golden vectors), so the combination covers
 both layers: conformance proves the kernel, these oracles prove everything
-Spark does with it.
+Spark does with it. Importing this module imports the ``kernel`` package,
+which builds its C loops, so it needs ``cc`` on PATH (``kernel/native.py``).
 
 Band buckets are grouped by the *raw* band value tuple here, while Spark
 groups by ``xxhash64`` of the tuple — identical bucketing unless xxhash64

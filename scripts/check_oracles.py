@@ -6,6 +6,9 @@ and compare row count, column names, and values (exact; floats reported with
 max-abs-diff when unequal). Rows-only entries just report row counts.
 
 Usage: python scripts/check_oracles.py [sf_dir] [query ...]
+
+Needs ``cc`` on PATH: importing any ``iscc_specs_spark.kernel`` module
+builds the kernel's C loops (``kernel/native.py``).
 """
 
 from __future__ import annotations

@@ -2,9 +2,9 @@
 generated ~8 KB pages, in one thread and with no Spark.
 
 The steps replay ``kernel.batch.content_text_batch`` (normalise, build
-the shingle matrix, xxh32/xxh64 of the shingles, the fused C MinHash,
-SimHash bit counts) and ``data_instance_batch`` (the C CDC cut, chunk hash,
-chunk MinHash, Instance-ID) on the same inputs and budgets; the two batch
+the shingle matrix, the C xxh32/xxh64 of the shingles, the fused C
+MinHash, SimHash bit counts) and ``data_instance_batch`` (the C CDC cut, C
+chunk hash, chunk MinHash, Instance-ID) on the same inputs and budgets; the two batch
 functions are also timed whole, so the sum of the steps can be checked
 against them. Each figure is the best of ``--reps`` passes over all pages.
 
@@ -31,14 +31,14 @@ from workloads import WORDS_8K, KernelPages  # noqa: E402
 from iscc_specs_spark.kernel import batch  # noqa: E402
 from iscc_specs_spark.kernel.codes import instance_id  # noqa: E402
 from iscc_specs_spark.kernel.constants import WINDOW_SIZE_CID_T  # noqa: E402
-from iscc_specs_spark.kernel.native import cdc_lengths, minhash_segments  # noqa: E402
+from iscc_specs_spark.kernel.native import (  # noqa: E402
+    cdc_lengths,
+    minhash_segments,
+    xxh32_var,
+    xxh64_var,
+)
 from iscc_specs_spark.kernel.sketches import segment_bit_counts  # noqa: E402
 from iscc_specs_spark.kernel.textnorm import text_normalize  # noqa: E402
-from iscc_specs_spark.kernel.xxhashes import (  # noqa: E402
-    xxh32_fixed,
-    xxh32_var,
-    xxh64_fixed,
-)
 
 
 class Clock:
@@ -64,9 +64,9 @@ def content_steps(texts: list[str], clk: Clock) -> None:
     for group in batch._budget_groups(fast, sizes, batch._SHINGLE_BUDGET):
         mat, lens = batch._shingle_matrix([norms[i] for i in group], width, 2)
         clk.lap("text: shingle matrix")
-        feats = xxh32_fixed(mat)
+        feats = batch._hash_rows(xxh32_var, mat)
         clk.lap("text: shingle xxh32")
-        digs = xxh64_fixed(mat)
+        digs = batch._hash_rows(xxh64_var, mat)
         clk.lap("text: shingle xxh64")
         minhash_segments(feats, lens)
         clk.lap("text: fused minhash")

@@ -12,13 +12,8 @@ import numpy as np
 import pytest
 
 from iscc_specs_spark import kernel
-from iscc_specs_spark.kernel.xxhashes import (
-    xxh32,
-    xxh32_fixed,
-    xxh32_var,
-    xxh64,
-    xxh64_fixed,
-)
+from iscc_specs_spark.kernel.native import xxh32_var, xxh64_var
+from iscc_specs_spark.kernel.xxhashes import xxh32, xxh64
 
 FIXTURES = Path(__file__).parent / "fixtures"
 
@@ -39,41 +34,61 @@ def test_xxh64_known_answers():
     assert xxh64(b"abc") == 0x44BC2CF5AD770999
 
 
-@pytest.mark.parametrize("length", [1, 3, 4, 5, 13, 15, 16, 17, 25, 31, 32, 33, 64, 100])
+def _check_var(buf: bytes, offsets, lens) -> None:
+    """Both C widths == the scalar reference on every message."""
+    for var, ref in ((xxh32_var, xxh32), (xxh64_var, xxh64)):
+        got = var(buf, offsets, lens)
+        assert got.dtype == np.uint64 and got.shape == (len(lens),)
+        want = [ref(buf[o : o + n]) for o, n in zip(offsets, lens)]
+        assert [int(x) for x in got] == want, ref.__name__
+
+
+# every length up to 80 crosses each lane (4/8 B) and stripe (16/32 B) edge
+@pytest.mark.parametrize("length", [*range(81), 100])
 def test_vectorized_matches_scalar(length):
+    """23 messages of one length at odd offsets of one buffer."""
     rng = np.random.default_rng(7)
-    mat = rng.integers(0, 256, size=(23, length), dtype=np.uint8)
-    rows = [bytes(r) for r in mat]
-    got32 = xxh32_fixed(mat)
-    got64 = xxh64_fixed(mat)
-    for i, row in enumerate(rows):
-        assert int(got32[i]) == xxh32(row)
-        assert int(got64[i]) == xxh64(row)
+    offsets = np.arange(23, dtype=np.int64) * (length + 2) + 1
+    buf = rng.integers(0, 256, 23 * (length + 2) + 1, dtype=np.uint8).tobytes()
+    _check_var(buf, offsets, np.full(23, length, dtype=np.int64))
 
 
 def test_xxh32_var_matches_scalar():
-    """Variable-length messages at arbitrary offsets of one buffer: every
-    tail shape around the 4- and 16-byte boundaries, empty messages,
-    GEAR2-sized chunks, and a buffer larger than one data_instance_batch
-    chunk-hash group."""
+    """Variable-length messages at arbitrary offsets of one buffer, in both
+    widths: every tail shape around the 4-, 8-, 16- and 32-byte boundaries,
+    empty messages, GEAR2-sized chunks, a message over 1 MB and a buffer
+    larger than one data_instance_batch chunk-hash group."""
     from iscc_specs_spark.kernel.batch import _CHUNK_BYTES_BUDGET
 
     rng = np.random.default_rng(11)
     lens = np.concatenate([
         rng.integers(0, 301, 300),
-        [0, 3, 4, 15, 16, 17, 31, 32, 33, 0],
+        [0, 3, 4, 7, 8, 15, 16, 17, 31, 32, 33, 63, 64, 65, 0],
         [2049, 4096, 6143, 65536],
-        [_CHUNK_BYTES_BUDGET - 70000],
+        [_CHUNK_BYTES_BUDGET - 70000, _CHUNK_BYTES_BUDGET + 7],
     ]).astype(np.int64)
     rng.shuffle(lens)
     gaps = rng.integers(0, 5, lens.size)  # messages need not be contiguous
     offsets = np.cumsum(lens + gaps) - lens
     buf = rng.integers(0, 256, int(offsets[-1] + lens[-1] + 3), dtype=np.uint8).tobytes()
-    assert len(buf) > _CHUNK_BYTES_BUDGET
-    got = xxh32_var(buf, offsets, lens)
-    assert got.dtype == np.uint32
-    assert [int(x) for x in got] == [xxh32(buf[o : o + n]) for o, n in zip(offsets, lens)]
-    assert xxh32_var(b"", np.zeros(0, np.int64), np.zeros(0, np.int64)).size == 0
+    assert len(buf) > 2 * _CHUNK_BYTES_BUDGET
+    _check_var(buf, offsets, lens)
+    # overlapping messages, and the last one ending at the buffer's end
+    _check_var(buf, [0, 1, 2, len(buf) - 40], [70, 69, 0, 40])
+    for var in (xxh32_var, xxh64_var):
+        assert var(b"", np.zeros(0, np.int64), np.zeros(0, np.int64)).size == 0
+        assert var(b"abc", [], []).dtype == np.uint64
+
+
+@pytest.mark.parametrize("var", [xxh32_var, xxh64_var])
+@pytest.mark.parametrize(
+    "offsets, lens",
+    [([0, 60], [4, 5]), ([64], [1]), ([-1], [2]), ([3], [-1]), ([1 << 62], [1 << 62]),
+     ([0], [65]), ([0, 1], [1])],
+)
+def test_xxh_var_rejects_messages_outside_buffer(var, offsets, lens):
+    with pytest.raises(ValueError):
+        var(bytes(64), np.array(offsets), np.array(lens))
 
 
 @pytest.mark.parametrize("lens", [[8355], [1], [255] * 9, [256] * 9, [5, 1, 300, 2500, 17]])

@@ -1,6 +1,7 @@
 """The kernel's C loops (``kernel.native``) == their NumPy/Python reference
-(``sketches.minhash_np``, ``cdc.data_chunks``), and the library builds from
-a ``--py-files`` zip. No Spark."""
+(``sketches.minhash_np``, ``cdc.data_chunks``; the xxHash loops are pinned
+to the scalar ``xxhashes`` in tests/test_kernel.py), and the library builds
+from a ``--py-files`` zip. No Spark."""
 
 from __future__ import annotations
 
@@ -147,23 +148,28 @@ def test_zip_builds_and_codes_match_golden(tmp_path, monkeypatch):
         vectors = json.load(f)
     text, _ = vectors["content_id_text"]["test_003_long"]["inputs"]
     want_cid = vectors["content_id_text"]["test_003_long"]["outputs"]
+    title, extra = vectors["meta_id"]["test_009_long_i18n"]["inputs"]
+    want_mid = vectors["meta_id"]["test_009_long_i18n"]["outputs"][0]
     files = {
         os.path.join(FIXTURES, v["inputs"][0]): v["outputs"]
         for k, v in vectors["data_id"].items() if k != "required"
     }
     code = f"""
 import iscc_specs_spark
+import iscc_specs_spark.kernel
 from iscc_specs_spark.kernel.batch import content_text_batch, data_instance_batch
 assert iscc_specs_spark.__file__.startswith({zip_path!r}), iscc_specs_spark.__file__
 print(content_text_batch([{text!r}])["cid"][0])
 blobs = [open(p, "rb").read() for p in {list(files)!r}]
 print(" ".join(data_instance_batch(blobs)["did"]))
+print(iscc_specs_spark.kernel.meta_id({title!r}, {extra!r})[0])
 """
     proc = _run(zip_path, code, os.environ.get("PATH", ""), tmpdir)
     assert proc.returncode == 0, proc.stderr
-    cid, dids = proc.stdout.split("\n")[:2]
+    cid, dids, mid = proc.stdout.split("\n")[:3]
     assert cid == want_cid
     assert dids.split() == list(files.values())
+    assert mid == want_mid  # the scalar path's xxh64 runs in C too
     # the library was built from the zip's source into this user's private
     # build dir under the empty temp dir
     cache = _cache(tmpdir)
@@ -178,10 +184,11 @@ def test_zip_without_compiler_fails_at_import(tmp_path, monkeypatch):
     tmpdir.mkdir()
     empty_bin = tmp_path / "bin"
     empty_bin.mkdir()
-    proc = _run(zip_path, "import iscc_specs_spark.kernel.batch", str(empty_bin), tmpdir)
-    assert proc.returncode != 0
-    assert "ImportError" in proc.stderr and "C compiler" in proc.stderr, proc.stderr
-    assert list(_cache(tmpdir).iterdir()) == []
+    for module in ("iscc_specs_spark.kernel", "iscc_specs_spark.kernel.batch"):
+        proc = _run(zip_path, f"import {module}", str(empty_bin), tmpdir)
+        assert proc.returncode != 0
+        assert "ImportError" in proc.stderr and "C compiler" in proc.stderr, proc.stderr
+        assert list(_cache(tmpdir).iterdir()) == []
 
 
 _HELLO = """
@@ -243,15 +250,16 @@ def test_unmappable_library_fails_at_import(tmp_path):
     import with an ImportError that names the path and the likely cause."""
     tmpdir = tmp_path / "tmp"
     tmpdir.mkdir()
-    code = """
+    for module in ("iscc_specs_spark.kernel", "iscc_specs_spark.kernel.native"):
+        code = f"""
 import ctypes
 def cdll(path, *a, **k):
     raise OSError(path + ": failed to map segment from shared object")
 ctypes.CDLL = cdll
-import iscc_specs_spark.kernel.native
+import {module}
 """
-    proc = _run(REPO, code, os.environ.get("PATH", ""), tmpdir)
-    assert proc.returncode != 0
-    err = proc.stderr.strip().splitlines()[-1]
-    assert err.startswith("ImportError") and "noexec" in err, proc.stderr
-    assert str(_cache(tmpdir) / native._NAME) in err
+        proc = _run(REPO, code, os.environ.get("PATH", ""), tmpdir)
+        assert proc.returncode != 0
+        err = proc.stderr.strip().splitlines()[-1]
+        assert err.startswith("ImportError") and "noexec" in err, proc.stderr
+        assert str(_cache(tmpdir) / native._NAME) in err

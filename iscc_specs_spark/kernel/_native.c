@@ -1,12 +1,20 @@
 /* The kernel's hot loops, compiled at first import by kernel/native.py
  * and called through ctypes. Each reproduces a reference path bit for bit:
  *
+ *   text_sketch       the batch text path from normalised ASCII text: per
+ *                     doc, xxh32 and xxh64 of each spaced character window,
+ *                     folded into sketches.minhash_np and codes._simhash_u64
+ *                     as they are made, with no feature or digest array;
  *   minhash_segments  sketches.minhash_np over each segment of a feature
  *                     array, without the (K, 64) perm_hash matrix;
  *   cdc_lengths       [len(c) for c in cdc.data_chunks(blob)] for each blob
  *                     of a joined buffer, quirks included;
  *   xxh32_var,        xxhashes.xxh32 / xxh64 (seed 0) of each message
  *   xxh64_var         (offset, length) of one buffer.
+ *
+ * The two MinHash loops are built as per-CPU clones (CLONES below): the
+ * loader resolves each to its AVX-512, AVX2 or baseline body from the CPU
+ * it runs on, so one library is right on every x86-64 host.
  *
  * The spec data (permutation pairs, gear table, CDC parameters) comes from
  * constants.py through the callers; nothing here allocates memory.
@@ -18,32 +26,64 @@
 #define MAX32 UINT64_C(0xFFFFFFFF)
 #define N_PERM 64
 
-/* For each of the n_seg consecutive segments of feats (lens[s] rows each,
- * every segment at least one row) and each of the 64 permutations (a, b):
- * the min over the segment's features x of ((x*a + b) mod 2^64)
- * mod (2^61 - 1) & MAX32, written to out[s*64 + p].
+/* Function multi-versioning by ifunc: GCC 12+ on x86-64 glibc. Elsewhere
+ * (another compiler, architecture or libc) and under -DISCC_NO_CLONES,
+ * which only the tests set to build each body on its own, the plain loop
+ * compiles for the build target. */
+#if !defined(ISCC_NO_CLONES) && defined(__x86_64__) && defined(__GLIBC__) && \
+    defined(__GNUC__) && !defined(__clang__) && __GNUC__ >= 12
+#define CLONES_ON 1
+#define CLONES __attribute__((target_clones("arch=x86-64-v4", "arch=x86-64-v3", "default")))
+#else
+#define CLONES
+#endif
+
+/* The clone the loader picks on this CPU ("no clones" in a plain build). */
+const char *isa(void)
+{
+#ifdef CLONES_ON
+    __builtin_cpu_init();
+    if (__builtin_cpu_supports("x86-64-v4"))
+        return "x86-64-v4";
+    if (__builtin_cpu_supports("x86-64-v3"))
+        return "x86-64-v3";
+    return "default";
+#else
+    return "no clones";
+#endif
+}
+
+/* One feature x into the 64 running mins: for each permutation (a, b),
+ * ((x*a + b) mod 2^64) mod (2^61 - 1) & MAX32.
  *
  * h mod M, M = 2^61 - 1, is the fold f = (h & M) + (h >> 61), which is
  * below 2M for any 64-bit h, then the conditional subtract of M written
  * without a branch: f >= M exactly when bit 61 of f + 1 is set, and then
  * f - M = (f + 1) - 2^61. The result is below 2^32 after & MAX32, so the
  * running mins are 32-bit, which lets the compiler vectorise the loop. */
-void minhash_segments(const uint64_t *feats, const int64_t *lens, int64_t n_seg,
-                      const uint64_t *a, const uint64_t *b, uint64_t *out)
+static inline void perm_min(uint32_t *mins, uint64_t x, const uint64_t *a,
+                            const uint64_t *b)
+{
+    for (int p = 0; p < N_PERM; p++) {
+        uint64_t h = x * a[p] + b[p];
+        h = (h & MERSENNE_61) + (h >> 61);
+        uint32_t v = (uint32_t)((h + ((h + 1) >> 61)) & MAX32);
+        mins[p] = v < mins[p] ? v : mins[p];
+    }
+}
+
+/* For each of the n_seg consecutive segments of feats (lens[s] rows each,
+ * every segment at least one row): the MinHash of the segment's features,
+ * written to out[s*64 : s*64 + 64]. */
+CLONES void minhash_segments(const uint64_t *feats, const int64_t *lens, int64_t n_seg,
+                             const uint64_t *a, const uint64_t *b, uint64_t *out)
 {
     for (int64_t s = 0; s < n_seg; s++) {
         uint32_t mins[N_PERM];
         for (int p = 0; p < N_PERM; p++)
             mins[p] = UINT32_MAX;
-        for (int64_t k = lens[s]; k > 0; k--) {
-            uint64_t x = *feats++;
-            for (int p = 0; p < N_PERM; p++) {
-                uint64_t h = x * a[p] + b[p];
-                h = (h & MERSENNE_61) + (h >> 61);
-                uint32_t v = (uint32_t)((h + ((h + 1) >> 61)) & MAX32);
-                mins[p] = v < mins[p] ? v : mins[p];
-            }
-        }
+        for (int64_t k = lens[s]; k > 0; k--)
+            perm_min(mins, *feats++, a, b);
         for (int p = 0; p < N_PERM; p++)
             out[s * N_PERM + p] = mins[p];
     }
@@ -213,4 +253,60 @@ void xxh64_var(const uint8_t *data, const int64_t *offsets, const int64_t *lengt
 {
     for (int64_t m = 0; m < n; m++)
         out[m] = xxh64(data + offsets[m], lengths[m]);
+}
+
+/* The SimHash votes of one digest: votes[j] counts set bits at position j,
+ * column 0 = the most-significant bit. Two 32-bit halves keep every lane
+ * 32 bits wide, which vectorises. */
+static inline void vote(uint32_t *votes, uint64_t d)
+{
+    uint32_t hi = (uint32_t)(d >> 32), lo = (uint32_t)d;
+    for (int j = 0; j < 32; j++) {
+        votes[j] += (hi >> (31 - j)) & 1;
+        votes[32 + j] += (lo >> (31 - j)) & 1;
+    }
+}
+
+/* The n_docs consecutive docs of text (lens[r] bytes each, every doc at
+ * least width long). Each window of width characters is hashed with
+ * step - 1 spaces between its characters (Content-ID: " ".join(window),
+ * step 2; Meta-ID: the window as it is, step 1), so each doc is first
+ * copied once, spaced, into spaced (room for step * max(lens) bytes).
+ *
+ * Per doc r, over its lens[r] - width + 1 windows: simhash[r] gets bit
+ * 63 - j set when 2 * (digests with bit 63 - j set) >= windows, over the
+ * xxh64 digests (ties vote 1); and, given the permutations a and b, the
+ * 64 MinHash values of the xxh32 features go to minhash[r*64 : r*64 + 64].
+ * With a == NULL no MinHash is made and minhash is not touched. */
+CLONES void text_sketch(const uint8_t *text, const int64_t *lens, int64_t n_docs,
+                        int64_t width, int64_t step, uint8_t *spaced, uint64_t *simhash,
+                        const uint64_t *a, const uint64_t *b, uint64_t *minhash)
+{
+    int64_t span = step * (width - 1) + 1; /* bytes of one spaced window */
+    for (int64_t r = 0; r < n_docs; r++) {
+        int64_t n = lens[r];
+        int64_t windows = n - width + 1;
+        for (int64_t i = 0; i < n; i++) {
+            spaced[step * i] = text[i];
+            for (int64_t j = 1; j < step; j++)
+                spaced[step * i + j] = ' ';
+        }
+        text += n;
+        uint32_t mins[N_PERM], votes[64] = {0};
+        for (int p = 0; p < N_PERM; p++)
+            mins[p] = UINT32_MAX;
+        for (int64_t w = 0; w < windows; w++) {
+            const uint8_t *win = spaced + step * w;
+            if (a)
+                perm_min(mins, xxh32(win, span), a, b);
+            vote(votes, xxh64(win, span));
+        }
+        uint64_t sim = 0;
+        for (int j = 0; j < 64; j++)
+            sim |= (uint64_t)(2 * (int64_t)votes[j] >= windows) << (63 - j);
+        simhash[r] = sim;
+        if (a)
+            for (int p = 0; p < N_PERM; p++)
+                minhash[r * N_PERM + p] = mins[p];
+    }
 }

@@ -1,20 +1,21 @@
 """Batch (cross-document) vectorized code generation.
 
-The pandas-UDF hot path: instead of per-document calls, all shingles of all
-ASCII documents in an Arrow batch are stacked into one shingle matrix per
-group and each document's MinHash/SimHash is reduced from its segment of
-rows. A shingle group is capped at ``_SHINGLE_BUDGET`` rows, so a ~8 KB page
-(~8k shingles) is a group of its own. The loops run in C (``kernel.native``):
-xxh32 and xxh64 of every shingle row of a group, one call per width; the
-MinHash of every segment in one fused pass that never builds the (K, 64)
-permutation matrix; the CDC cut of every blob of a group in one call, then
-xxh32 of all its chunks in one call and their MinHash in one fused pass.
-SimHash is one ``bincount`` of digest bytes per group.
+The pandas-UDF hot path: instead of per-document calls, each batch function
+makes one C call (``kernel.native``) over all documents of an Arrow batch
+that take its fast path. Text: ``text_sketch`` copies each normalised
+ASCII document once, spaced, and hashes every shingle with xxh32 (MinHash)
+and xxh64 (SimHash votes) as it goes; no shingle, feature or digest array
+is built, so the text path needs no group budget.
+Content-IDs hash 13-grams with a space between characters, Meta-IDs
+4-grams as they are. Data: the CDC cut of every blob of a group in one
+call, then xxh32 of all its chunks in one call and their MinHash in one
+fused pass that never builds the (K, 64) permutation matrix.
 Non-ASCII or sub-window documents fall back to the per-document kernel path
 (identical results — the fast path is pinned to the scalar path by
 tests/test_batch.py property checks and transitively by the golden vectors;
-the C loops to ``sketches.minhash_np``, ``cdc.data_chunks`` and the scalar
-``xxhashes`` by tests/test_native.py and tests/test_kernel.py).
+the C loops to ``sketches.minhash_np``, ``codes._simhash_u64``,
+``cdc.data_chunks`` and the scalar ``xxhashes`` by tests/test_native.py
+and tests/test_kernel.py).
 """
 
 from __future__ import annotations
@@ -42,23 +43,18 @@ from iscc_specs_spark.kernel.constants import (
 from iscc_specs_spark.kernel.native import (
     cdc_lengths,
     minhash_segments,
+    text_sketch,
     xxh32_var,
     xxh64_var,
 )
-from iscc_specs_spark.kernel.sketches import lsb_digest, segment_bit_counts
+from iscc_specs_spark.kernel.sketches import lsb_digest
 from iscc_specs_spark.kernel.textnorm import text_normalize, text_trim
 
-# cap a shingle group's temporaries, L2-resident per worker (the kernel runs
-# 32× concurrently per host, so DRAM bandwidth is the budget): the (K, 25)
-# uint8 shingle matrix, its row offsets and lengths, the xxh32/xxh64 digests
-# and the bit-count bincount keys, ~150 B per shingle, so 3k shingles →
-# ~0.5 MB. The MinHash keeps only 64 running mins per segment, whatever the
-# group size.
-_SHINGLE_BUDGET = 3_000
-# cap the temporaries of hashing one group of blobs' CDC chunks: the joined
-# blobs plus ~40 B per chunk (lengths, offsets, hashes); web pages average
-# ~85 B per chunk, so a group takes at most a quarter of the budget in blob
-# bytes (one blob at least)
+# cap the temporaries of hashing one group of blobs' CDC chunks, L2-resident
+# per worker (the kernel runs 32× concurrently per host, so DRAM bandwidth
+# is the budget): the joined blobs plus ~40 B per chunk (lengths, offsets,
+# hashes); web pages average ~85 B per chunk, so a group takes at most a
+# quarter of the budget in blob bytes (one blob at least)
 _CHUNK_BYTES_BUDGET = 1 << 20
 
 
@@ -81,38 +77,6 @@ def _pack_u64_rows(bits: np.ndarray) -> np.ndarray:
     """(R, 64) 0/1 uint8, col 0 = MSB → (R,) uint64."""
     packed = np.packbits(bits, axis=1)  # (R, 8) big-endian bytes
     return packed.view(">u8").astype(np.uint64).reshape(-1)
-
-
-def _shingle_matrix(docs: list[str], width: int, step: int):
-    """Stack the character ``width``-grams of ASCII docs (each at least one
-    window long), ``step - 1`` spaces between characters → (K, L) uint8
-    matrix, segment lens. Content-ID hashes the grams
-    space-joined (step 2, 13 chars → 25 bytes), Meta-ID as they are."""
-    lens = np.array([len(d) - width + 1 for d in docs], dtype=np.int64)
-    starts = np.cumsum(lens) - lens
-    mat = np.full((int(lens.sum()), step * (width - 1) + 1), 32, dtype=np.uint8)
-    for d, a, k in zip(docs, starts, lens):
-        chars = np.frombuffer(d.encode("ascii"), dtype=np.uint8)
-        mat[a : a + k, ::step] = np.lib.stride_tricks.sliding_window_view(chars, width)
-    return mat, lens
-
-
-def _hash_rows(hash_var, mat: np.ndarray) -> np.ndarray:
-    """``native.xxh32_var`` or ``xxh64_var`` of each row of a (K, L) uint8
-    matrix → (K,) uint64."""
-    k, width = mat.shape
-    return hash_var(mat, np.arange(k, dtype=np.int64) * width, np.full(k, width))
-
-
-def _segments_minhash_simhash(mat: np.ndarray, lens: np.ndarray):
-    """Hash an (K, L) shingle matrix and reduce per segment of ``lens`` rows.
-
-    Returns (minhash (R,64) uint64, simhash (R,) uint64).
-    """
-    mh = minhash_segments(_hash_rows(xxh32_var, mat), lens)
-    counts = segment_bit_counts(_hash_rows(xxh64_var, mat), lens)
-    sim_bits = (2 * counts >= lens[:, None]).astype(np.uint8)
-    return mh, _pack_u64_rows(sim_bits)
 
 
 def content_text_batch(texts: Sequence[str | None]):
@@ -143,16 +107,14 @@ def content_text_batch(texts: Sequence[str | None]):
             minhash[i] = mh
             n_features[i] = nf
 
-    sizes = [len(norms[i]) - WINDOW_SIZE_CID_T + 1 for i in fast]
-    for group in _budget_groups(fast, sizes, _SHINGLE_BUDGET):
-        mat, lens = _shingle_matrix([norms[i] for i in group], WINDOW_SIZE_CID_T, 2)
-        mh, sim = _segments_minhash_simhash(mat, lens)
+    if fast:
+        mh, sim = text_sketch([norms[i] for i in fast], WINDOW_SIZE_CID_T, 2, True)
         bodies = _pack_u64_rows((mh & np.uint64(1)).astype(np.uint8))
-        for g, i in enumerate(group):
-            minhash[i] = mh[g]
-            simhash[i] = np.uint64(sim[g]).astype(np.int64)
-            cid_body[i] = bodies[g].astype(np.int64)
-            n_features[i] = lens[g]
+        minhash[fast] = mh
+        simhash[fast] = sim.view(np.int64)
+        cid_body[fast] = bodies.view(np.int64)
+        for g, i in enumerate(fast):
+            n_features[i] = len(norms[i]) - WINDOW_SIZE_CID_T + 1
             cid[i] = encode(HEAD_CID_T + int(bodies[g]).to_bytes(8, "big"))
 
     return {
@@ -178,11 +140,9 @@ def meta_batch(titles: Sequence[str | None]):
     slow = [i for i in range(n_rows) if i not in fast_set]
 
     if fast:
-        mat, lens = _shingle_matrix([trimmed[i] for i in fast], width, 1)
-        counts = segment_bit_counts(_hash_rows(xxh64_var, mat), lens)
-        sims = _pack_u64_rows((2 * counts >= lens[:, None]).astype(np.uint8))
+        _, sims = text_sketch([trimmed[i] for i in fast], width, 1, False)
+        mid_body[fast] = sims.view(np.int64)
         for g, i in enumerate(fast):
-            mid_body[i] = sims[g].astype(np.int64)
             mids[i] = encode(HEAD_MID + int(sims[g]).to_bytes(8, "big"))
 
     for i in slow:

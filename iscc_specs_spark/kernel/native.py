@@ -1,7 +1,9 @@
 """The kernel's compiled loops: ``_native.c``, built at first import and
-called through ``ctypes``. They are the batch path's MinHash and CDC cut,
-and xxh32/xxh64: every hashing caller of the kernel, batch and scalar
-path alike, makes one ``xxh32_var``/``xxh64_var`` call per width, except
+called through ``ctypes``. They are the batch path's text sketch (xxh32
+MinHash and xxh64 SimHash of every shingle of a batch, in one pass from
+the normalised text), its MinHash and CDC cut of data, and xxh32/xxh64:
+every other hashing caller of the kernel, batch and scalar path alike,
+makes one ``xxh32_var``/``xxh64_var`` call per width, except
 ``codes.data_id_full``, which keeps the scalar ``xxhashes.xxh32`` as the
 independent code tests/test_batch.py checks the chunk hash against.
 
@@ -11,10 +13,13 @@ and from a ``--py-files`` zip alike. It is compiled with ``cc`` into
 ``iscc_specs_spark-<uid>`` in ``tempfile.gettempdir()``: a process that
 finds the file loads it, one that does not compiles to a temporary name
 and renames it into place, so concurrent Python workers race safely and
-the same build is shared by every worker of a host. The name is
-predictable, so the dir (mode 0o700) and the library are loaded only if
-this user owns them and no one else can write them: another user's or a
-world-writable library is rebuilt, an open dir is refused at import.
+the same build is shared by every worker of a host. A process that built
+the library then deletes the dir's other ``.so`` and ``.tmp`` files, the
+builds of older sources; a process whose temporary file or library a
+concurrent build deleted builds once more. The name is predictable, so
+the dir (mode 0o700) and the library are loaded only if this user owns
+them and no one else can write them: another user's or a world-writable
+library is rebuilt, an open dir is refused at import.
 
 There is no fallback: without a C compiler on ``PATH`` (and no built
 library) this module fails to import, and so does the ``kernel`` package
@@ -24,7 +29,12 @@ its modules: ``operators.codegen``, ``oracles.py`` and
 well as the executors. The temp dir must allow exec (a ``noexec``
 mount cannot map the library; point ``TMPDIR`` elsewhere).
 
-No ``-march``: the executors of one cluster may have different CPUs.
+SIMD by runtime dispatch, not ``-march``: the executors of one cluster may
+have different CPUs, and a library built for the driver's may not run on
+theirs. The two MinHash loops are compiled as ``target_clones`` (AVX-512,
+AVX2 and baseline bodies in one library), and the dynamic loader picks the
+body for the CPU it runs on (``ISA`` names it), so one ``.so`` per
+architecture is right on every host.
 """
 
 from __future__ import annotations
@@ -37,6 +47,7 @@ import shutil
 import stat
 import subprocess
 import tempfile
+from typing import Sequence
 
 import numpy as np
 
@@ -108,32 +119,76 @@ def _build() -> str:
     finally:
         if os.path.exists(tmp):
             os.unlink(tmp)
+    _prune(cache)
     return path
 
 
+def _prune(cache: str) -> None:
+    """Delete this user's libraries of other sources and leftover
+    temporary files from the build dir, keeping ``_NAME``."""
+    for entry in os.scandir(cache):
+        if (
+            entry.name != _NAME
+            and entry.name.endswith((".so", ".tmp"))
+            and entry.stat(follow_symlinks=False).st_uid == os.getuid()
+        ):
+            try:
+                os.unlink(entry.path)
+            except FileNotFoundError:
+                pass  # a concurrent build pruned it first
+
+
 def _load() -> ctypes.CDLL:
-    path = _build()
-    try:
-        return ctypes.CDLL(path)
-    except OSError as e:
-        raise ImportError(
-            f"cannot load the kernel library {path}: {e} (a temp dir mounted "
-            "noexec cannot map it; set TMPDIR to a dir that allows exec)"
-        ) from e
+    """Build and load the library. A concurrent build may prune this
+    process's temporary file or, for another source, the library itself
+    before it is loaded: then it builds once more."""
+    for last in (False, True):
+        try:
+            path = _build()
+        except FileNotFoundError:
+            if last:
+                raise
+            continue
+        try:
+            return ctypes.CDLL(path)
+        except OSError as e:
+            if not last and not os.path.lexists(path):
+                continue
+            raise ImportError(
+                f"cannot load the kernel library {path}: {e} (a temp dir mounted "
+                "noexec cannot map it; set TMPDIR to a dir that allows exec)"
+            ) from e
 
 
 _u8 = np.ctypeslib.ndpointer(np.uint8, flags="C_CONTIGUOUS")
 _u64 = np.ctypeslib.ndpointer(np.uint64, flags="C_CONTIGUOUS")
 _i64 = np.ctypeslib.ndpointer(np.int64, flags="C_CONTIGUOUS")
 
-_LIB = _load()
-_LIB.minhash_segments.argtypes = (_u64, _i64, ctypes.c_int64, _u64, _u64, _u64)
-_LIB.minhash_segments.restype = None
-_LIB.cdc_lengths.argtypes = (ctypes.c_char_p, _i64, ctypes.c_int64, _u64, _u64, _i64, _i64)
-_LIB.cdc_lengths.restype = ctypes.c_int64
-for _fn in (_LIB.xxh32_var, _LIB.xxh64_var):
-    _fn.argtypes = (_u8, _i64, _i64, ctypes.c_int64, _u64)
-    _fn.restype = None
+
+def _bind(lib: ctypes.CDLL) -> ctypes.CDLL:
+    """Declare the C signatures on a loaded build of ``_native.c``."""
+    lib.isa.argtypes = ()
+    lib.isa.restype = ctypes.c_char_p
+    lib.text_sketch.argtypes = (
+        ctypes.c_char_p, _i64, ctypes.c_int64, ctypes.c_int64, ctypes.c_int64, _u8, _u64,
+        ctypes.c_void_p, ctypes.c_void_p, ctypes.c_void_p,  # NULL: no MinHash
+    )
+    lib.text_sketch.restype = None
+    lib.minhash_segments.argtypes = (_u64, _i64, ctypes.c_int64, _u64, _u64, _u64)
+    lib.minhash_segments.restype = None
+    lib.cdc_lengths.argtypes = (ctypes.c_char_p, _i64, ctypes.c_int64, _u64, _u64, _i64, _i64)
+    lib.cdc_lengths.restype = ctypes.c_int64
+    for fn in (lib.xxh32_var, lib.xxh64_var):
+        fn.argtypes = (_u8, _i64, _i64, ctypes.c_int64, _u64)
+        fn.restype = None
+    return lib
+
+
+_LIB = _bind(_load())
+# the body of the MinHash loops this CPU runs: "x86-64-v4" (AVX-512),
+# "x86-64-v3" (AVX2), "default", or "no clones" where the compiler or
+# platform has no ifunc multi-versioning
+ISA = _LIB.isa().decode()
 
 _GEAR = np.array(CHUNKING_GEAR, dtype=np.uint64)
 _CDC_PARAMS = np.array(
@@ -141,6 +196,34 @@ _CDC_PARAMS = np.array(
      GEAR2_NORM, GEAR2_MIN, GEAR2_MAX, GEAR2_MASK1, GEAR2_MASK2),
     dtype=np.uint64,
 )
+
+
+def text_sketch(docs: Sequence[str], width: int, step: int, minhash: bool):
+    """SimHash, and MinHash if ``minhash``, of the ``width``-character
+    windows of each ASCII doc, ``step - 1`` spaces put between a window's
+    characters before it is hashed → (minhash (R, 64) uint64 or None,
+    simhash (R,) uint64). Row r's MinHash equals ``sketches.minhash_np`` of
+    the xxh32 of doc r's windows, its SimHash ``codes._simhash_u64`` of
+    their xxh64; Content-ID hashes 13-grams at step 2 (``" ".join``),
+    Meta-ID 4-grams at step 1. Every doc must be ASCII and at least one
+    window long."""
+    lens = np.fromiter(map(len, docs), dtype=np.int64, count=len(docs))
+    text = "".join(docs)
+    if width < 1 or step < 1:
+        raise ValueError("width and step must be positive")
+    if not lens.size or lens.min() < width:
+        raise ValueError(f"text_sketch needs docs of at least {width} characters")
+    if not text.isascii():
+        raise ValueError("text_sketch takes ASCII docs only")
+    spaced = np.empty(step * int(lens.max()), dtype=np.uint8)
+    simhash = np.empty(lens.size, dtype=np.uint64)
+    if minhash:
+        mh = np.empty((lens.size, 64), dtype=np.uint64)
+        perms = (_PERM_A.ctypes.data, _PERM_B.ctypes.data, mh.ctypes.data)
+    else:
+        mh, perms = None, (None, None, None)
+    _LIB.text_sketch(text.encode("ascii"), lens, lens.size, width, step, spaced, simhash, *perms)
+    return mh, simhash
 
 
 def minhash_segments(features: np.ndarray, lens: np.ndarray) -> np.ndarray:

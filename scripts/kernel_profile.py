@@ -1,12 +1,14 @@
 """Time per page of each step of the kernel's batch path, on perfbench's
 generated ~8 KB pages, in one thread and with no Spark.
 
-The steps replay ``kernel.batch.content_text_batch`` (normalise, build
-the shingle matrix, the C xxh32/xxh64 of the shingles, the fused C
-MinHash, SimHash bit counts) and ``data_instance_batch`` (the C CDC cut, C
-chunk hash, chunk MinHash, Instance-ID) on the same inputs and budgets; the two batch
-functions are also timed whole, so the sum of the steps can be checked
-against them. Each figure is the best of ``--reps`` passes over all pages.
+The steps replay ``kernel.batch.content_text_batch`` (normalise, then one
+C ``text_sketch`` call: the spaced copy, xxh32/xxh64 of every shingle,
+MinHash and SimHash) and ``data_instance_batch`` (the C CDC cut, C chunk
+hash, chunk MinHash, Instance-ID) on the same inputs and budgets; the two
+batch functions are also timed whole, so the sum of the steps can be
+checked against them. Each figure is the best of ``--reps`` passes over
+all pages. The first line names the body of the C MinHash loops that
+this CPU runs (``native.ISA``).
 
 Usage: python scripts/kernel_profile.py [--seed 1] [--docs 300] [--reps 3]
 """
@@ -32,12 +34,12 @@ from iscc_specs_spark.kernel import batch  # noqa: E402
 from iscc_specs_spark.kernel.codes import instance_id  # noqa: E402
 from iscc_specs_spark.kernel.constants import WINDOW_SIZE_CID_T  # noqa: E402
 from iscc_specs_spark.kernel.native import (  # noqa: E402
+    ISA,
     cdc_lengths,
     minhash_segments,
+    text_sketch,
     xxh32_var,
-    xxh64_var,
 )
-from iscc_specs_spark.kernel.sketches import segment_bit_counts  # noqa: E402
 from iscc_specs_spark.kernel.textnorm import text_normalize  # noqa: E402
 
 
@@ -59,19 +61,9 @@ def content_steps(texts: list[str], clk: Clock) -> None:
     clk.lap("")
     norms = [text_normalize(t or "", keep_ws=False) for t in texts]
     clk.lap("text: normalise")
-    fast = [i for i, s in enumerate(norms) if s.isascii() and len(s) >= width]
-    sizes = [len(norms[i]) - width + 1 for i in fast]
-    for group in batch._budget_groups(fast, sizes, batch._SHINGLE_BUDGET):
-        mat, lens = batch._shingle_matrix([norms[i] for i in group], width, 2)
-        clk.lap("text: shingle matrix")
-        feats = batch._hash_rows(xxh32_var, mat)
-        clk.lap("text: shingle xxh32")
-        digs = batch._hash_rows(xxh64_var, mat)
-        clk.lap("text: shingle xxh64")
-        minhash_segments(feats, lens)
-        clk.lap("text: fused minhash")
-        segment_bit_counts(digs, lens)
-        clk.lap("text: bit counts")
+    fast = [s for s in norms if s.isascii() and len(s) >= width]
+    text_sketch(fast, width, 2, True)
+    clk.lap("text: text_sketch (C)")
 
 
 def data_steps(blobs: list[bytes], clk: Clock) -> None:
@@ -119,7 +111,7 @@ def main() -> None:
                 best[step] = min(best.get(step, s), s)
 
     n = len(texts)
-    print(f"seed {args.seed}, {n} pages, best of {args.reps}")
+    print(f"seed {args.seed}, {n} pages, best of {args.reps}, MinHash clone {ISA}")
     for prefix in ("text", "data", "whole"):
         rows = {k: v for k, v in best.items() if k.startswith(prefix)}
         for step, s in rows.items():

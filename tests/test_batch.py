@@ -46,18 +46,21 @@ def test_content_text_batch_matches_scalar():
 
 
 def test_content_text_batch_mixed_segments():
-    """Short ASCII docs that share one shingle group, each side of a doc
-    longer than the group budget (a group of its own), and a slow-path row
-    between them: every segment boundary must land on its own document."""
+    """Short ASCII docs each side of a long one (750 words), with a
+    one-window doc and a slow-path row between them, all in one
+    ``text_sketch`` call: every segment boundary must land on its own
+    document, and the short docs after the long one, which sizes the
+    shared spaced-copy buffer, must not hash its leftover bytes."""
     rng = np.random.default_rng(5)
     words = ["alpha", "beta", "gamma", "delta", "epsilon", "zeta", "eta", "theta"]
 
     def doc(n):
         return " ".join(rng.choice(words, n))
 
-    long_doc = doc(batch._SHINGLE_BUDGET // 4)
-    assert len(long_doc) - WINDOW_SIZE_CID_T + 1 > batch._SHINGLE_BUDGET
+    long_doc = doc(750)
+    assert len(long_doc) - WINDOW_SIZE_CID_T + 1 > 3000
     texts = [doc(3), doc(12), "x" * 13, doc(40), long_doc, doc(7), "ü" + doc(9), doc(25)]
+    assert max(map(len, texts)) == len(long_doc)
     _check_content(texts)
 
 

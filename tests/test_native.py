@@ -1,14 +1,19 @@
 """The kernel's C loops (``kernel.native``) == their NumPy/Python reference
-(``sketches.minhash_np``, ``cdc.data_chunks``; the xxHash loops are pinned
-to the scalar ``xxhashes`` in tests/test_kernel.py), and the library builds
-from a ``--py-files`` zip. No Spark."""
+(``sketches.minhash_np``, ``codes._simhash_u64`` over the scalar
+``xxhashes``, ``cdc.data_chunks``; the xxHash loops are pinned to the
+scalar ``xxhashes`` in tests/test_kernel.py), in the loaded library and in
+a build of each per-CPU clone body on its own, and the library builds from
+a ``--py-files`` zip. No Spark."""
 
 from __future__ import annotations
 
+import ctypes
+import functools
 import importlib.util
 import json
 import os
 import pathlib
+import platform
 import subprocess
 import sys
 
@@ -18,8 +23,10 @@ import pytest
 from iscc_specs_spark.kernel import native
 from iscc_specs_spark.kernel.batch import content_text_batch
 from iscc_specs_spark.kernel.cdc import data_chunks
+from iscc_specs_spark.kernel.codes import _simhash_u64
 from iscc_specs_spark.kernel.constants import GEAR1_MAX, GEAR1_MIN, GEAR2_MAX
 from iscc_specs_spark.kernel.sketches import _PERM_A, _PERM_B, minhash_np
+from iscc_specs_spark.kernel.xxhashes import xxh32, xxh64
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 FIXTURES = os.path.join(REPO, "tests", "fixtures")
@@ -74,6 +81,112 @@ def test_minhash_rejects_bad_segments():
     for lens in ([5, 0], [2, 2], [3, 3]):
         with pytest.raises(ValueError):
             native.minhash_segments(feats, np.array(lens))
+
+
+def _sketch_ref(doc: str, width: int, step: int):
+    """MinHash and SimHash of one doc's spaced windows, from the scalar
+    xxHash and the reference folds."""
+    sep = " " * (step - 1)
+    wins = [sep.join(doc[i : i + width]).encode() for i in range(len(doc) - width + 1)]
+    feats = np.array([xxh32(w) for w in wins], dtype=np.uint64)
+    digs = np.array([xxh64(w) for w in wins], dtype=np.uint64)
+    return minhash_np(feats), _simhash_u64(digs)
+
+
+@functools.cache
+def _text_cases():
+    """(docs, width, step, reference rows) of one ``text_sketch`` call each."""
+    rng = np.random.default_rng(18)
+    letters = list("abcdefghij klmnop")
+
+    def rand_doc(n):
+        return "".join(rng.choice(letters, n))
+
+    def ascii_bytes(n):  # every ASCII code but NUL
+        return "".join(map(chr, rng.integers(1, 128, n)))
+
+    calls = []
+    for width in (13, 4):
+        for step in (1, 2):
+            calls.append(([rand_doc(n) for n in range(width, width + 71)], width, step))
+            calls.append(([rand_doc(width) for _ in range(5)], width, step))  # one window
+            calls.append(([c * n for c in "a ~" for n in (width, width + 1, 200)], width, step))
+            calls.append(([ascii_bytes(n) for n in (width, 50, 900)], width, step))
+    titles = [rand_doc(int(n)) for n in rng.integers(4, 80, 500)]
+    calls.append((titles, 4, 1))  # a meta_batch of titles
+    calls.append(([rand_doc(30), rand_doc(12_500 + 13), rand_doc(20)], 13, 2))
+    return [
+        (docs, width, step, [_sketch_ref(d, width, step) for d in docs])
+        for docs, width, step in calls
+    ]
+
+
+def test_text_sketch_matches_reference():
+    assert max(len(d) for docs, *_ in _text_cases() for d in docs) - 13 + 1 > 12_000
+    for docs, width, step, want in _text_cases():
+        mh, sim = native.text_sketch(docs, width, step, True)
+        no_mh, sim_only = native.text_sketch(docs, width, step, False)
+        assert mh.shape == (len(docs), 64) and mh.dtype == np.uint64
+        assert sim.shape == (len(docs),) and sim.dtype == np.uint64
+        assert no_mh is None and np.array_equal(sim_only, sim)
+        for r, (want_mh, want_sim) in enumerate(want):
+            case = f"width {width} step {step} doc {r} ({len(docs[r])} chars)"
+            assert np.array_equal(mh[r], want_mh), case
+            assert int(sim[r]) == want_sim, case
+
+
+@pytest.mark.parametrize(
+    "docs", [[], ["twelve chars"], ["long enough ascii", "long enough, not ascii: é"]]
+)
+def test_text_sketch_rejects_bad_docs(docs, monkeypatch):
+    """Empty input, a doc shorter than a window and non-ASCII text are
+    refused before any C call."""
+    monkeypatch.setattr(native, "_LIB", None)
+    with pytest.raises(ValueError):
+        native.text_sketch(docs, 13, 2, True)
+
+
+# the CPU flags each clone body needs, as /proc/cpuinfo names them
+_V3 = {"avx", "avx2", "bmi1", "bmi2", "f16c", "fma", "abm", "movbe", "xsave"}
+_LEVELS = {
+    "x86-64-v3": _V3,
+    "x86-64-v4": _V3 | {"avx512f", "avx512bw", "avx512cd", "avx512dq", "avx512vl"},
+}
+
+
+def _cpu_flags() -> set[str]:
+    try:
+        with open("/proc/cpuinfo") as f:
+            for line in f:
+                if line.startswith("flags"):
+                    return set(line.split(":", 1)[1].split())
+    except OSError:
+        pass
+    return set()
+
+
+@pytest.mark.parametrize("level", ["default", "x86-64-v3", "x86-64-v4"])
+def test_each_clone_body_matches_reference(level, tmp_path, monkeypatch):
+    """Build each body of the MinHash loops on its own (-DISCC_NO_CLONES,
+    with the clone's -march) and check it, not only the one this CPU
+    dispatches to."""
+    march = []
+    if level != "default":
+        if platform.machine() != "x86_64" or not _LEVELS[level] <= _cpu_flags():
+            pytest.skip(f"this CPU cannot run {level} code")
+        march = [f"-march={level}"]
+    so = tmp_path / "native.so"
+    proc = subprocess.run(
+        ["cc", *native._FLAGS, "-DISCC_NO_CLONES", *march, "-x", "c", "-", "-o", str(so)],
+        input=native._SRC, capture_output=True,
+    )
+    assert proc.returncode == 0, proc.stderr.decode()
+    lib = native._bind(ctypes.CDLL(str(so)))
+    assert lib.isa() == b"no clones"
+    monkeypatch.setattr(native, "_LIB", lib)
+    test_minhash_fold_edges()
+    test_minhash_random_features(800)
+    test_text_sketch_matches_reference()
 
 
 def _blobs():
@@ -218,6 +331,67 @@ def test_planted_library_is_rebuilt_not_loaded(tmp_path, planted):
     st = lib.stat()
     assert lib.read_bytes()[:4] == b"\x7fELF"
     assert st.st_uid == os.getuid() and not st.st_mode & 0o022
+
+
+def test_build_prunes_stale_files(tmp_path):
+    """A build deletes the dir's libraries of other sources and leftover
+    temporary files, and keeps its own."""
+    tmpdir = tmp_path / "tmp"
+    cache = _cache(tmpdir)
+    cache.mkdir(parents=True, mode=0o700)
+    for name in ("0" * 64 + ".so", "1" * 64 + ".so.x1y2z3.tmp"):
+        (cache / name).write_bytes(b"stale")
+        (cache / name).chmod(0o700)
+    proc = _run(REPO, _HELLO, os.environ.get("PATH", ""), tmpdir)
+    assert proc.returncode == 0, proc.stderr
+    assert proc.stdout.strip() == content_text_batch(["hello world"])["cid"][0]
+    assert [p.name for p in cache.iterdir()] == [native._NAME]
+
+
+def test_library_pruned_before_load_is_rebuilt(tmp_path):
+    """A build of another source may prune this process's library between
+    its build and ``ctypes.CDLL``: the import builds once more and loads."""
+    tmpdir = tmp_path / "tmp"
+    tmpdir.mkdir()
+    code = """
+import ctypes, os
+real, loads = ctypes.CDLL, []
+def cdll(path, *args, **kw):
+    if path.endswith(".so"):
+        loads.append(path)
+        if len(loads) == 1:
+            os.unlink(path)  # as a concurrent build's prune does
+    return real(path, *args, **kw)
+ctypes.CDLL = cdll
+""" + _HELLO + "print(len(loads), len(set(loads)))"
+    proc = _run(REPO, code, os.environ.get("PATH", ""), tmpdir)
+    assert proc.returncode == 0, proc.stderr
+    cid, loads = proc.stdout.strip().splitlines()
+    assert cid == content_text_batch(["hello world"])["cid"][0]
+    assert loads == "2 1"
+    assert [p.name for p in _cache(tmpdir).iterdir()] == [native._NAME]
+
+
+def test_concurrent_cold_builds(tmp_path):
+    """Two processes building into one empty dir at once both load, though
+    the first to finish prunes the other's temporary file."""
+    tmpdir = tmp_path / "tmp"
+    tmpdir.mkdir()
+    env = {"PATH": os.environ.get("PATH", ""), "TMPDIR": str(tmpdir)}
+    prelude = f"import sys; sys.path.insert(0, {REPO!r})\n"
+    procs = [
+        subprocess.Popen(
+            [sys.executable, "-I", "-c", prelude + _HELLO], env=env, cwd=str(tmpdir),
+            stdout=subprocess.PIPE, stderr=subprocess.PIPE, text=True,
+        )
+        for _ in range(2)
+    ]
+    want = content_text_batch(["hello world"])["cid"][0]
+    for proc in procs:
+        out, err = proc.communicate(timeout=120)
+        assert proc.returncode == 0, err
+        assert out.strip() == want
+    assert [p.name for p in _cache(tmpdir).iterdir()] == [native._NAME]
 
 
 @pytest.mark.parametrize("build_dir", ["group-writable", "symlink", "foreign"])

@@ -1,6 +1,8 @@
-"""Python/NumPy ISCC kernel (no Spark imports); its xxh32/xxh64 and the
-batch path's MinHash and CDC cut are C (``native``), built with ``cc`` when
-this package is first imported: ``kernel.codes`` hashes through it, so
+"""Python/NumPy ISCC kernel (no Spark imports); its text sketch (UTF-8
+text → MinHash and SimHash, one path for batch and scalar Meta-ID and
+Content-ID-Text), the batch data path's MinHash and CDC cut and its
+xxh32/xxh64 are C (``native``), built with ``cc`` when this package is
+first imported: ``kernel.codes`` hashes through it, so
 every importer of any kernel module (the Spark driver and executors,
 ``oracles.py``, ``scripts/check_oracles.py``) needs a C compiler and an
 exec-capable temp dir.

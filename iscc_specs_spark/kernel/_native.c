@@ -1,10 +1,11 @@
 /* The kernel's hot loops, compiled at first import by kernel/native.py
  * and called through ctypes. Each reproduces a reference path bit for bit:
  *
- *   text_sketch       the batch text path from normalised ASCII text: per
- *                     doc, xxh32 and xxh64 of each spaced character window,
- *                     folded into sketches.minhash_np and codes._simhash_u64
- *                     as they are made, with no feature or digest array;
+ *   text_sketch       the one text path, from normalised text as UTF-8:
+ *                     per doc, xxh32 and xxh64 of each spaced window of
+ *                     code points, folded into sketches.minhash_np and the
+ *                     sketches.similarity_hash of the xxh64 digests as
+ *                     they are made, with no feature or digest array;
  *   minhash_segments  sketches.minhash_np over each segment of a feature
  *                     array, without the (K, 64) perm_hash matrix;
  *   cdc_lengths       [len(c) for c in cdc.data_chunks(blob)] for each blob
@@ -17,7 +18,9 @@
  * it runs on, so one library is right on every x86-64 host.
  *
  * The spec data (permutation pairs, gear table, CDC parameters) comes from
- * constants.py through the callers; nothing here allocates memory.
+ * constants.py through the callers; nothing here allocates memory. Text
+ * comes from Python's str.encode, so it is valid UTF-8: nothing here
+ * checks it.
  */
 
 #include <stdint.h>
@@ -267,40 +270,69 @@ static inline void vote(uint32_t *votes, uint64_t d)
     }
 }
 
-/* The n_docs consecutive docs of text (lens[r] bytes each, every doc at
- * least width long). Each window of width characters is hashed with
- * step - 1 spaces between its characters (Content-ID: " ".join(window),
- * step 2; Meta-ID: the window as it is, step 1), so each doc is first
- * copied once, spaced, into spaced (room for step * max(lens) bytes).
- *
- * Per doc r, over its lens[r] - width + 1 windows: simhash[r] gets bit
- * 63 - j set when 2 * (digests with bit 63 - j set) >= windows, over the
- * xxh64 digests (ties vote 1); and, given the permutations a and b, the
- * 64 MinHash values of the xxh32 features go to minhash[r*64 : r*64 + 64].
- * With a == NULL no MinHash is made and minhash is not touched. */
-CLONES void text_sketch(const uint8_t *text, const int64_t *lens, int64_t n_docs,
-                        int64_t width, int64_t step, uint8_t *spaced, uint64_t *simhash,
-                        const uint64_t *a, const uint64_t *b, uint64_t *minhash)
+/* One window into the running MinHash mins (skipped when a == NULL) and
+ * the SimHash votes. */
+static inline void fold(const uint8_t *win, int64_t len, uint32_t *mins, uint32_t *votes,
+                        const uint64_t *a, const uint64_t *b)
 {
-    int64_t span = step * (width - 1) + 1; /* bytes of one spaced window */
+    if (a)
+        perm_min(mins, xxh32(win, len), a, b);
+    vote(votes, xxh64(win, len));
+}
+
+/* The n_docs consecutive UTF-8 docs of text (lens[r] bytes each, valid
+ * UTF-8 as str.encode makes it): a byte b with (b & 0xC0) != 0x80 starts
+ * a code point. Each window of width code points is hashed with step - 1
+ * spaces between its code points (Content-ID: " ".join(window), step 2;
+ * Meta-ID: the window as it is, step 1), so each doc is first copied once,
+ * spaced, into spaced, and the offset there of each code point goes to
+ * starts, then the offset where one more would start. A doc of cps code
+ * points has max(cps - width + 1, 1) windows: the one window of a doc
+ * shorter than width (the empty doc included) is the whole doc, as
+ * codes.sliding_window gives it. spaced needs room for
+ * max(lens[r] + (step - 1) * cps_r) bytes, starts for max(cps_r) + 1 values.
+ *
+ * Per doc r, over its windows: simhash[r] gets bit 63 - j set when
+ * 2 * (digests with bit 63 - j set) >= windows, over the xxh64 digests
+ * (ties vote 1); and, given the permutations a and b, the 64 MinHash
+ * values of the xxh32 features go to minhash[r*64 : r*64 + 64]. With
+ * a == NULL no MinHash is made and minhash is not touched. */
+CLONES void text_sketch(const uint8_t *text, const int64_t *lens, int64_t n_docs,
+                        int64_t width, int64_t step, uint8_t *spaced, int64_t *starts,
+                        uint64_t *simhash, const uint64_t *a, const uint64_t *b,
+                        uint64_t *minhash)
+{
+    int64_t span = step * (width - 1) + 1; /* bytes of a window of 1-byte code points */
     for (int64_t r = 0; r < n_docs; r++) {
-        int64_t n = lens[r];
-        int64_t windows = n - width + 1;
+        int64_t n = lens[r], cps = 0, pos = 0;
         for (int64_t i = 0; i < n; i++) {
-            spaced[step * i] = text[i];
-            for (int64_t j = 1; j < step; j++)
-                spaced[step * i + j] = ' ';
+            if ((text[i] & 0xC0) != 0x80) {
+                if (cps)
+                    for (int64_t j = 1; j < step; j++)
+                        spaced[pos++] = ' ';
+                starts[cps++] = pos;
+            }
+            spaced[pos++] = text[i];
         }
+        starts[cps] = pos + step - 1;
         text += n;
+        int64_t windows = cps < width ? 1 : cps - width + 1;
         uint32_t mins[N_PERM], votes[64] = {0};
         for (int p = 0; p < N_PERM; p++)
             mins[p] = UINT32_MAX;
-        for (int64_t w = 0; w < windows; w++) {
-            const uint8_t *win = spaced + step * w;
-            if (a)
-                perm_min(mins, xxh32(win, span), a, b);
-            vote(votes, xxh64(win, span));
-        }
+        /* In a doc of one byte per code point every window is span bytes
+         * long, a loop invariant the compiler specialises the xxHash loops
+         * on; taking the lengths from starts costs such docs ~40% more. */
+        if (cps == n && cps >= width)
+            for (int64_t w = 0; w < windows; w++)
+                fold(spaced + step * w, span, mins, votes, a, b);
+        else if (cps == 0) /* the empty doc's one window is empty */
+            fold(spaced, 0, mins, votes, a, b);
+        else
+            for (int64_t w = 0; w < windows; w++) {
+                int64_t end = w + width < cps ? w + width : cps;
+                fold(spaced + starts[w], starts[end] - starts[w] - (step - 1), mins, votes, a, b);
+            }
         uint64_t sim = 0;
         for (int j = 0; j < 64; j++)
             sim |= (uint64_t)(2 * (int64_t)votes[j] >= windows) << (63 - j);

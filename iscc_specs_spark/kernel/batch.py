@@ -1,21 +1,23 @@
 """Batch (cross-document) vectorized code generation.
 
 The pandas-UDF hot path: instead of per-document calls, each batch function
-makes one C call (``kernel.native``) over all documents of an Arrow batch
-that take its fast path. Text: ``text_sketch`` copies each normalised
-ASCII document once, spaced, and hashes every shingle with xxh32 (MinHash)
-and xxh64 (SimHash votes) as it goes; no shingle, feature or digest array
-is built, so the text path needs no group budget.
-Content-IDs hash 13-grams with a space between characters, Meta-IDs
-4-grams as they are. Data: the CDC cut of every blob of a group in one
-call, then xxh32 of all its chunks in one call and their MinHash in one
+makes one C call (``kernel.native``) over all documents of an Arrow batch.
+Text: ``text_sketch`` takes every normalised document as UTF-8 (from
+``str.encode``, so valid UTF-8), copies it once, spaced, and hashes every
+window of code points with xxh32 (MinHash) and xxh64 (SimHash votes) as it
+goes. An empty, NULL or sub-window document is one window, as the spec's
+``sliding_window`` gives it, so every row goes through that one call. No
+shingle, feature or digest array is built, so the text path needs no group
+budget. Content-IDs hash 13-grams with a space between code points,
+Meta-IDs 4-grams as they are. Data: the CDC cut of every blob of a group in
+one call, then xxh32 of all its chunks in one call and their MinHash in one
 fused pass that never builds the (K, 64) permutation matrix.
-Non-ASCII or sub-window documents fall back to the per-document kernel path
-(identical results — the fast path is pinned to the scalar path by
-tests/test_batch.py property checks and transitively by the golden vectors;
-the C loops to ``sketches.minhash_np``, ``codes._simhash_u64``,
-``cdc.data_chunks`` and the scalar ``xxhashes`` by tests/test_native.py
-and tests/test_kernel.py).
+The scalar ``codes`` functions call the same C text sketch on a batch of
+one; the golden vectors pin both, tests/test_batch.py pins the batch
+functions to independent references, and tests/test_native.py and
+tests/test_kernel.py pin the C loops to ``sketches.minhash_np``,
+``sketches.similarity_hash``, ``cdc.data_chunks`` and the scalar
+``xxhashes``.
 """
 
 from __future__ import annotations
@@ -25,14 +27,7 @@ from typing import Sequence
 import numpy as np
 
 from iscc_specs_spark.kernel.codec import encode
-from iscc_specs_spark.kernel.codes import (
-    content_id_text_full,
-    instance_id,
-    meta_id,
-    sliding_window,
-    _simhash_u64,
-    _hash_buffers,
-)
+from iscc_specs_spark.kernel.codes import instance_id
 from iscc_specs_spark.kernel.constants import (
     HEAD_CID_T,
     HEAD_DID,
@@ -45,9 +40,7 @@ from iscc_specs_spark.kernel.native import (
     minhash_segments,
     text_sketch,
     xxh32_var,
-    xxh64_var,
 )
-from iscc_specs_spark.kernel.sketches import lsb_digest
 from iscc_specs_spark.kernel.textnorm import text_normalize, text_trim
 
 # cap the temporaries of hashing one group of blobs' CDC chunks, L2-resident
@@ -86,73 +79,26 @@ def content_text_batch(texts: Sequence[str | None]):
       cid: list[str], cid_body: int64 (R,), simhash: int64 (R,),
       minhash: uint64 (R, 64), n_features: int32 (R,)
     """
-    n_rows = len(texts)
-    cid: list[str | None] = [None] * n_rows
-    cid_body = np.zeros(n_rows, dtype=np.int64)
-    simhash = np.zeros(n_rows, dtype=np.int64)
-    minhash = np.zeros((n_rows, 64), dtype=np.uint64)
-    n_features = np.zeros(n_rows, dtype=np.int32)
-
     norms = [text_normalize(t if t is not None else "", keep_ws=False) for t in texts]
-
-    fast: list[int] = []
-    for i, s in enumerate(norms):
-        if s.isascii() and len(s) >= WINDOW_SIZE_CID_T:
-            fast.append(i)
-        else:
-            code, mh, sim, nf = content_id_text_full(s if s else "")
-            cid[i] = code
-            cid_body[i] = np.frombuffer(lsb_digest(mh), dtype=">i8")[0]
-            simhash[i] = np.uint64(sim).astype(np.int64)
-            minhash[i] = mh
-            n_features[i] = nf
-
-    if fast:
-        mh, sim = text_sketch([norms[i] for i in fast], WINDOW_SIZE_CID_T, 2, True)
-        bodies = _pack_u64_rows((mh & np.uint64(1)).astype(np.uint8))
-        minhash[fast] = mh
-        simhash[fast] = sim.view(np.int64)
-        cid_body[fast] = bodies.view(np.int64)
-        for g, i in enumerate(fast):
-            n_features[i] = len(norms[i]) - WINDOW_SIZE_CID_T + 1
-            cid[i] = encode(HEAD_CID_T + int(bodies[g]).to_bytes(8, "big"))
-
+    mh, sim = text_sketch(norms, WINDOW_SIZE_CID_T, 2, True)
+    bodies = _pack_u64_rows((mh & np.uint64(1)).astype(np.uint8))
+    cps = np.fromiter(map(len, norms), dtype=np.int32, count=len(norms))
     return {
-        "cid": cid,
-        "cid_body": cid_body,
-        "simhash": simhash,
-        "minhash": minhash,
-        "n_features": n_features,
+        "cid": [encode(HEAD_CID_T + int(b).to_bytes(8, "big")) for b in bodies],
+        "cid_body": bodies.view(np.int64),
+        "simhash": sim.view(np.int64),
+        "minhash": mh,
+        "n_features": np.maximum(cps - WINDOW_SIZE_CID_T + 1, 1),
     }
 
 
 def meta_batch(titles: Sequence[str | None]):
     """Meta-ID codes for a batch of titles (no extra). Returns (mid
     list[str], mid_body int64 (R,), title_trimmed list[str])."""
-    n_rows = len(titles)
-    mids: list[str | None] = [None] * n_rows
-    mid_body = np.zeros(n_rows, dtype=np.int64)
     trimmed = [text_trim(text_normalize(t or "", keep_ws=True)) for t in titles]
-
-    width = WINDOW_SIZE_MID
-    fast = [i for i, c in enumerate(trimmed) if c.isascii() and len(c) >= width]
-    fast_set = set(fast)
-    slow = [i for i in range(n_rows) if i not in fast_set]
-
-    if fast:
-        _, sims = text_sketch([trimmed[i] for i in fast], width, 1, False)
-        mid_body[fast] = sims.view(np.int64)
-        for g, i in enumerate(fast):
-            mids[i] = encode(HEAD_MID + int(sims[g]).to_bytes(8, "big"))
-
-    for i in slow:
-        bufs = [g.encode("utf-8") for g in sliding_window(trimmed[i], width)]
-        digs = _hash_buffers(bufs, xxh64_var)
-        sim = _simhash_u64(digs)
-        mid_body[i] = np.uint64(sim).astype(np.int64)
-        mids[i] = encode(HEAD_MID + sim.to_bytes(8, "big"))
-
-    return mids, mid_body, trimmed
+    _, sims = text_sketch(trimmed, WINDOW_SIZE_MID, 1, False)
+    mids = [encode(HEAD_MID + int(s).to_bytes(8, "big")) for s in sims]
+    return mids, sims.view(np.int64), trimmed
 
 
 def data_instance_batch(blobs: Sequence[bytes | None]):

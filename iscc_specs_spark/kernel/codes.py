@@ -29,13 +29,8 @@ from iscc_specs_spark.kernel.constants import (
     WINDOW_SIZE_CID_T,
     WINDOW_SIZE_MID,
 )
-from iscc_specs_spark.kernel.native import xxh32_var, xxh64_var
-from iscc_specs_spark.kernel.sketches import (
-    lsb_digest,
-    minhash_np,
-    segment_bit_counts,
-    similarity_hash,
-)
+from iscc_specs_spark.kernel.native import text_sketch
+from iscc_specs_spark.kernel.sketches import lsb_digest, minhash_np, similarity_hash
 from iscc_specs_spark.kernel.textnorm import text_normalize, text_trim
 from iscc_specs_spark.kernel.xxhashes import xxh32
 
@@ -47,33 +42,6 @@ def sliding_window(seq, width: int):
     return (seq[i : i + width] for i in range(max(len(seq) - width + 1, 1)))
 
 
-def _hash_buffers(bufs: list[bytes], hash_var) -> np.ndarray:
-    """``hash_var`` (``native.xxh32_var`` or ``xxh64_var``) of each byte
-    string → (N,) uint64: one join, one C call."""
-    lens = np.fromiter(map(len, bufs), dtype=np.int64, count=len(bufs))
-    return hash_var(b"".join(bufs), np.cumsum(lens) - lens, lens)
-
-
-def _joined_ngram_features(norm: str, width: int = WINDOW_SIZE_CID_T):
-    """Space-joined character n-grams of normalized text, hashed with both
-    xxh32 (MinHash features) and xxh64 (SimHash digests).
-
-    The hashed string is ``" ".join(window)`` — a space between every
-    character (reference iscc.py:57), so an ASCII 13-gram hashes as 25 bytes.
-    Returns (feats32, digs64) as uint64 arrays.
-    """
-    bufs = [" ".join(w).encode("utf-8") for w in sliding_window(norm, width)]
-    return _hash_buffers(bufs, xxh32_var), _hash_buffers(bufs, xxh64_var)
-
-
-def _simhash_u64(digests: np.ndarray) -> int:
-    """64-bit SimHash of a (N,) uint64 digest array (big-endian bit order,
-    ties → 1), as an unsigned int."""
-    counts = segment_bit_counts(digests, np.array([digests.size]))
-    out = (2 * counts >= digests.size).astype(np.uint8)
-    return int.from_bytes(np.packbits(out).tobytes(), "big")
-
-
 # ---------------------------------------------------------------------------
 # Meta-ID
 # ---------------------------------------------------------------------------
@@ -82,10 +50,8 @@ def meta_id(title: str | bytes, extra: str | bytes = "") -> list[str]:
     title_t = text_trim(text_normalize(title, keep_ws=True))
     extra_t = text_trim(text_normalize(extra, keep_ws=True))
     concat = " ".join((title_t, extra_t)).strip()
-    bufs = [g.encode("utf-8") for g in sliding_window(concat, WINDOW_SIZE_MID)]
-    digs = _hash_buffers(bufs, xxh64_var)
-    sim = _simhash_u64(digs)
-    code = encode(HEAD_MID + sim.to_bytes(8, "big"))
+    _, sim = text_sketch([concat], WINDOW_SIZE_MID, 1, False)
+    code = encode(HEAD_MID + int(sim[0]).to_bytes(8, "big"))
     return [code, title_t, extra_t]
 
 
@@ -97,16 +63,13 @@ def content_id_text_full(text: str | bytes):
     """Returns (code, minhash_signature[64] uint64, simhash uint64 int,
     n_features) for one document."""
     norm = text_normalize(text, keep_ws=False)
-    feats32, digs64 = _joined_ngram_features(norm)
-    mh = minhash_np(feats32)
-    code = encode(HEAD_CID_T + lsb_digest(mh))
-    return code, mh, _simhash_u64(digs64), int(feats32.size)
+    mh, sim = text_sketch([norm], WINDOW_SIZE_CID_T, 2, True)
+    code = encode(HEAD_CID_T + lsb_digest(mh[0]))
+    return code, mh[0], int(sim[0]), max(len(norm) - WINDOW_SIZE_CID_T + 1, 1)
 
 
 def content_id_text(text: str | bytes, partial: bool = False) -> str:
-    norm = text_normalize(text, keep_ws=False)
-    feats32, _ = _joined_ngram_features(norm)
-    mh = minhash_np(feats32)
+    mh = content_id_text_full(text)[1]
     head = HEAD_CID_T_PCF if partial else HEAD_CID_T
     return encode(head + lsb_digest(mh))
 

@@ -1,22 +1,26 @@
 """The kernel's compiled loops: ``_native.c``, built at first import and
-called through ``ctypes``. They are the batch path's text sketch (xxh32
-MinHash and xxh64 SimHash of every shingle of a batch, in one pass from
-the normalised text), its MinHash and CDC cut of data, and xxh32/xxh64:
-every other hashing caller of the kernel, batch and scalar path alike,
-makes one ``xxh32_var``/``xxh64_var`` call per width, except
-``codes.data_id_full``, which keeps the scalar ``xxhashes.xxh32`` as the
-independent code tests/test_batch.py checks the chunk hash against.
+called through ``ctypes``. They are the text sketch (xxh32 MinHash and
+xxh64 SimHash of every window of a batch of docs, in one pass from the
+normalised text: the one text path, which the batch functions call once
+per batch and the scalar Meta-ID and Content-ID-Text on a batch of one),
+the MinHash and CDC cut of data, and xxh32/xxh64 of many messages of one
+buffer (``xxh32_var`` hashes the data path's chunks; ``xxh64_var`` has no
+caller in the package, and tests/test_kernel.py pins the C xxh64 the text
+sketch uses through it). ``codes.data_id_full`` keeps the scalar
+``xxhashes.xxh32`` as the independent code tests/test_batch.py checks the
+chunk hash against. Text goes in as UTF-8 from ``str.encode``, so the C
+code takes it to be valid UTF-8.
 
 The source is read with ``pkgutil.get_data``, so it loads from a checkout
 and from a ``--py-files`` zip alike. It is compiled with ``cc`` into
 ``<sha256(source + flags)>.so`` in this user's build dir,
-``iscc_specs_spark-<uid>`` in ``tempfile.gettempdir()``: a process that
-finds the file loads it, one that does not compiles to a temporary name
-and renames it into place, so concurrent Python workers race safely and
-the same build is shared by every worker of a host. A process that built
-the library then deletes the dir's other ``.so`` and ``.tmp`` files, the
-builds of older sources; a process whose temporary file or library a
-concurrent build deleted builds once more. The name is predictable, so
+``iscc_specs_spark-<uid>`` in ``tempfile.gettempdir()``. A process holds
+an exclusive ``flock`` on the dir from its check for the file to its
+load, so the workers of one host run one build and share it: the first
+compiles to a temporary name and renames it into place, the others wait
+and load it. A process that built the library then deletes the dir's
+other ``.so`` and ``.tmp`` files, the builds of older sources and what a
+killed build left. The name is predictable, so
 the dir (mode 0o700) and the library are loaded only if this user owns
 them and no one else can write them: another user's or a world-writable
 library is rebuilt, an open dir is refused at import.
@@ -40,6 +44,7 @@ architecture is right on every host.
 from __future__ import annotations
 
 import ctypes
+import fcntl
 import hashlib
 import os
 import pkgutil
@@ -82,19 +87,9 @@ def _private(path: str, kind: int) -> bool:
     )
 
 
-def _build() -> str:
-    """Path of the compiled library, compiling it if this user's build dir
-    holds no trusted copy yet."""
-    cache = os.path.join(tempfile.gettempdir(), f"iscc_specs_spark-{os.getuid()}")
-    try:
-        os.mkdir(cache, 0o700)
-    except FileExistsError:
-        pass
-    if not _private(cache, stat.S_IFDIR):
-        raise ImportError(
-            f"refusing the kernel's build dir {cache}: it must be a directory "
-            "owned by this user that group and others cannot write"
-        )
+def _build(cache: str) -> str:
+    """Path of the compiled library in the build dir ``cache``, compiling
+    it if the dir holds no trusted copy yet."""
     path = os.path.join(cache, _NAME)
     if os.path.lexists(path) and _private(path, stat.S_IFREG):
         return path
@@ -135,29 +130,37 @@ def _prune(cache: str) -> None:
             try:
                 os.unlink(entry.path)
             except FileNotFoundError:
-                pass  # a concurrent build pruned it first
+                pass  # pruned by a process that takes no lock: an older build
 
 
 def _load() -> ctypes.CDLL:
-    """Build and load the library. A concurrent build may prune this
-    process's temporary file or, for another source, the library itself
-    before it is loaded: then it builds once more."""
-    for last in (False, True):
-        try:
-            path = _build()
-        except FileNotFoundError:
-            if last:
-                raise
-            continue
+    """Build and load the library, holding an exclusive ``flock`` on the
+    build dir from the check to the load: concurrent imports on one host
+    run one build, and no build's prune can delete a library between
+    another process's build and its load."""
+    cache = os.path.join(tempfile.gettempdir(), f"iscc_specs_spark-{os.getuid()}")
+    try:
+        os.mkdir(cache, 0o700)
+    except FileExistsError:
+        pass
+    if not _private(cache, stat.S_IFDIR):
+        raise ImportError(
+            f"refusing the kernel's build dir {cache}: it must be a directory "
+            "owned by this user that group and others cannot write"
+        )
+    fd = os.open(cache, os.O_RDONLY | os.O_DIRECTORY)
+    try:
+        fcntl.flock(fd, fcntl.LOCK_EX)  # released when fd is closed
+        path = _build(cache)
         try:
             return ctypes.CDLL(path)
         except OSError as e:
-            if not last and not os.path.lexists(path):
-                continue
             raise ImportError(
                 f"cannot load the kernel library {path}: {e} (a temp dir mounted "
                 "noexec cannot map it; set TMPDIR to a dir that allows exec)"
             ) from e
+    finally:
+        os.close(fd)
 
 
 _u8 = np.ctypeslib.ndpointer(np.uint8, flags="C_CONTIGUOUS")
@@ -170,8 +173,8 @@ def _bind(lib: ctypes.CDLL) -> ctypes.CDLL:
     lib.isa.argtypes = ()
     lib.isa.restype = ctypes.c_char_p
     lib.text_sketch.argtypes = (
-        ctypes.c_char_p, _i64, ctypes.c_int64, ctypes.c_int64, ctypes.c_int64, _u8, _u64,
-        ctypes.c_void_p, ctypes.c_void_p, ctypes.c_void_p,  # NULL: no MinHash
+        ctypes.c_char_p, _i64, ctypes.c_int64, ctypes.c_int64, ctypes.c_int64, _u8, _i64,
+        _u64, ctypes.c_void_p, ctypes.c_void_p, ctypes.c_void_p,  # NULL: no MinHash
     )
     lib.text_sketch.restype = None
     lib.minhash_segments.argtypes = (_u64, _i64, ctypes.c_int64, _u64, _u64, _u64)
@@ -199,30 +202,29 @@ _CDC_PARAMS = np.array(
 
 
 def text_sketch(docs: Sequence[str], width: int, step: int, minhash: bool):
-    """SimHash, and MinHash if ``minhash``, of the ``width``-character
-    windows of each ASCII doc, ``step - 1`` spaces put between a window's
-    characters before it is hashed → (minhash (R, 64) uint64 or None,
-    simhash (R,) uint64). Row r's MinHash equals ``sketches.minhash_np`` of
-    the xxh32 of doc r's windows, its SimHash ``codes._simhash_u64`` of
-    their xxh64; Content-ID hashes 13-grams at step 2 (``" ".join``),
-    Meta-ID 4-grams at step 1. Every doc must be ASCII and at least one
-    window long."""
-    lens = np.fromiter(map(len, docs), dtype=np.int64, count=len(docs))
-    text = "".join(docs)
+    """SimHash, and MinHash if ``minhash``, of the ``width``-code-point
+    windows of each doc, ``step - 1`` spaces put between a window's code
+    points before its UTF-8 is hashed → (minhash (R, 64) uint64 or None,
+    simhash (R,) uint64). A doc shorter than ``width`` (the empty doc
+    included) is one window, as ``codes.sliding_window`` gives it. Row r's
+    MinHash equals ``sketches.minhash_np`` of the xxh32 of doc r's windows,
+    its SimHash ``sketches.similarity_hash`` of their xxh64; Content-ID
+    hashes 13-grams at step 2 (``" ".join``), Meta-ID 4-grams at step 1."""
     if width < 1 or step < 1:
         raise ValueError("width and step must be positive")
-    if not lens.size or lens.min() < width:
-        raise ValueError(f"text_sketch needs docs of at least {width} characters")
-    if not text.isascii():
-        raise ValueError("text_sketch takes ASCII docs only")
-    spaced = np.empty(step * int(lens.max()), dtype=np.uint8)
+    bufs = [d.encode("utf-8") for d in docs]  # a lone surrogate raises here
+    lens = np.fromiter(map(len, bufs), dtype=np.int64, count=len(bufs))
+    # len(d) is the number of code points the C code counts in d's UTF-8
+    cps = np.fromiter(map(len, docs), dtype=np.int64, count=len(bufs))
+    spaced = np.empty(int((lens + (step - 1) * cps).max(initial=0)), dtype=np.uint8)
+    starts = np.empty(int(cps.max(initial=0)) + 1, dtype=np.int64)
     simhash = np.empty(lens.size, dtype=np.uint64)
     if minhash:
         mh = np.empty((lens.size, 64), dtype=np.uint64)
         perms = (_PERM_A.ctypes.data, _PERM_B.ctypes.data, mh.ctypes.data)
     else:
         mh, perms = None, (None, None, None)
-    _LIB.text_sketch(text.encode("ascii"), lens, lens.size, width, step, spaced, simhash, *perms)
+    _LIB.text_sketch(b"".join(bufs), lens, lens.size, width, step, spaced, starts, simhash, *perms)
     return mh, simhash
 
 

@@ -3,9 +3,10 @@
 Parity targets: /root/reference/src/iscc/iscc.py:236-268 (similarity_hash,
 minimum_hash); permutation pairs are spec data (const.py:70-327).  Both are
 NumPy-vectorized — ``similarity_hash`` via unpackbits column sums,
-``minimum_hash`` via a broadcast (features × 64 permutations) matrix. The
-MinHash here is the reference the scalar kernel uses; the batch hot path
-takes the same MinHash per segment in C (``kernel.native``).
+``minimum_hash`` via a broadcast (features × 64 permutations) matrix. They
+are the references: the scalar Data-ID and Content-ID-Mixed use them, and
+the C text sketch and data MinHash (``kernel.native``) are pinned to them
+by tests/test_native.py.
 """
 
 from __future__ import annotations
@@ -40,37 +41,6 @@ def similarity_hash(digests: Sequence[bytes]) -> bytes:
     return np.packbits(out_bits).tobytes()
 
 
-# digit value → its bits, MSB first: (256, 8) for bytes, (16, 4) for nibbles
-_DIGIT_BITS = {
-    w: np.unpackbits(np.arange(1 << w, dtype=np.uint8)[:, None], axis=1)[:, 8 - w :]
-    .astype(np.int64)
-    for w in (8, 4)
-}
-
-
-def segment_bit_counts(digests: np.ndarray, lens: np.ndarray) -> np.ndarray:
-    """Set-bit count at each of the 64 bit positions, per segment, of a (K,)
-    uint64 digest array cut into consecutive segments of ``lens`` rows
-    → (R, 64) int64, column 0 = most-significant bit (the SimHash votes).
-
-    One ``bincount`` of (segment, digit position, digit value) times a
-    constant digit → bits table: exact, and on a page's ~8k digests ~2.5×
-    faster than ``unpackbits`` + ``add.reduceat``. Digits are bytes (2048
-    bins per segment) when the histogram is no larger than the keys, else
-    nibbles (256 bins), so many short segments (titles) stay cheap."""
-    r = lens.size
-    by = digests.astype(">u8").view(np.uint8).reshape(-1, 8)
-    if digests.size >= 256 * r:
-        w, keys = 8, by.astype(np.int64)
-    else:
-        w, keys = 4, np.stack((by >> 4, by & 15), axis=2).reshape(-1, 16).astype(np.int64)
-    nb = (64 // w) << w  # bins per segment
-    keys += np.arange(0, nb, 1 << w)
-    keys += np.repeat(np.arange(0, nb * r, nb), lens)[:, None]
-    hist = np.bincount(keys.reshape(-1), minlength=nb * r).reshape(-1, 1 << w)
-    return (hist @ _DIGIT_BITS[w]).reshape(r, 64)
-
-
 def minhash_np(features: np.ndarray, n: int = 64) -> np.ndarray:
     """MinHash signature of a (K,) uint64 feature array → (n,) uint64.
 
@@ -78,9 +48,8 @@ def minhash_np(features: np.ndarray, n: int = 64) -> np.ndarray:
     mod (2^61-1), truncated to 32 bits.  uint64 multiply wraps natively,
     which is exactly the `& MAX_INT64` of the spec.
 
-    The reference: the scalar kernel (and through it the batch path's
-    non-ASCII rows) calls it, and the C ``kernel.native.minhash_segments``
-    of the batch hot path is pinned to it. One (K,n) allocation, every later op
+    The reference: the scalar Data-ID calls it, and the C MinHash loops of
+    ``kernel.native`` are pinned to it. One (K,n) allocation, every later op
     in place: NumPy's scalar-divisor ``np.mod`` is a single memory pass,
     where a shift/add Mersenne fold in NumPy takes several and measured
     2.8× slower (4-vCPU x86 VM, NumPy 1.26).

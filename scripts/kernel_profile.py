@@ -2,8 +2,8 @@
 generated ~8 KB pages, in one thread and with no Spark.
 
 The steps replay ``kernel.batch.content_text_batch`` (normalise, then one
-C ``text_sketch`` call: the spaced copy, xxh32/xxh64 of every shingle,
-MinHash and SimHash) and ``data_instance_batch`` (the C CDC cut, C chunk
+C ``text_sketch`` call over every normalised doc: the spaced copy,
+xxh32/xxh64 of every shingle, MinHash and SimHash) and ``data_instance_batch`` (the C CDC cut, C chunk
 hash, chunk MinHash, Instance-ID) on the same inputs and budgets; the two
 batch functions are also timed whole, so the sum of the steps can be
 checked against them. Each figure is the best of ``--reps`` passes over
@@ -57,12 +57,10 @@ class Clock:
 
 
 def content_steps(texts: list[str], clk: Clock) -> None:
-    width = WINDOW_SIZE_CID_T
     clk.lap("")
     norms = [text_normalize(t or "", keep_ws=False) for t in texts]
     clk.lap("text: normalise")
-    fast = [s for s in norms if s.isascii() and len(s) >= width]
-    text_sketch(fast, width, 2, True)
+    text_sketch(norms, WINDOW_SIZE_CID_T, 2, True)
     clk.lap("text: text_sketch (C)")
 
 

@@ -1,4 +1,7 @@
-"""Batch (cross-document vectorized) kernel == per-document scalar kernel."""
+"""Batch (cross-document vectorized) kernel == the spec's per-document
+reference: the text rows against windows hashed by the scalar xxHash
+(tests/test_native.py ``_sketch_ref``), the data rows against the scalar
+Data-ID and Instance-ID."""
 
 from __future__ import annotations
 
@@ -7,12 +10,20 @@ import pytest
 
 from iscc_specs_spark import kernel
 from iscc_specs_spark.kernel import batch
-from iscc_specs_spark.kernel.constants import GEAR1_MIN, GEAR2_MIN, WINDOW_SIZE_CID_T
+from iscc_specs_spark.kernel.constants import (
+    GEAR1_MIN,
+    GEAR2_MIN,
+    HEAD_CID_T,
+    HEAD_MID,
+    WINDOW_SIZE_CID_T,
+    WINDOW_SIZE_MID,
+)
 from iscc_specs_spark.kernel.batch import (
     content_text_batch,
     data_instance_batch,
     meta_batch,
 )
+from test_native import _sketch_ref
 
 TEXTS = [
     "",
@@ -28,17 +39,22 @@ TEXTS = [
 ]
 
 
+def _body(signed: np.int64) -> bytes:
+    """The 8 code body bytes an int64 column carries (two's complement)."""
+    return int(np.uint64(signed.astype(np.uint64))).to_bytes(8, "big")
+
+
 def _check_content(texts):
     out = content_text_batch(texts)
     for i, t in enumerate(texts):
-        code, mh, sim, nf = kernel.content_id_text_full(t if t is not None else "")
-        assert out["cid"][i] == code, f"row {i}"
+        norm = kernel.text_normalize(t if t is not None else "", keep_ws=False)
+        mh, sim = _sketch_ref(norm, WINDOW_SIZE_CID_T, 2)
+        body = np.packbits((mh & np.uint64(1)).astype(np.uint8)).tobytes()
+        assert out["cid"][i] == kernel.encode(HEAD_CID_T + body), f"row {i}"
         assert np.array_equal(out["minhash"][i], mh), f"row {i}"
-        assert np.uint64(out["simhash"][i].astype(np.uint64)) == np.uint64(sim)
-        assert out["n_features"][i] == nf
-        # body LONG is the bit-identical two's-complement carrier of the code body
-        body_bytes = int(np.uint64(out["cid_body"][i].astype(np.uint64))).to_bytes(8, "big")
-        assert kernel.decode(code)[1:] == body_bytes
+        assert int(out["simhash"][i].astype(np.uint64)) == sim, f"row {i}"
+        assert out["n_features"][i] == max(len(norm) - WINDOW_SIZE_CID_T + 1, 1)
+        assert _body(out["cid_body"][i]) == body
 
 
 def test_content_text_batch_matches_scalar():
@@ -47,7 +63,7 @@ def test_content_text_batch_matches_scalar():
 
 def test_content_text_batch_mixed_segments():
     """Short ASCII docs each side of a long one (750 words), with a
-    one-window doc and a slow-path row between them, all in one
+    one-window doc and a non-ASCII sub-window doc between them, all in one
     ``text_sketch`` call: every segment boundary must land on its own
     document, and the short docs after the long one, which sizes the
     shared spaced-copy buffer, must not hash its leftover bytes."""
@@ -66,15 +82,14 @@ def test_content_text_batch_mixed_segments():
 
 def test_meta_batch_matches_scalar():
     titles = ["", "Die Unendliche Geschichte", "Iñtërnâtiônàlizætiøn☃", None,
-              "a", "The Low End Theory " * 20]
+              "a", "The Low End Theory " * 20] + TEXTS
     mids, bodies, trimmed = meta_batch(titles)
     for i, t in enumerate(titles):
-        code, t_trim, _ = kernel.meta_id(t if t is not None else "")
-        assert mids[i] == code, f"row {i}"
-        assert trimmed[i] == t_trim
-        assert kernel.decode(code)[1:] == int(
-            np.uint64(bodies[i].astype(np.uint64))
-        ).to_bytes(8, "big")
+        title = kernel.text_trim(kernel.text_normalize(t or "", keep_ws=True))
+        body = _sketch_ref(title, WINDOW_SIZE_MID, 1)[1].to_bytes(8, "big")
+        assert trimmed[i] == title
+        assert mids[i] == kernel.encode(HEAD_MID + body), f"row {i}"
+        assert _body(bodies[i]) == body
 
 
 def test_data_instance_batch_matches_scalar():
@@ -95,9 +110,7 @@ def _check_data(blobs):
             code, mh, nc = kernel.data_id_full(b)
             assert out["did"][i] == code
             assert out["n_chunks"][i] == nc
-            assert kernel.decode(code)[1:] == int(
-                np.uint64(out["did_body"][i].astype(np.uint64))
-            ).to_bytes(8, "big")
+            assert kernel.decode(code)[1:] == _body(out["did_body"][i])
         code, hexhash = kernel.instance_id(b if b is not None else b"")
         assert out["iid"][i] == code
         assert out["tophash"][i] == hexhash

@@ -91,19 +91,6 @@ def test_xxh_var_rejects_messages_outside_buffer(var, offsets, lens):
         var(bytes(64), np.array(offsets), np.array(lens))
 
 
-@pytest.mark.parametrize("lens", [[8355], [1], [255] * 9, [256] * 9, [5, 1, 300, 2500, 17]])
-def test_segment_bit_counts_match_unpackbits(lens):
-    from iscc_specs_spark.kernel.sketches import segment_bit_counts
-
-    lens = np.array(lens, dtype=np.int64)
-    rng = np.random.default_rng(int(lens.sum()))
-    digs = rng.integers(0, 1 << 64, int(lens.sum()), dtype=np.uint64)
-    bits = np.unpackbits(digs.astype(">u8").view(np.uint8).reshape(-1, 8), axis=1)
-    starts = np.cumsum(lens) - lens
-    want = np.add.reduceat(bits, starts, axis=0, dtype=np.int64)
-    assert np.array_equal(segment_bit_counts(digs, lens), want)
-
-
 # --- encode/decode roundtrip (ref test_iscc.py:83-92) ------------------------
 
 def test_encode_decode_roundtrip():

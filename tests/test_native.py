@@ -1,9 +1,10 @@
 """The kernel's C loops (``kernel.native``) == their NumPy/Python reference
-(``sketches.minhash_np``, ``codes._simhash_u64`` over the scalar
-``xxhashes``, ``cdc.data_chunks``; the xxHash loops are pinned to the
-scalar ``xxhashes`` in tests/test_kernel.py), in the loaded library and in
-a build of each per-CPU clone body on its own, and the library builds from
-a ``--py-files`` zip. No Spark."""
+(``codes.sliding_window`` windows hashed by the scalar ``xxhashes`` into
+``sketches.minhash_np`` and ``sketches.similarity_hash``,
+``cdc.data_chunks``; the xxHash loops are pinned to the scalar
+``xxhashes`` in tests/test_kernel.py), in the loaded library and in a
+build of each per-CPU clone body on its own; the library builds from a
+``--py-files`` zip, once per host and source. No Spark."""
 
 from __future__ import annotations
 
@@ -14,6 +15,8 @@ import json
 import os
 import pathlib
 import platform
+import shlex
+import shutil
 import subprocess
 import sys
 
@@ -23,9 +26,9 @@ import pytest
 from iscc_specs_spark.kernel import native
 from iscc_specs_spark.kernel.batch import content_text_batch
 from iscc_specs_spark.kernel.cdc import data_chunks
-from iscc_specs_spark.kernel.codes import _simhash_u64
+from iscc_specs_spark.kernel.codes import sliding_window
 from iscc_specs_spark.kernel.constants import GEAR1_MAX, GEAR1_MIN, GEAR2_MAX
-from iscc_specs_spark.kernel.sketches import _PERM_A, _PERM_B, minhash_np
+from iscc_specs_spark.kernel.sketches import _PERM_A, _PERM_B, minhash_np, similarity_hash
 from iscc_specs_spark.kernel.xxhashes import xxh32, xxh64
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -84,13 +87,13 @@ def test_minhash_rejects_bad_segments():
 
 
 def _sketch_ref(doc: str, width: int, step: int):
-    """MinHash and SimHash of one doc's spaced windows, from the scalar
-    xxHash and the reference folds."""
+    """MinHash and SimHash of one doc's spaced windows of code points, from
+    the spec's windows, the scalar xxHash and the reference folds."""
     sep = " " * (step - 1)
-    wins = [sep.join(doc[i : i + width]).encode() for i in range(len(doc) - width + 1)]
+    wins = [sep.join(w).encode() for w in sliding_window(doc, width)]
     feats = np.array([xxh32(w) for w in wins], dtype=np.uint64)
-    digs = np.array([xxh64(w) for w in wins], dtype=np.uint64)
-    return minhash_np(feats), _simhash_u64(digs)
+    sim = similarity_hash([xxh64(w).to_bytes(8, "big") for w in wins])
+    return minhash_np(feats), int.from_bytes(sim, "big")
 
 
 @functools.cache
@@ -98,9 +101,11 @@ def _text_cases():
     """(docs, width, step, reference rows) of one ``text_sketch`` call each."""
     rng = np.random.default_rng(18)
     letters = list("abcdefghij klmnop")
+    # 2-, 3- and 4-byte UTF-8, and combining marks (a code point each)
+    wide = list("ab ßø©€日本語😀𝄞") + ["\u0301", "\u0308"]
 
-    def rand_doc(n):
-        return "".join(rng.choice(letters, n))
+    def rand_doc(n, alphabet=letters):
+        return "".join(rng.choice(alphabet, n))
 
     def ascii_bytes(n):  # every ASCII code but NUL
         return "".join(map(chr, rng.integers(1, 128, n)))
@@ -112,6 +117,16 @@ def _text_cases():
             calls.append(([rand_doc(width) for _ in range(5)], width, step))  # one window
             calls.append(([c * n for c in "a ~" for n in (width, width + 1, 200)], width, step))
             calls.append(([ascii_bytes(n) for n in (width, 50, 900)], width, step))
+            calls.append(([rand_doc(n, wide) for n in range(width, width + 40)], width, step))
+            calls.append(([c * n for c in "ß€😀" for n in (width - 1, width, 200)], width, step))
+            # 0 to width - 1 code points: one window of the whole doc
+            calls.append(([rand_doc(n) for n in range(width)]
+                          + [rand_doc(n, wide) for n in range(width)], width, step))
+            # the doc with the most bytes has fewer code points than another
+            # doc, which needs the most room in the spaced copy (300 ASCII)
+            # or only the most starts (150 ASCII)
+            for n in (150, 300):
+                calls.append((["😀" * 100, "a" * n, rand_doc(20, wide)], width, step))
     titles = [rand_doc(int(n)) for n in rng.integers(4, 80, 500)]
     calls.append((titles, 4, 1))  # a meta_batch of titles
     calls.append(([rand_doc(30), rand_doc(12_500 + 13), rand_doc(20)], 13, 2))
@@ -121,7 +136,30 @@ def _text_cases():
     ]
 
 
-def test_text_sketch_matches_reference():
+class _ScratchCheck:
+    """A loaded library whose ``text_sketch`` first checks that the
+    caller's scratch arrays hold what the C loop writes for these docs:
+    per doc, its bytes plus ``step - 1`` spaces between code points in
+    ``spaced`` and one offset per code point plus one in ``starts``. C
+    cannot check its own bounds, and a short buffer need not crash."""
+
+    def __init__(self, lib):
+        self.lib = lib
+
+    def __getattr__(self, name):
+        return getattr(self.lib, name)
+
+    def text_sketch(self, text, lens, n_docs, width, step, spaced, starts, *rest):
+        ends = np.cumsum(lens)
+        docs = [text[e - n : e].decode() for e, n in zip(ends.tolist(), lens.tolist())]
+        need = max((len(d.encode()) + (step - 1) * (len(d) - 1) for d in docs if d), default=0)
+        assert spaced.size >= need, "spaced copy too small"
+        assert starts.size >= max(map(len, docs), default=0) + 1, "starts too small"
+        return self.lib.text_sketch(text, lens, n_docs, width, step, spaced, starts, *rest)
+
+
+def test_text_sketch_matches_reference(monkeypatch):
+    monkeypatch.setattr(native, "_LIB", _ScratchCheck(native._LIB))
     assert max(len(d) for docs, *_ in _text_cases() for d in docs) - 13 + 1 > 12_000
     for docs, width, step, want in _text_cases():
         mh, sim = native.text_sketch(docs, width, step, True)
@@ -130,20 +168,23 @@ def test_text_sketch_matches_reference():
         assert sim.shape == (len(docs),) and sim.dtype == np.uint64
         assert no_mh is None and np.array_equal(sim_only, sim)
         for r, (want_mh, want_sim) in enumerate(want):
-            case = f"width {width} step {step} doc {r} ({len(docs[r])} chars)"
+            case = f"width {width} step {step} doc {r} ({len(docs[r])} code points)"
             assert np.array_equal(mh[r], want_mh), case
             assert int(sim[r]) == want_sim, case
 
 
-@pytest.mark.parametrize(
-    "docs", [[], ["twelve chars"], ["long enough ascii", "long enough, not ascii: é"]]
-)
-def test_text_sketch_rejects_bad_docs(docs, monkeypatch):
-    """Empty input, a doc shorter than a window and non-ASCII text are
-    refused before any C call."""
+def test_text_sketch_empty_batch():
+    mh, sim = native.text_sketch([], 13, 2, True)
+    assert mh.shape == (0, 64) and sim.shape == (0,)
+    assert native.text_sketch([], 4, 1, False)[1].shape == (0,)
+
+
+@pytest.mark.parametrize("width, step", [(0, 2), (13, 0), (-1, -1)])
+def test_text_sketch_rejects_bad_width_or_step(width, step, monkeypatch):
+    """A window or step below one is refused before any C call."""
     monkeypatch.setattr(native, "_LIB", None)
     with pytest.raises(ValueError):
-        native.text_sketch(docs, 13, 2, True)
+        native.text_sketch(["long enough ascii"], width, step, True)
 
 
 # the CPU flags each clone body needs, as /proc/cpuinfo names them
@@ -186,7 +227,7 @@ def test_each_clone_body_matches_reference(level, tmp_path, monkeypatch):
     monkeypatch.setattr(native, "_LIB", lib)
     test_minhash_fold_edges()
     test_minhash_random_features(800)
-    test_text_sketch_matches_reference()
+    test_text_sketch_matches_reference(monkeypatch)
 
 
 def _blobs():
@@ -348,49 +389,38 @@ def test_build_prunes_stale_files(tmp_path):
     assert [p.name for p in cache.iterdir()] == [native._NAME]
 
 
-def test_library_pruned_before_load_is_rebuilt(tmp_path):
-    """A build of another source may prune this process's library between
-    its build and ``ctypes.CDLL``: the import builds once more and loads."""
-    tmpdir = tmp_path / "tmp"
-    tmpdir.mkdir()
-    code = """
-import ctypes, os
-real, loads = ctypes.CDLL, []
-def cdll(path, *args, **kw):
-    if path.endswith(".so"):
-        loads.append(path)
-        if len(loads) == 1:
-            os.unlink(path)  # as a concurrent build's prune does
-    return real(path, *args, **kw)
-ctypes.CDLL = cdll
-""" + _HELLO + "print(len(loads), len(set(loads)))"
-    proc = _run(REPO, code, os.environ.get("PATH", ""), tmpdir)
-    assert proc.returncode == 0, proc.stderr
-    cid, loads = proc.stdout.strip().splitlines()
-    assert cid == content_text_batch(["hello world"])["cid"][0]
-    assert loads == "2 1"
-    assert [p.name for p in _cache(tmpdir).iterdir()] == [native._NAME]
-
-
 def test_concurrent_cold_builds(tmp_path):
-    """Two processes building into one empty dir at once both load, though
-    the first to finish prunes the other's temporary file."""
+    """Four processes importing the kernel into one empty build dir at once
+    all load, and run ``cc`` once between them: the others wait on the
+    dir's lock, then load that build. The ``cc`` on PATH is a shim that
+    logs each call and waits a second before compiling, so a process that
+    did not wait would find no library yet and compile too."""
+    bin_dir = tmp_path / "bin"
+    bin_dir.mkdir()
+    log = tmp_path / "cc.log"
+    cc = bin_dir / "cc"
+    cc.write_text(
+        f"#!/bin/sh\necho $$ >> {shlex.quote(str(log))}\nsleep 1\n"
+        f'exec {shlex.quote(shutil.which("cc"))} "$@"\n'
+    )
+    cc.chmod(0o700)
     tmpdir = tmp_path / "tmp"
     tmpdir.mkdir()
-    env = {"PATH": os.environ.get("PATH", ""), "TMPDIR": str(tmpdir)}
+    env = {"PATH": f"{bin_dir}:{os.environ.get('PATH', '')}", "TMPDIR": str(tmpdir)}
     prelude = f"import sys; sys.path.insert(0, {REPO!r})\n"
     procs = [
         subprocess.Popen(
             [sys.executable, "-I", "-c", prelude + _HELLO], env=env, cwd=str(tmpdir),
             stdout=subprocess.PIPE, stderr=subprocess.PIPE, text=True,
         )
-        for _ in range(2)
+        for _ in range(4)
     ]
     want = content_text_batch(["hello world"])["cid"][0]
     for proc in procs:
         out, err = proc.communicate(timeout=120)
         assert proc.returncode == 0, err
         assert out.strip() == want
+    assert len(log.read_text().split()) == 1
     assert [p.name for p in _cache(tmpdir).iterdir()] == [native._NAME]
 
 

@@ -1,11 +1,12 @@
 """Python/NumPy ISCC kernel (no Spark imports); its text sketch (UTF-8
 text → MinHash and SimHash, one path for batch and scalar Meta-ID and
-Content-ID-Text), the batch data path's MinHash and CDC cut and its
-xxh32/xxh64 are C (``native``), built with ``cc`` when this package is
-first imported: ``kernel.codes`` hashes through it, so
-every importer of any kernel module (the Spark driver and executors,
-``oracles.py``, ``scripts/check_oracles.py``) needs a C compiler and an
-exec-capable temp dir.
+Content-ID-Text) and data sketch (blob → CDC chunks → xxh32 → MinHash,
+one path for batch and scalar Data-ID) are C (``native``), built with
+``cc`` when this package is first imported: ``kernel.codes`` hashes
+through it, so every importer of any kernel module (the Spark driver and
+executors, ``oracles.py``, ``scripts/check_oracles.py``) needs a C
+compiler and an exec-capable temp dir. ``data_chunks``, ``xxh32``,
+``xxh64`` and the NumPy sketches are the references the C is pinned to.
 
 These are the functions the vectorized pandas UDFs in
 ``iscc_specs_spark.operators`` call per Arrow batch.  Semantics follow the

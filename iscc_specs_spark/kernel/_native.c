@@ -6,14 +6,14 @@
  *                     code points, folded into sketches.minhash_np and the
  *                     sketches.similarity_hash of the xxh64 digests as
  *                     they are made, with no feature or digest array;
- *   minhash_segments  sketches.minhash_np over each segment of a feature
- *                     array, without the (K, 64) perm_hash matrix;
- *   cdc_lengths       [len(c) for c in cdc.data_chunks(blob)] for each blob
- *                     of a joined buffer, quirks included;
- *   xxh32_var,        xxhashes.xxh32 / xxh64 (seed 0) of each message
- *   xxh64_var         (offset, length) of one buffer.
+ *   data_sketch       the one data path: per blob, the xxh32 of each
+ *                     cdc.data_chunks chunk folded into sketches.minhash_np
+ *                     as it is cut, with no chunk or hash array;
+ *   minhash_segments, the tests' windows onto the MinHash fold and the
+ *   xxh32_var,        xxHashes, which take chosen inputs no doc or blob
+ *   xxh64_var         could be made to produce.
  *
- * The two MinHash loops are built as per-CPU clones (CLONES below): the
+ * The two sketches are built as per-CPU clones (CLONES below): the
  * loader resolves each to its AVX-512, AVX2 or baseline body from the CPU
  * it runs on, so one library is right on every x86-64 host.
  *
@@ -77,9 +77,9 @@ static inline void perm_min(uint32_t *mins, uint64_t x, const uint64_t *a,
 
 /* For each of the n_seg consecutive segments of feats (lens[s] rows each,
  * every segment at least one row): the MinHash of the segment's features,
- * written to out[s*64 : s*64 + 64]. */
-CLONES void minhash_segments(const uint64_t *feats, const int64_t *lens, int64_t n_seg,
-                             const uint64_t *a, const uint64_t *b, uint64_t *out)
+ * written to out[s*64 : s*64 + 64]. The tests' window onto perm_min. */
+void minhash_segments(const uint64_t *feats, const int64_t *lens, int64_t n_seg,
+                      const uint64_t *a, const uint64_t *b, uint64_t *out)
 {
     for (int64_t s = 0; s < n_seg; s++) {
         uint32_t mins[N_PERM];
@@ -90,70 +90,6 @@ CLONES void minhash_segments(const uint64_t *feats, const int64_t *lens, int64_t
         for (int p = 0; p < N_PERM; p++)
             out[s * N_PERM + p] = mins[p];
     }
-}
-
-/* cdc.chunk_boundary: length of the next chunk at the head of data[0:n]. */
-static int64_t chunk_boundary(const uint8_t *data, int64_t n, const uint64_t *gear,
-                              int64_t norm_size, int64_t min_size, int64_t max_size,
-                              uint64_t mask_1, uint64_t mask_2)
-{
-    if (n <= min_size)
-        return n;
-    uint64_t pattern = 0;
-    int64_t i = min_size;
-    int64_t end = norm_size < n ? norm_size : n;
-    for (; i < end; i++) {
-        pattern = (pattern << 1) + gear[data[i]];
-        if (!(pattern & mask_1))
-            return i;
-    }
-    end = max_size < n ? max_size : n;
-    for (; i < end; i++) {
-        pattern = (pattern << 1) + gear[data[i]];
-        if (!(pattern & mask_2))
-            return i;
-    }
-    return i;
-}
-
-/* cdc.data_chunks over each of the n_blobs consecutive blobs of data
- * (blob_lens[j] bytes each): the chunk lengths of all blobs, in order, to
- * chunk_lens, and each blob's chunk count to n_chunks[j]. Returns the total
- * count. chunk_lens needs room for sum(blob_lens) / GEAR1_MIN + n_blobs
- * values: every chunk but a blob's last is at least GEAR1_MIN long.
- *
- * params holds the two gear parameter sets, (norm, min, max, mask_1,
- * mask_2) for GEAR1 then GEAR2. As in the reference, a blob's first 100
- * chunks use GEAR1 and later ones GEAR2, and each iteration tops the
- * section (data[start:end]) up by at most one max-sized read. */
-int64_t cdc_lengths(const uint8_t *data, const int64_t *blob_lens, int64_t n_blobs,
-                    const uint64_t *gear, const uint64_t *params,
-                    int64_t *chunk_lens, int64_t *n_chunks)
-{
-    int64_t total = 0;
-    for (int64_t j = 0; j < n_blobs; j++) {
-        int64_t n = blob_lens[j];
-        int64_t start = 0;
-        int64_t end = n < (int64_t)params[2] ? n : (int64_t)params[2];
-        int64_t emitted = 0;
-        for (;;) {
-            const uint64_t *g = emitted < 100 ? params : params + 5;
-            int64_t max_size = (int64_t)g[2];
-            if (end - start < max_size)
-                end = end + max_size < n ? end + max_size : n;
-            if (end == start)
-                break;
-            int64_t cut = chunk_boundary(data + start, end - start, gear, (int64_t)g[0],
-                                         (int64_t)g[1], max_size, g[3], g[4]);
-            chunk_lens[total + emitted] = cut;
-            start += cut;
-            emitted++;
-        }
-        n_chunks[j] = emitted;
-        total += emitted;
-        data += n;
-    }
-    return total;
 }
 
 #define P32_1 UINT32_C(2654435761)
@@ -243,7 +179,8 @@ static uint64_t xxh64(const uint8_t *p, int64_t n)
 }
 
 /* out[m] = xxh32 / xxh64 of data[offsets[m] : offsets[m] + lengths[m]] for
- * each of the n messages; the caller has checked they lie inside data. */
+ * each of the n messages; the caller has checked they lie inside data.
+ * The tests' window onto the two hashes. */
 void xxh32_var(const uint8_t *data, const int64_t *offsets, const int64_t *lengths,
                int64_t n, uint64_t *out)
 {
@@ -256,6 +193,72 @@ void xxh64_var(const uint8_t *data, const int64_t *offsets, const int64_t *lengt
 {
     for (int64_t m = 0; m < n; m++)
         out[m] = xxh64(data + offsets[m], lengths[m]);
+}
+
+/* cdc.chunk_boundary: length of the next chunk at the head of data[0:n].
+ * A serial loop, so it is built once, not inlined into each clone body. */
+__attribute__((noinline)) static int64_t chunk_boundary(const uint8_t *data, int64_t n,
+                                                        const uint64_t *gear, int64_t norm_size,
+                                                        int64_t min_size, int64_t max_size,
+                                                        uint64_t mask_1, uint64_t mask_2)
+{
+    if (n <= min_size)
+        return n;
+    uint64_t pattern = 0;
+    int64_t i = min_size;
+    int64_t end = norm_size < n ? norm_size : n;
+    for (; i < end; i++) {
+        pattern = (pattern << 1) + gear[data[i]];
+        if (!(pattern & mask_1))
+            return i;
+    }
+    end = max_size < n ? max_size : n;
+    for (; i < end; i++) {
+        pattern = (pattern << 1) + gear[data[i]];
+        if (!(pattern & mask_2))
+            return i;
+    }
+    return i;
+}
+
+/* For each of the n_blobs blobs (blobs[j], lens[j] bytes): cdc.data_chunks
+ * of the blob, each chunk hashed with xxh32 and folded into the 64 running
+ * mins as soon as it is cut. minhash[j*64 : j*64 + 64] gets the MinHash of
+ * the chunk hashes (sketches.minhash_np), n_chunks[j] the chunk count. The
+ * empty blob has no chunk: count 0, and every min stays 2^32 - 1.
+ *
+ * params holds the two gear parameter sets, (norm, min, max, mask_1,
+ * mask_2) for GEAR1 then GEAR2. As in the reference, a blob's first 100
+ * chunks use GEAR1 and later ones GEAR2, and each iteration tops the
+ * section (data[start:end]) up by at most one max-sized read. */
+CLONES void data_sketch(const uint8_t *const *blobs, const int64_t *lens, int64_t n_blobs,
+                        const uint64_t *gear, const uint64_t *params, const uint64_t *a,
+                        const uint64_t *b, uint64_t *minhash, int64_t *n_chunks)
+{
+    for (int64_t j = 0; j < n_blobs; j++) {
+        const uint8_t *data = blobs[j];
+        int64_t n = lens[j], start = 0, emitted = 0;
+        int64_t end = n < (int64_t)params[2] ? n : (int64_t)params[2];
+        uint32_t mins[N_PERM];
+        for (int p = 0; p < N_PERM; p++)
+            mins[p] = UINT32_MAX;
+        for (;;) {
+            const uint64_t *g = emitted < 100 ? params : params + 5;
+            int64_t max_size = (int64_t)g[2];
+            if (end - start < max_size)
+                end = end + max_size < n ? end + max_size : n;
+            if (end == start)
+                break;
+            int64_t cut = chunk_boundary(data + start, end - start, gear, (int64_t)g[0],
+                                         (int64_t)g[1], max_size, g[3], g[4]);
+            perm_min(mins, xxh32(data + start, cut), a, b);
+            start += cut;
+            emitted++;
+        }
+        for (int p = 0; p < N_PERM; p++)
+            minhash[j * N_PERM + p] = mins[p];
+        n_chunks[j] = emitted;
+    }
 }
 
 /* The SimHash votes of one digest: votes[j] counts set bits at position j,

@@ -6,13 +6,13 @@ Text: ``text_sketch`` takes every normalised document as UTF-8 (from
 ``str.encode``, so valid UTF-8), copies it once, spaced, and hashes every
 window of code points with xxh32 (MinHash) and xxh64 (SimHash votes) as it
 goes. An empty, NULL or sub-window document is one window, as the spec's
-``sliding_window`` gives it, so every row goes through that one call. No
-shingle, feature or digest array is built, so the text path needs no group
-budget. Content-IDs hash 13-grams with a space between code points,
-Meta-IDs 4-grams as they are. Data: the CDC cut of every blob of a group in
-one call, then xxh32 of all its chunks in one call and their MinHash in one
-fused pass that never builds the (K, 64) permutation matrix.
-The scalar ``codes`` functions call the same C text sketch on a batch of
+``sliding_window`` gives it, so every row goes through that one call.
+Content-IDs hash 13-grams with a space between code points, Meta-IDs
+4-grams as they are. Data: ``data_sketch`` takes every blob by pointer and
+cuts it into its CDC chunks, hashing each chunk with xxh32 and folding it
+into the blob's MinHash as it is cut. Neither path builds a shingle,
+chunk, feature or digest array, so neither needs a group budget.
+The scalar ``codes`` functions call the same two sketches on a batch of
 one; the golden vectors pin both, tests/test_batch.py pins the batch
 functions to independent references, and tests/test_native.py and
 tests/test_kernel.py pin the C loops to ``sketches.minhash_np``,
@@ -35,41 +35,9 @@ from iscc_specs_spark.kernel.constants import (
     WINDOW_SIZE_CID_T,
     WINDOW_SIZE_MID,
 )
-from iscc_specs_spark.kernel.native import (
-    cdc_lengths,
-    minhash_segments,
-    text_sketch,
-    xxh32_var,
-)
+from iscc_specs_spark.kernel.native import data_sketch, text_sketch
+from iscc_specs_spark.kernel.sketches import lsb_bodies
 from iscc_specs_spark.kernel.textnorm import text_normalize, text_trim
-
-# cap the temporaries of hashing one group of blobs' CDC chunks, L2-resident
-# per worker (the kernel runs 32× concurrently per host, so DRAM bandwidth
-# is the budget): the joined blobs plus ~40 B per chunk (lengths, offsets,
-# hashes); web pages average ~85 B per chunk, so a group takes at most a
-# quarter of the budget in blob bytes (one blob at least)
-_CHUNK_BYTES_BUDGET = 1 << 20
-
-
-def _budget_groups(rows: list[int], sizes: list[int], budget: int):
-    """Consecutive runs of ``rows`` whose ``sizes`` sum to at most
-    ``budget``; a row larger than the budget is a run of its own."""
-    group: list[int] = []
-    total = 0
-    for i, k in zip(rows, sizes):
-        if group and total + k > budget:
-            yield group
-            group, total = [], 0
-        group.append(i)
-        total += k
-    if group:
-        yield group
-
-
-def _pack_u64_rows(bits: np.ndarray) -> np.ndarray:
-    """(R, 64) 0/1 uint8, col 0 = MSB → (R,) uint64."""
-    packed = np.packbits(bits, axis=1)  # (R, 8) big-endian bytes
-    return packed.view(">u8").astype(np.uint64).reshape(-1)
 
 
 def content_text_batch(texts: Sequence[str | None]):
@@ -81,7 +49,7 @@ def content_text_batch(texts: Sequence[str | None]):
     """
     norms = [text_normalize(t if t is not None else "", keep_ws=False) for t in texts]
     mh, sim = text_sketch(norms, WINDOW_SIZE_CID_T, 2, True)
-    bodies = _pack_u64_rows((mh & np.uint64(1)).astype(np.uint8))
+    bodies = lsb_bodies(mh)
     cps = np.fromiter(map(len, norms), dtype=np.int32, count=len(norms))
     return {
         "cid": [encode(HEAD_CID_T + int(b).to_bytes(8, "big")) for b in bodies],
@@ -102,49 +70,23 @@ def meta_batch(titles: Sequence[str | None]):
 
 
 def data_instance_batch(blobs: Sequence[bytes | None]):
-    """Data-ID + Instance-ID for a batch of binary blobs.
-
-    The blobs of a group (bounded by ``_CHUNK_BYTES_BUDGET``) are joined
-    once: one C call cuts every blob into its CDC chunks, one C
-    ``xxh32_var`` call hashes all chunks, and one fused MinHash with the
-    chunk counts as segment lengths gives every blob's Data-ID body.
+    """Data-ID + Instance-ID for a batch of binary blobs: one C
+    ``data_sketch`` call cuts, hashes and MinHashes every blob. A NULL or
+    empty blob has no chunk: it gets the zero Data-ID body and
+    ``n_chunks`` 0 (the scalar ``codes.data_id`` raises on it).
 
     Returns dict: did list[str], did_body int64, n_chunks int32,
     iid list[str], iid_body int64, tophash list[str].
     """
-    n_rows = len(blobs)
     data = [b if b is not None else b"" for b in blobs]
-    did = [encode(HEAD_DID + b"\x00" * 8)] * n_rows  # defined fallback for empty
-    did_body = np.zeros(n_rows, dtype=np.int64)
-    n_chunks = np.zeros(n_rows, dtype=np.int32)
-    iid: list[str | None] = [None] * n_rows
-    iid_body = np.zeros(n_rows, dtype=np.int64)
-    tophash: list[str | None] = [None] * n_rows
-
-    full = [i for i in range(n_rows) if data[i]]
-    sizes = [len(data[i]) for i in full]
-    for group in _budget_groups(full, sizes, _CHUNK_BYTES_BUDGET // 4):
-        joined = b"".join(data[i] for i in group)
-        chunk_lens, counts = cdc_lengths(joined, [len(data[i]) for i in group])
-        offsets = np.cumsum(chunk_lens) - chunk_lens
-        mh = minhash_segments(xxh32_var(joined, offsets, chunk_lens), counts)
-        bodies = _pack_u64_rows((mh & np.uint64(1)).astype(np.uint8))
-        for g, i in enumerate(group):
-            did[i] = encode(HEAD_DID + int(bodies[g]).to_bytes(8, "big"))
-            did_body[i] = bodies[g].astype(np.int64)
-            n_chunks[i] = counts[g]
-
-    for i, b in enumerate(data):
-        code, hexhash = instance_id(b)
-        iid[i] = code
-        iid_body[i] = np.uint64(int(hexhash[:16], 16)).astype(np.int64)
-        tophash[i] = hexhash
-
+    mh, n_chunks = data_sketch(data)
+    bodies = np.where(n_chunks > 0, lsb_bodies(mh), np.uint64(0))
+    iids = [instance_id(b) for b in data]
     return {
-        "did": did,
-        "did_body": did_body,
-        "n_chunks": n_chunks,
-        "iid": iid,
-        "iid_body": iid_body,
-        "tophash": tophash,
+        "did": [encode(HEAD_DID + int(b).to_bytes(8, "big")) for b in bodies],
+        "did_body": bodies.view(np.int64),
+        "n_chunks": n_chunks.astype(np.int32),
+        "iid": [code for code, _ in iids],
+        "iid_body": np.array([int(h[:16], 16) for _, h in iids], dtype=np.uint64).view(np.int64),
+        "tophash": [h for _, h in iids],
     }

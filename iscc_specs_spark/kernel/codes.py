@@ -14,9 +14,6 @@ from __future__ import annotations
 
 from hashlib import sha256
 
-import numpy as np
-
-from iscc_specs_spark.kernel.cdc import data_chunks
 from iscc_specs_spark.kernel.codec import decode, encode
 from iscc_specs_spark.kernel.constants import (
     HEAD_CID_M,
@@ -29,10 +26,9 @@ from iscc_specs_spark.kernel.constants import (
     WINDOW_SIZE_CID_T,
     WINDOW_SIZE_MID,
 )
-from iscc_specs_spark.kernel.native import text_sketch
-from iscc_specs_spark.kernel.sketches import lsb_digest, minhash_np, similarity_hash
+from iscc_specs_spark.kernel.native import data_sketch, text_sketch
+from iscc_specs_spark.kernel.sketches import lsb_bodies, similarity_hash
 from iscc_specs_spark.kernel.textnorm import text_normalize, text_trim
-from iscc_specs_spark.kernel.xxhashes import xxh32
 
 
 def sliding_window(seq, width: int):
@@ -64,14 +60,13 @@ def content_id_text_full(text: str | bytes):
     n_features) for one document."""
     norm = text_normalize(text, keep_ws=False)
     mh, sim = text_sketch([norm], WINDOW_SIZE_CID_T, 2, True)
-    code = encode(HEAD_CID_T + lsb_digest(mh[0]))
+    code = encode(HEAD_CID_T + int(lsb_bodies(mh)[0]).to_bytes(8, "big"))
     return code, mh[0], int(sim[0]), max(len(norm) - WINDOW_SIZE_CID_T + 1, 1)
 
 
 def content_id_text(text: str | bytes, partial: bool = False) -> str:
-    mh = content_id_text_full(text)[1]
-    head = HEAD_CID_T_PCF if partial else HEAD_CID_T
-    return encode(head + lsb_digest(mh))
+    code = content_id_text_full(text)[0]
+    return encode(HEAD_CID_T_PCF + decode(code)[1:]) if partial else code
 
 
 # ---------------------------------------------------------------------------
@@ -91,15 +86,19 @@ def content_id_mixed(cids: list[str], partial: bool = False) -> str:
 # ---------------------------------------------------------------------------
 
 def data_id_full(data: bytes):
-    """Returns (code, minhash_signature[64] uint64, n_chunks)."""
-    feats = np.fromiter(
-        (xxh32(chunk) for chunk in data_chunks(data)), dtype=np.uint64
-    )
-    mh = minhash_np(feats)
-    return encode(HEAD_DID + lsb_digest(mh)), mh, int(feats.size)
+    """Returns (code, minhash_signature[64] uint64, n_chunks): the C
+    ``data_sketch`` on a batch of one. Empty data has no CDC chunk, so no
+    MinHash: it raises ValueError (``batch.data_instance_batch`` gives
+    such a row the zero body instead)."""
+    if not data:
+        raise ValueError("Data-ID of empty data: no chunk to MinHash")
+    mh, n_chunks = data_sketch([bytes(data)])
+    code = encode(HEAD_DID + int(lsb_bodies(mh)[0]).to_bytes(8, "big"))
+    return code, mh[0], int(n_chunks[0])
 
 
 def data_id(data: bytes) -> str:
+    """The Data-ID of ``data``; raises ValueError on empty data."""
     return data_id_full(data)[0]
 
 

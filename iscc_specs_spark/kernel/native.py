@@ -1,15 +1,16 @@
 """The kernel's compiled loops: ``_native.c``, built at first import and
-called through ``ctypes``. They are the text sketch (xxh32 MinHash and
-xxh64 SimHash of every window of a batch of docs, in one pass from the
-normalised text: the one text path, which the batch functions call once
-per batch and the scalar Meta-ID and Content-ID-Text on a batch of one),
-the MinHash and CDC cut of data, and xxh32/xxh64 of many messages of one
-buffer (``xxh32_var`` hashes the data path's chunks; ``xxh64_var`` has no
-caller in the package, and tests/test_kernel.py pins the C xxh64 the text
-sketch uses through it). ``codes.data_id_full`` keeps the scalar
-``xxhashes.xxh32`` as the independent code tests/test_batch.py checks the
-chunk hash against. Text goes in as UTF-8 from ``str.encode``, so the C
-code takes it to be valid UTF-8.
+called through ``ctypes``. There are two sketches, each the one path of
+its code: ``text_sketch`` (xxh32 MinHash and xxh64 SimHash of every window
+of a batch of docs, in one pass from the normalised text) and
+``data_sketch`` (xxh32 MinHash of every blob's CDC chunks, each folded in
+as it is cut). The batch functions call each once per batch, and the
+scalar Meta-ID, Content-ID-Text and Data-ID on a batch of one. Text goes
+in as UTF-8 from ``str.encode``, so the C code takes it to be valid UTF-8;
+blobs go in by pointer, uncopied. ``minhash_segments``, ``xxh32_var`` and
+``xxh64_var`` have no caller in the package: they are the tests' windows
+onto the MinHash fold and the two xxHashes, which take chosen 64-bit
+features and messages of every length that no doc or blob could be made
+to produce (tests/test_native.py, tests/test_kernel.py).
 
 The source is read with ``pkgutil.get_data``, so it loads from a checkout
 and from a ``--py-files`` zip alike. It is compiled with ``cc`` into
@@ -35,7 +36,7 @@ mount cannot map the library; point ``TMPDIR`` elsewhere).
 
 SIMD by runtime dispatch, not ``-march``: the executors of one cluster may
 have different CPUs, and a library built for the driver's may not run on
-theirs. The two MinHash loops are compiled as ``target_clones`` (AVX-512,
+theirs. The two sketches are compiled as ``target_clones`` (AVX-512,
 AVX2 and baseline bodies in one library), and the dynamic loader picks the
 body for the CPU it runs on (``ISA`` names it), so one ``.so`` per
 architecture is right on every host.
@@ -177,10 +178,13 @@ def _bind(lib: ctypes.CDLL) -> ctypes.CDLL:
         _u64, ctypes.c_void_p, ctypes.c_void_p, ctypes.c_void_p,  # NULL: no MinHash
     )
     lib.text_sketch.restype = None
+    lib.data_sketch.argtypes = (
+        ctypes.POINTER(ctypes.c_char_p), _i64, ctypes.c_int64, _u64, _u64, _u64, _u64, _u64,
+        _i64,
+    )
+    lib.data_sketch.restype = None
     lib.minhash_segments.argtypes = (_u64, _i64, ctypes.c_int64, _u64, _u64, _u64)
     lib.minhash_segments.restype = None
-    lib.cdc_lengths.argtypes = (ctypes.c_char_p, _i64, ctypes.c_int64, _u64, _u64, _i64, _i64)
-    lib.cdc_lengths.restype = ctypes.c_int64
     for fn in (lib.xxh32_var, lib.xxh64_var):
         fn.argtypes = (_u8, _i64, _i64, ctypes.c_int64, _u64)
         fn.restype = None
@@ -188,7 +192,7 @@ def _bind(lib: ctypes.CDLL) -> ctypes.CDLL:
 
 
 _LIB = _bind(_load())
-# the body of the MinHash loops this CPU runs: "x86-64-v4" (AVX-512),
+# the body of the two sketches this CPU runs: "x86-64-v4" (AVX-512),
 # "x86-64-v3" (AVX2), "default", or "no clones" where the compiler or
 # platform has no ifunc multi-versioning
 ISA = _LIB.isa().decode()
@@ -228,10 +232,26 @@ def text_sketch(docs: Sequence[str], width: int, step: int, minhash: bool):
     return mh, simhash
 
 
+def data_sketch(blobs: Sequence[bytes]):
+    """MinHash of the CDC chunks of each blob → (minhash (R, 64) uint64,
+    n_chunks (R,) int64). Row r's MinHash equals ``sketches.minhash_np``
+    of the ``xxhashes.xxh32`` of each chunk of ``cdc.data_chunks(blob_r)``,
+    its count the number of those chunks. The empty blob has no chunk:
+    count 0 and every value ``2**32 - 1``, which is no MinHash. The blobs
+    go to C by pointer, uncopied, so each must be ``bytes``."""
+    lens = np.fromiter(map(len, blobs), dtype=np.int64, count=len(blobs))
+    ptrs = (ctypes.c_char_p * lens.size)(*blobs)  # a non-bytes blob raises here
+    mh = np.empty((lens.size, 64), dtype=np.uint64)
+    n_chunks = np.empty(lens.size, dtype=np.int64)
+    _LIB.data_sketch(ptrs, lens, lens.size, _GEAR, _CDC_PARAMS, _PERM_A, _PERM_B, mh, n_chunks)
+    return mh, n_chunks
+
+
 def minhash_segments(features: np.ndarray, lens: np.ndarray) -> np.ndarray:
     """MinHash of each segment of a (K,) uint64 feature array cut into
     consecutive segments of ``lens`` rows → (R, 64) uint64; row r equals
-    ``sketches.minhash_np`` of segment r. Every segment needs a row."""
+    ``sketches.minhash_np`` of segment r. Every segment needs a row. No
+    caller in the package: the tests feed it chosen features."""
     feats = np.ascontiguousarray(features, dtype=np.uint64)
     lens = np.ascontiguousarray(lens, dtype=np.int64)
     if lens.size and (lens.min() < 1 or lens.sum() != feats.size):
@@ -239,21 +259,6 @@ def minhash_segments(features: np.ndarray, lens: np.ndarray) -> np.ndarray:
     out = np.empty((lens.size, 64), dtype=np.uint64)
     _LIB.minhash_segments(feats, lens, lens.size, _PERM_A, _PERM_B, out)
     return out
-
-
-def cdc_lengths(joined: bytes, blob_lens: np.ndarray):
-    """CDC chunk lengths of each blob of ``joined`` (consecutive blobs of
-    ``blob_lens`` bytes) → (chunk_lens (C,) int64, n_chunks (R,) int64);
-    blob r's lengths equal ``[len(c) for c in cdc.data_chunks(blob_r)]``."""
-    blob_lens = np.ascontiguousarray(blob_lens, dtype=np.int64)
-    if blob_lens.size and (blob_lens.min() < 0 or blob_lens.sum() != len(joined)):
-        raise ValueError("blob lengths must be non-negative and sum to the buffer length")
-    chunk_lens = np.empty(len(joined) // GEAR1_MIN + blob_lens.size, dtype=np.int64)
-    n_chunks = np.empty(blob_lens.size, dtype=np.int64)
-    total = _LIB.cdc_lengths(
-        joined, blob_lens, blob_lens.size, _GEAR, _CDC_PARAMS, chunk_lens, n_chunks
-    )
-    return chunk_lens[:total], n_chunks
 
 
 def _hash_messages(fn, buf, offsets, lengths) -> np.ndarray:
@@ -274,7 +279,8 @@ def _hash_messages(fn, buf, offsets, lengths) -> np.ndarray:
 def xxh32_var(buf, offsets, lengths) -> np.ndarray:
     """xxh32 (seed 0) of each message ``buf[offsets[m] : offsets[m] +
     lengths[m]]`` of a bytes-like ``buf`` → (M,) uint64; equals
-    ``xxhashes.xxh32`` of each."""
+    ``xxhashes.xxh32`` of each. No caller in the package: the tests feed
+    it messages of every length."""
     return _hash_messages(_LIB.xxh32_var, buf, offsets, lengths)
 
 

@@ -3,10 +3,11 @@
 Parity targets: /root/reference/src/iscc/iscc.py:236-268 (similarity_hash,
 minimum_hash); permutation pairs are spec data (const.py:70-327).  Both are
 NumPy-vectorized — ``similarity_hash`` via unpackbits column sums,
-``minimum_hash`` via a broadcast (features × 64 permutations) matrix. They
-are the references: the scalar Data-ID and Content-ID-Mixed use them, and
-the C text sketch and data MinHash (``kernel.native``) are pinned to them
-by tests/test_native.py.
+``minimum_hash`` via a broadcast (features × 64 permutations) matrix.
+Content-ID-Mixed uses ``similarity_hash``; otherwise both are the
+references that tests/test_native.py pins the C text and data sketches
+(``kernel.native``) to. ``lsb_bodies`` packs every MinHash into its 8-byte
+code body, for the batch functions and the scalar codes alike.
 """
 
 from __future__ import annotations
@@ -48,8 +49,8 @@ def minhash_np(features: np.ndarray, n: int = 64) -> np.ndarray:
     mod (2^61-1), truncated to 32 bits.  uint64 multiply wraps natively,
     which is exactly the `& MAX_INT64` of the spec.
 
-    The reference: the scalar Data-ID calls it, and the C MinHash loops of
-    ``kernel.native`` are pinned to it. One (K,n) allocation, every later op
+    The reference only: the C MinHash loops of ``kernel.native`` are
+    pinned to it. One (K,n) allocation, every later op
     in place: NumPy's scalar-divisor ``np.mod`` is a single memory pass,
     where a shift/add Mersenne fold in NumPy takes several and measured
     2.8× slower (4-vCPU x86 VM, NumPy 1.26).
@@ -74,8 +75,9 @@ def minimum_hash(features: Iterable[int], n: int = 64) -> list[int]:
     return [int(v) for v in minhash_np(arr, n=n)]
 
 
-def lsb_digest(minhash: np.ndarray) -> bytes:
-    """8-byte body: LSB of each of the 64 signature values, first value =
-    most-significant bit (spec §219-221)."""
-    bits = (minhash[:64] & np.uint64(1)).astype(np.uint8)
-    return np.packbits(bits).tobytes()
+def lsb_bodies(minhash: np.ndarray) -> np.ndarray:
+    """(R, 64) MinHash signatures → (R,) uint64 code bodies: the LSB of
+    each of a row's 64 values, the first value the most-significant bit
+    (spec §219-221)."""
+    packed = np.packbits((minhash & np.uint64(1)).astype(np.uint8), axis=1)
+    return packed.view(">u8").astype(np.uint64).reshape(-1)

@@ -2,12 +2,11 @@
 
 The kernel depends on no ``xxhash`` package; it carries its own (seed is
 always 0 in ISCC). These scalar ``xxh32(data)`` / ``xxh64(data)`` over
-``bytes`` are the reference that tests/test_kernel.py pins the C loops
-``kernel.native.xxh32_var`` / ``xxh64_var`` to (one call over many
-messages of one buffer). Every hashing caller of the kernel makes one
-such call, except ``codes.data_id_full``: it hashes its chunks here, so
-that tests/test_batch.py checks the batch path's chunk hash against
-independent code.
+``bytes`` are the reference only: the kernel's codes hash in C, inside
+the text and data sketches of ``kernel.native``, and tests/test_kernel.py
+pins the C hashes to these through ``xxh32_var`` / ``xxh64_var`` (one
+call over many messages of one buffer); tests/test_native.py and
+tests/test_batch.py hash their reference windows and chunks here.
 
 Correctness is transitively pinned by the ISCC golden vectors (every Meta-ID
 vector exercises xxh64, every Content-ID-Text / Data-ID vector exercises

@@ -6,9 +6,10 @@ Spark-first design notes (100 TB posture):
     per-row Python UDFs (BASELINE.json input_hint).
   * only ``url, warc_ts, text, html`` are selected, so Catalyst prunes the
     parquet scan to them (check ReadSchema in .explain()).
-  * inside the batch, all shingle hashing is vectorized across documents
-    (kernel.batch), and the 8-byte code bodies are emitted as LONG columns so
-    downstream Hamming verification stays native
+  * inside the batch, each code family makes one C call over every
+    document (kernel.batch: ``text_sketch`` for the Content- and Meta-IDs,
+    ``data_sketch`` for the Data-ID), and the 8-byte code bodies are
+    emitted as LONG columns so downstream Hamming verification stays native
     (``bit_count(a ^ b)``, whole-stage codegen, no Python).
 
 Reference parity: codes equal /root/reference/src/iscc/iscc.py:19-164

@@ -3,12 +3,13 @@ generated ~8 KB pages, in one thread and with no Spark.
 
 The steps replay ``kernel.batch.content_text_batch`` (normalise, then one
 C ``text_sketch`` call over every normalised doc: the spaced copy,
-xxh32/xxh64 of every shingle, MinHash and SimHash) and ``data_instance_batch`` (the C CDC cut, C chunk
-hash, chunk MinHash, Instance-ID) on the same inputs and budgets; the two
-batch functions are also timed whole, so the sum of the steps can be
-checked against them. Each figure is the best of ``--reps`` passes over
-all pages. The first line names the body of the C MinHash loops that
-this CPU runs (``native.ISA``).
+xxh32/xxh64 of every shingle, MinHash and SimHash) and
+``data_instance_batch`` (one C ``data_sketch`` call over every blob: the
+CDC cut, xxh32 of every chunk and the MinHash; then the Instance-ID) on
+the same inputs; the two batch functions are also timed whole, so the sum
+of the steps can be checked against them. Each figure is the best of
+``--reps`` passes over all pages. The first line names the body of the C
+sketches that this CPU runs (``native.ISA``).
 
 Usage: python scripts/kernel_profile.py [--seed 1] [--docs 300] [--reps 3]
 """
@@ -21,8 +22,6 @@ import sys
 import time
 from collections import defaultdict
 
-import numpy as np
-
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, ROOT)
 sys.path.insert(0, os.path.join(ROOT, "perfbench"))
@@ -33,13 +32,7 @@ from workloads import WORDS_8K, KernelPages  # noqa: E402
 from iscc_specs_spark.kernel import batch  # noqa: E402
 from iscc_specs_spark.kernel.codes import instance_id  # noqa: E402
 from iscc_specs_spark.kernel.constants import WINDOW_SIZE_CID_T  # noqa: E402
-from iscc_specs_spark.kernel.native import (  # noqa: E402
-    ISA,
-    cdc_lengths,
-    minhash_segments,
-    text_sketch,
-    xxh32_var,
-)
+from iscc_specs_spark.kernel.native import ISA, data_sketch, text_sketch  # noqa: E402
 from iscc_specs_spark.kernel.textnorm import text_normalize  # noqa: E402
 
 
@@ -66,16 +59,8 @@ def content_steps(texts: list[str], clk: Clock) -> None:
 
 def data_steps(blobs: list[bytes], clk: Clock) -> None:
     clk.lap("")
-    full = [i for i, b in enumerate(blobs) if b]
-    sizes = [len(blobs[i]) for i in full]
-    for group in batch._budget_groups(full, sizes, batch._CHUNK_BYTES_BUDGET // 4):
-        joined = b"".join(blobs[i] for i in group)
-        chunk_lens, counts = cdc_lengths(joined, [len(blobs[i]) for i in group])
-        clk.lap("data: CDC cut")
-        feats = xxh32_var(joined, np.cumsum(chunk_lens) - chunk_lens, chunk_lens)
-        clk.lap("data: chunk hash")
-        minhash_segments(feats, counts)
-        clk.lap("data: chunk minhash")
+    data_sketch(blobs)
+    clk.lap("data: data_sketch (C)")
     for b in blobs:
         instance_id(b)
     clk.lap("data: instance hash")
@@ -109,7 +94,7 @@ def main() -> None:
                 best[step] = min(best.get(step, s), s)
 
     n = len(texts)
-    print(f"seed {args.seed}, {n} pages, best of {args.reps}, MinHash clone {ISA}")
+    print(f"seed {args.seed}, {n} pages, best of {args.reps}, sketch clone {ISA}")
     for prefix in ("text", "data", "whole"):
         rows = {k: v for k, v in best.items() if k.startswith(prefix)}
         for step, s in rows.items():

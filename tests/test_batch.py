@@ -1,7 +1,8 @@
 """Batch (cross-document vectorized) kernel == the spec's per-document
 reference: the text rows against windows hashed by the scalar xxHash
-(tests/test_native.py ``_sketch_ref``), the data rows against the scalar
-Data-ID and Instance-ID."""
+(tests/test_native.py ``_sketch_ref``), the data rows against CDC chunks
+hashed the same way (``_data_ref``) and the Instance-ID. The scalar codes
+run the same C sketches on a batch of one, so they are no reference."""
 
 from __future__ import annotations
 
@@ -9,11 +10,11 @@ import numpy as np
 import pytest
 
 from iscc_specs_spark import kernel
-from iscc_specs_spark.kernel import batch
 from iscc_specs_spark.kernel.constants import (
     GEAR1_MIN,
     GEAR2_MIN,
     HEAD_CID_T,
+    HEAD_DID,
     HEAD_MID,
     WINDOW_SIZE_CID_T,
     WINDOW_SIZE_MID,
@@ -23,7 +24,7 @@ from iscc_specs_spark.kernel.batch import (
     data_instance_batch,
     meta_batch,
 )
-from test_native import _sketch_ref
+from test_native import _data_ref, _sketch_ref
 
 TEXTS = [
     "",
@@ -103,26 +104,51 @@ def test_data_instance_batch_matches_scalar():
     _check_data(blobs)
 
 
-def _check_data(blobs):
-    out = data_instance_batch(blobs)
+def _groups(blobs, budget):
+    """Consecutive rows of at most ``budget`` blob bytes (a longer blob
+    alone); one group when ``budget`` is None."""
+    if budget is None:
+        return [blobs]
+    groups, size = [[]], 0
+    for b in blobs:
+        n = len(b or b"")
+        if groups[-1] and size + n > budget:
+            groups.append([])
+            size = 0
+        groups[-1].append(b)
+        size += n
+    return groups
+
+
+def _check_data(blobs, budget=None):
+    """Each row == its reference, whether the rows go to
+    ``data_instance_batch`` in one call or in groups (the Arrow batches a
+    partition is cut into)."""
+    outs = [data_instance_batch(g) for g in _groups(blobs, budget)]
+    if budget is not None:
+        assert len(outs) > 1
+    out = {k: [v for o in outs for v in o[k]] for k in outs[0]}
     for i, b in enumerate(blobs):
         if b:
-            code, mh, nc = kernel.data_id_full(b)
-            assert out["did"][i] == code
-            assert out["n_chunks"][i] == nc
-            assert kernel.decode(code)[1:] == _body(out["did_body"][i])
+            mh, nc = _data_ref(b)
+            body = np.packbits((mh & np.uint64(1)).astype(np.uint8)).tobytes()
+        else:  # no chunk: the zero body
+            body, nc = bytes(8), 0
+        assert out["did"][i] == kernel.encode(HEAD_DID + body), f"row {i}"
+        assert out["n_chunks"][i] == nc, f"row {i}"
+        assert _body(out["did_body"][i]) == body, f"row {i}"
         code, hexhash = kernel.instance_id(b if b is not None else b"")
         assert out["iid"][i] == code
         assert out["tophash"][i] == hexhash
+        assert _body(out["iid_body"][i]) == bytes.fromhex(hexhash[:16])
 
 
-@pytest.mark.parametrize("budget", [None, 4 * 3000])  # groups of <= 3000 blob bytes
-def test_data_instance_batch_mixed_blobs(budget, monkeypatch):
+@pytest.mark.parametrize("budget", [None, 12_000])  # groups of <= 12000 blob bytes
+def test_data_instance_batch_mixed_blobs(budget):
     """NULL, empty and sub-GEAR1_MIN blobs between chunked ones, and a blob
-    over 64000 bytes (GEAR2 chunks, a 2-leaf Instance-ID tree); with a
-    small budget the chunk-hash groups break between and around them."""
-    if budget:
-        monkeypatch.setattr(batch, "_CHUNK_BYTES_BUDGET", budget)
+    over 64000 bytes (GEAR2 chunks, a 2-leaf Instance-ID tree), in one
+    ``data_sketch`` call or, with a budget, in several calls that break
+    between and around them."""
     rng = np.random.default_rng(9)
 
     def blob(n):
@@ -131,4 +157,16 @@ def test_data_instance_batch_mixed_blobs(budget, monkeypatch):
     blobs = [blob(900), None, blob(7), b"", blob(70000), blob(2500), None, blob(1), b""]
     assert len(blobs[2]) < GEAR1_MIN and len(blobs[4]) > 64000
     assert max(map(len, kernel.data_chunks(blobs[4]))) > GEAR2_MIN
-    _check_data(blobs)
+    _check_data(blobs, budget)
+
+
+def test_empty_blob_contract():
+    """An empty or NULL blob has no CDC chunk, so no MinHash: a batch row
+    gets the zero Data-ID body and no chunks, the scalar Data-ID raises
+    (a batch of one with no check would give the all-ones body)."""
+    out = data_instance_batch([b"", None])
+    assert out["did"] == [kernel.encode(HEAD_DID + bytes(8))] * 2
+    assert out["did_body"].tolist() == [0, 0] and out["n_chunks"].tolist() == [0, 0]
+    for fn in (kernel.data_id, kernel.data_id_full):
+        with pytest.raises(ValueError):
+            fn(b"")

@@ -14,9 +14,12 @@ from __future__ import annotations
 import json
 from pathlib import Path
 
+import numpy as np
 import pytest
 
 from iscc_specs_spark import kernel
+from iscc_specs_spark.kernel.native import data_sketch
+from iscc_specs_spark.kernel.sketches import minhash_np
 
 FIXTURES = Path(__file__).parent / "fixtures"
 # no descoped cases remain (rounds 1-3 descoped the two JPEG-input
@@ -59,4 +62,9 @@ def test_golden_vector(funcname, name, case):
     result = func(*inputs)
     if funcname == "data_chunks":
         result = list(result)
+        # the C data path cuts the same chunks: their count and MinHash
+        mh, n_chunks = data_sketch(inputs)
+        feats = np.array([kernel.xxh32(c) for c in expected], dtype=np.uint64)
+        assert n_chunks.tolist() == [len(expected)], f"{funcname}/{name}"
+        assert np.array_equal(mh[0], minhash_np(feats)), f"{funcname}/{name}"
     assert result == expected, f"{funcname}/{name}"

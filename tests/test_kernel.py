@@ -57,21 +57,19 @@ def test_xxh32_var_matches_scalar():
     """Variable-length messages at arbitrary offsets of one buffer, in both
     widths: every tail shape around the 4-, 8-, 16- and 32-byte boundaries,
     empty messages, GEAR2-sized chunks, a message over 1 MB and a buffer
-    larger than one data_instance_batch chunk-hash group."""
-    from iscc_specs_spark.kernel.batch import _CHUNK_BYTES_BUDGET
-
+    over 2 MB."""
     rng = np.random.default_rng(11)
     lens = np.concatenate([
         rng.integers(0, 301, 300),
         [0, 3, 4, 7, 8, 15, 16, 17, 31, 32, 33, 63, 64, 65, 0],
         [2049, 4096, 6143, 65536],
-        [_CHUNK_BYTES_BUDGET - 70000, _CHUNK_BYTES_BUDGET + 7],
+        [(1 << 20) - 70000, (1 << 20) + 7],
     ]).astype(np.int64)
     rng.shuffle(lens)
     gaps = rng.integers(0, 5, lens.size)  # messages need not be contiguous
     offsets = np.cumsum(lens + gaps) - lens
     buf = rng.integers(0, 256, int(offsets[-1] + lens[-1] + 3), dtype=np.uint8).tobytes()
-    assert len(buf) > 2 * _CHUNK_BYTES_BUDGET
+    assert len(buf) > 2 << 20
     _check_var(buf, offsets, lens)
     # overlapping messages, and the last one ending at the buffer's end
     _check_var(buf, [0, 1, 2, len(buf) - 40], [70, 69, 0, 40])

@@ -1,7 +1,7 @@
 """The kernel's C loops (``kernel.native``) == their NumPy/Python reference
-(``codes.sliding_window`` windows hashed by the scalar ``xxhashes`` into
-``sketches.minhash_np`` and ``sketches.similarity_hash``,
-``cdc.data_chunks``; the xxHash loops are pinned to the scalar
+(``codes.sliding_window`` windows and ``cdc.data_chunks`` chunks hashed
+by the scalar ``xxhashes`` into ``sketches.minhash_np`` and
+``sketches.similarity_hash``; the xxHash loops are pinned to the scalar
 ``xxhashes`` in tests/test_kernel.py), in the loaded library and in a
 build of each per-CPU clone body on its own; the library builds from a
 ``--py-files`` zip, once per host and source. No Spark."""
@@ -208,7 +208,7 @@ def _cpu_flags() -> set[str]:
 
 @pytest.mark.parametrize("level", ["default", "x86-64-v3", "x86-64-v4"])
 def test_each_clone_body_matches_reference(level, tmp_path, monkeypatch):
-    """Build each body of the MinHash loops on its own (-DISCC_NO_CLONES,
+    """Build each body of the two sketches on its own (-DISCC_NO_CLONES,
     with the clone's -march) and check it, not only the one this CPU
     dispatches to."""
     march = []
@@ -228,6 +228,8 @@ def test_each_clone_body_matches_reference(level, tmp_path, monkeypatch):
     test_minhash_fold_edges()
     test_minhash_random_features(800)
     test_text_sketch_matches_reference(monkeypatch)
+    test_cdc_lengths_per_blob()
+    test_cdc_lengths_joined_blobs()
 
 
 def _blobs():
@@ -239,29 +241,61 @@ def _blobs():
     return blobs
 
 
+def _data_ref(blob: bytes):
+    """MinHash and count of one blob's CDC chunks, from the reference
+    chunker, the scalar xxh32 and the reference fold."""
+    feats = np.array([xxh32(c) for c in data_chunks(blob)], dtype=np.uint64)
+    return minhash_np(feats), feats.size
+
+
+def _joined_blobs():
+    """``_blobs`` and the edge blobs: the empty blob, one byte, one
+    sub-GEAR1_MIN run of zeros, and long blobs whose chunks run past 100
+    into GEAR2 and its 64 KB refills."""
+    long = np.random.default_rng(20).bytes(20_000)
+    head = sum(len(c) for _, c in zip(range(100), data_chunks(long)))
+    # the last two: 100 GEAR1 chunks, then one more byte cut by GEAR2
+    return _blobs() + [b"", b"\x00", bytes(64), long, long[:head], long[: head + 1]]
+
+
+def _check_data_row(mh_row, count, blob: bytes) -> None:
+    if blob:
+        want_mh, want_count = _data_ref(blob)
+        assert count == want_count and np.array_equal(mh_row, want_mh), len(blob)
+    else:  # no chunk: the mins stay 2**32 - 1
+        assert count == 0 and (mh_row == 0xFFFFFFFF).all()
+
+
 def test_cdc_lengths_per_blob():
-    for b in _blobs():
-        want = [len(c) for c in data_chunks(b)]
-        lens, counts = native.cdc_lengths(b, [len(b)])
-        assert lens.tolist() == want, len(b)
-        assert counts.tolist() == [len(want)]
+    """Each blob in its own ``data_sketch`` call: the count and MinHash of
+    its CDC chunks == those of the reference chunker's chunks."""
+    for b in _joined_blobs():
+        mh, counts = native.data_sketch([b])
+        assert mh.shape == (1, 64) and mh.dtype == np.uint64
+        assert counts.dtype == np.int64 and counts.shape == (1,)
+        _check_data_row(mh[0], counts[0], b)
 
 
 def test_cdc_lengths_joined_blobs():
-    """One call over a group, as data_instance_batch makes it; the long
-    blobs run past 100 chunks into GEAR2 and its 64 KB refills."""
-    blobs = _blobs() + [b""]
-    want = [[len(c) for c in data_chunks(b)] for b in blobs]
-    assert max(map(len, want)) > 100
-    assert GEAR2_MAX in want[blobs.index(bytes(200_000))]
-    lens, counts = native.cdc_lengths(b"".join(blobs), [len(b) for b in blobs])
-    assert counts.tolist() == list(map(len, want))
-    assert lens.tolist() == [n for w in want for n in w]
+    """All blobs in one ``data_sketch`` call, as data_instance_batch makes
+    it: each row == its reference, so no cut or hash crosses a blob."""
+    blobs = _joined_blobs()
+    chunks = [[len(c) for c in data_chunks(b)] for b in blobs]
+    assert [len(c) for c in chunks[-2:]] == [100, 101] and chunks[-1][-1] == 1
+    assert GEAR2_MAX in chunks[blobs.index(bytes(200_000))]
+    mh, counts = native.data_sketch(blobs)
+    assert mh.shape == (len(blobs), 64) and mh.dtype == np.uint64
+    assert counts.dtype == np.int64 and counts.tolist() == list(map(len, chunks))
+    for r, b in enumerate(blobs):
+        _check_data_row(mh[r], counts[r], b)
 
 
-def test_cdc_lengths_rejects_bad_blob_lens():
-    with pytest.raises(ValueError):
-        native.cdc_lengths(b"abcd", [2, 3])
+def test_data_sketch_empty_batch_and_non_bytes():
+    mh, counts = native.data_sketch([])
+    assert mh.shape == (0, 64) and counts.shape == (0,)
+    for blob in (bytearray(b"abc"), "abc"):  # the C reads bytes objects only
+        with pytest.raises(TypeError):
+            native.data_sketch([b"ok", blob])
 
 
 def _make_zip(tmp_path, monkeypatch) -> str:

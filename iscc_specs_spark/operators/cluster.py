@@ -171,10 +171,11 @@ def connected_components(
 
 
 def assign_clusters(pages_urls: DataFrame, pairs: DataFrame) -> DataFrame:
-    """Every url → cluster_id (own url when singleton)."""
+    """(url, cluster_id): one row per distinct url of ``pages_urls``,
+    however many crawls list it (own url when singleton)."""
     comp = connected_components(pairs)
     return (
-        pages_urls.select("url")
+        pages_urls.select("url").distinct()
         .join(comp, "url", "left")
         .select("url", F.coalesce("cluster_id", "url").alias("cluster_id"))
     )

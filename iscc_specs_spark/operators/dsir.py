@@ -54,19 +54,10 @@ import math
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from iscc_specs_spark.operators.sampling import hash_bucket
+
 DENOM = 1_000_000
 MICRO = 1_000_000
-
-
-def _bucket(feat: Column, buckets: int, hash_fn: str) -> Column:
-    if hash_fn == "md5":
-        return F.pmod(
-            F.conv(F.substring(F.md5(feat), 1, 8), 16, 10).cast("long"),
-            F.lit(buckets),
-        )
-    if hash_fn == "xxh64":
-        return F.pmod(F.xxhash64(feat), F.lit(buckets))
-    raise ValueError(f"dsir: unknown hash_fn {hash_fn!r}")
 
 
 def doc_features(
@@ -103,7 +94,7 @@ def doc_features(
         ).alias("feat"),
     )
     return (
-        grams.select("id", _bucket(F.col("feat"), buckets, hash_fn).alias("j"))
+        grams.select("id", hash_bucket(F.col("feat"), buckets, hash_fn).alias("j"))
         .groupBy("id", "j")
         .agg(F.count("*").alias("cnt"))
     )
@@ -195,7 +186,7 @@ def gumbel_key(id_col: Column, logw_micro: Column, hash_fn: str) -> Column:
     """Gumbel-perturbed selection key: ``logw + (−ln(−ln(u)))`` with the
     uniform ``u = (bucket(id) + 0.5) / DENOM`` a pure function of the id —
     deterministic across retries, partitionings and engines."""
-    u = (_bucket(id_col.cast("string"), DENOM, hash_fn) + F.lit(0.5)) / F.lit(
+    u = (hash_bucket(id_col.cast("string"), DENOM, hash_fn) + F.lit(0.5)) / F.lit(
         float(DENOM)
     )
     return logw_micro / F.lit(float(MICRO)) - F.log(-F.log(u))

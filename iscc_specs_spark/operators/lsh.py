@@ -266,8 +266,8 @@ def verified_bucket_pairs(
     verify_pairs. Returns (url_a, url_b, cid_hamming, simhash_hamming,
     exact_dup) for capped buckets plus unverified hub edges flagged
     verified=false. A pair that several bands find appears once per band
-    on the inline side, every column equal: :func:`dup_pairs` dedupes the
-    union once. The hub edges are deduped here, one per (hub, member).
+    on the inline side: :func:`dup_pairs` collapses the union once. The
+    hub edges are deduped here, one per (hub, member).
 
     ``band_rows``: pass a precomputed band table (e.g. the one
     plans/dedup.py also feeds to its metrics pass) to skip the in-plan
@@ -367,6 +367,10 @@ def dup_pairs(
     plans/dedup.py stores it as the ``dup_pairs`` stage unchanged, and the
     driver's ``dedup_pairs`` row selects the same six columns.
 
+    One row per ``(url_a, url_b, src)``, the same at any partitioning: a
+    pair found by several bands or crawls keeps its least
+    ``(cid_hamming, simhash_hamming, exact_dup)``.
+
     ``slim``: pass a precomputed (ideally already-materialized)
     representative table to share it with other consumers (e.g. the
     lsh_metrics pass in plans/dedup.py) instead of re-aggregating. When
@@ -387,12 +391,14 @@ def dup_pairs(
         ),
         slim,
     )
-    verified = inline_ok.unionByName(hub_ok).dropDuplicates(["url_a", "url_b"])
     exact = exact_pairs(codes, slim).select(
         "url_a", "url_b", "src",
         F.lit(0).alias("cid_hamming"), F.lit(0).alias("simhash_hamming"),
         F.lit(True).alias("exact_dup"),
     )
-    return verified.select(
-        "url_a", "url_b", "src", "cid_hamming", "simhash_hamming", "exact_dup",
-    ).unionByName(exact)
+    dists = F.min(F.struct("cid_hamming", "simhash_hamming", "exact_dup"))
+    return (
+        inline_ok.unionByName(hub_ok).unionByName(exact)
+        .groupBy("url_a", "url_b", "src").agg(dists.alias("d"))
+        .select("url_a", "url_b", "src", "d.*")
+    )

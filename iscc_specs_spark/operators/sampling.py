@@ -30,18 +30,19 @@ from pyspark.sql import functions as F
 DENOM = 1_000_000
 
 
-def _bucket(key: Column, hash_fn: str, denom: int) -> Column:
+def hash_bucket(key: Column, denom: int, hash_fn: str) -> Column:
+    """A string column's bucket in ``[0, denom)``, for sampling, dsir and
+    semantic.featurize_text. ``'md5'`` (first 8 hex chars) is
+    byte-identical in DuckDB: ``('0x' || substr(md5(key), 1, 8))::UBIGINT
+    % denom``; ``'xxh64'`` is the JVM-native production hash."""
     if hash_fn == "md5":
-        # first 8 md5 hex chars as an integer — byte-identical in DuckDB:
-        # ('0x' || substr(md5(key::VARCHAR), 1, 8))::UBIGINT % denom
         return F.pmod(
-            F.conv(F.substring(F.md5(key.cast("string")), 1, 8), 16, 10)
-            .cast("long"),
+            F.conv(F.substring(F.md5(key), 1, 8), 16, 10).cast("long"),
             F.lit(denom),
         )
     if hash_fn == "xxh64":
-        return F.pmod(F.xxhash64(key.cast("string")), F.lit(denom))
-    raise ValueError(f"stratified_sample: unknown hash_fn {hash_fn!r}")
+        return F.pmod(F.xxhash64(key), F.lit(denom))
+    raise ValueError(f"unknown hash_fn {hash_fn!r}")
 
 
 def stratified_sample(
@@ -78,7 +79,7 @@ def stratified_sample(
     thr: Column = F.lit(int(round(default_fraction * denom)))
     for s, t in sorted(thresholds.items()):
         thr = F.when(F.col(strata_col) == s, F.lit(t)).otherwise(thr)
-    bucket = _bucket(F.col(key_col), hash_fn, denom)
+    bucket = hash_bucket(F.col(key_col).cast("string"), denom, hash_fn)
     return docs.withColumn("sample_bucket", bucket).where(
         F.col("sample_bucket") < thr
     )

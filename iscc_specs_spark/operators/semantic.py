@@ -46,6 +46,7 @@ from pyspark.sql import functions as F
 from iscc_specs_spark.operators.ann import ivf_build
 from iscc_specs_spark.operators.cluster import connected_components
 from iscc_specs_spark.operators.dedup_variants import dot_expr
+from iscc_specs_spark.operators.sampling import hash_bucket
 
 
 def _safe_cos(dot, denom):
@@ -88,15 +89,7 @@ def featurize_text(
             F.split(F.lower(F.coalesce(F.col(text_col), F.lit(""))), r"\s+")
         ).alias("tok"),
     ).where(F.col("tok") != "")
-    if hash_fn == "md5":
-        bucket = F.pmod(
-            F.conv(F.substring(F.md5(F.col("tok")), 1, 8), 16, 10).cast("long"),
-            F.lit(dim),
-        )
-    elif hash_fn == "xxh64":
-        bucket = F.pmod(F.xxhash64(F.col("tok")), F.lit(dim))
-    else:
-        raise ValueError(f"featurize_text: unknown hash_fn {hash_fn!r}")
+    bucket = hash_bucket(F.col("tok"), dim, hash_fn)
     counts = (
         toks.select(F.col(id_col), bucket.alias("j"))
         .groupBy(id_col)

@@ -99,7 +99,8 @@ bandrows AS (SELECT url, b.band_id AS band_id, b.band_key AS band_key FROM explo
 def pairs_ctes(bucket_cap: int = 64, cid_max: int = 10, sim_max: int = 3) -> str:
     """CTEs from ``bandrows``/``slim``/``codes`` to ``final_pairs`` —
     mirrors lsh.dup_pairs: cold-bucket C(k,2) + hot-bucket hub-and-spoke,
-    inline Hamming verification, union with exact tophash pairs."""
+    inline Hamming verification, union with exact tophash pairs; one row
+    per (url_a, url_b, src), with its least distances struct."""
     return f"""
 sized AS (SELECT band_id, band_key, count(*) AS n FROM bandrows GROUP BY 1, 2),
 cold AS (
@@ -125,20 +126,21 @@ cand_hot AS (
 ),
 allcand AS (SELECT * FROM cand_cold UNION SELECT * FROM cand_hot),
 verified AS (
-    SELECT DISTINCT c.url_a, c.url_b, 'lsh' AS src,
-        CAST(bit_count(xor(a.cid_body, b.cid_body)) AS INT) AS cid_hamming,
-        CAST(bit_count(xor(a.simhash, b.simhash)) AS INT) AS simhash_hamming,
-        (a.tophash = b.tophash) AS exact_dup
+    SELECT c.url_a, c.url_b, 'lsh' AS src, unnest(min({{
+        'cid_hamming': CAST(bit_count(xor(a.cid_body, b.cid_body)) AS INT),
+        'simhash_hamming': CAST(bit_count(xor(a.simhash, b.simhash)) AS INT),
+        'exact_dup': a.tophash = b.tophash}}))
     FROM allcand c
     JOIN slim a ON c.url_a = a.url
     JOIN slim b ON c.url_b = b.url
     WHERE bit_count(xor(a.cid_body, b.cid_body)) <= {cid_max}
        OR bit_count(xor(a.simhash, b.simhash)) <= {sim_max}
        OR a.tophash = b.tophash
+    GROUP BY 1, 2
 ),
 reps AS (SELECT tophash, min(url) AS rep FROM codes GROUP BY tophash),
 exact AS (
-    SELECT r.rep AS url_a, c.url AS url_b, 'exact' AS src,
+    SELECT DISTINCT r.rep AS url_a, c.url AS url_b, 'exact' AS src,
            CAST(0 AS INT) AS cid_hamming, CAST(0 AS INT) AS simhash_hamming,
            TRUE AS exact_dup
     FROM codes c JOIN reps r USING (tophash)
@@ -164,6 +166,26 @@ cc AS (
     SELECT s.v AS url, cc.lbl FROM cc JOIN sym s ON cc.url = s.u
 ),
 labels AS (SELECT url, min(lbl) AS cluster_id FROM cc GROUP BY url)
+"""
+
+
+def canonical_ctes() -> str:
+    """``canon`` (url, cluster_id, is_canonical), one row per url of
+    ``labels``, its champion the url of each cluster's min (warc_ts NULLS
+    FIRST, url) ``codes`` crawl — the twin of plans/dedup.py:canonical_pick."""
+    return """
+champs AS (
+    SELECT cluster_id, url AS champ FROM (
+        SELECT l.cluster_id, c.url,
+               row_number() OVER (PARTITION BY l.cluster_id
+                                  ORDER BY c.warc_ts ASC NULLS FIRST, c.url) AS rn
+        FROM codes c JOIN labels l USING (url))
+    WHERE rn = 1
+),
+canon AS MATERIALIZED (
+    SELECT l.url, l.cluster_id, l.url = h.champ AS is_canonical
+    FROM labels l JOIN champs h USING (cluster_id)
+)
 """
 
 
@@ -1040,7 +1062,8 @@ def streaming_dedup_sql(
     batch's per-tophash representatives band-joined against strictly
     earlier batches with the hot-bucket cap (history buckets over
     bucket_cap rows route through their min-url hub instead of emitting
-    every member), Hamming/tophash-verified, flag the new url.
+    every member), Hamming/tophash-verified against the matched url's
+    crawls in those earlier batches only, flag the new url.
     The Spark query replays the last batch before reading the state, so any
     replay non-idempotence (e.g. self-matches against the batch's own prior
     write) shows up as a hash mismatch against this twin."""
@@ -1099,7 +1122,7 @@ verified AS (
 reps AS (SELECT ingest_batch, tophash, min(url) AS rep
          FROM codes GROUP BY 1, 2),
 exact AS (
-    SELECT c.ingest_batch, r.rep AS url_a, c.url AS url_b
+    SELECT DISTINCT c.ingest_batch, r.rep AS url_a, c.url AS url_b
     FROM codes c JOIN reps r USING (ingest_batch, tophash)
     WHERE c.url <> r.rep
 ),
@@ -1144,7 +1167,7 @@ cross_flags AS (
            c.ingest_batch
     FROM cross_cand c
     JOIN slim a ON c.ingest_batch = a.ingest_batch AND c.url_a = a.url
-    JOIN codes b ON c.url_b = b.url
+    JOIN codes b ON c.url_b = b.url AND b.ingest_batch < c.ingest_batch
     WHERE c.url_a <> c.url_b
       AND (bit_count(xor(a.cid_body, b.cid_body)) <= {cid_max}
            OR bit_count(xor(a.simhash, b.simhash)) <= {sim_max}
@@ -1259,12 +1282,7 @@ qual AS (
     FROM qfeat
 ),
 kept AS MATERIALIZED (SELECT url, quality_score FROM qual WHERE quality_score >= {min_quality}),
-canon AS MATERIALIZED (
-    SELECT c.url, l.cluster_id,
-           row_number() OVER (PARTITION BY l.cluster_id
-                              ORDER BY c.warc_ts ASC NULLS FIRST, c.url) AS rn
-    FROM codes c JOIN labels l USING (url)
-)"""
+{canonical_ctes()}"""
 
 
 def _curation_semantic_ctes(
@@ -1286,7 +1304,7 @@ sasg AS (SELECT vec_id AS url, list_id FROM read_parquet('{asg_path}')),
 -- dozen+ transitive references to sm/curls re-evaluates the ENTIRE
 -- upstream tree (including the recursive clustering CC over the staged
 -- codes) — measured 300+ s vs ~5 s at sf0.01
-curls AS MATERIALIZED (SELECT url FROM canon WHERE rn = 1),
+curls AS MATERIALIZED (SELECT url FROM canon WHERE is_canonical),
 stoks AS (
     SELECT c.url,
            unnest(regexp_split_to_array(lower(coalesce(d.text, '')), '\\s+'))
@@ -1415,7 +1433,7 @@ def curation_corpus_sql(
     if sample is not None:
         final_urls = (
             "skeep" if semantic is not None
-            else "(SELECT url FROM canon WHERE rn = 1)"
+            else "(SELECT url FROM canon WHERE is_canonical)"
         )
         smp = "," + _curation_sample_ctes(
             final_urls, sample["thresholds"], sample["default"]
@@ -1430,7 +1448,7 @@ JOIN tok t USING (url)
 JOIN kept k USING (url)
 {sem_join}
 {smp_join}
-WHERE c.rn = 1
+WHERE c.is_canonical
 """
 
 
@@ -1459,11 +1477,11 @@ def curation_funnel_sql(
             "(SELECT sum(t.n_tokens) FROM skeep s JOIN tok t USING (url))"
         )
     else:
-        sem_expr = "(SELECT count(*) FROM canon WHERE rn = 1)"
-        final_urls = "(SELECT url FROM canon WHERE rn = 1)"
+        sem_expr = "(SELECT count(*) FROM canon WHERE is_canonical)"
+        final_urls = "(SELECT url FROM canon WHERE is_canonical)"
         final_tokens = (
             "(SELECT sum(t.n_tokens) FROM canon c JOIN tok t USING (url) "
-            "WHERE c.rn = 1)"
+            "WHERE c.is_canonical)"
         )
     dec = ""
     if decontam is not None:
@@ -1493,7 +1511,7 @@ stats AS (
                AS dropped_quality,
            (SELECT count(*) FROM kept) AS n_kept,
            {clean_expr} AS n_clean,
-           (SELECT count(*) FROM canon WHERE rn = 1) AS n_canon,
+           (SELECT count(*) FROM canon WHERE is_canonical) AS n_canon,
            {sem_expr} AS n_sem,
            {out_expr} AS docs_out,
            {tokens_expr} AS tokens_out
@@ -1515,16 +1533,13 @@ def streaming_canonical_sql(codes_glob: str, flags_glob: str) -> str:
     """Twin of streaming/ingest.py:curate_state over the staged streaming
     state: the dup flags ARE the edge list, so clusters come from
     recursive min-label propagation over them (plus singletons from the
-    codes table), and the canonical member is the min (warc_ts, url) per
-    cluster — all recomputed independently in DuckDB."""
+    codes table), and the canonical member is the url of the min
+    (warc_ts, url) crawl per cluster (:func:`canonical_ctes`) — one row
+    per url, all recomputed independently in DuckDB."""
     return f"""
 WITH RECURSIVE codes AS (
-    -- one row per url even when re-crawls landed a codes row per batch
-    -- (mirrors curate_state's pre-clustering collapse; min() skips NULLs
-    -- identically in both engines)
-    SELECT url, min(warc_ts) AS warc_ts
+    SELECT url, warc_ts
     FROM read_parquet('{codes_glob}', hive_partitioning = 1)
-    GROUP BY url
 ),
 flags AS (
     SELECT url, dup_of
@@ -1541,13 +1556,8 @@ cc AS (
     SELECT s.v AS url, cc.lbl FROM cc JOIN sym s ON cc.url = s.u
 ),
 labels AS (SELECT url, min(lbl) AS cluster_id FROM cc GROUP BY url),
-canon AS (
-    SELECT c.url, l.cluster_id,
-           row_number() OVER (PARTITION BY l.cluster_id
-                              ORDER BY c.warc_ts ASC NULLS FIRST, c.url) AS rn
-    FROM codes c JOIN labels l USING (url)
-)
-SELECT url, cluster_id, rn = 1 AS is_canonical FROM canon
+{canonical_ctes()}
+SELECT url, cluster_id, is_canonical FROM canon
 """
 
 

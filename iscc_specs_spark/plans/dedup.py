@@ -57,7 +57,9 @@ def lsh_metrics(band_table: DataFrame, bucket_cap: int) -> dict:
 
 def canonical_pick(codes: DataFrame, clusters: DataFrame) -> DataFrame:
     """(url, cluster_id, is_canonical): keep the oldest (warc_ts, url) per
-    cluster.
+    cluster, one row per ``clusters`` row (one per url). The champion is
+    taken over every crawl row of ``codes``, so a re-crawled url competes
+    with its oldest crawl.
 
     min_by aggregation, NOT a row_number window: the window's
     partitionBy(cluster_id) sort puts a degenerate mega-cluster (a template
@@ -69,13 +71,14 @@ def canonical_pick(codes: DataFrame, clusters: DataFrame) -> DataFrame:
     sort).
 
     NULL ordering: Spark's struct ordering inside ``min_by`` is nulls-FIRST,
-    so a NULL warc_ts wins the pick; the DuckDB twins pin
-    ``ORDER BY warc_ts ASC NULLS FIRST, url`` to match (oracles.py)."""
-    members = codes.select("url", "warc_ts").join(clusters, "url")
-    champs = members.groupBy("cluster_id").agg(
+    so a NULL warc_ts wins the pick — also over a dated crawl of the same
+    url; the DuckDB twins pin ``ORDER BY warc_ts ASC NULLS FIRST, url`` to
+    match (oracles.py)."""
+    crawls = codes.select("url", "warc_ts").join(clusters, "url")
+    champs = crawls.groupBy("cluster_id").agg(
         F.min_by("url", F.struct("warc_ts", "url")).alias("_champ")
     )
-    return members.join(champs, "cluster_id").select(
+    return clusters.join(champs, "cluster_id").select(
         "url",
         "cluster_id",
         (F.col("url") == F.col("_champ")).alias("is_canonical"),
@@ -121,7 +124,7 @@ def run_dedup(
             lsh_metrics(band_rows, cfg.bucket_cap),
         )
 
-    # ③ clusters (+ singleton attach)
+    # ③ clusters (+ singleton attach), one row per url
     if store.has("clusters"):
         clusters = store.read(spark, "clusters")
     else:

@@ -377,10 +377,11 @@ def curate_state(spark: SparkSession, state_dir: str) -> DataFrame:
         codes(state) + flags-as-edges → connected components →
         canonical_pick (skew-free min_by on (warc_ts, url))
 
-    Returns (url, cluster_id, is_canonical): every ingested url with its
-    duplicate cluster and whether it is the cluster's canonical
-    representative (the oldest (warc_ts, url) member, matching
-    plans/dedup.py §④). Run after any micro-batch to get the
+    Returns (url, cluster_id, is_canonical): one row per ingested url,
+    however many batches re-crawled it, with its duplicate cluster and
+    whether it is the cluster's canonical representative (the url of the
+    oldest (warc_ts, url) crawl — the same two calls and rule as
+    plans/dedup.py ③④). Run after any micro-batch to get the
     curated-corpus delta without waiting for a global batch job; a
     rerun over unchanged state is deterministic; a state dir with no
     codes rows yet gives an empty frame of the same columns.
@@ -395,19 +396,11 @@ def curate_state(spark: SparkSession, state_dir: str) -> DataFrame:
         return spark.createDataFrame(
             [], "url string, cluster_id string, is_canonical boolean"
         )
-    # a re-crawled url has one codes row per ingesting batch: collapse to
-    # one row per url BEFORE clustering — assign_clusters would otherwise
-    # emit N cluster rows and canonical_pick's members join would square
-    # them (N² identical output rows for a url crawled N times). min()
-    # skips NULL warc_ts identically in Spark and DuckDB, so the earliest
-    # NON-NULL crawl timestamp represents the url in the canonical pick.
-    urls = codes.groupBy("url").agg(F.min("warc_ts").alias("warc_ts"))
     flags = read_dup_flags(spark, state_dir)
     edges = flags.select(
         F.col("url").alias("url_a"), F.col("dup_of").alias("url_b")
     )
-    clusters = assign_clusters(urls.select("url"), edges)
-    return canonical_pick(urls, clusters)
+    return canonical_pick(codes, assign_clusters(codes, edges))
 
 
 # ---------------------------------------------------------------------------

@@ -389,9 +389,13 @@ def test_dup_pairs_stage_is_lsh_dup_pairs(spark, tmp_path):
 
 
 @pytest.mark.parametrize(
-    "bucket_cap, k", [(64, 1), (1, 1), (64, 3)], ids=["64", "1", "64-k3"]
+    "bucket_cap, k, recrawl",
+    [(64, 1, False), (1, 1, False), (64, 3, False), (64, 1, True), (64, 3, True)],
+    ids=["64", "1", "64-k3", "64-recrawl", "64-k3-recrawl"],
 )
-def test_one_micro_batch_equals_batch_run(spark, tmp_path, bucket_cap, k):
+def test_one_micro_batch_equals_batch_run(
+    spark, tmp_path, request, bucket_cap, k, recrawl
+):
     """The batch run's codes as one streaming micro-batch, then
     curate_state, give run_dedup's canonical table row for row: at the
     default cap, and at a cap of 1, where every shared band key is a hot
@@ -399,12 +403,17 @@ def test_one_micro_batch_equals_batch_run(spark, tmp_path, bucket_cap, k):
     same holds for k = 3 micro-batches split by crc32(url) % 3, where the
     vs-history probe carries the pairs across batches. A cap of 1 stays at
     one batch: the batch hub is a whole bucket's min url, the streaming
-    hub a history member, so k > 1 may differ there by design."""
+    hub a history member, so k > 1 may differ there by design. With
+    re-crawled urls in the input (387 crawls of 300 urls), clusters and
+    canonical still hold one row per url in both tails."""
     from pyspark.sql import functions as F
 
     from iscc_specs_spark.streaming.ingest import curate_state, process_dedup_batch
 
-    pages = generate_pages(spark, 300, partitions=4)
+    if recrawl:
+        pages = request.getfixturevalue("recrawl_pages")
+    else:
+        pages = generate_pages(spark, 300, partitions=4)
     r = run_dedup(spark, pages, str(tmp_path / "batch"), DedupConfig(bucket_cap=bucket_cap))
     if bucket_cap == 1:
         assert r["store"].manifest("dup_pairs")["metrics"]["capped_buckets"] > 0
@@ -413,7 +422,8 @@ def test_one_micro_batch_equals_batch_run(spark, tmp_path, bucket_cap, k):
         part = r["codes"].where(F.crc32("url") % k == i)
         process_dedup_batch(part, i, state, bucket_cap=bucket_cap)
     want = sorted(map(tuple, r["canonical"].collect()))
-    assert len(want) == 300
+    assert len(want) == len({w[0] for w in want}) == 300
+    assert sorted(map(tuple, r["clusters"].collect())) == [w[:2] for w in want]
     assert sorted(map(tuple, curate_state(spark, state).collect())) == want
 
 
